@@ -1,8 +1,13 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet table access over the harness star schema (TESTDATA.md).
   *
@@ -14,23 +19,41 @@ import org.apache.spark.sql.types.LongType
   * of baking predicates into path strings.
   */
 object Tables {
-  /** Per-(session, path) SCHEMA cache (round-14, guide §6): every bare
-    * `spark.read.parquet(path)` re-infers the schema by opening a parquet
-    * footer — Spark caches file LISTINGS per session but not inference —
-    * and a catalog run constructs ~1000 readers over the same handful of
-    * files, so the footer reads are a measurable slice of the fixed
-    * per-query floor. This memoizes ONLY the StructType (metadata, the
-    * same thing a real deployment gets for free from its table catalog):
-    * every query still scans and computes from the parquet data, nothing
-    * row- or result-shaped is retained, and the key includes the session
-    * so a restarted session re-infers. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.StructType]()
+  /** Inferred-schema cache: every bare `spark.read.parquet(path)` opens a
+    * parquet footer to infer the schema, and a catalog run constructs
+    * ~1000 readers over the same handful of files, so the footer reads are
+    * a measurable slice of the fixed per-query floor. This memoizes ONLY
+    * the StructType (metadata, the same thing a real deployment gets from
+    * its table catalog): every query still scans the parquet data.
+    *
+    * Lifetime: the outer map is keyed by the session's id, not the
+    * session, so it holds no session alive, and a listener drops that
+    * session's entries when its SparkContext stops. The inner key carries
+    * the file's length and modification time, so a table rewritten
+    * mid-session has its schema inferred again. */
+  private val schemaCache = new ConcurrentHashMap[String,
+    ConcurrentHashMap[(String, Long, Long), StructType]]()
+
+  private def sessionSchemas(spark: SparkSession)
+  : ConcurrentHashMap[(String, Long, Long), StructType] = {
+    val id = DatasetBridge.sessionId(spark)
+    schemaCache.computeIfAbsent(id, _ => {
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          schemaCache.remove(id)
+      })
+      new ConcurrentHashMap()
+    })
+  }
 
   /** Read one table of the harness dataset: `dir/name.parquet`. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent((spark, path),
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val schema = sessionSchemas(spark).computeIfAbsent(
+      (path, st.getLen, st.getModificationTime),
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DateType}
 
+import graft.functions.Audit
 import graft.functions.F1Functions._
 import graft.gold.WindowOps._
 
@@ -20,10 +21,6 @@ import graft.gold.WindowOps._
   * (window_functions.py:117).
   */
 object GoldTransforms {
-
-  private def audit(df: DataFrame): DataFrame =
-    df.withColumn("created_at", current_timestamp())
-      .withColumn("updated_at", current_timestamp())
 
   /** Current-row driver attributes for joining onto facts. */
   private def currentDrivers(drivers: DataFrame): DataFrame =
@@ -55,7 +52,7 @@ object GoldTransforms {
     val seasonAvg = runningAvg(col("qualifying_position").cast("double"),
       Seq(col("driver_number"), col("year")),
       Seq(col("race_date"), col("round_number")))
-    audit(base
+    Audit.stamped(base
       .withColumn("qualifying_position", col("position"))
       .withColumn("gap_to_pole_seconds",
         gapClampNonNegative(col("gap_to_pole_millis") / 1000.0)
@@ -79,7 +76,7 @@ object GoldTransforms {
       .join(currentDrivers(drivers), Seq("driver_number"))
       .withColumn("race_points",
         coalesce(col("validated_points"), col("points"), lit(0.0)))
-    audit(base
+    Audit.stamped(base
       .withColumn("season_points_total",
         runningTotal(col("race_points"),
           Seq(col("driver_number"), col("year")),
@@ -102,7 +99,7 @@ object GoldTransforms {
       .join(currentDrivers(drivers), Seq("driver_number"))
       .withColumn("race_points",
         coalesce(col("validated_points"), col("points"), lit(0.0)))
-    audit(base
+    Audit.stamped(base
       .withColumn("season_points_total",
         runningTotal(col("race_points"),
           Seq(col("driver_number"), col("year")),
@@ -159,7 +156,7 @@ object GoldTransforms {
         count(when(col("standardized_status") === "DNF", 1)).cast("int")
           .as("dnf_count"))
 
-    audit(weekends
+    Audit.stamped(weekends
       .join(pole, Seq("year", "grand_prix_name"), "left")
       .join(winner, Seq("year", "grand_prix_name"), "left")
       .join(stats, Seq("year", "grand_prix_name"), "left")

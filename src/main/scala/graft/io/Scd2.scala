@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Audit
+
 /** Slowly-Changing-Dimension Type 2 for the drivers dimension
   * (SURVEY.md §7.3 hard part #1).
   *
@@ -40,14 +42,12 @@ object Scd2 {
     val timeline = Window.partitionBy(col("driver_number"))
       .orderBy(col("valid_from"))
     val career = Window.partitionBy(col("driver_number"))
-    perStint
+    Audit.stamped(perStint
       .withColumn("valid_to", lead(col("valid_from"), 1).over(timeline))
       .withColumn("is_current", col("valid_to").isNull)
       .withColumn("total_races",
         sum(col("stint_races")).over(career).cast("int"))
-      .drop("stint_races")
-      .withColumn("created_at", current_timestamp())
-      .withColumn("updated_at", current_timestamp())
+      .drop("stint_races"))
   }
 
   /** Incremental merge (scd.py:29-137): fold one batch of driver
@@ -72,6 +72,8 @@ object Scd2 {
     */
   def merge(existing: DataFrame, batch: DataFrame,
       raceHistory: Option[DataFrame] = None): DataFrame = {
+    // one audit time for the closed and the inserted rows
+    val now = Audit.now()
     // Latest observation per driver in the batch — max_by, not last().
     val aggExprs =
       Seq(max(col("date_start")).as("batch_date"),
@@ -107,7 +109,7 @@ object Scd2 {
           col("batch_date")).otherwise(col("valid_to")))
       .withColumn("updated_at",
         when(col("is_current") && col("batch_date").isNotNull,
-          current_timestamp()).otherwise(col("updated_at")))
+          now).otherwise(col("updated_at")))
       .withColumn("is_current",
         when(col("is_current") && col("batch_date").isNotNull, false)
           .otherwise(col("is_current")))
@@ -120,8 +122,8 @@ object Scd2 {
         lit(null).cast("timestamp").as("valid_to"),
         lit(true).as("is_current"),
         col("new_total_races").as("total_races"),
-        current_timestamp().as("created_at"),
-        current_timestamp().as("updated_at")) ++
+        now.as("created_at"),
+        now.as("updated_at")) ++
         attrCols.map(c => col("attrs").getField(c).as(c))): _*)
 
     val cols = closed.columns.toIndexedSeq

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
+import graft.functions.Audit
 import graft.functions.F1Functions._
 
 /** Bronze → Silver transforms, one per Silver table (SURVEY.md §1.4).
@@ -21,10 +22,6 @@ import graft.functions.F1Functions._
   */
 object SilverTransforms {
 
-  private def audit(df: DataFrame): DataFrame =
-    df.withColumn("created_at", current_timestamp())
-      .withColumn("updated_at", current_timestamp())
-
   /** Sessions: distinct session rows extracted from per-driver
     * session_result dumps (sessions_transform.py:135-248). */
   def sessions(sessionResult: DataFrame): DataFrame = {
@@ -32,7 +29,7 @@ object SilverTransforms {
       .select("session_key", "session_type", "meeting_key", "meeting_name",
         "date_start", "date_end", "year")
       .distinct()
-    audit(distinctSessions
+    Audit.stamped(distinctSessions
       // descriptive name mapping (sessions_transform.py:213-219)
       .withColumn("session_name",
         when(lower(col("session_type")) === "qualifying",
@@ -78,7 +75,7 @@ object SilverTransforms {
         coalesce(col("q3_time_millis"), col("q2_time_millis"),
           col("q1_time_millis")))
     val pole = Window.partitionBy(col("session_key"))
-    audit(parsed
+    Audit.stamped(parsed
       .withColumn("gap_to_pole_millis",
         col("fastest_qualifying_time_millis") -
           min(col("fastest_qualifying_time_millis")).over(pole))
@@ -135,7 +132,7 @@ object SilverTransforms {
           .when(col("dnf") === true, "dnf")
           .when(col("position").isNotNull, "finished")
           .otherwise("unknown"))
-    audit(raced
+    Audit.stamped(raced
       .withColumn("standardized_status", standardizeStatus(col("raw_status")))
       .select(
         col("session_key").cast(LongType),
@@ -172,7 +169,7 @@ object SilverTransforms {
     val fastestTie = Window
       .partitionBy(col("session_key"), col("lap_time_millis"))
       .orderBy(col("driver_number").asc, col("lap_number").asc)
-    audit(base
+    Audit.stamped(base
       .withColumn("is_personal_best",
         col("lap_time_millis") === min(col("lap_time_millis")).over(perDriver))
       .withColumn("is_session_min",
@@ -205,7 +202,7 @@ object SilverTransforms {
     * seconds, compound change passthrough
     * (pitstops_transform.py:121-275). */
   def pitstops(pitBronze: DataFrame): DataFrame = {
-    audit(pitBronze
+    Audit.stamped(pitBronze
       .filter(col("pit_duration").isNotNull &&
         col("pit_duration") > 0 && col("pit_duration") < 999000)
       .withColumn("pit_duration_s",

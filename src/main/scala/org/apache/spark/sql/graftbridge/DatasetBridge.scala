@@ -24,6 +24,10 @@ object DatasetBridge {
   def expression(df: DataFrame, c: Column): Expression =
     df.sparkSession.asInstanceOf[classic.SparkSession].expression(c)
 
+  /** The session's unique id: a cache key that keeps no session alive. */
+  def sessionId(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   /** Idempotently register the top-k strategy AND the window→top-k
     * optimizer rewrite on a session built without the extensions conf. */
   def registerTopK(spark: org.apache.spark.sql.SparkSession): Unit = {

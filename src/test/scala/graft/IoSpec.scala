@@ -134,4 +134,25 @@ class IoSpec extends SparkSpec {
     val z = avgBox(s"$dir/z")
     assert(h < z, s"hilbert avg box $h not tighter than morton $z")
   }
+
+  test("Tables.table re-infers the schema of a table rewritten mid-session") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_tables").toString
+    // one parquet FILE, as the harness tables are
+    def writeTable(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = s"$dir/tmp"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/t.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeTable(Seq((1, "a")).toDF("id", "v"))
+    assert(graft.core.Tables.table(spark, dir, "t").columns.toSeq ==
+      Seq("id", "v"))
+    writeTable(Seq((2, "b", 3.5)).toDF("id", "v", "w"))
+    val back = graft.core.Tables.table(spark, dir, "t")
+    assert(back.columns.toSeq == Seq("id", "v", "w"))
+    assert(back.collect().map(_.getDouble(2)).toSeq == Seq(3.5))
+  }
 }

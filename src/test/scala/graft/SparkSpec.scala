@@ -4,11 +4,28 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs. */
+/** Shared local session for specs.
+  *
+  * It takes the product's generated-code settings,
+  * [[graft.core.GraftSession.CodegenReuse]], cache size included, so specs
+  * that count compiled classes test the product's setting. The cache is
+  * JVM-wide and sized once, by the first session that generates code: in
+  * a test JVM, this one. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // shared session, never stop per-suite
+
+  /** Runs `f` with the session confs `kv` set, then restores them. */
+  def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
@@ -25,6 +42,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.CodegenReuse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
