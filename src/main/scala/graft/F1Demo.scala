@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.core.F1Fixtures
+import graft.core.{F1Fixtures, Tables}
 import graft.gold.GoldTransforms
 import graft.io.{ParquetSink, Scd2}
 import graft.silver.SilverTransforms
@@ -71,15 +71,15 @@ object F1Demo {
     ParquetSink.atomicRewrite(historical, dimPath)
     // raceHistory = all observations to date, so total_races grows even
     // for drivers whose team did not change (reference common.py:526-546)
-    val merged = Scd2.merge(spark.read.parquet(dimPath),
+    val merged = Scd2.merge(Tables.parquet(spark, dimPath),
       obs.filter(_.session_key >= 300).toDF(), Some(obs.toDF()))
     ParquetSink.atomicRewrite(merged, dimPath)
-    val drivers = spark.read.parquet(dimPath)
+    val drivers = Tables.parquet(spark, dimPath)
 
     // ---- silver → gold (reading silver back from the warehouse) ----
-    val sSessions = spark.read.parquet(s"$warehouse/sessions_silver")
-    val sQuali = spark.read.parquet(s"$warehouse/qualifying_results_silver")
-    val sRace = spark.read.parquet(s"$warehouse/race_results_silver")
+    val sSessions = Tables.parquet(spark, s"$warehouse/sessions_silver")
+    val sQuali = Tables.parquet(spark, s"$warehouse/qualifying_results_silver")
+    val sRace = Tables.parquet(spark, s"$warehouse/race_results_silver")
 
     val gold = Map(
       "championship_tracker" ->
@@ -94,10 +94,10 @@ object F1Demo {
     gold.foreach { case (name, df) =>
       ParquetSink.overwrite(df, s"$warehouse/$name")
       println(s"[f1demo] $name rows=" +
-        spark.read.parquet(s"$warehouse/$name").count())
+        Tables.parquet(spark, s"$warehouse/$name").count())
     }
     println("[f1demo] standings after the finale:")
-    spark.read.parquet(s"$warehouse/championship_tracker")
+    Tables.parquet(spark, s"$warehouse/championship_tracker")
       .filter(col("round_number") === 3)
       .orderBy("championship_position")
       .select("championship_position", "full_name", "team_name",

@@ -18,6 +18,12 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * evicts each class before its next use and so recompiles all of them:
   * 231 compiles per medallion refresh and 352 per 50-query catalog pass,
   * measured at the default.
+  *
+  * Local file system ([[ForkFreeLocalFs]]): the `file` scheme is served by
+  * [[graft.io.LocalFs]], which sets permissions without forking `chmod`
+  * for every file and directory a write creates. `graft.Bench` and
+  * `graft.Verify` build their own sessions and keep Hadoop's stock local
+  * file system.
   */
 object GraftSession {
   /** Size of Spark's generated-class cache. Measured working set on 4
@@ -40,6 +46,13 @@ object GraftSession {
     StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries,
     SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key -> false)
 
+  /** Serve the `file` scheme with [[graft.io.LocalFs]]. Hadoop caches one
+    * file system per scheme and JVM, created from the configuration of
+    * its first user, so this is set on the builder, before the session's
+    * context opens its first file. */
+  val ForkFreeLocalFs: Map[String, Any] =
+    Map("spark.hadoop.fs.file.impl" -> classOf[graft.io.LocalFs].getName)
+
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
               Runtime.getRuntime.availableProcessors().toString),
             appName: String = "graft"): SparkSession = {
@@ -57,6 +70,7 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
       .config(CodegenReuse)
+      .config(ForkFreeLocalFs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -22,7 +23,9 @@ object Tables {
   /** Inferred-schema cache: every bare `spark.read.parquet(path)` opens a
     * parquet footer to infer the schema, and a catalog run constructs
     * ~1000 readers over the same handful of files, so the footer reads are
-    * a measurable slice of the fixed per-query floor. This memoizes ONLY
+    * a measurable slice of the fixed per-query floor. A miss reads the
+    * footer on the driver, the way [[graft.sources.BronzeReader.read]]
+    * does, not in an inference job. This memoizes ONLY
     * the StructType (metadata, the same thing a real deployment gets from
     * its table catalog): every query still scans the parquet data.
     *
@@ -54,9 +57,15 @@ object Tables {
       .getFileStatus(p)
     val schema = sessionSchemas(spark).computeIfAbsent(
       (path, st.getLen, st.getModificationTime),
-      _ => spark.read.parquet(path).schema)
+      _ => FooterBridge.schema(spark, path))
     spark.read.schema(schema).parquet(path)
   }
+
+  /** `spark.read.parquet(path)` without the schema inference job: the
+    * footers are read on the driver ([[FooterBridge]]). Spark infers the
+    * schema, and raises its own error, when `path` holds no file. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FooterBridge.schema(spark, path)).parquet(path)
 
   /** Round-robin spread across the session's default parallelism.
     *

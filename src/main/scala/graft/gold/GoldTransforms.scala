@@ -156,10 +156,12 @@ object GoldTransforms {
         count(when(col("standardized_status") === "DNF", 1)).cast("int")
           .as("dnf_count"))
 
+    // one row per weekend on every side: broadcast them, or AQE plans
+    // sort-merge joins, runs their shuffles and only then demotes them
     Audit.stamped(weekends
-      .join(pole, Seq("year", "grand_prix_name"), "left")
-      .join(winner, Seq("year", "grand_prix_name"), "left")
-      .join(stats, Seq("year", "grand_prix_name"), "left")
+      .join(broadcast(pole), Seq("year", "grand_prix_name"), "left")
+      .join(broadcast(winner), Seq("year", "grand_prix_name"), "left")
+      .join(broadcast(stats), Seq("year", "grand_prix_name"), "left")
       .withColumn("pole_to_win",
         coalesce(col("pole_position_driver").isNotNull &&
           col("pole_position_driver") === col("race_winner_driver"),

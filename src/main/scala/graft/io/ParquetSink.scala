@@ -120,7 +120,7 @@ object ParquetSink {
     * fix. Uses the atomic swap so readers never see a half state. */
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Long = {
-    val df = spark.read.parquet(path)
+    val df = graft.core.Tables.parquet(spark, path)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = math.max(1, (bytes / BigInt(targetFileBytes)).toLong
       + (if (bytes % BigInt(targetFileBytes) > 0) 1 else 0)).toInt

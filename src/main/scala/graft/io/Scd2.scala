@@ -64,7 +64,7 @@ object Scd2 {
     * for drivers whose team did not change. Pass `raceHistory` — every
     * driver-session observation to date, batch included — and the merge
     * recomputes career totals onto each driver's open row; re-running the
-    * same batch is then a no-op (countDistinct dedupes by session_key).
+    * same batch is then a no-op (the distinct count dedupes by session_key).
     * Without `raceHistory` the merge falls back to accumulating
     * prior+batch on changed rows only, which freezes the count for
     * NO_CHANGE drivers — fine for pure-dimension callers with no session
@@ -75,11 +75,14 @@ object Scd2 {
     // one audit time for the closed and the inserted rows
     val now = Audit.now()
     // Latest observation per driver in the batch — max_by, not last().
+    // Distinct race counts are size(collect_set(...)), not countDistinct:
+    // the same count (nulls ignored, 0 for none) in one aggregate, where a
+    // distinct aggregate beside others plans a second shuffle.
     val aggExprs =
       Seq(max(col("date_start")).as("batch_date"),
         max_by(col("team_name"), col("date_start")).as("batch_team"),
-        countDistinct(when(lower(col("session_type")) === "race",
-          col("session_key"))).as("batch_races")) ++
+        size(collect_set(when(lower(col("session_type")) === "race",
+          col("session_key")))).as("batch_races")) ++
         attrCols.map(c => max_by(col(c), col("date_start")).as(s"batch_$c"))
     val latest = batch.groupBy(col("driver_number"))
       .agg(aggExprs.head, aggExprs.tail: _*)
@@ -87,7 +90,7 @@ object Scd2 {
     val current = existing.filter(col("is_current") === true)
       .select(col("driver_number"), col("team_name"),
         col("total_races").as("prior_races"))
-    val changes = latest.join(current, Seq("driver_number"), "left")
+    val changes = latest.join(broadcast(current), Seq("driver_number"), "left")
       .withColumn("change_type",
         when(col("team_name").isNull, "NEW_DRIVER")
           .when(col("team_name") =!= col("batch_team"), "TEAM_CHANGE")
@@ -139,8 +142,7 @@ object Scd2 {
         val totals = hist
           .filter(lower(col("session_type")) === "race")
           .groupBy(col("driver_number"))
-          .agg(countDistinct(col("session_key")).cast("int")
-            .as("career_races"))
+          .agg(size(collect_set(col("session_key"))).as("career_races"))
         dim.join(broadcast(totals), Seq("driver_number"), "left")
           .withColumn("total_races",
             when(col("is_current") && col("career_races").isNotNull,

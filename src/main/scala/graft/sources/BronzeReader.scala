@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -18,13 +19,29 @@ object BronzeReader {
 
   /** Partition-pruned scan: read the table root, filter on partition
     * columns (A3). `mergeSchema` tolerates drifting JSON-derived schemas
-    * (A4). */
+    * (A4).
+    *
+    * The schema is merged from the footers of the files the read selects,
+    * as the reference's path-string reads do: every file under the
+    * `year=`/`grand_prix=` directories the filters name, every file of the
+    * table when there is no filter. So a column only other weekends carry
+    * is not in the frame. Without `mergeSchema` it is the first selected
+    * file's schema. The footers are read on the driver, so no Spark job
+    * runs, however many files the read selects
+    * ([[org.apache.spark.sql.execution.datasources.parquet.FooterBridge]]).
+    * A selection with no files takes the whole table's schema, as an
+    * unfiltered read does, and yields no rows. Partition columns are
+    * discovered from the directory names as before. */
   def read(spark: SparkSession, root: String,
            year: Option[Int] = None, grandPrix: Option[String] = None,
            mergeSchema: Boolean = true): DataFrame = {
-    val base = spark.read
-      .option("mergeSchema", mergeSchema.toString)
-      .parquet(root)
+    val schema = FooterBridge.schema(spark, root,
+      Map("mergeSchema" -> mergeSchema.toString), {
+        case ("year", v) => year.forall(y => v.toIntOption.contains(y))
+        case ("grand_prix", v) => grandPrix.forall(_ == v)
+        case _ => true
+      })
+    val base = spark.read.schema(schema).parquet(root)
     val withYear = year.fold(base)(y => base.filter(col("year") === y))
     grandPrix.fold(withYear)(g =>
       withYear.filter(col("grand_prix") === g))

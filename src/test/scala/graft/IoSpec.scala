@@ -1,10 +1,18 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 
-import graft.io.ParquetSink
+import graft.io.{LocalFs, ParquetSink}
 
 class IoSpec extends SparkSpec {
 
@@ -154,5 +162,77 @@ class IoSpec extends SparkSpec {
     val back = graft.core.Tables.table(spark, dir, "t")
     assert(back.columns.toSeq == Seq("id", "v", "w"))
     assert(back.collect().map(_.getDouble(2)).toSeq == Seq(3.5))
+  }
+
+  test("Tables.table infers a table's schema without a Spark job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_tables_jobs").toString
+    Seq((1, "a")).toDF("id", "v").coalesce(1).write.parquet(s"$dir/tmp")
+    val part = new java.io.File(s"$dir/tmp").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/t.parquet"))
+    val (t, jobs) = jobsDuring(graft.core.Tables.table(spark, dir, "t"))
+    assert(jobs == 0)
+    assert(t.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+  }
+
+  test("the session's local file system is graft.io.LocalFs") {
+    val fs = FileSystem.get(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[LocalFs], fs.getClass.getName)
+    assert(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).isInstanceOf[LocalFs])
+  }
+
+  /** A partitioned overwrite and an atomic rewrite, the medallion's two
+    * write paths, through a fresh `file` file system of class `fsClass`
+    * under umask 027: the POSIX permissions of everything they leave
+    * (part-file names normalized), and the `chmod` processes they forked. */
+  private def writeWith(fsClass: Class[_]): (Set[(String, String)], Int) = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_perms")
+    val df = Seq((1, "a", 1.0), (2, "b", 2.0), (3, "b", 3.0)).toDF("id", "gp", "v")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    withConf("fs.file.impl" -> fsClass.getName, "fs.file.impl.disable.cache" -> "true",
+        "fs.permissions.umask-mode" -> "027") {
+      rec.start()
+      try {
+        ParquetSink.overwritePartitions(df, s"$dir/t", Seq("gp"))
+        ParquetSink.atomicRewrite(df, s"$dir/dim")
+      } finally rec.stop()
+    }
+    val dump = Files.createTempFile("graft_perms", ".jfr")
+    rec.dump(dump)
+    rec.close()
+    val chmods = RecordingFile.readAllEvents(dump).asScala
+      .count(e => Option(e.getString("command")).exists(_.contains("chmod")))
+    val perms = Files.walk(dir).iterator().asScala.filter(_ != dir).map { p =>
+      dir.relativize(p).toString.replaceAll("part-[0-9a-f.-]+", "part") ->
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    }.toSet
+    (perms, chmods)
+  }
+
+  test("LocalFs sets the stock local file system's permissions without forking chmod") {
+    val (stock, stockForks) = writeWith(classOf[LocalFileSystem])
+    val (ours, ourForks) = writeWith(classOf[LocalFs])
+    // the recording sees the stock file system's forks, so it would see ours
+    assert(stockForks > 0)
+    assert(ourForks == 0)
+    assert(ours == stock)
+    assert(stock.contains("t/gp=a" -> "rwxr-x---"))
+    assert(stock.exists { case (p, perm) => p.endsWith(".parquet") && perm == "rw-r-----" })
+  }
+
+  test("LocalFs round-trips a directory mode with the sticky bit") {
+    val fs = FileSystem.get(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    val local = Files.createTempDirectory("graft_sticky")
+    val dir = new Path(local.toString)
+    Seq("1750", "0750", "1777", "0701").foreach { octal =>
+      val perm = new FsPermission(Integer.parseInt(octal, 8).toShort)
+      fs.setPermission(dir, perm)
+      val mode = Files.getAttribute(local, "unix:mode").asInstanceOf[Int]
+      assert((mode & 0xfff) == perm.toShort, octal)
+      assert(fs.getFileStatus(dir).getPermission == perm, octal)
+    }
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftbridge.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.core.GraftSession.CodegenReuse]], cache size included, so specs
   * that count compiled classes test the product's setting. The cache is
   * JVM-wide and sized once, by the first session that generates code: in
-  * a test JVM, this one. */
+  * a test JVM, this one. The same holds for the local file system,
+  * [[graft.core.GraftSession.ForkFreeLocalFs]]: Hadoop caches it per JVM,
+  * created by its first user. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -25,6 +31,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val r = f
+      ListenerBusBridge.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(counter)
   }
 }
 
@@ -43,6 +65,7 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config(graft.core.GraftSession.CodegenReuse)
+      .config(graft.core.GraftSession.ForkFreeLocalFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
