@@ -40,7 +40,7 @@ object BenchOne {
       while (times.length < maxRuns && !converged) {
         // this run's layouts live in an owner scope; close is query-
         // BOUNDARY lifecycle cost, not query cost — keep it out of the
-        // timed region so minima stay comparable to ScalingAudit's
+        // timed region so minima time the query alone
         val scope = graft.operators.GlobalRank.openScope()
         try {
           val t0 = System.nanoTime()

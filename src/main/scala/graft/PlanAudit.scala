@@ -124,7 +124,7 @@ object PlanAudit {
     * short-circuited subtree passes like any zero-row exchange. That is
     * the measured truth at this fixture (zero rows flowed); growth that
     * would wake such a subtree is what the sf0.01 preflight sweep and
-    * the cross-SF timing gate ([[graft.ScalingAudit]]) exist to catch. */
+    * the cross-SF timing gate ([[graft.PreflightSweep]]) exist to catch. */
   def scaleHazards(df: DataFrame, singlePartBound: Long, loopBound: Long)
   : Seq[Hazard] = scaleHazardsTimed(df, singlePartBound, loopBound)._1
 
@@ -229,16 +229,13 @@ object PlanAudit {
   }
 }
 
-/** Shared driver for the allowlisted catalog sweeps (FunnelAudit /
-  * ScaleAudit): runs `sweep` over every query, prints each flag, and
-  * gates — exit 1 on any UNEXPECTED flag, and ALSO on any STALE
-  * allowlist entry (an allowlisted query that no longer flags would
-  * otherwise keep its exemption forever, silently masking a future
-  * regression of that query — the same allowlist-can-only-shrink
-  * honesty rule FunnelSpec/ScaleGateSpec assert in CI). `allowCsv`
-  * semantics: absent → report-only (ad-hoc runs); `-` → gate with an
-  * EMPTY allowlist (any flag fails); otherwise gate with the named
-  * exemptions. */
+/** Shared pieces of the allowlisted catalog sweep ([[PreflightSweep]])
+  * and the bench warm-up: the warm-up query set, the SPARK_GRAFT_ONLY
+  * selection, and the stale-allowlist rule (an allowlisted query that
+  * no longer flags would otherwise keep its exemption forever, silently
+  * masking a future regression of that query — the same
+  * allowlist-can-only-shrink honesty rule FunnelSpec/ScaleGateSpec
+  * assert in CI). */
 private[graft] object AllowlistedSweep {
 
   /** Warm-up set shared by every timed/measured sweep: one scan +
@@ -281,189 +278,19 @@ private[graft] object AllowlistedSweep {
         "allowlist (a stale exemption masks future regressions)"))
     stale
   }
-
-  def run(tag: String, allowArg: Option[String],
-          sweep: (SparkSession, String) => Seq[String],
-          appName: String): Unit = {
-    val gating = allowArg.isDefined
-    val allowed = allowArg
-      .map(_.split(',').map(_.trim).filter(a => a.nonEmpty && a != "-")
-        .toSet)
-      .getOrElse(Set.empty[String])
-    val spark = graft.core.GraftSession.local(appName = appName)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    var flagged = 0
-    var unexpected = 0
-    val flaggedNames = scala.collection.mutable.Set.empty[String]
-    val erroredNames = scala.collection.mutable.Set.empty[String]
-    // SPARK_GRAFT_ONLY (same contract as Verify): comma-separated query
-    // names for a fast partial sweep while iterating. The stale-allowlist
-    // honesty check below is restricted to the filtered set — an
-    // allowlisted query that wasn't RUN can't be called stale.
-    val selected = selectWithBanner()
-    selected.foreach { case (name, _) =>
-      try {
-        // per-query owner scope: the sweep constructs (and often
-        // executes) the query, so its GlobalRank layouts free here at
-        // the boundary without touching any other owner's
-        graft.operators.GlobalRank.withScope {
-          sweep(spark, name)
-        }.foreach { detail =>
-          flagged += 1
-          flaggedNames += name
-          if (!allowed(name)) unexpected += 1
-          println(s"$tag $name $detail")
-        }
-      } catch {
-        case e: Throwable =>
-          unexpected += 1
-          erroredNames += name
-          println(s"ERROR $name ${String.valueOf(e.getMessage).take(100)}")
-      }
-    }
-    val ranNames = selected.map(_._1).toSet
-    val stale = staleEntries("", allowed, ranNames,
-      flaggedNames, erroredNames)
-    println(s"flagged: $flagged (unexpected: $unexpected, " +
-      s"stale allowlist: ${stale.size}, " +
-      s"ran: ${selected.size}/${SparkEntry.queries.size})")
-    spark.stop()
-    if (gating && (unexpected > 0 || stale.nonEmpty)) sys.exit(1)
-  }
 }
 
-/** Catalog-wide measured window-funnel sweep. FunnelSpec runs the same
-  * check as the CI gate at sf0.001; preflight ALSO runs this main at
-  * sf0.01, where a corpus-growing funnel separates cleanly from a
-  * domain/span-bounded frame (round 9: the sf0.01 sweep caught
-  * e4/e12/e14 — 3/5/7-group windows over the 15 000-row orders table —
-  * which hid under the sf0.001 bound at 1 500 rows).
-  * `runMain graft.FunnelAudit [sfDir] [minGroups] [rowsPerGroup]
-  * [allowCsv]` — with an allowlist (`-` = empty), exits 1 on any
-  * unexpected flag OR stale allowlist entry, so the sweep gates shell
-  * pipelines. */
-object FunnelAudit {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val minGroups = if (args.length > 1) args(1).toLong else 32L
-    val rowsPerGroup = if (args.length > 2) args(2).toLong else 512L
-    AllowlistedSweep.run("FUNNEL", args.lift(3),
-      (spark, name) => PlanAudit.windowFunnels(
-        SparkEntry.queries(name)(spark, sfDir), minGroups, rowsPerGroup)
-        .map(_.describe),
-      appName = "graft-funnel-audit")
-  }
-}
-
-/** Catalog-wide measured scale-hazard sweep (ScaleGateSpec runs the
-  * same check as a CI gate at sf0.001; preflight ALSO runs this main at
-  * sf0.01 — round 9 proved fixture scale is the separating variable for
-  * the funnel gate, and the same asymmetry argument applies here):
-  * `runMain graft.ScaleAudit [sfDir] [singlePartBound] [loopBound]
-  * [allowCsv]` — with an allowlist (`-` = empty), exits 1 on any
-  * unexpected flag OR stale allowlist entry, so the sweep gates shell
-  * pipelines (preflight). */
-object ScaleAudit {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val singlePartBound = if (args.length > 1) args(1).toLong else 512L
-    val loopBound = if (args.length > 2) args(2).toLong else 64L
-    AllowlistedSweep.run("HAZARD", args.lift(3),
-      (spark, name) => PlanAudit.scaleHazards(
-        SparkEntry.queries(name)(spark, sfDir), singlePartBound, loopBound)
-        .map(_.describe),
-      appName = "graft-scale-audit")
-  }
-}
-
-/** Cross-SF SCALING gate (round-9 directive 4): the two plan-shape
-  * gates (FunnelSpec/ScaleGateSpec and their preflight sweeps) measure
-  * SHAPE — a superlinear runtime expressed through a legitimately-shaped
-  * plan (join fan-out on a skewed key is the classic) passes both. So
-  * measure growth directly: run every query at `sfA` (default sf0.001)
-  * and `sfB` (default sf0.01, 10× the data) in ONE JVM with the same
-  * config as the hazard sweeps (AQE off — no runtime rescue flattering
-  * the audit), record wall seconds, and flag ratio outliers.
-  *
-  * The gate needs a JIT/fixed-cost floor to be honest: at these
-  * fixtures a healthy query's time is dominated by fixed planning/JIT
-  * cost, so ratios on sub-second times are noise. A query is flagged
-  * only when t_B > `floorSec` AND t_B / max(t_A, 0.05) > `ratioBound`
-  * (data grew 10×, so >`ratioBound`≈10× wall growth through the fixed-
-  * cost floor means the per-row cost itself grew — superlinear). A
-  * first-measurement flag is re-timed once on both SFs (min of two —
-  * the Bench stall discipline) before it counts, so one GC pause can't
-  * fail preflight.
-  *
-  * `runMain graft.ScalingAudit [sfA] [sfB] [ratioBound] [floorSec]
-  * [allowCsv]` — allowlist semantics as the other sweeps (`-` = gate
-  * with none; stale entries fail). Results print per query; flags ride
-  * [[AllowlistedSweep]]'s exit-code gate for preflight. */
-object ScalingAudit {
-  def main(args: Array[String]): Unit = {
-    val sfA = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val sfB = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val ratioBound = if (args.length > 2) args(2).toDouble else 10.0
-    val floorSec = if (args.length > 3) args(3).toDouble else 2.0
-    // clock-shape marker (construction + noop-sink materialization):
-    // distinct from PreflightSweep's construction+execute_count, so
-    // tools/scaling_baseline.py refuses to min-merge a spot-sweep log
-    // from this main into a PreflightSweep-harvested baseline unless
-    // told so explicitly
-    println("TIMING_PROTOCOL construction+noop_sink")
-    var warmed = false
-    def timeOne(spark: SparkSession, name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      // per-run owner scope (nested inside AllowlistedSweep's per-query
-      // scope): frees exactly this run's layouts
-      graft.operators.GlobalRank.withScope {
-        SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    AllowlistedSweep.run("SUPERLINEAR", args.lift(4), (spark, name) => {
-      if (!warmed) {
-        Seq(sfA, sfB).foreach { dir =>
-          AllowlistedSweep.WarmupQueries
-            .foreach(q => try timeOne(spark, q, dir)
-            catch { case _: Throwable => () })
-        }
-        warmed = true
-      }
-      def measure(): (Double, Double) =
-        (timeOne(spark, name, sfA), timeOne(spark, name, sfB))
-      var (ta, tb) = measure()
-      def ratio = tb / math.max(ta, 0.05)
-      if (tb > floorSec && ratio > ratioBound) {
-        // re-time both before flagging: min of two runs per SF
-        val (ta2, tb2) = measure()
-        ta = math.min(ta, ta2); tb = math.min(tb, tb2)
-      }
-      // every query's growth profile prints (not only flags): the sweep's
-      // raw data is what argues a bound or an allowlist entry in SCALE.md
-      println(f"TIMING $name tA=$ta%.3f tB=$tb%.3f ratio=${ratio}%.1f")
-      if (tb > floorSec && ratio > ratioBound)
-        Seq(f"tA=$ta%.2fs tB=$tb%.2fs ratio=${ratio}%.1fx " +
-          f"(bound ${ratioBound}%.0fx above ${floorSec}%.1fs floor)")
-      else Seq.empty
-    }, appName = "graft-scaling-audit")
-  }
-}
-
-/** ONE-JVM full-gate sweep (round-10 directive 8): the preflight gates
-  * previously ran as three separate mains — FunnelAudit(sfB),
-  * ScaleAudit(sfB), ScalingAudit(sfA, sfB) — paying three JVM/session
-  * startups, three query-construction passes, and TWO full sf-B catalog
-  * executions (the hazard sweep's and the timing gate's). This main
-  * runs all three checks per query in one pass: timed construction +
-  * execution at sfA (t_A), then ONE timed sf-B construction + execution
-  * that populates the hazard metrics AND serves as t_B, then the
-  * (untimed) window-funnel measurement on the SAME sf-B frame. Bounds
-  * are the preflight constants (funnel 32/512, hazard 512/64, scaling
-  * ratio 10 above a 2 s floor — the standalone mains keep flexible CLIs
-  * for spot use); allowlists are per-check with AllowlistedSweep's
-  * flag/stale/exit semantics (always gating). A first-measurement
+/** ONE-JVM full-gate sweep: the window-funnel, scale-hazard and
+  * cross-SF scaling checks share one JVM/session, one query-construction
+  * pass per SF, and ONE full sf-B catalog execution (the hazard
+  * measurement and the timing gate's t_B). It runs all three checks per
+  * query in one pass: timed construction + execution at sfA (t_A), then
+  * ONE timed sf-B construction + execution that populates the hazard
+  * metrics AND serves as t_B, then the (untimed) window-funnel
+  * measurement on the SAME sf-B frame. Bounds are the preflight
+  * constants (funnel 32/512, hazard 512/64, scaling ratio 10 above a
+  * 2 s floor); allowlists are per-check and always gate: exit 1 on any
+  * unexpected flag or stale allowlist entry. A first-measurement
   * scaling flag is re-timed on both SFs (min of two) before it counts.
   * Prints the same `TIMING name tA=… tB=… ratio=…` lines, so
   * tools/scaling_baseline.py harvests this sweep unchanged (timing
@@ -501,15 +328,14 @@ object PreflightSweep {
 
     val selected = AllowlistedSweep.selectWithBanner()
 
-    // Construction is INSIDE the clock — the protocol of the
-    // ScalingAudit.timeOne this sweep replaced. Eager-construction
-    // queries (trainer collect loops, graph/dedup localCheckpoint
-    // chains) do their dominant, SF-dependent work while the frame is
-    // BUILT; a clock that starts at execute() reads them near-zero and
-    // the superlinear gate goes blind to the entire class (lr1's
-    // 3-step training loop "measured" 0.015 s that way in the first
-    // harvest). Returns the constructed frame so the funnel check
-    // reuses it instead of paying construction a second time.
+    // Construction is INSIDE the clock. Eager-construction queries
+    // (trainer collect loops, graph/dedup localCheckpoint chains) do
+    // their dominant, SF-dependent work while the frame is BUILT; a
+    // clock that starts at execute() reads them near-zero and the
+    // superlinear gate goes blind to the entire class (lr1's 3-step
+    // training loop "measured" 0.015 s that way in the first harvest).
+    // Returns the constructed frame so the funnel check reuses it
+    // instead of paying construction a second time.
     def timedRun(name: String, dir: String)
     : (org.apache.spark.sql.DataFrame, Seq[PlanAudit.Hazard], Double) = {
       val t0 = System.nanoTime()
@@ -520,7 +346,7 @@ object PreflightSweep {
       (df, haz, constructSec + execSec)
     }
 
-    // warm-up (the Bench/ScalingAudit rule): first-touch JIT/codegen
+    // warm-up (the Bench rule): first-touch JIT/codegen
     // cost must not be billed to whichever query runs first. sfA frames
     // are only ever timed on the scaling path — in noscaling mode the
     // sfA warm-up would feed nothing, so skip it.
@@ -593,51 +419,5 @@ object PreflightSweep {
       s"ran: ${selected.size}/${SparkEntry.queries.size})")
     spark.stop()
     if (unexpected > 0 || stale.nonEmpty) sys.exit(1)
-  }
-}
-
-/** Execute one query (AQE off) and print every exchange / nested-loop
-  * node with its measured SQL metrics — the drill-down companion to
-  * ScaleAudit: `runMain graft.HazardShow <name> [sfDir]`. */
-object HazardShow {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = graft.core.GraftSession.local(appName = "graft-hazard-show")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
-    qe.executedPlan.execute().count()
-    def fmt(p: org.apache.spark.sql.execution.SparkPlan): String =
-      p.metrics.map { case (k, m) => s"$k=${m.value}" }.mkString(" ")
-    (qe.executedPlan +: qe.executedPlan.subqueriesAll).foreach {
-      _.foreach {
-        case e: ShuffleExchangeExec =>
-          println(s"SHUFFLE ${e.outputPartitioning} <- ${e.child.nodeName}: ${fmt(e)}")
-        case b: BroadcastExchangeExec =>
-          println(s"BCAST <- ${b.child.nodeName}: ${fmt(b)}")
-        case j: BroadcastNestedLoopJoinExec =>
-          println(s"BNLJ ${j.buildSide} ${j.joinType}")
-        case c: CartesianProductExec =>
-          println(s"CARTESIAN")
-        case _ => ()
-      }
-    }
-    println(qe.executedPlan.toString.take(8000))
-    spark.stop()
-  }
-}
-
-/** Print one query's full executed plan: `runMain graft.PlanShow <name> [sfDir]`. */
-object PlanShow {
-  def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = graft.core.GraftSession.local(appName = "graft-plan-show")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    println(SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.executedPlan.toString)
-    spark.stop()
   }
 }

@@ -41,8 +41,8 @@ case class AuditTime(micros: Long) extends LeafExpression {
 /** The `created_at`/`updated_at` audit columns of every silver, SCD2 and
   * gold table. Each call takes the time once, when the frame is built, so
   * both columns of a row (and every row of one frame) carry one value.
-  * The medallion transforms are batch-only: a streaming query built once
-  * would stamp every micro-batch with the time it was built. */
+  * The engine is batch-only, as the reference is: a streaming query
+  * built once would stamp every micro-batch with the time it was built. */
 object Audit {
   /** The current time as a non-null timestamp column ([[AuditTime]]). */
   def now(): Column =

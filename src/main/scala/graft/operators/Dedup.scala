@@ -254,10 +254,9 @@ object Dedup {
 
   /** The persistable LSH bucket INDEX of a corpus: one (id, band,
     * bucket) row per document×band. This is the index side of
-    * [[minhashDedupIncremental]] and of the streaming probe
-    * ([[graft.streaming.StreamingDedup]]); in production write it
-    * bucketed on (band, bucket) so every later probe join is
-    * exchange-free on the index side. */
+    * [[minhashDedupIncremental]]; in production write it bucketed on
+    * (band, bucket) so every later probe join is exchange-free on the
+    * index side. */
   def bucketIndex(df: DataFrame, textCol: String = "text",
                   idCol: String = "doc_id", numHashes: Int = 16,
                   bands: Int = 4, shingleN: Int = 3): DataFrame =

@@ -27,9 +27,8 @@ object Sampling {
     * product runs in decimal(38,0) so nothing overflows at corpus
     * scale, and every division is nonneg div nonneg — engine-identical.
     * The input is METADATA grain (L·S rows after one corpus rollup), so
-    * every join below broadcasts and the same program serves batch
-    * planning and a streaming rollup's periodic re-rake (the cell table
-    * is the state; see StreamingSpec's s17 twin). */
+    * every join below broadcasts. StreamingSpec's s17 case feeds it a
+    * complete-mode stream rollup's snapshot and gets the batch plan. */
   def rakeTwoRound(cells: DataFrame): DataFrame = {
     val tot = cells.agg(sum(col("n")).as("t"),
       countDistinct(col("lang")).as("nl"))

@@ -10,8 +10,7 @@ import graft.core.Tables
 /** Batch restatement of event-stream operations over the `events` table
   * (SURVEY.md §2.I: the reference's "incremental" processing is scheduled
   * batch; these show the same late-data-tolerant semantics expressed
-  * declaratively — the Structured Streaming variants live in
-  * graft.streaming).
+  * declaratively as batch queries).
   *
   * `events.ts` has shipped under two physical contracts (TIMESTAMP(NANOS)
   * read as long nanos, and timestamp[us] read as TIMESTAMP_NTZ);
@@ -87,9 +86,8 @@ object EventQueries {
     },
 
     // The NATIVE tumbling-window operator (`window(ts, duration)`), run
-    // in batch and oracled: epoch-aligned 6-hour buckets per event type —
-    // the same operator the streaming tumbling counts use. Start/end in
-    // epoch-µs longs for engine-exact comparison.
+    // in batch and oracled: epoch-aligned 6-hour buckets per event type.
+    // Start/end in epoch-µs longs for engine-exact comparison.
     "ev7_tumbling_counts" -> { (s, dir) =>
       val ev = Tables.eventsUs(s, dir)
         .withColumn("__ts", timestamp_micros(tsUs))
@@ -99,8 +97,7 @@ object EventQueries {
           col("event_type"), col("n_events"))
     },
 
-    // The NATIVE session-window operator (same `session_window` the
-    // streaming sessionizer uses — graft.streaming.EventStreams), run in
+    // The NATIVE session-window operator (`session_window`), run in
     // batch and oracled: Spark merges per-event [ts, ts+gap) windows, so
     // a new session starts iff the silence is >= gap; window end = last
     // event + gap. One shuffle on the session-window key; state merges
@@ -465,17 +462,14 @@ object EventQueries {
             .cast("bigint").as("fresh_24h"))
     },
 
-    // TS15 (beyond reference): ONE-STEP-AHEAD online anomaly flags — the
-    // exact batch twin of streaming/StatefulAnomaly: each day's count is
-    // tested against the running statistics of STRICTLY PRIOR days
-    // (cumulative ROWS .. 1 PRECEDING window), so the anomaly can't
-    // inflate the variance it is judged against — ts1's honest online
-    // formulation. The |z| > 2.5 test is the cross-multiplied integer
-    // inequality 4·(x·n − S)² > 25·(n·Σx² − S²) in decimal(38,0) — the
-    // same arithmetic the streaming processor runs in BigInt, so replaying
-    // a backfill through either tier yields identical flags (equivalence
-    // pinned in StreamingSpec). One (type, day) rollup shuffle; the window
-    // is co-partitioned by series.
+    // TS15 (beyond reference): ONE-STEP-AHEAD online anomaly flags: each
+    // day's count is tested against the running statistics of STRICTLY
+    // PRIOR days (cumulative ROWS .. 1 PRECEDING window), so the anomaly
+    // can't inflate the variance it is judged against — ts1's honest
+    // online formulation. The |z| > 2.5 test is the cross-multiplied
+    // integer inequality 4·(x·n − S)² > 25·(n·Σx² − S²) in decimal(38,0).
+    // One (type, day) rollup shuffle; the window is co-partitioned by
+    // series.
     "ts15_online_anomaly" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
       val daily = Tables.eventsUs(s, dir)
@@ -1402,8 +1396,7 @@ object EventQueries {
         .filter(col("n") >= 20)
     },
 
-    // Full-outer interval join (batch twin of streaming.EventStreams
-    // .attributeClicksFullOuter): views matched to clicks within 30 min,
+    // Full-outer interval join: views matched to clicks within 30 min,
     // PLUS unconverted views and orphan clicks null-extended.
     "ev5_interval_fullouter" -> { (s, dir) =>
       val ev = Tables.eventsUs(s, dir)
@@ -1478,14 +1471,14 @@ object EventQueries {
     // arrived in its user's stream) − its own event-time; the output is
     // the cumulative coverage curve per candidate watermark (6-hour
     // buckets), and the row where coverage_micro crosses the SLO is the
-    // delay to configure on graft.streaming.EventStreams. The fixture's
-    // event_ids arrive exactly in event-time order (zero lateness), so
-    // arrival disorder is SYNTHESIZED deterministically — every 7th
-    // event_id is displaced +400 arrival slots (the tx7 contract: the
-    // oracle rebuilds the identical disorder). One sorted window per
-    // user for the running max (co-partitioned, no global pass), a
-    // bucket rollup, and a bucket-grain (metadata-sized) cumulative
-    // window; all integer arithmetic.
+    // delay to configure. The fixture's event_ids arrive exactly in
+    // event-time order (zero lateness), so arrival disorder is
+    // SYNTHESIZED deterministically — every 7th event_id is displaced
+    // +400 arrival slots (the tx7 contract: the oracle rebuilds the
+    // identical disorder). One sorted window per user for the running max
+    // (co-partitioned, no global pass), a bucket rollup, and a
+    // bucket-grain (metadata-sized) cumulative window; all integer
+    // arithmetic.
     "ev22_watermark_audit" -> { (s, dir) =>
       val bucketUs = 6L * 3600L * 1000000L
       val arrival = Window.partitionBy(col("user_id"))

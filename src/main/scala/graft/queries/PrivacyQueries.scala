@@ -60,10 +60,9 @@ object PrivacyQueries {
     "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
 
   /** Per-row detector projection: the input plus `ne`/`np`/`ni` match
-    * counts over `textCol`. PUBLIC because it is also the streaming
-    * ingest gate: a pure stateless projection, so the identical column
-    * program runs append-mode on an arriving stream (StreamingSpec pins
-    * batch ≡ stream parity) and in the batch census below. */
+    * counts over `textCol`. A pure stateless projection, so the same
+    * column program runs in the batch census below and, unchanged,
+    * append-mode on a stream (StreamingSpec pins batch ≡ stream). */
   def piiCounts(docs: DataFrame, textCol: String,
                 phonePattern: String = phonePat()): DataFrame =
     docs.select(col("*"),

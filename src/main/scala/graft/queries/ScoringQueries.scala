@@ -17,12 +17,6 @@ import graft.operators.{ChangeCapture, Retrieval, Sampling, Scoring, TextAnalysi
   */
 object ScoringQueries {
 
-  /** Same spread as TrainingDataQueries.docsSpread: the harness parquet is
-    * one row group and these queries are compute-bound per row. */
-  private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-
   private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
   /** DuckDB fragment matching [[graft.operators.Scoring.hashedLinearScore]]'s
@@ -45,7 +39,7 @@ object ScoringQueries {
     // the token array, zero shuffles — the fastText-style score-everything
     // pass of corpus curation.
     "ml1_linear_score" -> { (s, dir) =>
-      Scoring.hashedLinearScore(docsSpread(s, dir))
+      Scoring.hashedLinearScore(Tables.spread(Tables.documents(s, dir)))
     },
 
     // ml1 with EXTERNALLY-SUPPLIED trained weights (the deployment path):
@@ -55,7 +49,7 @@ object ScoringQueries {
     // weights, proving the scoring path is model-agnostic, not formula-
     // baked.
     "ml14_trained_score" -> { (s, dir) =>
-      Scoring.linearScoreWithWeights(docsSpread(s, dir),
+      Scoring.linearScoreWithWeights(Tables.spread(Tables.documents(s, dir)),
         trainedWeights, bias = 5L)
     },
 
@@ -73,7 +67,7 @@ object ScoringQueries {
     // replays the whole composition — split, training rollup, weight
     // formula, scoring — in one SQL statement.
     "ml18_train_then_score" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val gate = Sampling.bucket(col("doc_id"), "ml18") % 2
       val trainToks = d.filter(gate === 0)
         .select((col("lang") === "en").as("en"),
@@ -101,7 +95,7 @@ object ScoringQueries {
     // exact-ratio doubles. NULL rates where a group lacks
     // positives/negatives are surfaced, not hidden.
     "ml20_fairness_audit" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val d = Scoring.hashedLinearScore(docs)
         .join(docs.select(col("doc_id"), col("lang"),
           (length(col("text")) >= 100).as("hq")), "doc_id")
@@ -145,7 +139,7 @@ object ScoringQueries {
     // arithmetic over two broadcast scalar rows.
     "cp1_split_conformal" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val d = Scoring.hashedLinearScore(docs)
         .join(docs.select(col("doc_id"),
           (col("lang") === "en").as("en")), "doc_id")
@@ -185,7 +179,7 @@ object ScoringQueries {
     // back over the test half.
     "cp2_mondrian_conformal" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val d = Scoring.hashedLinearScore(docs)
         .join(docs.select(col("doc_id"),
           (col("lang") === "en").as("en")), "doc_id")
@@ -219,7 +213,7 @@ object ScoringQueries {
     // (kept as exact-ratio doubles — no negative integer division);
     // scoring and the joint are one scan plus a 5-cell rollup.
     "ml19_confident_learning" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val d = Scoring.hashedLinearScore(docs)
         .join(docs.select(col("doc_id"),
           (col("lang") === "en").as("en")), "doc_id")
@@ -254,7 +248,7 @@ object ScoringQueries {
     // conditional-count aggregate over the joined verdicts; the
     // statistic is a single IEEE division of exact integers.
     "ml17_mcnemar" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val a = Scoring.hashedLinearScore(d)
         .select(col("doc_id"), col("keep").as("keep_a"))
       val b = Scoring.linearScoreWithWeights(d, trainedWeights, bias = 5L)
@@ -286,7 +280,7 @@ object ScoringQueries {
     // lang='en' label: distinct-score aggregation first (map-side
     // combined), then the cumulative window over score-cardinality rows.
     "ml2_threshold_sweep" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val labeled = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -358,7 +352,7 @@ object ScoringQueries {
     // rollups are category-grain.
     "fe23_mi_relevance" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val d = docsSpread(s, dir).select(
+      val d = Tables.spread(Tables.documents(s, dir)).select(
         expr("stack(2, 'source', source, 'lang', lang)")
           .as(Seq("feature", "v")),
         when(col("n_chars") >= 200, 1L).otherwise(0L).as("y"))
@@ -384,7 +378,7 @@ object ScoringQueries {
     },
 
     "fe22_equal_freq_binning" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
         .select(col("source"), col("doc_id"), col("n_chars"))
       graft.operators.GlobalRank.withGroupedRowNumber(d,
           group = Seq("source"),
@@ -405,7 +399,7 @@ object ScoringQueries {
     // tail). One vocabulary rollup, then three bucket rollups at
     // vocabulary grain — never corpus-sized.
     "fe21_hashing_collision_audit" -> { (s, dir) =>
-      val vocab = docsSpread(s, dir)
+      val vocab = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("token"))
         .filter(length(col("token")) > 0)
@@ -526,7 +520,7 @@ object ScoringQueries {
     // derives from those exact integers through the same expression tree
     // as the oracle, so z-scores are bit-identical.
     "fe4_zscore" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), col("source"), col("n_chars"))
       val stats = d.groupBy("source").agg(
         count(lit(1)).as("n"),
@@ -550,7 +544,7 @@ object ScoringQueries {
     // quotient (Spark's integer `div` truncates toward zero, DuckDB's `//`
     // floors — they disagree on negative scores, the double floor doesn't).
     "ml3_calibration" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -573,7 +567,7 @@ object ScoringQueries {
     // the per-bin rollup is one map-side-combined shuffle, the summary is
     // bin-count-sized.
     "ml15_ece" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val binned = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -601,7 +595,7 @@ object ScoringQueries {
     // (N·(n11+n00) − Σ marginal products) / (N² − Σ marginal products),
     // so both engines produce the identical double.
     "ml16_cohens_kappa" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val cells = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -640,7 +634,7 @@ object ScoringQueries {
     // stay exact integers, one division per readout.
     "ml21_xauc" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val labeled = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("en"),
           (TextAnalysis.tokenCount(col("text")) > 40).as("label")),
@@ -686,7 +680,7 @@ object ScoringQueries {
     },
 
     "ml4_auc" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val labeled = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -726,7 +720,7 @@ object ScoringQueries {
     // either side drop (both engines identically) — the no-epsilon
     // convention, documented in place of the usual fudge factor.
     "ml11_psi" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val binned = Scoring.hashedLinearScore(d)
         .select(col("doc_id"), expr("score div 4").as("bin"),
           (col("doc_id") % 2 === 0).as("is_old"))
@@ -760,7 +754,7 @@ object ScoringQueries {
     // |cum_pos·N⁻ − cum_neg·N⁺| — order-free, no float CDFs compared;
     // the one division happens after the max.
     "ml10_ks_stat" -> { (s, dir) =>
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val labeled = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -799,7 +793,7 @@ object ScoringQueries {
     // past that the term moves to decimal(38,0), same as tx20's sums.)
     "ml8_average_precision" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val labeled = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -853,7 +847,7 @@ object ScoringQueries {
     // Log-scaled TF-IDF against the same probe-term set as ir1_bm25: one
     // narrow scan + one broadcast scalar aggregate.
     "ir2_tfidf" -> { (s, dir) =>
-      Retrieval.tfidf(docsSpread(s, dir), tfidfTerms)
+      Retrieval.tfidf(Tables.spread(Tables.documents(s, dir)), tfidfTerms)
     },
 
     // IR15 (beyond reference): query CLARITY score (Cronen-Townsend et
@@ -867,7 +861,7 @@ object ScoringQueries {
     // scan at any corpus size. Each KL term is nano-quantized before
     // the cross-token sum (the cross-row float contract).
     "ir15_clarity" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val top = Retrieval.bm25(docs, tfidfTerms)
         .orderBy(col("bm25").desc, col("doc_id").asc).limit(10)
         .select("doc_id")
@@ -911,7 +905,8 @@ object ScoringQueries {
     // 10-row depth frame. Emits the full agreement/RBO curve.
     "ir14_rbo" -> { (s, dir) =>
       // round 14: one tokenized scan serves both rankings (ir3's shape)
-      val both = Retrieval.bm25AndTfidf(docsSpread(s, dir), tfidfTerms)
+      val both =
+        Retrieval.bm25AndTfidf(Tables.spread(Tables.documents(s, dir)), tfidfTerms)
       val wA = Window.orderBy(col("bm25").desc, col("doc_id").asc)
       val topA = both.select("doc_id", "bm25")
         .orderBy(col("bm25").desc, col("doc_id").asc).limit(10)
@@ -951,8 +946,9 @@ object ScoringQueries {
     // both broadcast back over the scan; the fraction derives from exact
     // integer counts through the same expression tree in both engines.
     "fe5_target_encode" -> { (s, dir) =>
-      val d = docsSpread(s, dir).select(col("doc_id"), col("source"),
-        (col("lang") === "en").as("label"))
+      val d = Tables.spread(Tables.documents(s, dir))
+        .select(col("doc_id"), col("source"),
+          (col("lang") === "en").as("label"))
       val glob = d.agg(count(lit(1)).as("tn"),
         sum(when(col("label"), 1L).otherwise(0L)).as("tp"))
       val per = d.groupBy("source").agg(count(lit(1)).as("n"),
@@ -978,7 +974,7 @@ object ScoringQueries {
     // encoding is reproducible forever and across engines.
     "fe8_kfold_target_encode" -> { (s, dir) =>
       import graft.operators.Sampling
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), col("source"),
           (col("lang") === "en").as("label"))
         .withColumn("b", Sampling.bucket(col("doc_id"), "fold"))
@@ -1019,8 +1015,9 @@ object ScoringQueries {
     // 4×2 — metadata — after one count shuffle.
     "fe10_feature_mi" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val d = docsSpread(s, dir).select(col("doc_id"), col("n_chars"),
-        (col("lang") === "en").as("label"))
+      val d = Tables.spread(Tables.documents(s, dir))
+        .select(col("doc_id"), col("n_chars"),
+          (col("lang") === "en").as("label"))
       val n = d.count()
       val ranked = GlobalRank.withGlobalRowNumber(d,
         Seq(col("n_chars"), col("doc_id")), "rn")
@@ -1049,7 +1046,7 @@ object ScoringQueries {
     // micro-quantized WoE and divided ONCE — order-free integer sum.
     // Same two-aggregate broadcast shape as fe9.
     "fe16_information_value" -> { (s, dir) =>
-      val c = docsSpread(s, dir).groupBy("source")
+      val c = Tables.spread(Tables.documents(s, dir)).groupBy("source")
         .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("good"),
           sum(when(col("lang") === "en", 0L).otherwise(1L)).as("bad"))
       val tot = c.agg(sum(col("good")).as("gt"), sum(col("bad")).as("bt"))
@@ -1070,7 +1067,7 @@ object ScoringQueries {
     },
 
     "fe9_woe" -> { (s, dir) =>
-      val c = docsSpread(s, dir).groupBy("source")
+      val c = Tables.spread(Tables.documents(s, dir)).groupBy("source")
         .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("good"),
           sum(when(col("lang") === "en", 0L).otherwise(1L)).as("bad"))
       val tot = c.agg(sum(col("good")).as("gt"), sum(col("bad")).as("bt"))
@@ -1093,7 +1090,7 @@ object ScoringQueries {
     // equi-join on the computed global position.
     "fe6_quantile_norm" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), col("source"), col("n_chars"))
         // pinned: this narrow doc-grain projection feeds FOUR consumers
         // (grouped rank, per-source counts, the global rank layout, and
@@ -1147,7 +1144,8 @@ object ScoringQueries {
       // proxy table (Retrieval.bm25AndTfidf) — the standalone bm25 and
       // tfidf calls each scanned and tokenized the corpus (the two term
       // sets are the same probe set); scores are bit-identical
-      val both = Retrieval.bm25AndTfidf(docsSpread(s, dir), tfidfTerms)
+      val both =
+        Retrieval.bm25AndTfidf(Tables.spread(Tables.documents(s, dir)), tfidfTerms)
       Retrieval.rrfFuse(
         both.select("doc_id", "bm25"),
         both.select("doc_id", "tfidf"),
@@ -1222,7 +1220,7 @@ object ScoringQueries {
     // floor keeps harness output at head-term postings (a real index
     // shards exactly these hot postings lists by doc-range).
     "ir4_postings" -> { (s, dir) =>
-      val toks = docsSpread(s, dir)
+      val toks = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("term"))
@@ -1244,7 +1242,7 @@ object ScoringQueries {
     // co-partitioned shape a positional index evaluates phrases with,
     // never a doc-text rescan.
     "ir7_phrase_match" -> { (s, dir) =>
-      val tp = docsSpread(s, dir)
+      val tp = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           posexplode(split(TextAnalysis.normalizeText(col("text")), " ")))
         .select(col("doc_id"), col("pos").cast("bigint").as("pos"),
@@ -1270,7 +1268,7 @@ object ScoringQueries {
     // phrase-match pass plus a projection — no text re-scan, no UDF.
     "ir9_snippets" -> { (s, dir) =>
       val toksCol = split(TextAnalysis.normalizeText(col("text")), " ")
-      val docs = docsSpread(s, dir).select(col("doc_id"),
+      val docs = Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
         toksCol.as("toks"))
       val tp = docs.select(col("doc_id"), posexplode(col("toks")))
         .select(col("doc_id"), col("pos").cast("bigint").as("pos"),
@@ -1300,7 +1298,7 @@ object ScoringQueries {
     // shuffle carries at most term-cardinality × 10 rows — at web scale
     // the difference between shipping postings and shipping champions.
     "ir8_champion_lists" -> { (s, dir) =>
-      val postings = docsSpread(s, dir)
+      val postings = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("term"))
@@ -1321,7 +1319,7 @@ object ScoringQueries {
     // denominator an order-free integer. One vocabulary aggregate, one
     // broadcast scalar.
     "s11_negative_sampling" -> { (s, dir) =>
-      val tf = docsSpread(s, dir)
+      val tf = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("term"))
         .filter(length(col("term")) > 0)
@@ -1347,7 +1345,7 @@ object ScoringQueries {
     // identical curves.
     "ml12_decile_lift" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val labeled = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")
@@ -1385,7 +1383,7 @@ object ScoringQueries {
     // UNC holds up to quantization (each side also reported).
     "ml13_brier_decomposition" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val d = docsSpread(s, dir)
+      val d = Tables.spread(Tables.documents(s, dir))
       val sc = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
           "doc_id")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -138,8 +138,8 @@ object TrainerQueries {
   /** Apply ONE merge pair (any 1-row frame with (ml, mr) columns — the
     * training argmax, or a frozen learned merge on the apply side) to a
     * segmentation, greedily left-to-right. Factored out of [[mergeRound]]
-    * so `streaming.TrainerStreams` can replay a learned merge table with
-    * the training-side algebra. */
+    * so [[pretokenizedVocab]] can replay a learned merge table with the
+    * training-side algebra. */
   private[graft] def applyPick(seg: DataFrame, pick: DataFrame): DataFrame = {
     val w = Window.partitionBy("word").orderBy("pos")
     val withNxt = seg.withColumn("nxt", lead(col("sym"), 1).over(w))
@@ -168,15 +168,14 @@ object TrainerQueries {
     * the word-type vocabulary ONCE under a FROZEN learned merge table —
     * with the training-side algebra itself ([[applyPick]] replayed per
     * merge) — and serve word → tokens downstream as a lookup join, the
-    * design real tokenizers ship. The fold form
-    * ([[graft.streaming.TrainerStreams.applyMerges]]) builds one
-    * CodegenFallback HOF per merge and is bounded at
-    * [[graft.streaming.TrainerStreams.MaxFoldMerges]] entries; THIS
-    * form costs merge-table-depth × a WORD-TYPE-grain pass (the same
-    * ~10³× corpus→vocabulary reduction the trainer rides), independent
-    * of corpus size, amortized once per released tokenizer. The
-    * segmentation is re-pinned every `checkpointEvery` merges so
-    * lineage/plan depth stays bounded at a ~30k-entry production table.
+    * design real tokenizers ship. The fold form ([[applyMerges]]) builds
+    * one CodegenFallback HOF per merge and is bounded at
+    * [[MaxFoldMerges]] entries; THIS form costs merge-table-depth × a
+    * WORD-TYPE-grain pass (the same ~10³× corpus→vocabulary reduction the
+    * trainer rides), independent of corpus size, amortized once per
+    * released tokenizer. The segmentation is re-pinned every
+    * `checkpointEvery` merges so lineage/plan depth stays bounded at a
+    * ~30k-entry production table.
     *
     * Returns (word, freq, tokens array&lt;string&gt;), tokens in
     * position order. */
@@ -203,6 +202,42 @@ object TrainerQueries {
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("sym")))),
         e => e.getField("sym")).as("tokens"))
+
+  /** The fold form's executable scale bound: [[applyMerges]] folds one
+    * `aggregate` HOF per merge, so a table of n merges builds an n-deep
+    * CodegenFallback expression tree — fine at fixture scale, a plan-size
+    * explosion at a production ~30k-entry table. Past this bound,
+    * pretokenize the vocabulary once ([[pretokenizedVocab]]) and serve
+    * word → tokens as a left join on `word`. */
+  val MaxFoldMerges = 64
+
+  /** Tokenize one word column under a FROZEN merge list: characters,
+    * then each merge applied greedily in learned order, as chained
+    * `aggregate` higher-order functions — a stateless per-row projection.
+    * Greedy left-to-right semantics fall out of the fold: a merged symbol
+    * is strictly longer than the merge's left symbol, so it never
+    * re-matches within the same pass (`aaa` + (a,a) → [aa, a], the
+    * training side's run-parity result; StreamingSpec and TrainerSpec pin
+    * fold ≡ [[applyPick]] replay). Returns `array<string>`. Bounded at
+    * [[MaxFoldMerges]] entries. */
+  def applyMerges(word: Column, merges: Seq[(String, String)]): Column = {
+    require(merges.size <= MaxFoldMerges,
+      s"applyMerges folds one aggregate HOF per merge: ${merges.size} " +
+        s"merges would build a ${merges.size}-deep CodegenFallback " +
+        s"expression tree (bound $MaxFoldMerges) — pretokenize the " +
+        "vocabulary once (TrainerQueries.pretokenizedVocab) and left-join " +
+        "it on word instead")
+    val chars = filter(split(word, "(?!^)"), s => s =!= lit(""))
+    merges.foldLeft(chars) { case (syms, (l, r)) =>
+      aggregate(syms, array().cast("array<string>"),
+        (acc, s) =>
+          when(size(acc) > 0 &&
+              element_at(acc, -1) === lit(l) && s === lit(r),
+            concat(slice(acc, lit(1), size(acc) - 1),
+              array(concat(element_at(acc, -1), s))))
+            .otherwise(concat(acc, array(s))))
+    }
+  }
 
   // ------------------------------------------------------------ LogReg
 
@@ -390,12 +425,12 @@ object TrainerQueries {
     // under an exact oracle. On a real corpus the augmentation column
     // is simply the raw text. The LEFT join keeps OOV words with NULL
     // token counts and the census reports them under the documented
-    // count-OOV-separately policy (TrainerStreams.tokenizeViaVocab's
-    // caller-policy contract). Output: per-source token census — total
-    // words, word types, in-vocabulary token count, OOV word/type
-    // counts, and the token total under the bounded-fold straggler
-    // fallback (round-12 directive 6: the coalesce(tokens, fold) path
-    // is ORACLED here, not just spec-pinned — see foldToks below).
+    // count-OOV-separately policy (the lookup join's caller-policy
+    // contract). Output: per-source token census — total words, word
+    // types, in-vocabulary token count, OOV word/type counts, and the
+    // token total under the bounded-fold straggler fallback (round-12
+    // directive 6: the coalesce(tokens, fold) path is ORACLED here, not
+    // just spec-pinned — see foldToks below).
     "bpe4_tokenize_corpus" -> { (s, dir) =>
       // novel word: 'q' + doc_id%1000 digits mapped to letters — inside
       // the default [a-z]{2,12} gate, ~1000 types corpus-wide, half of
@@ -424,8 +459,8 @@ object TrainerQueries {
       // replay paid ~3 more applyPick window chains over the word-type
       // table per run for a value TrainerSpec pins as identical
       // ("pretokenizedVocab replays the training algebra"). The frozen-
-      // artifact replay path stays covered by bpc2/bpc3 and the
-      // streaming specs; the word-grain serving JOIN below is unchanged.
+      // artifact replay path stays covered by bpc2/bpc3 and TrainerSpec;
+      // the word-grain serving JOIN below is unchanged.
       val vocab = segVocab(seg)
         .select(col("word"), size(col("tokens")).cast("bigint").as("n_toks"))
       val words = augDocs.select(col("source"),
@@ -433,14 +468,13 @@ object TrainerQueries {
             .as("word"))
         .filter(col("word").rlike(wordPat))
       // the OOV straggler fallback, oracled (round-12 directive 6): an
-      // OOV word is tokenized by the bounded fold
-      // (TrainerStreams.applyMerges — the production coalesce(tokens,
-      // fold) path), so the census also reports the token total AS IF
-      // every OOV word were folded in-line. The census runs at word-
-      // TYPE grain (round 13): the occurrence stream is first map-side-
-      // combined to (source, word, occ) counts, so the vocab hash join
-      // probes types not occurrences, the fold (a bounded
-      // CodegenFallback HOF, ≤3 merges here, ≤MaxFoldMerges by
+      // OOV word is tokenized by the bounded fold (applyMerges — the
+      // production coalesce(tokens, fold) path), so the census also
+      // reports the token total AS IF every OOV word were folded in-line.
+      // The census runs at word-TYPE grain (round 13): the occurrence
+      // stream is first map-side-combined to (source, word, occ) counts,
+      // so the vocab hash join probes types not occurrences, the fold (a
+      // bounded CodegenFallback HOF, ≤3 merges here, ≤MaxFoldMerges by
       // contract) evaluates ONCE per type instead of once per OOV
       // occurrence, and the per-source distinct-type counts are plain
       // sums at this grain — no countDistinct, so no Expand multiplying
@@ -449,8 +483,7 @@ object TrainerQueries {
       // not corpus size. The oracle replays the same picks over a
       // whole-corpus segmentation with the training algebra's SQL twin.
       val foldToks =
-        size(graft.streaming.TrainerStreams.applyMerges(col("word"),
-          merges)).cast("bigint")
+        size(applyMerges(col("word"), merges)).cast("bigint")
       words.groupBy("source", "word")
         .agg(count(lit(1)).cast("bigint").as("occ"))
         .join(vocab, Seq("word"), "left")
@@ -536,10 +569,9 @@ object TrainerQueries {
     * segmentation (the a/b/c/d/seg chain of [[roundSql]]), factored so
     * the bpe4 oracle can REPLAY the learned picks over a different
     * (whole-corpus) segmentation — the SQL twin of [[applyPick]] and
-    * therefore of the serving fold fallback
-    * ([[graft.streaming.TrainerStreams.applyMerges]], whose ≡-to-
-    * training-algebra parity StreamingSpec pins). `tag` uniquifies the
-    * intermediate CTE names; `nxSrc` must carry (word, freq, pos, sym,
+    * therefore of the serving fold fallback ([[applyMerges]], whose
+    * ≡-to-training-algebra parity StreamingSpec pins). `tag` uniquifies
+    * the intermediate CTE names; `nxSrc` must carry (word, freq, pos, sym,
     * nxt). */
   private def applyChainSql(tag: String, nxSrc: String, pick: String,
                             outSeg: String): String =

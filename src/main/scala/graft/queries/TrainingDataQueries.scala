@@ -18,13 +18,6 @@ import graft.operators.{Contamination, Dedup, KMeans, Packing, ProductQuantizati
   */
 object TrainingDataQueries {
 
-  /** documents, spread across cores: the harness parquet is one row group
-    * (scan = 1 task) and these queries are compute-bound per row, so a
-    * cheap round-robin exchange buys full parallelism. */
-  private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-
   private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
   private val stopPat =
     "\\b(the|a|an|of|and|in|to|is|it|for|on|with|as|at|by|from)\\b"
@@ -46,7 +39,7 @@ object TrainingDataQueries {
     // (CollapseProject keeps non-cheap exprs referenced twice un-inlined).
     "tx1_token_stats" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), t,
           TextAnalysis.tokenCount(t).as("n_tokens"),
           TextAnalysis.bpeishTokenCount(t).as("n_tokens_bpeish"))
@@ -60,7 +53,7 @@ object TrainingDataQueries {
     // from counts computed ONCE (mirrors the oracle's CTE shape).
     "tx2_quality" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), t,
           TextAnalysis.tokenCount(t).as("nt"),
           TextAnalysis.stopwordCount(t).as("nsw"),
@@ -82,7 +75,7 @@ object TrainingDataQueries {
     // report exists to expose). |langs|²-sized output after one
     // map-side-combined count.
     "tx16_lang_confusion" -> { (s, dir) =>
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("lang").as("true_lang"),
           TextAnalysis.langId(col("text")).as("pred_lang"))
         .groupBy("true_lang", "pred_lang").agg(count(lit(1)).as("n"))
@@ -90,7 +83,7 @@ object TrainingDataQueries {
 
     "tx3_lang_id" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir).select(
+      Tables.spread(Tables.documents(s, dir)).select(
         col("doc_id"),
         TextAnalysis.langScore(t, "en").as("s_en"),
         TextAnalysis.langScore(t, "de").as("s_de"),
@@ -101,7 +94,7 @@ object TrainingDataQueries {
 
     // Document fingerprinting: md5 of normalized text + 64-bit key.
     "tx4_fingerprint" -> { (s, dir) =>
-      docsSpread(s, dir).select(
+      Tables.spread(Tables.documents(s, dir)).select(
         col("doc_id"),
         TextAnalysis.fingerprint(col("text")).as("fp"),
         TextAnalysis.fingerprint64(col("text")).as("fp64"))
@@ -111,7 +104,7 @@ object TrainingDataQueries {
     // removal counts alongside (quality filters key off them).
     "tx5_clean_text" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir).select(
+      Tables.spread(Tables.documents(s, dir)).select(
         col("doc_id"),
         TextAnalysis.urlCount(t).as("n_urls"),
         TextAnalysis.emailCount(t).as("n_emails"),
@@ -134,7 +127,7 @@ object TrainingDataQueries {
           ((id % 254) + 1).cast("string"))),
         when(id % 5 =!= 0, concat(lit("tel +1 555-01"),
           lpad((id % 100).cast("string"), 2, "0"), lit(" now"))))
-      docsSpread(s, dir).select(id, pii.as("pii_text"),
+      Tables.spread(Tables.documents(s, dir)).select(id, pii.as("pii_text"),
         TextAnalysis.redactPii(pii).as("redacted"))
     },
 
@@ -155,7 +148,7 @@ object TrainingDataQueries {
     "tx38_countmin" -> { (s, dir) =>
       import graft.functions.HashExpressions.md5Prefix60
       val probeToks = Seq("dup", "key", "the", "batch")
-      val toks = docsSpread(s, dir)
+      val toks = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")),
           " ")).as("tok"))
         .filter(length(col("tok")) > 0)
@@ -193,7 +186,7 @@ object TrainingDataQueries {
     // everything is ≤200·#sources rows. Zero-overlap pairs still emit
     // (sizes frame outer-applied), jaccard as exact micro integers.
     "tx39_source_vocab_jaccard" -> { (s, dir) =>
-      val counts = docsSpread(s, dir)
+      val counts = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("tok"))
@@ -224,7 +217,7 @@ object TrainingDataQueries {
     },
 
     "tx6_top_tokens" -> { (s, dir) =>
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("token"))
         .filter(length(col("token")) > 0)
@@ -243,7 +236,7 @@ object TrainingDataQueries {
     // the classic "distinct-so-far per prefix" is answered by first-seen
     // attribution + one running sum.
     "tx23_vocab_growth" -> { (s, dir) =>
-      val toks = docsSpread(s, dir)
+      val toks = Tables.spread(Tables.documents(s, dir))
         .select(expr("doc_id div 100").as("batch"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -267,7 +260,7 @@ object TrainingDataQueries {
     // (d10/d16's estimate-vs-exact trick, now for frequencies).
     "tx10_heavy_hitters" -> { (s, dir) =>
       import graft.operators.Sketches
-      val toks = docsSpread(s, dir)
+      val toks = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("token"))
         .filter(length(col("token")) > 0)
@@ -280,7 +273,7 @@ object TrainingDataQueries {
     // GlobalRank's two-pass range layout over the distinct vocabulary.
     "fe1_dict_encode" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val vocab = docsSpread(s, dir)
+      val vocab = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("token"))
         .filter(length(col("token")) > 0)
@@ -296,7 +289,7 @@ object TrainingDataQueries {
     // behind vocab-size choices. The (tiny) truncated vocabulary
     // broadcasts; the corpus is scanned once.
     "fe2_oov_rate" -> { (s, dir) =>
-      val toks = docsSpread(s, dir)
+      val toks = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -318,7 +311,7 @@ object TrainingDataQueries {
     // decisions). Shuffle ∝ distinct (source, shingle) rows; the pair
     // join keys on the shingle, never a document cross product.
     "dd7_source_overlap" -> { (s, dir) =>
-      val sh = docsSpread(s, dir)
+      val sh = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(Dedup.shinglesExpr(col("text"), 3)).as("sh"))
         .distinct()
@@ -409,7 +402,7 @@ object TrainingDataQueries {
     // drift1, same exact integer TV numerator. A vocabulary whose mass
     // moves between drops is the first sign of a source change.
     "drift2_vocab_shift" -> { (s, dir) =>
-      val toks = docsSpread(s, dir)
+      val toks = Tables.spread(Tables.documents(s, dir))
         .select((col("doc_id") % 2 === 0).as("is_old"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -433,7 +426,7 @@ object TrainingDataQueries {
     // by (vocab tokens per doc)² — never corpus²; ln quantizes to
     // integer micro-nats (lm1's trick) so both engines agree exactly.
     "fe3_pmi_pairs" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val toks = docs.select(col("doc_id"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -467,7 +460,7 @@ object TrainingDataQueries {
     // statement (tx9's gate CTE + dd4's recursive closure + s3's bucket
     // CASE nested in DuckDB).
     "pipe1_curation_funnel" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       // Round 14: the r13 gated/deduped pins are GONE. The driver's
       // cold-JVM bench billed them at −22% on this query: `clusters`
       // already ends at connectedComponents' own checkpointed labels, so
@@ -499,7 +492,8 @@ object TrainingDataQueries {
     // by record-keyed md5 order — the class-balancing quota, stable
     // under repartitioning and re-runs like every other gate.
     "s5_balanced_cap" -> { (s, dir) =>
-      Sampling.capPerKey(docsSpread(s, dir).select("doc_id", "lang"),
+      Sampling.capPerKey(
+        Tables.spread(Tables.documents(s, dir)).select("doc_id", "lang"),
         key = col("lang"), id = col("doc_id"), maxN = 20)
     },
 
@@ -510,7 +504,7 @@ object TrainingDataQueries {
     // per-doc hashing cannot prevent). Singletons hash their own id,
     // which IS their representative.
     "s6_group_split" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val clusters = Dedup.connectedComponents(
         Dedup.minhashDedup(docs, threshold = 0.5).select("id_a", "id_b"))
       val grouped = docs.select("doc_id")
@@ -529,9 +523,10 @@ object TrainingDataQueries {
     // the j5 skew case — salt the window key or pre-aggregate per
     // (source, bucket) if a source dominates.
     "mix2_token_budget" -> { (s, dir) =>
-      val st = docsSpread(s, dir).select(col("doc_id"), col("source"),
-        TextAnalysis.tokenCount(col("text")).as("n_toks"),
-        Sampling.bucket(col("doc_id"), "mix2").as("bkt"))
+      val st = Tables.spread(Tables.documents(s, dir))
+        .select(col("doc_id"), col("source"),
+          TextAnalysis.tokenCount(col("text")).as("n_toks"),
+          Sampling.bucket(col("doc_id"), "mix2").as("bkt"))
       val w = Window.partitionBy(col("source"))
         .orderBy(col("bkt"), col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -552,7 +547,7 @@ object TrainingDataQueries {
     // map-side-combined count; everything after is per-group scalar
     // math — apply the resulting rates with s2's stratified gate.
     "s7_temperature_mix" -> { (s, dir) =>
-      val byLang = docsSpread(s, dir).groupBy("lang")
+      val byLang = Tables.spread(Tables.documents(s, dir)).groupBy("lang")
         .agg(count(lit(1)).as("n"))
       val tot = byLang
         .agg(sort_array(collect_list(struct(col("lang"), col("n"))))
@@ -611,7 +606,7 @@ object TrainingDataQueries {
     // presence, punctuation density, repetition, language — as one
     // keep/drop verdict with auditable reason codes.
     "tx9_quality_gate" -> { (s, dir) =>
-      TextAnalysis.qualityGate(docsSpread(s, dir))
+      TextAnalysis.qualityGate(Tables.spread(Tables.documents(s, dir)))
     },
 
     // Per-source corpus DATASHEET: docs, tokens, language spread, mean
@@ -619,7 +614,7 @@ object TrainingDataQueries {
     // curated corpus ships with, and the aggregate view that tunes tx9's
     // rule stack per provenance.
     "tx11_source_datasheet" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val gate = TextAnalysis.qualityGate(docs).select("doc_id", "keep")
       docs.select(col("doc_id"), col("source"), col("n_chars"), col("lang"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
@@ -637,7 +632,7 @@ object TrainingDataQueries {
     // Repetition / lexical-diversity filter signals (Gopher-style):
     // type-token ratio + duplicate-bigram fraction per document.
     "tx8_repetition" -> { (s, dir) =>
-      TextAnalysis.repetitionStats(docsSpread(s, dir))
+      TextAnalysis.repetitionStats(Tables.spread(Tables.documents(s, dir)))
     },
 
     // TX31 (beyond reference): URL DOMAIN census — extract every URL,
@@ -651,7 +646,7 @@ object TrainingDataQueries {
     // Per-row regex, no shuffle before the domain rollup; the shuffle
     // carries hosts, never documents.
     "tx31_url_domains" -> { (s, dir) =>
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), concat(col("text"),
           lit(" see https://"), col("source"), lit(".example.com/page/"),
           col("doc_id").cast("string"),
@@ -680,7 +675,7 @@ object TrainingDataQueries {
       val sents = expr(
         """filter(transform(split(text, '[.!?]+'), x -> trim(x)),
           |  x -> length(x) > 0)""".stripMargin.replace("\n", " "))
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), sents.as("sents"))
         .selectExpr("doc_id",
           "cast(size(sents) as bigint) AS n_sentences",
@@ -706,7 +701,7 @@ object TrainingDataQueries {
     // metadata-sized at any corpus scale, counters all per-row codegen.
     "tx33_fertility" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("lang"), col("source"), length(t).as("nc"),
           TextAnalysis.tokenCount(t).as("nw"),
           TextAnalysis.bpeishTokenCount(t).as("nb"))
@@ -734,7 +729,7 @@ object TrainingDataQueries {
     // to micro, so the cross-engine compare is exact.
     "tx34_readability" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           TextAnalysis.tokenCount(t).as("nw"),
           size(regexp_extract_all(lower(t), lit("[aeiouy]+"), lit(0)))
@@ -762,7 +757,7 @@ object TrainingDataQueries {
     // final IEEE division.
     "tx36_yule_k" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val f = docsSpread(s, dir)
+      val f = Tables.spread(Tables.documents(s, dir))
         .select(col("lang"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -793,7 +788,7 @@ object TrainingDataQueries {
     // engines).
     "tx37_burstiness" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val nd = docs.agg(count(lit(1)).as("n_docs"))
       val perDoc = docs
         .select(col("doc_id"),
@@ -825,7 +820,7 @@ object TrainingDataQueries {
     // them (≥2% symbols AND (≥20% indented lines OR ≥3 keywords)).
     "tx35_code_detection" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir).select(col("doc_id"),
+      Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
           length(t).as("nc"),
           split(t, "\n").as("lines"),
           size(regexp_extract_all(t, lit("[{};=()]"), lit(0)))
@@ -861,7 +856,7 @@ object TrainingDataQueries {
     // regex work plus one canonical-key rollup — the same shape (and
     // scale story) as exact dedup.
     "dd17_url_dedup" -> { (s, dir) =>
-      val aug = docsSpread(s, dir)
+      val aug = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), concat(col("text"),
           lit(" see https://"), col("source"), lit(".example.com/page/"),
           col("doc_id").cast("string"),
@@ -894,7 +889,7 @@ object TrainingDataQueries {
     // per-row array/regex op — the scan streams, nothing shuffles.
     "tx30_gopher_rules" -> { (s, dir) =>
       val t = col("text")
-      val base = docsSpread(s, dir).select(col("doc_id"),
+      val base = Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
         filter(split(t, "\\s+"), x => length(x) > 0).as("toks"),
         split(t, "\n").as("lines"),
         expr("length(text) - length(replace(text, '#', ''))").as("n_hash"),
@@ -946,21 +941,21 @@ object TrainingDataQueries {
     // Spread first: the normalize+md5 fingerprint pass is the cost center
     // and would otherwise run inside the 1-task scan.
     "dd1_exact_dedup" -> { (s, dir) =>
-      Dedup.exactDedup(docsSpread(s, dir))
+      Dedup.exactDedup(Tables.spread(Tables.documents(s, dir)))
     },
 
     // MinHash + LSH near-dup: banded signature buckets → candidate pairs →
     // exact n-gram Jaccard ≥ 0.5.
     "dd2_minhash_pairs" -> { (s, dir) =>
       // spread: signatures/shingle-hashes are now computed scan-side
-      Dedup.minhashDedup(docsSpread(s, dir), threshold = 0.5)
+      Dedup.minhashDedup(Tables.spread(Tables.documents(s, dir)), threshold = 0.5)
     },
 
     // Incremental dedup-on-ingest: the incoming tenth of the corpus
     // (doc_id % 10 == 0) LSH-probes the existing corpus's bucket index —
     // one bucket equi-join per batch, never a corpus self-join.
     "dd8_incremental_dedup" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       Dedup.minhashDedupIncremental(
         existing = docs.filter(col("doc_id") % 10 =!= 0),
         incoming = docs.filter(col("doc_id") % 10 === 0),
@@ -976,7 +971,7 @@ object TrainingDataQueries {
     // between engines. Two map-side-combined aggregates, the second
     // over vocabulary-sized input.
     "tx15_freq_spectrum" -> { (s, dir) =>
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("t"))
         .groupBy("t").agg(count(lit(1)).as("f"))
@@ -995,7 +990,7 @@ object TrainingDataQueries {
     // scale hash them first (Dedup's md5-60 kernel) so the shuffle rows
     // are fixed-width.
     "tx14_ngram_novelty" -> { (s, dir) =>
-      val ex = docsSpread(s, dir)
+      val ex = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           explode(array_distinct(Dedup.shinglesExpr(col("text"), 3)))
             .as("g"))
@@ -1012,7 +1007,7 @@ object TrainingDataQueries {
     // (quote/boilerplate absorption) that Jaccard structurally misses —
     // |∩| / min(|A|,|B|) ≥ 0.8 over the same candidate pairs as dd2.
     "dd10_containment" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       Dedup.containmentOnCandidates(docs, Dedup.minhashCandidates(docs))
         .filter(col("containment") >= 0.8)
     },
@@ -1029,7 +1024,7 @@ object TrainingDataQueries {
     // one bands-wide explode + a map-side-combined bucket count — the
     // planner never materializes a single candidate pair.
     "dd9_lsh_planner" -> { (s, dir) =>
-      val sigs = Dedup.minhashSignatures(docsSpread(s, dir))
+      val sigs = Dedup.minhashSignatures(Tables.spread(Tables.documents(s, dir)))
         .transform(graft.operators.GlobalRank.pinned)
       Seq((2, 8), (4, 4), (8, 2)).map { case (b, r) =>
         val bucketed = sigs.select(col("id"),
@@ -1053,14 +1048,15 @@ object TrainingDataQueries {
     // SimHash near-dup candidates — full DuckDB oracle: the 60 per-bit
     // majority sums are program-generated SQL, same md5 hash family.
     "dd3_simhash_pairs" -> { (s, dir) =>
-      Dedup.simhashCandidates(docsSpread(s, dir), maxHamming = 12)
+      Dedup.simhashCandidates(Tables.spread(Tables.documents(s, dir)),
+        maxHamming = 12)
     },
 
     // Exact repeated-span report: 8-token spans occurring in 2+ docs —
     // span-level dedup for boilerplate that document-level near-dup
     // misses. One explode + one hash groupBy.
     "dd5_repeated_spans" -> { (s, dir) =>
-      Dedup.repeatedSpans(docsSpread(s, dir), spanTokens = 8)
+      Dedup.repeatedSpans(Tables.spread(Tables.documents(s, dir)), spanTokens = 8)
     },
 
     // Per-document BOILERPLATE ratio: the fraction of a doc's distinct
@@ -1071,7 +1067,7 @@ object TrainingDataQueries {
     // + two hash aggregates + one keyed join — all span-grain, scalable.
     "dd11_boilerplate" -> { (s, dir) =>
       import graft.functions.HashExpressions.md5Prefix60
-      val spans = docsSpread(s, dir)
+      val spans = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), col("source"),
           explode(array_distinct(transform(
             Dedup.shinglesExpr(col("text"), 8), x => md5Prefix60(x))))
@@ -1094,7 +1090,8 @@ object TrainingDataQueries {
     // over the same pair pipeline).
     "dd4_dup_clusters" -> { (s, dir) =>
       Dedup.connectedComponents(
-        Dedup.minhashDedup(docsSpread(s, dir), threshold = 0.5)
+        Dedup.minhashDedup(Tables.spread(Tables.documents(s, dir)),
+          threshold = 0.5)
           .select("id_a", "id_b"))
     },
 
@@ -1107,7 +1104,7 @@ object TrainingDataQueries {
     // LSH candidate graph + star-contraction clusters; singletons weight
     // 1.0. One left join over the cluster table; no new corpus pass.
     "dd16_cluster_downweight" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val comp = Dedup.connectedComponents(
         Dedup.minhashDedup(docs, threshold = 0.5).select("id_a", "id_b"))
       val sizes = comp.groupBy("cluster_id").agg(count(lit(1)).as("csize"))
@@ -1127,7 +1124,7 @@ object TrainingDataQueries {
     // (not just verbatim) benchmark leakage, via dd8's incremental-probe
     // shape: one bucket equi-join, never a corpus self-join.
     "cx3_fuzzy_contamination" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       Dedup.minhashDedupIncremental(
           existing = docs.filter(col("doc_id") % 10 =!= 0),
           incoming = docs.filter(col("doc_id") % 10 === 0),
@@ -1213,8 +1210,7 @@ object TrainingDataQueries {
              |      cast(floor(cast(e as double) * 1000000D) as bigint)),
              |  0L, (acc, x) -> acc + x)""".stripMargin)
       }
-      Tables.embeddings(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
+      Tables.spread(Tables.embeddings(s, dir))
         .select(col("vec_id"), posexplode(array(pcols: _*)))
         .select(col("vec_id"), col("pos").cast("bigint").as("d"),
           col("col").as("p_micro"))
@@ -1530,7 +1526,7 @@ object TrainingDataQueries {
     },
 
     "cx1_contamination" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       Contamination.contaminationReport(
           corpus = docs.filter(col("doc_id") % 10 =!= 0),
           benchmark = docs.filter(col("doc_id") % 10 === 0))
@@ -1544,7 +1540,7 @@ object TrainingDataQueries {
     // is its transpose). Same broadcast-hash-probe shape: the benchmark
     // hash set is tiny and broadcast, the corpus is scanned once.
     "cx2_benchmark_report" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       def hashes(df: DataFrame) = df.select(col("doc_id"),
         explode(array_distinct(transform(
           Dedup.shinglesExpr(col("text"), 3),
@@ -1572,7 +1568,7 @@ object TrainingDataQueries {
     // aggregation buffer.
     "mm7_crossmodal_align" -> { (s, dir) =>
       import graft.functions.HashExpressions.md5Prefix60
-      val tb = docsSpread(s, dir)
+      val tb = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("t"))
@@ -1608,7 +1604,7 @@ object TrainingDataQueries {
     // share·1e6 div n_toks)), so the plan is engine-exact: one map-side-
     // combined count per source, broadcast scalar, per-source math after.
     "mix3_epoch_plan" -> { (s, dir) =>
-      val n = docsSpread(s, dir).select(col("source"),
+      val n = Tables.spread(Tables.documents(s, dir)).select(col("source"),
           TextAnalysis.tokenCount(col("text")).cast("bigint").as("nt"))
         .groupBy("source").agg(sum(col("nt")).as("n_toks"))
         .filter(col("n_toks") > 0)
@@ -1776,7 +1772,7 @@ object TrainingDataQueries {
     // over those docs only; top-8 via TakeOrdered, deterministic
     // (df desc, term asc).
     "ir5_query_expansion" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val top = Retrieval.bm25(docs, bm25Terms)
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
         .select("doc_id")
@@ -1789,7 +1785,7 @@ object TrainingDataQueries {
     },
 
     "ir1_bm25" -> { (s, dir) =>
-      Retrieval.bm25(docsSpread(s, dir), bm25Terms)
+      Retrieval.bm25(Tables.spread(Tables.documents(s, dir)), bm25Terms)
     },
 
     // IR11 (beyond reference): BM25F — field-weighted BM25 (title ×2,
@@ -1802,7 +1798,7 @@ object TrainingDataQueries {
     // is micro-nat-quantized identically.
     "ir11_bm25f" -> { (s, dir) =>
       val k1 = 1.2; val b = 0.75; val wTitle = 2L
-      val base = docsSpread(s, dir).select(col("doc_id"),
+      val base = Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
         split(TextAnalysis.normalizeText(col("text")), " ").as("toks"))
         .select(col("doc_id"),
           slice(col("toks"), 1, 5).as("title"),
@@ -1840,7 +1836,8 @@ object TrainingDataQueries {
     // broadcast scalar from the scored scan); everything else rides
     // the 10-row list. All-integer outputs.
     "ir13_pr_at_k" -> { (s, dir) =>
-      val scored = Retrieval.bm25(docsSpread(s, dir), bm25Terms)
+      val scored = Retrieval
+        .bm25(Tables.spread(Tables.documents(s, dir)), bm25Terms)
         .withColumn("m", bm25Terms.map(t =>
           when(col(s"tf_$t") > 0, 1).otherwise(0)).reduce(_ + _))
         .withColumn("rel", when(col("m") >= 2, 1L).otherwise(0L))
@@ -1869,7 +1866,7 @@ object TrainingDataQueries {
     // ln/exp in the chain, every contribution one exact-integer-fed
     // IEEE division. All windows ride the 10-row top list.
     "ir12_err" -> { (s, dir) =>
-      val top = Retrieval.bm25(docsSpread(s, dir), bm25Terms)
+      val top = Retrieval.bm25(Tables.spread(Tables.documents(s, dir)), bm25Terms)
         .orderBy(col("bm25").desc, col("doc_id").asc).limit(10)
         .withColumn("m", bm25Terms.map(t =>
           when(col(s"tf_$t") > 0, 1).otherwise(0)).reduce(_ + _))
@@ -1905,7 +1902,8 @@ object TrainingDataQueries {
     // ranker complement to BM25 (same one-scan + broadcast-scalar shape,
     // integer micro-nat per-term quantization makes the sum exact).
     "ir6_qlm" -> { (s, dir) =>
-      Retrieval.queryLikelihood(docsSpread(s, dir), bm25Terms)
+      Retrieval.queryLikelihood(Tables.spread(Tables.documents(s, dir)),
+        bm25Terms)
     },
 
     // Flesch reading-ease per document: words (whitespace tokens),
@@ -1919,12 +1917,12 @@ object TrainingDataQueries {
     // weight tf·idf_micro is an exact bigint; top-3 via a per-doc window
     // (hash-partitioned by doc_id — millions of tiny groups, no skew).
     "tx19_keywords" -> { (s, dir) =>
-      val toks = docsSpread(s, dir).select(col("doc_id"),
+      val toks = Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("term"))
         .filter(length(col("term")) > 0)
       val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val nn = docsSpread(s, dir).agg(count(lit(1)).as("n"))
+      val nn = Tables.spread(Tables.documents(s, dir)).agg(count(lit(1)).as("n"))
       val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val w = tf.join(df, "term").crossJoin(broadcast(nn))
         .select(col("doc_id"), col("term"), col("tf"), col("df"),
@@ -1940,7 +1938,7 @@ object TrainingDataQueries {
 
     "tx17_readability" -> { (s, dir) =>
       val t = col("text")
-      docsSpread(s, dir).select(col("doc_id"),
+      Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
           TextAnalysis.tokenCount(t).as("n_words"),
           regexp_count(t, lit("[.!?]+")).cast("bigint").as("n_sents"),
           regexp_count(lower(t), lit("[aeiouy]+")).cast("bigint")
@@ -1984,7 +1982,7 @@ object TrainingDataQueries {
     // filter): corpus vocabulary counted once, broadcast back, per-doc
     // exact integer micro-nat sum.
     "lm1_surprisal" -> { (s, dir) =>
-      Retrieval.unigramSurprisal(docsSpread(s, dir))
+      Retrieval.unigramSurprisal(Tables.spread(Tables.documents(s, dir)))
     },
 
     // Bigram-LM mean surprisal: P(w2|w1) from the corpus's own bigram
@@ -2004,7 +2002,7 @@ object TrainingDataQueries {
     // output after two map-side-combined counts + one self-join on r+1.
     "lm4_good_turing" -> { (s, dir) =>
       val toks = split(TextAnalysis.normalizeText(col("text")), " ")
-      val bigrams = docsSpread(s, dir)
+      val bigrams = Tables.spread(Tables.documents(s, dir))
         .select(explode(zip_with(
           slice(toks, lit(1), size(toks) - 1),
           slice(toks, lit(2), size(toks) - 1),
@@ -2038,7 +2036,7 @@ object TrainingDataQueries {
       // parallel) instead of writing corpus bytes through the block
       // manager. The type-grain count table stays unconditionally
       // pinned — it feeds the context rollup AND the probability join.
-      val base = docsSpread(s, dir).select(col("doc_id"),
+      val base = Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
         toksCol.as("toks"))
         .transform(graft.operators.GlobalRank.pinnedIfSmall)
       val bigrams = base.select(col("doc_id"), explode(zip_with(
@@ -2100,7 +2098,7 @@ object TrainingDataQueries {
     // integer sum keeps the matrix engine-exact.
     "lm6_domain_xppl" -> { (s, dir) =>
       val toks = split(TextAnalysis.normalizeText(col("text")), " ")
-      val bigrams = docsSpread(s, dir)
+      val bigrams = Tables.spread(Tables.documents(s, dir))
         .select(col("source"), toks.as("toks"))
         .select(col("source"), explode(zip_with(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
@@ -2140,7 +2138,7 @@ object TrainingDataQueries {
       // as a column BELOW the explode so the regex runs O(1) per
       // document — the array-HOF form re-ran it per POSITION (measured
       // 3.8 s → 1.3 s at sf0.1)
-      val tris = docsSpread(s, dir)
+      val tris = Tables.spread(Tables.documents(s, dir))
         .select(col("lang"), expr(t).as("t"))
         .filter(length(col("t")) >= 3)
         .select(col("lang"), col("t"),
@@ -2184,7 +2182,8 @@ object TrainingDataQueries {
       // count tables below stay unconditionally pinned (vocabulary
       // grain; they feed the corpus-count rollup AND the scoring join /
       // the context rollup AND the LM join).
-      val base = docsSpread(s, dir).select(col("source"), toks.as("toks"))
+      val base = Tables.spread(Tables.documents(s, dir))
+        .select(col("source"), toks.as("toks"))
         .transform(graft.operators.GlobalRank.pinnedIfSmall)
       val bigrams = base.select(col("source"), explode(zip_with(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
@@ -2218,7 +2217,8 @@ object TrainingDataQueries {
     },
 
     "lm5_ppl_buckets" -> { (s, dir) =>
-      val scored = docsSpread(s, dir).select(col("doc_id"), col("lang"))
+      val scored = Tables.spread(Tables.documents(s, dir))
+        .select(col("doc_id"), col("lang"))
         .join(docSurprisal(s, dir), "doc_id")
         .withColumn("surprisal_micro",
           expr("(-sum_micro_nats) div n_bigrams"))
@@ -2255,7 +2255,7 @@ object TrainingDataQueries {
       // is skipped and the identically-keyed downstream exchanges share
       // the pipeline via ReusedExchange instead.
       val fps = graft.operators.GlobalRank.pinnedIfSmall(
-        Dedup.winnowFingerprints(docsSpread(s, dir)))
+        Dedup.winnowFingerprints(Tables.spread(Tables.documents(s, dir))))
       val perDoc = fps.join(
         fps.groupBy("doc_id").agg(count(lit(1)).as("nfp")), "doc_id")
       val keep = perDoc.groupBy("fp").agg(count(lit(1)).as("df"))
@@ -2291,7 +2291,7 @@ object TrainingDataQueries {
     // edge set — nothing rescans text.
     "pipe2_dedup_impact" -> { (s, dir) =>
       import graft.operators.Graph
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       // toks stays pinned: a doc-grain TWO-column frame (id, token
       // count — ~16 B/doc, ~1e-4 of corpus bytes at 100 TB) consumed by
       // all three strategy stats; un-pinned, the tokenize regex runs 3×
@@ -2351,7 +2351,7 @@ object TrainingDataQueries {
     // exact integer.
     "tx22_source_gini" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val n = docsSpread(s, dir).select(col("source"),
+      val n = Tables.spread(Tables.documents(s, dir)).select(col("source"),
           TextAnalysis.tokenCount(col("text")).cast("bigint").as("nt"))
         .groupBy("source").agg(sum(col("nt")).as("x"))
       val ranked = GlobalRank.withGlobalRowNumber(n,
@@ -2381,7 +2381,7 @@ object TrainingDataQueries {
       import graft.operators.GlobalRank
       import org.apache.spark.sql.types.DecimalType
       val d38 = DecimalType(38, 0)
-      val freq = docsSpread(s, dir)
+      val freq = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")),
           " ")).as("tok"))
         .filter(col("tok") =!= "")
@@ -2428,7 +2428,7 @@ object TrainingDataQueries {
       val toks = split(TextAnalysis.normalizeText(col("text")), " ")
       // GRAIN (round-14 audit): tokenized corpus = corpus bytes — size-
       // gated like lm7/lm10's bases; feeds the unigram AND bigram explodes
-      val base = docsSpread(s, dir).select(toks.as("toks"))
+      val base = Tables.spread(Tables.documents(s, dir)).select(toks.as("toks"))
         .transform(graft.operators.GlobalRank.pinnedIfSmall)
       val uni = base
         .select(explode(col("toks")).as("w"))
@@ -2455,7 +2455,7 @@ object TrainingDataQueries {
 
     "lm3_kneser_ney" -> { (s, dir) =>
       val toks = split(TextAnalysis.normalizeText(col("text")), " ")
-      val bigrams = docsSpread(s, dir)
+      val bigrams = Tables.spread(Tables.documents(s, dir))
         .select(toks.as("toks"))
         .select(explode(zip_with(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
@@ -2491,7 +2491,7 @@ object TrainingDataQueries {
     // transform over character positions; one (c1, c2) shuffle of
     // map-side-combined partials.
     "bpc1_merge_pairs" -> { (s, dir) =>
-      val wf = docsSpread(s, dir)
+      val wf = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("w"))
         .filter(length(col("w")) >= 2)
@@ -2514,7 +2514,7 @@ object TrainingDataQueries {
     // The merge rule is data-derived (argmax with a deterministic
     // tiebreak), never hard-coded, so the query is scale-invariant.
     "bpc2_apply_merge" -> { (s, dir) =>
-      val wf = docsSpread(s, dir)
+      val wf = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("w"))
         .filter(length(col("w")) >= 2)
@@ -2569,7 +2569,7 @@ object TrainingDataQueries {
           .orderBy(col("cnt").desc, col("c1"), col("c2")).limit(1)
           .select(col("c1").as(s"m$i"), col("c2").as(s"n$i"),
             col("cnt").as(s"cnt$i"))
-      var wf = docsSpread(s, dir)
+      var wf = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")),
           " ")).as("w"))
         .filter(length(col("w")) >= 2)
@@ -2609,7 +2609,8 @@ object TrainingDataQueries {
     // integer micro-nat sum; the alphabet is tiny so the count shuffle
     // carries ≤ |alphabet| rows per document.
     "tx13_char_entropy" -> { (s, dir) =>
-      val d = docsSpread(s, dir).filter(length(col("text")) > 0)
+      val d = Tables.spread(Tables.documents(s, dir))
+        .filter(length(col("text")) > 0)
         .select(col("doc_id"), length(col("text")).cast("bigint").as("dl"),
           explode(split(col("text"), "")).as("ch"))
         .filter(length(col("ch")) > 0)
@@ -2639,7 +2640,7 @@ object TrainingDataQueries {
       val d38 = DecimalType(38, 0)
       val seqLen = 512L
       val packed = Packing.packSequences(
-        docsSpread(s, dir).select(col("doc_id"), col("lang"),
+        Tables.spread(Tables.documents(s, dir)).select(col("doc_id"), col("lang"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens")),
         streamCol = col("lang"), orderCol = col("doc_id"),
         tokensCol = col("n_tokens"), seqLen = seqLen.toInt)
@@ -2663,8 +2664,9 @@ object TrainingDataQueries {
     },
 
     "pk1_sequence_pack" -> { (s, dir) =>
-      val withTokens = docsSpread(s, dir).select(col("doc_id"), col("lang"),
-        TextAnalysis.tokenCount(col("text")).as("n_tokens"))
+      val withTokens = Tables.spread(Tables.documents(s, dir))
+        .select(col("doc_id"), col("lang"),
+          TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       Packing.packSequences(withTokens, streamCol = col("lang"),
         orderCol = col("doc_id"), tokensCol = col("n_tokens"), seqLen = 512)
     },
@@ -2673,8 +2675,9 @@ object TrainingDataQueries {
     // (64-token overlap) within each document — the long-document
     // treatment for retrieval indexing / pretraining context windows.
     "pk2_overlap_chunks" -> { (s, dir) =>
-      val withTokens = docsSpread(s, dir).select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("n_tokens"))
+      val withTokens = Tables.spread(Tables.documents(s, dir))
+        .select(col("doc_id"),
+          TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       Packing.overlapChunks(withTokens, tokensCol = col("n_tokens"),
         size = 256, stride = 192)
     },
@@ -2688,7 +2691,7 @@ object TrainingDataQueries {
     // rounding could differ across engines); the global max rides a
     // broadcast-scalar window over the bucket-grain rollup.
     "pk4_length_buckets" -> { (s, dir) =>
-      val t = docsSpread(s, dir).select(
+      val t = Tables.spread(Tables.documents(s, dir)).select(
           TextAnalysis.tokenCount(col("text")).cast("long").as("n"))
         .filter(col("n") > 0)
       val bucketed = t.withColumn("bucket",
@@ -2720,7 +2723,7 @@ object TrainingDataQueries {
     // squares, integer micro shares.
     "pk8_attention_cost" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val t = docsSpread(s, dir)
+      val t = Tables.spread(Tables.documents(s, dir))
         .select(TextAnalysis.tokenCount(col("text")).cast("long")
           .as("n"))
         .filter(col("n") > 0)
@@ -2745,7 +2748,7 @@ object TrainingDataQueries {
     },
 
     "pk3_padding_waste" -> { (s, dir) =>
-      val t = docsSpread(s, dir).select(col("lang"),
+      val t = Tables.spread(Tables.documents(s, dir)).select(col("lang"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("n"))
       t.groupBy("lang").agg(
           count(lit(1)).as("n_docs"),
@@ -2760,7 +2763,7 @@ object TrainingDataQueries {
     // all. One left join of the corpus against the (duplicates-sized)
     // cluster map; the curation step dd2/dd4 exist to feed.
     "dd6_dedup_apply" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val clusters = Dedup.connectedComponents(
         Dedup.minhashDedup(docs, threshold = 0.5).select("id_a", "id_b"))
       docs.select("doc_id").join(clusters, Seq("doc_id"), "left")
@@ -2786,7 +2789,7 @@ object TrainingDataQueries {
     // surface via a left join (ratio exactly 2 → ln 2), never a full
     // cross product.
     "tx24_source_jsd" -> { (s, dir) =>
-      val tc = docsSpread(s, dir)
+      val tc = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -2837,7 +2840,7 @@ object TrainingDataQueries {
     "tx25_pareto_skyline" -> { (s, dir) =>
       val toks = filter(split(TextAnalysis.normalizeText(col("text")), " "),
         t => length(t) > 0)
-      val st = docsSpread(s, dir)
+      val st = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), col("source"), col("n_chars").as("x"),
           size(toks).as("n_toks"),
           size(array_distinct(toks)).as("n_types"))
@@ -2898,7 +2901,7 @@ object TrainingDataQueries {
     // consecutive epochs decorrelate because the hash input changes.
     "pk5_epoch_shuffle" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val docs = docsSpread(s, dir).select("doc_id")
+      val docs = Tables.spread(Tables.documents(s, dir)).select("doc_id")
       Seq(0, 1).map { ep =>
         GlobalRank.withGlobalRowNumber(
           docs.withColumn("epoch", lit(ep.toLong))
@@ -2921,7 +2924,7 @@ object TrainingDataQueries {
     // shuffle, no OOV path, any corpus size.
     "fe12_hashed_features" -> { (s, dir) =>
       import graft.functions.HashExpressions.md5Prefix60
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -2947,7 +2950,7 @@ object TrainingDataQueries {
     // only unpartitioned window, bounded by B, never by data).
     "s9_bootstrap_ci" -> { (s, dir) =>
       import graft.functions.HashExpressions.md5Prefix60
-      val reps = docsSpread(s, dir)
+      val reps = Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), col("n_chars"),
           explode(sequence(lit(0), lit(49))).as("rep"))
         .filter(md5Prefix60(concat(lit("bs"), col("rep"), lit(":"),
@@ -2971,7 +2974,8 @@ object TrainingDataQueries {
     // blow-up is integer arithmetic (π is a permille literal), and the
     // audit needs one extra aggregate over the same scan.
     "s13_horvitz_thompson" -> { (s, dir) =>
-      val d = docsSpread(s, dir).select(col("doc_id"), col("n_chars"))
+      val d = Tables.spread(Tables.documents(s, dir))
+        .select(col("doc_id"), col("n_chars"))
       val sample = Sampling.hashSample(d, col("doc_id"), keepPermille = 250)
       val est = sample.agg(count(lit(1)).as("n_sampled"),
         expr("sum(n_chars) * 1000 div 250").as("ht_total"))
@@ -3015,7 +3019,7 @@ object TrainingDataQueries {
     // size table broadcasts.
     "tx27_token_dispersion" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val tc = docsSpread(s, dir)
+      val tc = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -3057,7 +3061,7 @@ object TrainingDataQueries {
     // quadratic surface — and meet in one full-outer join on the pair
     // key, reduced to three counts.
     "dd13_strategy_agreement" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val mh = Dedup.minhashDedup(docs, threshold = 0.5)
         .select(col("id_a"), col("id_b")).withColumn("in_mh", lit(1L))
       // GRAIN (round-14 audit): fps/kept are occurrence-grain, so the
@@ -3166,7 +3170,7 @@ object TrainingDataQueries {
     // corpus-level Good-Turing singleton mass. One (source, token)
     // count shuffle, then a vocabulary-grain rollup.
     "tx29_hapax_ratio" -> { (s, dir) =>
-      docsSpread(s, dir)
+      Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("token"))
@@ -3192,7 +3196,7 @@ object TrainingDataQueries {
     // identically on both engines.
     "tx28_mattr" -> { (s, dir) =>
       val t = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
-      docsSpread(s, dir).selectExpr("doc_id",
+      Tables.spread(Tables.documents(s, dir)).selectExpr("doc_id",
           s"filter(split($t, ' '), x -> length(x) > 0) AS toks")
         .filter("size(toks) > 0") // empty docs: 0-div diverges vs oracle
         .selectExpr("doc_id", "size(toks) AS n_toks",
@@ -3232,7 +3236,7 @@ object TrainingDataQueries {
       // candidates; gate the whole enumeration behind one per-row CASE
       // so short docs yield zero cuts — exactly DuckDB's empty
       // range(8, n+1).
-      val chunks = docsSpread(s, dir)
+      val chunks = Tables.spread(Tables.documents(s, dir))
         .selectExpr("trim(regexp_replace(lower(text), '\\\\s+', ' ')) AS nt")
         .selectExpr("nt",
           """case when length(nt) >= 8 then
@@ -3264,7 +3268,7 @@ object TrainingDataQueries {
     // free: the pair fan-out is provenance-count², never rows.
     "prof4_source_welch_matrix" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val st = docsSpread(s, dir).groupBy("source")
+      val st = Tables.spread(Tables.documents(s, dir)).groupBy("source")
         .agg(count(lit(1)).as("n"),
           sum(col("n_chars").cast(d38)).as("sx"),
           sum((col("n_chars") * col("n_chars")).cast(d38)).as("sxx"))
@@ -3300,7 +3304,7 @@ object TrainingDataQueries {
     // rollup; the plan is scale-free.
     "s15_neyman_allocation" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val per = docsSpread(s, dir)
+      val per = Tables.spread(Tables.documents(s, dir))
         .groupBy("source")
         .agg(count(lit(1)).as("nh"),
           sum(col("n_chars").cast(d38)).as("sx"),
@@ -3328,7 +3332,7 @@ object TrainingDataQueries {
     // hits but zero exclusive kills is redundant). One gated scan; the
     // reason rollup is rule-cardinality metadata.
     "pipe4_reason_attribution" -> { (s, dir) =>
-      val gate = TextAnalysis.qualityGate(docsSpread(s, dir))
+      val gate = TextAnalysis.qualityGate(Tables.spread(Tables.documents(s, dir)))
       gate.filter(!col("keep"))
         .select(col("doc_id"), split(col("fail_reasons"), ",").as("rs"))
         .select(col("doc_id"), size(col("rs")).as("n_reasons"),
@@ -3348,7 +3352,7 @@ object TrainingDataQueries {
     // grain rollups over one gated scan; shares are exact micro
     // integers.
     "mix6_anneal_plan" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val gated = TextAnalysis.qualityGate(docs).select("doc_id", "keep")
       val per = docs.select(col("doc_id"), col("source"))
         .join(gated, "doc_id")
@@ -3381,7 +3385,8 @@ object TrainingDataQueries {
     // oracle) so nothing overflows at corpus scale, and every division
     // is nonneg div nonneg — engine-identical.
     "s17_raking_weights" -> { (s, dir) =>
-      val cells = docsSpread(s, dir).groupBy("lang", "source")
+      val cells = Tables.spread(Tables.documents(s, dir))
+        .groupBy("lang", "source")
         .agg(count(lit(1)).as("n"))
       graft.operators.Sampling.rakeTwoRound(cells)
     },
@@ -3399,8 +3404,7 @@ object TrainingDataQueries {
     // engines agree because the doubles are the same fixed tree).
     "sim19_mahalanobis_ood" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val lanes = Tables.embeddings(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
+      val lanes = Tables.spread(Tables.embeddings(s, dir))
         .select(col("vec_id"),
           posexplode(transform(col("embedding"),
             x => floor(x.cast("double") * 1000000).cast("long"))))
@@ -3459,7 +3463,7 @@ object TrainingDataQueries {
     // and the grand total broadcast.
     "lm11_source_unigram_kl" -> { (s, dir) =>
       val d38 = DecimalType(38, 0)
-      val st = docsSpread(s, dir)
+      val st = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
             .as("tok"))
@@ -3497,7 +3501,7 @@ object TrainingDataQueries {
     // (n_hits is its integer inclusion multiplicity). All-nonnegative
     // integer division, so Spark `div` and DuckDB `//` agree.
     "s19_pps_sampling" -> { (s, dir) =>
-      val d = docsSpread(s, dir).select(col("doc_id"),
+      val d = Tables.spread(Tables.documents(s, dir)).select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("size"))
         .withColumn("g", lit(1))
       val c = graft.operators.GlobalRank.withGroupedPrefixSum(d,
@@ -3550,7 +3554,7 @@ object TrainingDataQueries {
     // arithmetic. K = #sources: a per-domain rollup plus two 1-row
     // broadcasts — metadata grain at any corpus size.
     "mix7_doremi_step" -> { (s, dir) =>
-      val per = docsSpread(s, dir).groupBy("source")
+      val per = Tables.spread(Tables.documents(s, dir)).groupBy("source")
         .agg(count(lit(1)).as("n"),
           sum(when(col("lang") =!= "en", 1L).otherwise(0L)).as("bad"))
         .transform(graft.operators.GlobalRank.pinned) // feeds the totals AND the step join
@@ -3585,7 +3589,7 @@ object TrainingDataQueries {
     // count, ~20 here), per the SCALE.md window rule. Exact integers
     // end to end.
     "mix5_token_waterfill" -> { (s, dir) =>
-      val per = docsSpread(s, dir)
+      val per = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           TextAnalysis.tokenCount(col("text")).as("nt"))
         .groupBy("source").agg(sum(col("nt")).as("n"))
@@ -3620,7 +3624,7 @@ object TrainingDataQueries {
     // the rule is share-based, so the plan is identical at any corpus
     // size with the same composition.
     "mix4_rebalance_plan" -> { (s, dir) =>
-      val counts = docsSpread(s, dir).groupBy("lang")
+      val counts = Tables.spread(Tables.documents(s, dir)).groupBy("lang")
         .agg(count(lit(1)).as("n"))
       val tot = counts.agg(sum(col("n")).as("total"),
         count(lit(1)).as("k"))
@@ -3643,7 +3647,7 @@ object TrainingDataQueries {
     // candidates still come from the banded LSH index, so nothing here
     // is all-pairs; the bit fold is a per-row codegen HOF.
     "dd14_bbit_minhash" -> { (s, dir) =>
-      val docs = docsSpread(s, dir)
+      val docs = Tables.spread(Tables.documents(s, dir))
       val pairs = Dedup.minhashDedup(docs, threshold = 0.3)
       val bits = Dedup.minhashSignatures(docs)
         .select(col("id"), expr("transform(sig, h -> h % 2)").as("bits"))
@@ -3677,7 +3681,7 @@ object TrainingDataQueries {
       val d38 = DecimalType(38, 0)
       val toks = filter(split(TextAnalysis.normalizeText(col("text")), " "),
         t => length(t) > 0)
-      val xy = docsSpread(s, dir)
+      val xy = Tables.spread(Tables.documents(s, dir))
         .select(col("n_chars").as("x"), size(toks).as("n_toks"),
           size(array_distinct(toks)).as("n_types"))
         .filter(col("n_toks") > 0)
@@ -3704,7 +3708,7 @@ object TrainingDataQueries {
     // floor-div — no float mean is ever formed, so both engines agree
     // exactly. Same two-aggregate broadcast shape as fe5/fe9.
     "fe17_shrunk_encode" -> { (s, dir) =>
-      val per = docsSpread(s, dir).groupBy("source")
+      val per = Tables.spread(Tables.documents(s, dir)).groupBy("source")
         .agg(count(lit(1)).as("ng"), sum(col("n_chars")).as("sg"))
       val tot = per.agg(sum(col("ng")).as("n"), sum(col("sg")).as("st"))
       per.crossJoin(broadcast(tot))
@@ -3727,7 +3731,7 @@ object TrainingDataQueries {
       // (0+63) div 64 - 1 = -1, and Spark's sequence(0, -1) steps DOWN
       // to [0, -1] — two phantom empty chunks vs DuckDB's empty
       // range(0, 0). Clamp the stop to 0 and re-filter i*64 < length.
-      val chunks = docsSpread(s, dir)
+      val chunks = Tables.spread(Tables.documents(s, dir))
         .select(explode(expr(
           """transform(filter(sequence(0,
             |greatest(cast((length(trim(regexp_replace(lower(text),
@@ -3755,7 +3759,7 @@ object TrainingDataQueries {
     // then the encoded distribution — the before/after audit a feature
     // review wants.
     "fe13_rare_label_encode" -> { (s, dir) =>
-      val d = docsSpread(s, dir).select("doc_id", "lang")
+      val d = Tables.spread(Tables.documents(s, dir)).select("doc_id", "lang")
       val counts = d.groupBy("lang").agg(count(lit(1)).as("n"))
       val total = counts.agg(sum(col("n")).as("tot"))
       d.join(broadcast(counts), Seq("lang"))
@@ -3774,7 +3778,7 @@ object TrainingDataQueries {
     * engine/order-exact (docs with <2 tokens drop out in both engines). */
   private def docSurprisal(s: SparkSession, dir: String): DataFrame = {
     val toks = split(TextAnalysis.normalizeText(col("text")), " ")
-    val bigrams = docsSpread(s, dir)
+    val bigrams = Tables.spread(Tables.documents(s, dir))
       .select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"), explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
@@ -3800,7 +3804,7 @@ object TrainingDataQueries {
     * token buckets with Laplace smoothing, micro-nat integers — shared
     * by s16 (the weight table) and s18 (the resampling gate). */
   private def dsirWeights(s: SparkSession, dir: String): DataFrame = {
-    val toks = docsSpread(s, dir)
+    val toks = Tables.spread(Tables.documents(s, dir))
       .select(col("doc_id"), (col("lang") === "en").as("tgt"),
         explode(split(TextAnalysis.normalizeText(col("text")), " "))
           .as("t"))

@@ -289,8 +289,8 @@ class PlanSpec extends SparkSpec {
 
   test("hashed linear scoring is narrow: no hash shuffle") {
     val p = plan(SparkEntry.queries("ml1_linear_score")(spark, sf))
-    // docsSpread's round-robin spread is the only exchange — the scoring
-    // fold itself never shuffles
+    // Tables.spread's round-robin exchange is the only exchange — the
+    // scoring fold itself never shuffles
     assert(!p.contains("Exchange hashpartitioning"), p.take(2000))
   }
 
@@ -488,7 +488,7 @@ class PlanSpec extends SparkSpec {
   test("trained-weight scoring is a zero-shuffle scan like ml1") {
     val p = plan(SparkEntry.queries("ml14_trained_score")(spark, sf))
     // the weight array is a plan literal: no join, no vocabulary shuffle;
-    // the only exchange is the docsSpread repartition
+    // the only exchange is the Tables.spread repartition
     assert(!p.contains("Join"), p.take(2000))
     assert(p.sliding("Exchange".length).count(_ == "Exchange") <= 2,
       p.take(2000))

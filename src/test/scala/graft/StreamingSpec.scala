@@ -1,278 +1,14 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.EventStreams
-
-/** Drives the streaming transforms through a real streaming query using
-  * MemoryStream batches (append mode, watermark-triggered emission). */
+/** Runs kept batch operators unchanged on a MemoryStream (append or
+  * complete mode, one or two micro-batches) and checks that the
+  * streamed result equals the batch result over the same rows. The
+  * engine itself is batch-only; these cases pin that the operators are
+  * stateless projections or standard aggregations. */
 class StreamingSpec extends SparkSpec {
-
-  case class Ev(ts: Timestamp, user_id: Long, event_type: String,
-      value: Double)
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  test("sessionize emits closed sessions once the watermark passes") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val out = EventStreams.sessionize(stream.toDF(), gap = "10 minutes",
-      watermark = "10 minutes")
-    val query = out.writeStream.format("memory")
-      .queryName("sessions_out").outputMode("append").start()
-
-    // user 7: two events 5 min apart (one session), then one 30 min later
-    // (second session); a far-future event advances the watermark so both
-    // close.
-    stream.addData(
-      Ev(ts("2024-01-01 10:00:00"), 7, "view", 1.0),
-      Ev(ts("2024-01-01 10:05:00"), 7, "click", 2.0),
-      Ev(ts("2024-01-01 10:35:00"), 7, "purchase", 10.0))
-    query.processAllAvailable()
-    stream.addData(Ev(ts("2024-01-01 12:00:00"), 99, "view", 0.0))
-    query.processAllAvailable()
-
-    val rows = spark.table("sessions_out")
-      .filter(col("user_id") === 7)
-      .orderBy("session_start").collect()
-    query.stop()
-    assert(rows.length == 2)
-    assert(rows(0).getAs[Long]("n_events") == 2)
-    assert(rows(0).getAs[Double]("session_value") == 3.0)
-    assert(rows(0).getAs[Timestamp]("session_end") ==
-      ts("2024-01-01 10:15:00")) // last event + gap
-    assert(rows(1).getAs[Long]("n_events") == 1)
-  }
-
-  test("flatMapGroupsWithState sessionizer: in-batch gap close + timeout close") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.EventStreams.TimedEvent
-    val stream = MemoryStream[TimedEvent]
-    val out = EventStreams.gapSessionsCustom(stream.toDS(),
-      gapMs = 10L * 60 * 1000, watermark = "10 minutes")
-    val query = out.toDF().writeStream.format("memory")
-      .queryName("custom_sessions_out").outputMode("append").start()
-
-    // session 1 (10:00-10:05) closes in-batch when the 10:35 event opens
-    // session 2; session 2 closes later via event-time timeout.
-    stream.addData(
-      TimedEvent(ts("2024-01-01 10:00:00"), 7, 1.0),
-      TimedEvent(ts("2024-01-01 10:05:00"), 7, 2.0),
-      TimedEvent(ts("2024-01-01 10:35:00"), 7, 10.0))
-    query.processAllAvailable()
-    stream.addData(TimedEvent(ts("2024-01-01 12:00:00"), 99, 0.0))
-    query.processAllAvailable()
-
-    val rows = spark.table("custom_sessions_out")
-      .filter(col("user_id") === 7)
-      .orderBy("session_start").collect()
-    query.stop()
-    assert(rows.length == 2)
-    assert(rows(0).getAs[Long]("n_events") == 2)
-    assert(rows(0).getAs[Double]("session_value") == 3.0)
-    assert(rows(0).getAs[Timestamp]("session_end") ==
-      ts("2024-01-01 10:15:00")) // last event + gap, session_window parity
-    assert(rows(1).getAs[Long]("n_events") == 1)
-    assert(rows(1).getAs[Double]("session_value") == 10.0)
-    assert(rows(1).getAs[Timestamp]("session_end") ==
-      ts("2024-01-01 10:45:00"))
-  }
-
-  test("mapGroupsWithState profiles accumulate across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.EventStreams.UserEvent
-    val stream = MemoryStream[UserEvent]
-    val out = EventStreams.userProfiles(stream.toDS(), vipThreshold = 50.0)
-    val query = out.toDF().writeStream.format("memory")
-      .queryName("profiles_out").outputMode("update").start()
-
-    stream.addData(UserEvent(7, "view", 10.0), UserEvent(7, "purchase", 30.0))
-    query.processAllAvailable()
-    val afterB1 = spark.table("profiles_out")
-      .filter(col("user_id") === 7).orderBy(col("n_events").desc).head()
-    assert(afterB1.getAs[Long]("n_events") == 2 &&
-      !afterB1.getAs[Boolean]("vip"))
-
-    // state carries over: second batch pushes the same user past the
-    // VIP threshold
-    stream.addData(UserEvent(7, "purchase", 25.0))
-    query.processAllAvailable()
-    val afterB2 = spark.table("profiles_out")
-      .filter(col("user_id") === 7).orderBy(col("n_events").desc).head()
-    query.stop()
-    assert(afterB2.getAs[Long]("n_events") == 3)
-    assert(afterB2.getAs[Double]("total_value") == 65.0)
-    assert(afterB2.getAs[Long]("n_purchases") == 2)
-    assert(afterB2.getAs[Boolean]("vip"))
-  }
-
-  test("availableNow increment processes only new bronze files") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_incr").toString
-    val bronze = s"$root/bronze"
-    val silver = s"$root/silver"
-    val ckpt = s"$root/_ckpt"
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.DoubleType)))
-
-    def increment(): Unit =
-      graft.streaming.IncrementalPipeline.runIncrement(spark, bronze,
-        schema, silver, ckpt, df => df.withColumn("v2", col("v") * 2))
-
-    Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v").write.parquet(bronze)
-    increment()
-    assert(spark.read.parquet(silver).count() == 2)
-
-    // second batch of files → only the delta lands; re-running with no new
-    // files is a no-op (checkpointed file log)
-    Seq((3L, 3.0)).toDF("id", "v").write.mode("append").parquet(bronze)
-    increment()
-    val after = spark.read.parquet(silver)
-    assert(after.count() == 3)
-    assert(after.filter(col("id") === 3 && col("v2") === 6.0).count() == 1)
-    increment()
-    assert(spark.read.parquet(silver).count() == 3)
-  }
-
-  test("incremental gold maintenance overwrites only touched partitions") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_gold").toString
-    val bronze = s"$root/bronze"
-    val gold = s"$root/gold"
-    val ckpt = s"$root/_ckpt"
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.DoubleType)))
-
-    def increment(): Unit =
-      graft.streaming.IncrementalPipeline.runIncrementPartitioned(spark,
-        bronze, schema, gold, ckpt, partitionCols = Seq("k"),
-        df => df.groupBy("k").agg(count(lit(1)).as("n")))
-
-    Seq(("a", 1.0), ("a", 2.0), ("b", 9.0)).toDF("k", "v")
-      .write.parquet(bronze)
-    increment()
-    val first = spark.read.parquet(gold).collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[Long]("n")).toMap
-    assert(first == Map("a" -> 2L, "b" -> 1L))
-
-    // second wave touches only k=a: streaming state (checkpoint) carries
-    // the running total, and ONLY partition a is rewritten
-    val bModified = new java.io.File(s"$gold/k=b").lastModified()
-    Thread.sleep(1100) // directory mtimes are second-granular
-    Seq(("a", 5.0)).toDF("k", "v").write.mode("append").parquet(bronze)
-    increment()
-    val second = spark.read.parquet(gold).collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[Long]("n")).toMap
-    assert(second == Map("a" -> 3L, "b" -> 1L))
-    assert(new java.io.File(s"$gold/k=b").lastModified() == bModified)
-  }
-
-  test("stream-stream interval join attributes clicks to impressions") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val imps = MemoryStream[Ev]
-    val clicks = MemoryStream[(Timestamp, Long)]
-    val out = EventStreams.attributeClicks(imps.toDF(),
-      clicks.toDF().toDF("click_ts", "user_id"), withinMinutes = 30)
-    val query = out.writeStream.format("memory")
-      .queryName("attrib_out").outputMode("append").start()
-
-    imps.addData(
-      Ev(ts("2024-01-01 10:00:00"), 7, "view", 1.0),
-      Ev(ts("2024-01-01 09:00:00"), 8, "view", 2.0))
-    clicks.addData(
-      (ts("2024-01-01 10:20:00"), 7L),  // 20 min after imp → attributed
-      (ts("2024-01-01 11:00:00"), 8L))  // 2h after imp → outside window
-    query.processAllAvailable()
-    // advance both watermarks so results emit
-    imps.addData(Ev(ts("2024-01-01 13:00:00"), 99, "view", 0.0))
-    clicks.addData((ts("2024-01-01 13:00:00"), 99L))
-    query.processAllAvailable()
-
-    val rows = spark.table("attrib_out")
-      .filter(col("user_id").isin(7, 8)).collect()
-    query.stop()
-    assert(rows.length == 1)
-    assert(rows(0).getAs[Long]("user_id") == 7L)
-    assert(rows(0).getAs[Timestamp]("click_ts") == ts("2024-01-01 10:20:00"))
-  }
-
-  test("left-outer stream-stream join emits unconverted impressions after watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val imps = MemoryStream[Ev]
-    val clicks = MemoryStream[(Timestamp, Long)]
-    val out = EventStreams.attributeClicksLeftOuter(imps.toDF(),
-      clicks.toDF().toDF("click_ts", "user_id"), withinMinutes = 30)
-    val query = out.writeStream.format("memory")
-      .queryName("attrib_outer_out").outputMode("append").start()
-
-    imps.addData(
-      Ev(ts("2024-01-01 10:00:00"), 7, "view", 1.0),  // clicked
-      Ev(ts("2024-01-01 10:00:00"), 8, "view", 2.0))  // never clicked
-    clicks.addData((ts("2024-01-01 10:10:00"), 7L))
-    query.processAllAvailable()
-    // push both watermarks far past 10:30 so user 8's null row emits
-    imps.addData(Ev(ts("2024-01-01 14:00:00"), 99, "view", 0.0))
-    clicks.addData((ts("2024-01-01 14:00:00"), 99L))
-    query.processAllAvailable()
-
-    val rows = spark.table("attrib_outer_out")
-      .filter(col("user_id").isin(7, 8)).collect()
-      .map(r => r.getAs[Long]("user_id") ->
-        Option(r.getAs[Timestamp]("click_ts"))).toMap
-    query.stop()
-    assert(rows(7L).contains(ts("2024-01-01 10:10:00")))
-    assert(rows(8L).isEmpty) // null-extended: impression without click
-  }
-
-  test("full-outer stream-stream join emits both unconverted sides") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val imps = MemoryStream[Ev]
-    val clicks = MemoryStream[(Timestamp, Long)]
-    val out = EventStreams.attributeClicksFullOuter(imps.toDF(),
-      clicks.toDF().toDF("click_ts", "user_id"), withinMinutes = 30)
-    val query = out.writeStream.format("memory")
-      .queryName("attrib_full_out").outputMode("append").start()
-
-    imps.addData(
-      Ev(ts("2024-01-01 10:00:00"), 7, "view", 1.0),  // clicked
-      Ev(ts("2024-01-01 10:00:00"), 8, "view", 2.0))  // never clicked
-    clicks.addData(
-      (ts("2024-01-01 10:10:00"), 7L),
-      (ts("2024-01-01 10:10:00"), 9L))                // orphan click
-    query.processAllAvailable()
-    // push both watermarks far past the bound so outer rows emit
-    imps.addData(Ev(ts("2024-01-01 14:00:00"), 99, "view", 0.0))
-    clicks.addData((ts("2024-01-01 14:00:00"), 99L))
-    query.processAllAvailable()
-
-    val rows = spark.table("attrib_full_out")
-      .filter(col("user_id").isin(7, 8, 9)).collect()
-      .map(r => r.getAs[Long]("user_id") ->
-        (Option(r.getAs[Timestamp]("imp_ts")),
-          Option(r.getAs[Timestamp]("click_ts")))).toMap
-    query.stop()
-    assert(rows(7L) == (Some(ts("2024-01-01 10:00:00")),
-      Some(ts("2024-01-01 10:10:00"))))           // matched pair
-    assert(rows(8L) == (Some(ts("2024-01-01 10:00:00")), None)) // no click
-    assert(rows(9L) == (None, Some(ts("2024-01-01 10:10:00")))) // no imp
-  }
 
   test("hash sampling and split assignment run unchanged on streams") {
     import spark.implicits._
@@ -458,519 +194,6 @@ class StreamingSpec extends SparkSpec {
     assert(kept == Set(1L, 3L))
   }
 
-  test("transformWithState maintains a bounded running top-k per key") {
-    import spark.implicits._
-    import graft.streaming.StatefulTopK
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[StatefulTopK.KV]
-      val out = StatefulTopK.topKPerKey(stream.toDS(), k = 3)
-      val query = out.writeStream.format("memory")
-        .queryName("topk_out").outputMode("update").start()
-
-      stream.addData(StatefulTopK.KV(1L, 5.0), StatefulTopK.KV(1L, 9.0),
-        StatefulTopK.KV(2L, 1.0))
-      query.processAllAvailable()
-      // second batch: state carries across batches, stays capped at k
-      stream.addData(StatefulTopK.KV(1L, 7.0), StatefulTopK.KV(1L, 3.0),
-        StatefulTopK.KV(1L, 8.0))
-      query.processAllAvailable()
-
-      val latest = spark.table("topk_out").collect()
-        .map(r => r.getAs[Long]("key") ->
-          r.getAs[Seq[Double]]("topk").toList)
-        .toMap // memory sink appends in batch order; toMap keeps the last
-      query.stop()
-      assert(latest(1L) == List(9.0, 8.0, 7.0)) // merged across batches, k=3
-      assert(latest(2L) == List(1.0))
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("stateful anomaly flags match a reference loop across batch splits") {
-    import spark.implicits._
-    import graft.streaming.StatefulAnomaly
-    implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // steady series with one obvious spike at t=6
-      val xs = Seq(10L, 11L, 9L, 10L, 11L, 10L, 60L, 10L)
-      val obs = xs.zipWithIndex.map { case (x, t) =>
-        StatefulAnomaly.Obs("s", t.toLong, x)
-      }
-      // reference: same one-step-ahead test in a plain loop
-      var (n, s, ss) = (0L, 0L, 0L)
-      val expect = obs.map { o =>
-        val f = n >= 3 && {
-          val dev = BigInt(o.x) * n - s
-          dev * dev * 4 > BigInt(25) * (BigInt(n) * ss - BigInt(s) * s)
-        }
-        n += 1; s += o.x; ss += o.x * o.x
-        o.t -> f
-      }.toMap
-      def run(splits: Seq[Seq[StatefulAnomaly.Obs]], name: String)
-      : Map[Long, Boolean] = {
-        val stream = MemoryStream[StatefulAnomaly.Obs]
-        val query = StatefulAnomaly.flagAnomalies(stream.toDS())
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        splits.foreach { b =>
-          stream.addData(b: _*); query.processAllAvailable()
-        }
-        query.stop()
-        spark.table(name).collect()
-          .map(r => r.getAs[Long]("t") -> r.getAs[Boolean]("isAnomaly"))
-          .toMap
-      }
-      // two different micro-batch splits of the same sequence
-      val a = run(Seq(obs.take(3), obs.drop(3)), "anom_a")
-      val b = run(Seq(obs.take(5), obs.slice(5, 6), obs.drop(6)), "anom_b")
-      assert(a == expect, a)
-      assert(b == expect, b)
-      assert(expect(6L) && expect.count(_._2) == 1) // only the spike fires
-
-      // BATCH twin equivalence: ts15_online_anomaly's window arithmetic
-      // (cumulative prior stats + the same cross-multiplied inequality)
-      // must reproduce the streaming flags on the identical series — one
-      // backfill/replay contract across both tiers.
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-      import org.apache.spark.sql.types.DecimalType
-      val d38 = DecimalType(38, 0)
-      val daily = obs.toDF("series", "day", "n")
-      val w = Window.partitionBy(col("series")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val batch = daily
-        .withColumn("n_prior", count(lit(1)).over(w))
-        .withColumn("s1", sum(col("n").cast(d38)).over(w))
-        .withColumn("s2", sum((col("n") * col("n")).cast(d38)).over(w))
-        .select(col("day"),
-          when(col("n_prior") >= 3, {
-            val dev = col("n").cast(d38) * col("n_prior").cast(d38) -
-              col("s1")
-            dev * dev * lit(4) >
-              lit(25) * (col("n_prior").cast(d38) * col("s2") -
-                col("s1") * col("s1"))
-          }).otherwise(false).as("flag"))
-        .collect().map(r => r.getAs[Long]("day") -> r.getAs[Boolean]("flag"))
-        .toMap
-      assert(batch == expect, batch)
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("streaming count-min keeps heavy hitters in bounded per-shard state") {
-    import spark.implicits._
-    import graft.streaming.StreamingCms
-    implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val k = 3
-      val batch1 = Seq.fill(20)("hot") ++ (1 to 15).map(i => s"one_$i")
-      val batch2 = Seq.fill(20)("hot") ++ Seq.fill(10)("warm") ++
-        (16 to 30).map(i => s"one_$i") :+ "hot"
-      val stream = MemoryStream[StreamingCms.Tok]
-      val query = StreamingCms.heavyHitters(stream.toDS(),
-          nShards = 4, depth = 4, width = 64, k = k)
-        .writeStream.format("memory").queryName("cms_out")
-        .outputMode("update").start()
-      stream.addData(batch1.map(StreamingCms.Tok): _*)
-      query.processAllAvailable()
-      stream.addData(batch2.map(StreamingCms.Tok): _*)
-      query.processAllAvailable()
-      query.stop()
-      val rows = spark.table("cms_out").collect()
-        .map(r => (r.getAs[Int]("shard"), r.getAs[String]("token"),
-          r.getAs[Long]("est")))
-      // one-sided estimate: every emission for 'hot' is >= its true count
-      // so far, and the FINAL one is bounded by exact + collision slack
-      val hotFinal = rows.filter(_._2 == "hot").map(_._3).max
-      assert(hotFinal >= 41L && hotFinal <= 41L + 10L, hotFinal)
-      val warmFinal = rows.filter(_._2 == "warm").map(_._3).max
-      assert(warmFinal >= 10L && warmFinal <= 10L + 10L, warmFinal)
-      // candidate sets are bounded: no emission batch of a shard exceeds k
-      // (distinct tokens per shard over the whole run can exceed k, but
-      // the STATE never holds more than k — approximate via final batch)
-      val perShard = rows.groupBy(_._1).map(_._2.map(_._2).distinct.size)
-      assert(perShard.forall(_ <= 2 * k), perShard) // turnover-bounded
-      // the deterministic shard function sends every occurrence of a
-      // token to one shard
-      assert(rows.filter(_._2 == "hot").map(_._1).distinct.length == 1)
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("dropDuplicatesWithinWatermark dedupes replayed ids with bounded state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Timestamp, String, Double)]
-    val out = EventStreams.dedupeWithinWatermark(
-      stream.toDF().toDF("ts", "event_id", "value"), "event_id",
-      watermark = "30 minutes")
-    val query = out.writeStream.format("memory")
-      .queryName("dedup_out").outputMode("append").start()
-
-    stream.addData(
-      (ts("2024-01-01 10:00:00"), "e1", 1.0),
-      (ts("2024-01-01 10:01:00"), "e1", 1.0), // dup within horizon
-      (ts("2024-01-01 10:02:00"), "e2", 2.0))
-    query.processAllAvailable()
-    stream.addData((ts("2024-01-01 10:03:00"), "e1", 1.0)) // still dup
-    query.processAllAvailable()
-
-    val n = spark.table("dedup_out")
-      .filter(col("event_id").isin("e1", "e2")).count()
-    query.stop()
-    assert(n == 2)
-  }
-
-  test("streaming minhash-LSH emits near-dup candidates across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, Timestamp, String)]
-    val docs = stream.toDF().toDF("doc_id", "ts", "text")
-    val out = graft.streaming.StreamingDedup.minhashCandidates(docs)
-    val query = out.writeStream.format("memory")
-      .queryName("neardup_out").outputMode("append").start()
-
-    val dupText = "the quick brown fox jumps over the lazy dog again and again"
-    stream.addData((1L, ts("2024-01-01 10:00:00"), dupText),
-      (3L, ts("2024-01-01 10:00:30"),
-        "completely unrelated content about formula one qualifying"))
-    query.processAllAvailable()
-    // nothing matches yet: pairs only appear when the second member lands
-    assert(spark.table("neardup_out").count() == 0)
-
-    stream.addData((2L, ts("2024-01-01 10:01:00"), dupText)) // near-dup of 1
-    query.processAllAvailable()
-    val pairs = spark.table("neardup_out")
-      .select("id_a", "id_b").distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // identical text → identical signature → collides in every band;
-    // the unrelated doc 3 must not pair with either
-    assert(pairs == Set((1L, 2L)))
-
-    // push the watermark a day forward: buckets expire on the event-time
-    // ttl, so a late re-arrival of the same text pairs with nothing
-    stream.addData((9L, ts("2024-01-02 10:00:00"), "watermark advancer"))
-    query.processAllAvailable()
-    stream.addData((4L, ts("2024-01-02 10:00:10"), dupText))
-    query.processAllAvailable()
-    val after = spark.table("neardup_out")
-      .filter(col("id_a") === 4 || col("id_b") === 4).count()
-    query.stop()
-    assert(after == 0)
-  }
-
-  test("stream-static probe flags near-dups of the existing corpus only") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog " * 5
-    val corpus = Seq(
-      (1L, base),
-      (3L, "completely unrelated content about spark aggregation plans " * 5))
-      .toDF("doc_id", "text")
-    val index = graft.operators.Dedup.bucketIndex(corpus)
-
-    val stream = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingDedup.probeStaticIndex(
-      index, stream.toDF().toDF("doc_id", "text"))
-    val query = out.writeStream.format("memory")
-      .queryName("probe_out").outputMode("append").start()
-
-    stream.addData(
-      (10L, base.replace("lazy", "sleepy")), // near-dup of corpus doc 1
-      (11L, "fresh text never seen before with zero overlap at all " * 5))
-    query.processAllAvailable()
-    val pairs = spark.table("probe_out").distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    query.stop()
-    // only the corpus->stream edge; the novel doc 11 passes untouched,
-    // and the corpus is never self-paired (stateless inner join)
-    assert(pairs == Set((1L, 10L)))
-  }
-
-  test("state-store metrics surface through query progress") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val out = EventStreams.windowedTypeCounts(stream.toDF(),
-      windowLen = "10 minutes", watermark = "10 minutes")
-    val query = out.writeStream.format("memory")
-      .queryName("state_metrics_out").outputMode("append").start()
-    stream.addData(
-      Ev(ts("2024-01-01 10:00:00"), 1, "view", 1.0),
-      Ev(ts("2024-01-01 10:01:00"), 2, "view", 1.0),
-      Ev(ts("2024-01-01 11:00:00"), 3, "click", 1.0))
-    query.processAllAvailable()
-    // the windowed aggregation holds open windows in a state store; its
-    // occupancy and update counters are observable per micro-batch — the
-    // operational handle for state-size monitoring at scale
-    val state = query.lastProgress.stateOperators
-    query.stop()
-    assert(state.nonEmpty)
-    assert(state.exists(_.numRowsTotal > 0))
-    assert(state.exists(_.numRowsUpdated >= 0))
-  }
-
-  test("windowed type counts aggregate within tumbling windows") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val out = EventStreams.windowedTypeCounts(stream.toDF(),
-      windowLen = "10 minutes", watermark = "5 minutes")
-    val query = out.writeStream.format("memory")
-      .queryName("counts_out").outputMode("append").start()
-
-    stream.addData(
-      Ev(ts("2024-01-01 10:01:00"), 1, "view", 1.0),
-      Ev(ts("2024-01-01 10:04:00"), 2, "view", 2.0),
-      Ev(ts("2024-01-01 10:07:00"), 3, "click", 5.0))
-    query.processAllAvailable()
-    stream.addData(Ev(ts("2024-01-01 11:00:00"), 9, "view", 0.0))
-    query.processAllAvailable()
-
-    val rows = spark.table("counts_out")
-      .filter(col("window_start") === ts("2024-01-01 10:00:00"))
-      .collect().map(r =>
-        r.getAs[String]("event_type") ->
-          (r.getAs[Long]("n_events"), r.getAs[Double]("total_value")))
-      .toMap
-    query.stop()
-    assert(rows("view") == ((2L, 3.0)))
-    assert(rows("click") == ((1L, 5.0)))
-  }
-
-  test("audit-sized watermark admits covered late events, drops the tail") {
-    // Closes the loop on ev22_watermark_audit: pick the delay from the
-    // lateness-coverage curve (here 1 hour covers the synthetic
-    // disorder), then verify the streaming agg ACCEPTS a late event
-    // inside that delay and DROPS one beyond it — the exact trade the
-    // audit's coverage_micro column quantifies.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val out = EventStreams.windowedTypeCounts(stream.toDF(),
-      windowLen = "10 minutes", watermark = "1 hour")
-    val query = out.writeStream.format("memory")
-      .queryName("wm_out").outputMode("append").start()
-
-    stream.addData(Ev(ts("2024-01-01 10:01:00"), 1, "view", 1.0))
-    query.processAllAvailable()
-    // advance the watermark to 11:30 − 1h = 10:30
-    stream.addData(Ev(ts("2024-01-01 11:30:00"), 2, "view", 0.0))
-    query.processAllAvailable()
-    // 35 min late vs the max seen, but ≥ the 10:30 watermark → ACCEPTED
-    stream.addData(Ev(ts("2024-01-01 10:55:00"), 3, "click", 2.0))
-    query.processAllAvailable()
-    // beyond the watermark (10:05 < 10:30) → DROPPED
-    stream.addData(Ev(ts("2024-01-01 10:05:00"), 4, "click", 9.0))
-    query.processAllAvailable()
-    // far-future event closes every window so accepted rows emit
-    stream.addData(Ev(ts("2024-01-01 14:00:00"), 9, "view", 0.0))
-    query.processAllAvailable()
-
-    val byWindow = spark.table("wm_out")
-      .filter(col("event_type") === "click")
-      .collect()
-      .map(r => r.getAs[Timestamp]("window_start") ->
-        r.getAs[Long]("n_events")).toMap
-    query.stop()
-    // the covered late click landed in its 10:50 window …
-    assert(byWindow(ts("2024-01-01 10:50:00")) == 1L)
-    // … and the beyond-watermark click left no trace in its 10:00 window
-    assert(!byWindow.contains(ts("2024-01-01 10:00:00")))
-  }
-
-  // ---- streaming twins of the s16–s19 sampling gates (round 9):
-  // learning stays batch (corpus statistics, recomputed periodically);
-  // APPLICATION runs on the arriving stream and must reproduce batch
-  // membership exactly — same contract as s1–s4 and dd16/s15.
-
-  /** Shared doc fixture + the batch-learned DSIR 64-bucket log-ratio
-    * map (the same program as TrainingDataQueries.dsirWeights' learning
-    * half, on a 8-doc corpus with en as the target slice). */
-  private def dsirFixture = {
-    import spark.implicits._
-    import graft.operators.Scoring
-    val docs = Seq(
-      (1L, "en", "the quick brown fox jumps over the lazy dog"),
-      (2L, "en", "a formal sentence with measured vocabulary"),
-      (3L, "de", "der schnelle braune fuchs springt"),
-      (4L, "en", "the dog sleeps and the fox runs"),
-      (5L, "fr", "le renard brun saute par dessus"),
-      (6L, "en", "quick measured formal text wins"),
-      (7L, "de", "ein weiterer deutscher satz hier"),
-      (8L, "en", "the the the fox fox dog"),
-      // ids 9–11 hash to HIGH sir buckets (936/804/944 — ln u near 0),
-      // so these low-weight non-target docs are deterministic
-      // REJECTIONS for the s18 gate: the fixture must exercise both
-      // sides of the acceptance predicate
-      (9L, "de", "noch ein deutscher beispielsatz dazu"),
-      (10L, "de", "ganz anderes deutsches vokabular hier"),
-      (11L, "de", "weitere woerter ohne englisches gewicht"))
-      .toDF("doc_id", "lang", "text")
-    val toks = docs
-      .select(col("doc_id"), (col("lang") === "en").as("tgt"),
-        explode(split(graft.operators.TextAnalysis
-          .normalizeText(col("text")), " ")).as("t"))
-      .select(col("doc_id"), col("tgt"),
-        Scoring.tokenBucket(col("t"), 64).as("b"))
-    val dist = toks.groupBy("b").agg(
-      sum(when(col("tgt"), 1L).otherwise(0L)).as("ct"),
-      count(lit(1)).as("cr"))
-    val tot = dist.agg(sum(col("ct")).as("nt"), sum(col("cr")).as("nr"))
-    val ratio = dist.crossJoin(broadcast(tot))
-      .select(col("b"),
-        floor(lit(1e6) *
-          (log((col("ct") + lit(1L)).cast("double") /
-            (col("nt") + lit(64L)).cast("double")) -
-            log((col("cr") + lit(1L)).cast("double") /
-              (col("nr") + lit(64L)).cast("double"))))
-          .cast("bigint").as("lr_micro"))
-    val ratioMap = ratio.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // batch reference weights via the PRODUCTION join/rollup path
-    val batch = toks.join(broadcast(ratio), "b")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("lr_micro")).as("logw_micro"))
-    (docs, ratioMap, batch)
-  }
-
-  test("DSIR weights (s16): the stateless map-literal scorer matches " +
-      "the batch explode/join rollup on a stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val (docs, ratioMap, batchW) = dsirFixture
-    val batch = batchW.collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val stream = MemoryStream[(Long, String)]
-    val scored = graft.streaming.SamplingStreams.dsirScore(
-      stream.toDF().toDF("doc_id", "text"), ratioMap)
-    val query = scored.writeStream.format("memory")
-      .queryName("s16_dsir_out").outputMode("append").start()
-    val rows = docs.select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    stream.addData(rows.take(3): _*)
-    query.processAllAvailable()
-    stream.addData(rows.drop(3): _*)
-    query.processAllAvailable()
-    val streamed = spark.table("s16_dsir_out")
-      .select("doc_id", "n_terms", "logw_micro").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    query.stop()
-    assert(streamed == batch && streamed.size == rows.length)
-  }
-
-  test("DSIR scorer (s16): buckets UNSEEN by the frozen table drop " +
-      "from n_terms and logw on the stream, matching the batch inner " +
-      "join against the same frozen table") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val (docs, ratioMap, _) = dsirFixture
-    // freeze a PARTIAL table: drop half the learned buckets — the
-    // arriving-doc scenario where the stream sees vocabulary the
-    // learning pass never observed (scoring such tokens at ratio 0
-    // while still counting them in n_terms would shift avg_micro and
-    // flip s18 gate membership — the divergence this test pins shut)
-    val reduced = ratioMap.filter { case (b, _) => b % 2 == 0 }
-    assert(reduced.nonEmpty && reduced.size < ratioMap.size)
-    val ratioDf = reduced.toSeq.toDF("b", "lr_micro")
-    val toks = docs
-      .select(col("doc_id"),
-        explode(split(graft.operators.TextAnalysis
-          .normalizeText(col("text")), " ")).as("t"))
-      .select(col("doc_id"),
-        graft.operators.Scoring.tokenBucket(col("t"), 64).as("b"))
-    // batch reference via the PRODUCTION explode/inner-join rollup
-    // against the frozen partial table: unknown buckets drop from both
-    // the count and the sum; an all-unknown doc yields zero rows
-    val batch = toks.join(broadcast(ratioDf), "b").groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("lr_micro")).as("logw_micro"))
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    // the reduction must actually bite, or this test proves nothing
-    assert(batch.values.map(_._1).sum < toks.count())
-    val stream = MemoryStream[(Long, String)]
-    val scored = graft.streaming.SamplingStreams.dsirScore(
-      stream.toDF().toDF("doc_id", "text"), reduced)
-    val query = scored.writeStream.format("memory")
-      .queryName("s16_partial_out").outputMode("append").start()
-    stream.addData(docs.select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))): _*)
-    query.processAllAvailable()
-    val streamed = spark.table("s16_partial_out")
-      .select("doc_id", "n_terms", "logw_micro").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    query.stop()
-    assert(streamed == batch)
-  }
-
-  test("SIR gate (s18): frozen-ceiling log-space acceptance selects " +
-      "identical membership on a stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val (docs, ratioMap, _) = dsirFixture
-    val scoredBatch = graft.streaming.SamplingStreams.dsirScore(
-      docs.select("doc_id", "text"), ratioMap)
-    // the weight ceiling is a batch planning statistic, frozen
-    val wmax = scoredBatch.agg(max(col("avg_micro"))).head().getLong(0)
-    val batchKept = graft.streaming.SamplingStreams
-      .sirGate(scoredBatch, wmax)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val stream = MemoryStream[(Long, String)]
-    val kept = graft.streaming.SamplingStreams.sirGate(
-      graft.streaming.SamplingStreams.dsirScore(
-        stream.toDF().toDF("doc_id", "text"), ratioMap), wmax)
-    val query = kept.writeStream.format("memory")
-      .queryName("s18_sir_out").outputMode("append").start()
-    stream.addData(docs.select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))): _*)
-    query.processAllAvailable()
-    val streamedKept = spark.table("s18_sir_out")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    query.stop()
-    assert(streamedKept == batchKept)
-    // the gate must separate: some docs in, some out (fixture sanity;
-    // 9–11 sit in the rejection region by construction)
-    assert(batchKept.nonEmpty && batchKept.size < 11)
-    assert((batchKept & Set(9L, 10L, 11L)).isEmpty)
-  }
-
   test("raking cells (s17): a complete-mode stream rollup feeds the " +
       "same two-round IPF plan as batch") {
     import spark.implicits._
@@ -1002,57 +225,6 @@ class StreamingSpec extends SparkSpec {
     val streamed = rake(spark.table("s17_cells_out").localCheckpoint(true))
     query.stop()
     assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("SPRT monitor (ab22): the streaming per-arm LLR reproduces the " +
-      "batch cumulative and decides exactly once") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.ExperimentStreams
-    import graft.streaming.ExperimentStreams.{ArmDay, SprtUpdate}
-    // arm 0 converts well above H1 (crosses the upper boundary on day
-    // 4), arm 1 well below H0 (crosses the lower) — both then keep
-    // receiving data, which must NOT re-decide
-    val days = (1L to 8L)
-    val rows =
-      days.map(d => ArmDay(0L, d, 20L, 8L)) ++ // H1 evidence, ~1.0M/day
-        days.map(d => ArmDay(1L, d, 20L, 1L))  // H0 evidence, ~−0.75M/day
-    // batch reference: plain cumulative + first-crossing logic
-    def batchRef(arm: Long) = {
-      var llr = 0L; var decided = false
-      rows.filter(_.arm == arm).sortBy(_.day).map { d =>
-        llr += d.c * 200670L + (d.n - d.c) * -50011L
-        val dec =
-          if (decided) null
-          else if (llr >= 2944438L) { decided = true; "accept_h1" }
-          else if (llr <= -2944438L) { decided = true; "accept_h0" }
-          else null
-        (d.day, llr, dec)
-      }
-    }
-    val expected = (batchRef(0L).map(t => (0L, t._1, t._2, t._3)) ++
-      batchRef(1L).map(t => (1L, t._1, t._2, t._3))).toSet
-    val stream = MemoryStream[ArmDay]
-    val out = ExperimentStreams.sprtMonitor(stream.toDS(),
-      lnLr1 = 200670L, lnLr0 = -50011L, bound = 2944438L)
-    val query = out.toDF().writeStream.format("memory")
-      .queryName("ab22_out").outputMode("append").start()
-    val (early, late) = rows.partition(_.day <= 3) // state spans batches
-    stream.addData(early: _*)
-    query.processAllAvailable()
-    stream.addData(late: _*)
-    query.processAllAvailable()
-    val streamed = spark.table("ab22_out").as[SprtUpdate].collect()
-      .map(u => (u.arm, u.day, u.llr_micro, u.decision)).toSet
-    query.stop()
-    assert(streamed == expected)
-    // fixture sanity: both arms decide exactly once, in opposite
-    // directions, and not on day 1
-    val decisions = streamed.toSeq.filter(_._4 != null).sortBy(_._1)
-    assert(decisions.map(d => (d._1, d._4)) ==
-      Seq((0L, "accept_h1"), (1L, "accept_h0")))
-    assert(decisions.forall(_._2 > 1))
   }
 
   test("PII detection gate (pii1): the stateless detector projection " +
@@ -1108,47 +280,11 @@ class StreamingSpec extends SparkSpec {
     assert(batch(1L) == ((0L, 0L, 0L)) && batch(5L) == ((0L, 0L, 0L)))
   }
 
-  test("PPS systematic (s19): the single-cursor streaming sampler " +
-      "reproduces the batch token-line selection across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.SamplingStreams.{PpsDoc, PpsHit}
-    // sizes chosen so some docs straddle lattice points and one long
-    // doc (900) is hit multiple times; step frozen from the plan pass
-    val docs = Seq(PpsDoc(1, 120), PpsDoc(2, 80), PpsDoc(3, 900),
-      PpsDoc(4, 40), PpsDoc(5, 300), PpsDoc(6, 10), PpsDoc(7, 250))
-    val step = docs.map(_.size).sum / 10 // 170
-    // batch reference: cumulative in doc_id order, lattice-hit rule
-    val batch = docs.scanLeft((0L, Option.empty[PpsHit])) {
-      case ((cum, _), d) =>
-        val c = cum + d.size
-        val n = c / step - cum / step
-        (c, if (n > 0) Some(PpsHit(d.doc_id, d.size, c, n)) else None)
-    }.flatMap(_._2).map(h => h.doc_id -> h).toMap
-    val stream = MemoryStream[PpsDoc]
-    val out = graft.streaming.SamplingStreams.ppsSystematic(
-      stream.toDS(), step)
-    val query = out.toDF().writeStream.format("memory")
-      .queryName("s19_pps_out").outputMode("append").start()
-    stream.addData(docs.take(3): _*) // cursor carries across batches
-    query.processAllAvailable()
-    stream.addData(docs.drop(3): _*)
-    query.processAllAvailable()
-    val streamed = spark.table("s19_pps_out").as[PpsHit].collect()
-      .map(h => h.doc_id -> h).toMap
-    query.stop()
-    assert(streamed == batch)
-    // fixture sanity: the 900-token doc carries multiple lattice hits
-    assert(batch(3L).n_hits > 1)
-  }
-
   test("BPE application is a stateless projection: stream = batch = " +
     "the training-side window algebra") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.queries.TrainerQueries
-    import graft.streaming.TrainerStreams
     // learn the merge table from the fixture corpus (batch training)
     val merges = TrainerQueries
       .queries("bpe2_merge_table")(spark, "/root/testdata/sf0.001")
@@ -1162,7 +298,7 @@ class StreamingSpec extends SparkSpec {
     val words = Seq("spark", "table", "aaaa", "aaa", "abab", "zz", "a", w1)
     def toksOf(df: org.apache.spark.sql.DataFrame) = df
       .select(col("word"),
-        TrainerStreams.applyMerges(col("word"), merges).as("toks"))
+        TrainerQueries.applyMerges(col("word"), merges).as("toks"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList)
       .toMap
     val batch = toksOf(words.toDF("word"))
@@ -1170,7 +306,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[String]
     val out = stream.toDF().toDF("word")
       .select(col("word"),
-        TrainerStreams.applyMerges(col("word"), merges).as("toks"))
+        TrainerQueries.applyMerges(col("word"), merges).as("toks"))
     val query = out.writeStream.format("memory")
       .queryName("bpe_apply_out").outputMode("append").start()
     stream.addData(words.take(3): _*)
@@ -1196,75 +332,11 @@ class StreamingSpec extends SparkSpec {
     assert(batch(w1).length < w1.length) // the learned merge fired
   }
 
-  test("BPE vocab lookup-join apply (the scale form): stream-static " +
-    "join = batch join = the bounded fold form; OOV words read NULL") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.queries.TrainerQueries
-    import graft.streaming.TrainerStreams
-    val merges = TrainerQueries
-      .queries("bpe2_merge_table")(spark, "/root/testdata/sf0.001")
-      .orderBy("merge_round").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    val w1 = merges.head._1 + merges.head._2
-    val inVocab = Seq("spark", "aaaa", "aaa", "abab", "zz", "a", w1)
-    val vocab = TrainerQueries.pretokenizedVocab(
-      inVocab.toDF("word").withColumn("freq", lit(1L)), merges)
-    // fold-form reference for the in-vocabulary words
-    val fold = inVocab.toDF("word")
-      .select(col("word"),
-        TrainerStreams.applyMerges(col("word"), merges).as("toks"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList)
-      .toMap
-    // batch join, one OOV word appended: its tokens must be NULL (the
-    // caller-policy contract), never a silent wrong tokenization
-    val queryWords = inVocab :+ "oovword"
-    def toMapOf(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => r.getString(0) ->
-        Option(r.getSeq[String](1)).map(_.toList)).toMap
-    val batch = toMapOf(
-      TrainerStreams.tokenizeViaVocab(queryWords.toDF("word"), vocab)
-        .collect())
-    assert(inVocab.forall(w => batch(w).contains(fold(w))), (batch, fold))
-    assert(batch("oovword").isEmpty)
-    // the documented OOV straggler policy (tokenizeViaVocab scaladoc):
-    // route ONLY the NULL-token rows through the bounded fold form —
-    // coalesce(tokens, fold(word)) tokenizes the OOV word under the
-    // same frozen merges and leaves every in-vocabulary row untouched
-    val withFallback = toMapOf(
-      TrainerStreams.tokenizeViaVocab(queryWords.toDF("word"), vocab)
-        .select(col("word"),
-          coalesce(col("tokens"),
-            TrainerStreams.applyMerges(col("word"), merges)).as("tokens"))
-        .collect())
-    assert(inVocab.forall(w => withFallback(w) == batch(w)),
-      (withFallback, batch))
-    val oovFold = Seq("oovword").toDF("word")  // fold-form reference
-      .select(TrainerStreams.applyMerges(col("word"), merges))
-      .collect()(0).getSeq[String](0).toList
-    assert(withFallback("oovword").contains(oovFold),
-      (withFallback("oovword"), oovFold))
-    // stream side: the SAME stream-static join, append mode, two
-    // micro-batches, no state store
-    val stream = MemoryStream[String]
-    val out = TrainerStreams.tokenizeViaVocab(
-      stream.toDF().toDF("word"), vocab)
-    val query = out.writeStream.format("memory")
-      .queryName("bpe_vocab_out").outputMode("append").start()
-    stream.addData(queryWords.take(4): _*)
-    query.processAllAvailable()
-    stream.addData(queryWords.drop(4): _*)
-    query.processAllAvailable()
-    val streamed = toMapOf(spark.table("bpe_vocab_out").collect())
-    query.stop()
-    assert(streamed == batch, (streamed, batch))
-  }
-
   test("GD classifier scoring streams unchanged against frozen weights") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.queries.TrainerQueries
-    // frozen trained weights (the dsirScore frozen-table rule): scoring
+    // frozen trained weights (a frozen table, as for DSIR): scoring
     // is predMicro, a pure per-row projection over the feature columns
     val w = Array(123456L, -654321L, 42000L, 7000L)
     val feats = Seq((1L, 1000000L, 250000L, 400000L, 120000L),

@@ -96,8 +96,7 @@ class TrainerSpec extends SparkSpec {
     assert(vocabMap(1) == v)
     // the fold form agrees word-for-word
     val fold = w.select(col("word"),
-        graft.streaming.TrainerStreams.applyMerges(col("word"), merges)
-          .as("t"))
+        TrainerQueries.applyMerges(col("word"), merges).as("t"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList)
       .toMap
     assert(fold == v, (fold, v))
@@ -150,15 +149,14 @@ class TrainerSpec extends SparkSpec {
 
   test("applyMerges fold form is bounded: a merge table past " +
     "MaxFoldMerges is rejected with the lookup-join pointer") {
-    import graft.streaming.TrainerStreams
-    val big = (1 to TrainerStreams.MaxFoldMerges + 1).map(i => (s"x$i", "y"))
+    val big = (1 to TrainerQueries.MaxFoldMerges + 1).map(i => (s"x$i", "y"))
     val e = intercept[IllegalArgumentException] {
-      TrainerStreams.applyMerges(col("word"), big)
+      TrainerQueries.applyMerges(col("word"), big)
     }
     assert(e.getMessage.contains("pretokenize"), e.getMessage)
     // at the bound it still builds (the expression, not an error)
-    TrainerStreams.applyMerges(col("word"),
-      big.take(TrainerStreams.MaxFoldMerges))
+    TrainerQueries.applyMerges(col("word"),
+      big.take(TrainerQueries.MaxFoldMerges))
   }
 
   test("trainWeights is reproducible and moves weights off zero on the " +
