@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every `SparkEntry.queries` entry on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query and total
   * seconds.
@@ -11,25 +9,14 @@ import org.apache.spark.sql.SparkSession
   *    lets Catalyst prune projections, which would under-measure);
   *  - a small warm-up action runs first so JVM/classloader/codegen
   *    first-touch cost is not billed to the first query;
-  *  - AQE is on, shuffle partitions sized to the core count (local mode).
+  *  - the session is [[graft.core.GraftSession.local]], the one every
+  *    other main and the specs run: AQE on, shuffle partitions sized to
+  *    the core count (local mode).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.core.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(appName = "graft-bench")
 
     // each query's GlobalRank layout checkpoints live in a per-query
     // owner scope, freed deterministically at the query boundary (the
@@ -118,12 +105,13 @@ object Bench {
     // identical-code catalog runs, per-query times below ~2 s swung
     // 0.63-1.56x (occasionally 8-10x on sub-0.3s queries) from run
     // order/JIT/GC coupling while TOTALS agreed to ~1% — deltas under
-    // stable_above_sec carry no signal; triage them with
-    // tools/triage_movers.py's fresh-JVM protocol, never raw diffs.
+    // stable_above_sec carry no signal; time a mover on its own in a
+    // fresh JVM (SPARK_GRAFT_ONLY=<query> on this main), never from raw
+    // diffs.
     val noiseNote = "per-query times below stable_above_sec are " +
       "in-catalog order/JIT noise (measured 0.63-1.56x band on " +
-      "identical code; totals agree to ~1%) - triage movers via " +
-      "tools/triage_movers.py fresh-JVM re-isolation, not raw deltas"
+      "identical code; totals agree to ~1%) - re-time movers alone in " +
+      "a fresh JVM (SPARK_GRAFT_ONLY), not from raw deltas"
     val fullJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","stable_above_sec":2.0,"per_query_noise":"$noiseNote","queries":{${
         entries.mkString(",")}},"failed":$failedJson,"sf":"$sfDir"}"""

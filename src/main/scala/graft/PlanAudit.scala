@@ -57,12 +57,9 @@ object PlanAudit {
     // Layout lifecycle: this helper executes per-window counting
     // queries against frames whose GlobalRank layouts were pinned at
     // the CALLER's query construction — the caller owns the query
-    // boundary and must wrap construction + this measurement in
-    // GlobalRank.withScope (every caller does: PreflightSweep,
-    // AllowlistedSweep.run, the specs). The global releaseLayouts()
-    // drain that used to sit here was a no-op for scoped callers and
-    // a trap for a concurrent unscoped one — a library helper must
-    // never free layouts it does not own (round-11 directive 6).
+    // boundary and wraps construction + this measurement in
+    // GlobalRank.withScope (PreflightSweep, the specs); a library
+    // helper never frees layouts it does not own.
     shapes
   }
 
@@ -209,7 +206,7 @@ object PlanAudit {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     println(f"${"query"}%-22s shuffles bcasts codegen pushed")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
+      try graft.operators.GlobalRank.withScope {
         val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
         val shuffles = "Exchange hashpartitioning|Exchange rangepartitioning|Exchange SinglePartition"
           .r.findAllIn(plan).size
@@ -292,11 +289,9 @@ private[graft] object AllowlistedSweep {
   * 2 s floor); allowlists are per-check and always gate: exit 1 on any
   * unexpected flag or stale allowlist entry. A first-measurement
   * scaling flag is re-timed on both SFs (min of two) before it counts.
-  * Prints the same `TIMING name tA=… tB=… ratio=…` lines, so
-  * tools/scaling_baseline.py harvests this sweep unchanged (timing
-  * protocol: query construction + executedPlan.execute().count(), AQE
-  * off — construction must stay inside the clock, see timedRun;
-  * recorded in the baseline's protocol field).
+  * Prints one `TIMING name tA=… tB=… ratio=…` line per query (query
+  * construction + executedPlan.execute().count(), AQE off — construction
+  * stays inside the clock, see timedRun).
   *
   * `runMain graft.PreflightSweep <sfA> <sfB> <funnelAllowCsv>
   * <hazardAllowCsv> <scalingAllowCsv> [noscaling]` (`-` = empty
@@ -318,13 +313,6 @@ object PreflightSweep {
     val spark =
       graft.core.GraftSession.local(appName = "graft-preflight-sweep")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.setLogLevel("WARN")
-    // clock-shape marker: tools/scaling_baseline.py refuses to
-    // min-merge logs whose markers mismatch (mixing an execution-only
-    // log with construction-inclusive ones would silently drag
-    // eager-construction queries' minima toward zero — the lr1-class
-    // blindness round 11 fixed)
-    if (doScaling) println("TIMING_PROTOCOL construction+execute_count")
 
     val selected = AllowlistedSweep.selectWithBanner()
 

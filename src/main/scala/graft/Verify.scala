@@ -11,21 +11,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2 && args.length % 2 == 0,
       "usage: Verify <sfDir> <outDir> [<sfDir2> <outDir2> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.core.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // If events.parquet carries TIMESTAMP(NANOS) (one of the fixture's
-      // historical contracts), surface it as long nanos instead of
-      // rejecting it; a timestamp[us] fixture ignores this flag and
-      // Tables.eventsUs adapts either way.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(appName = "graft-verify")
     // Optional comma-separated filter for fast local iteration (absent on
     // driver runs → full catalog; oracle_sql.json always covers it all).
     val only = sys.env.get("SPARK_GRAFT_ONLY")

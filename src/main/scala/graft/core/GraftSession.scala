@@ -3,7 +3,9 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
-/** Session factory with the scale-oriented defaults this engine assumes.
+/** The one session factory: every main (`Bench`, `Verify`, `Smoke`, the
+  * audit and demo mains), the benchmark in `lakebench/` and the specs
+  * build their session here, so they all run the same settings.
   *
   * The reference configures AQE + skew-join + 200 shuffle partitions on a
   * 2-worker Glue cluster (`src/jobs/config/job_config.py:211-218` in
@@ -11,6 +13,11 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * broadcast demotion) but size `spark.sql.shuffle.partitions` to the actual
   * parallelism — on a real cluster this would be 2-3x total cores; the
   * harness runs local[N].
+  *
+  * Dynamic partition overwrite is not a session setting: the reference's
+  * session-wide `partitionOverwriteMode=dynamic` becomes a per-write
+  * option ([[graft.io.ParquetSink.overwritePartitions]]), so every other
+  * overwrite keeps Spark's static semantics.
   *
   * Generated-code reuse ([[CodegenReuse]]): Spark keeps compiled
   * generated classes in one LRU cache, `spark.sql.codegen.cache.maxEntries`,
@@ -21,9 +28,7 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   *
   * Local file system ([[ForkFreeLocalFs]]): the `file` scheme is served by
   * [[graft.io.LocalFs]], which sets permissions without forking `chmod`
-  * for every file and directory a write creates. `graft.Bench` and
-  * `graft.Verify` build their own sessions and keep Hadoop's stock local
-  * file system.
+  * for every file and directory a write creates.
   */
 object GraftSession {
   /** Size of Spark's generated-class cache. Measured working set on 4
@@ -42,7 +47,7 @@ object GraftSession {
     * query would otherwise emit differently named, uncached classes
     * (0–10 recompiles per refresh). The id stays in the source comment
     * `debugCodegen` prints. */
-  val CodegenReuse: Map[String, Any] = Map(
+  private val CodegenReuse: Map[String, Any] = Map(
     StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries,
     SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key -> false)
 
@@ -50,7 +55,7 @@ object GraftSession {
     * file system per scheme and JVM, created from the configuration of
     * its first user, so this is set on the builder, before the session's
     * context opens its first file. */
-  val ForkFreeLocalFs: Map[String, Any] =
+  private val ForkFreeLocalFs: Map[String, Any] =
     Map("spark.hadoop.fs.file.impl" -> classOf[graft.io.LocalFs].getName)
 
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -65,8 +70,11 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // If events.parquet carries TIMESTAMP(NANOS) (one of the fixture's
+      // historical contracts), surface it as long nanos instead of
+      // rejecting it; a timestamp[us] fixture ignores this flag and
+      // Tables.eventsUs adapts either way.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
       .config(CodegenReuse)

@@ -19,8 +19,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * with the sticky, setuid or setgid bit, which `java.nio` cannot set, and
   * a file store without POSIX permissions keep Hadoop's own path.
   *
-  * Registered for the `file` scheme by
-  * [[graft.core.GraftSession.ForkFreeLocalFs]]. */
+  * Registered for the `file` scheme by [[graft.core.GraftSession.local]]. */
 class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
 object LocalFs {

@@ -44,12 +44,12 @@ import org.apache.spark.sql.functions._
   * advisory: every entry point `require`s the input at most
   * [[MaxLayoutWidth]] columns — rank a (keys, rowid) projection and join
   * the wide row back, never feed the wide row itself. Callers that own a
-  * query boundary (Bench, Verify, the audit sweeps) wrap construction +
-  * materialization of each result in [[withScope]], which frees THAT
-  * owner's checkpointed blocks deterministically instead of waiting for
-  * GC — and only that owner's, so interleaved components can no longer
-  * release each other's live layouts ([[releaseLayouts]] remains as the
-  * unscoped-caller fallback list);
+  * query boundary (Bench, Verify, the audit sweeps, each spec) wrap
+  * construction + materialization of each result in [[withScope]], which
+  * frees THAT owner's checkpointed blocks deterministically instead of
+  * waiting for GC — and only that owner's, so interleaved components
+  * cannot release each other's live layouts. A pin with no open scope is
+  * an error: nothing would ever free it;
   * after release the returned frame must not be re-executed (a local
   * checkpoint's lineage is truncated — recompute is impossible by
   * design). That lifecycle contract is EXECUTABLE: a frame computed
@@ -67,21 +67,13 @@ object GlobalRank {
     * and far below a full fact-table row. */
   val MaxLayoutWidth = 12
 
-  /** Release handles for layouts checkpointed OUTSIDE any
-    * [[LayoutScope]] — the unowned fallback list that [[releaseLayouts]]
-    * drains. Each handle drops that layout's storage blocks AND flips
-    * its guard, so post-release re-execution fails with
-    * [[ReleasedLayoutMsg]] instead of an opaque missing-block error. */
-  private val liveLayouts =
-    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-
-  /** Per-OWNER release scope (round-10 directive 4): the process-global
-    * free list relied on a single-owner-sequential convention — any
-    * query-boundary owner calling [[releaseLayouts]] freed ALL live
-    * layouts, including another component's. A scope owns exactly the
-    * layouts checkpointed on its thread while it was the innermost open
-    * scope; [[close]] frees those and no others, so owner A releasing
-    * cannot invalidate owner B's frames (OperatorsSpec pins this).
+  /** Per-OWNER release scope: a scope owns exactly the layouts
+    * checkpointed on its thread while it was the innermost open scope;
+    * [[close]] frees those and no others, so owner A releasing cannot
+    * invalidate owner B's frames (OperatorsSpec pins this). Each release
+    * handle drops that layout's storage blocks AND flips its guard, so
+    * post-release re-execution fails with [[ReleasedLayoutMsg]] instead
+    * of an opaque missing-block error.
     * Scopes nest as a stack per thread; close in LIFO order. Closing
     * from ANOTHER thread is safe too: the handles are freed, and the
     * opening thread's stack entry — which only that thread's
@@ -137,8 +129,7 @@ object GlobalRank {
   /** Run `f` under its own scope and release that scope's layouts (and
     * only those) afterwards — the query-boundary-owner idiom: construct
     * AND fully materialize the result inside `f`; the returned frames
-    * must not be re-executed after (same lifecycle contract as
-    * [[releaseLayouts]], scoped to this owner). */
+    * must not be re-executed after. */
   def withScope[T](f: => T): T = {
     val s = openScope()
     try f finally s.close()
@@ -148,12 +139,27 @@ object GlobalRank {
     * — the executable form of the lifecycle contract (see the class
     * scaladoc's cost note). */
   val ReleasedLayoutMsg: String =
-    "GlobalRank layout re-executed after releaseLayouts(): frames " +
-      "returned by GlobalRank must be fully materialized before their " +
-      "query-boundary owner releases layouts — materialize (collect/" +
-      "write) first, or defer releaseLayouts() while the frame is live"
+    "GlobalRank layout re-executed after its scope closed: frames " +
+      "returned by GlobalRank must be fully materialized before the " +
+      "GlobalRank.withScope that owns them closes — materialize " +
+      "(collect/write) inside the scope, or widen the scope"
+
+  /** The error a pin raises when its thread has no open scope: nothing
+    * would ever free it (the release handle holds the checkpointed RDD,
+    * so not even Spark's ContextCleaner could). */
+  private val NoScopeMsg: String =
+    "GlobalRank pin outside any scope: wrap query construction and " +
+      "materialization in GlobalRank.withScope, which frees the pin at " +
+      "the query boundary"
 
   private def checkpointLayout(df: DataFrame): DataFrame = {
+    // the owner is the calling thread's innermost OPEN scope (lazy-
+    // popping scopes a cross-thread close() left behind); with none,
+    // fail before the checkpoint job runs
+    val stack = currentScopes.get.filterNot(_.isClosed)
+    currentScopes.set(stack)
+    val scope = stack.headOption
+      .getOrElse(throw new IllegalStateException(NoScopeMsg))
     // guarded localCheckpoint: materializes the plan into a LogicalRDD
     // whose rdd holds the persisted blocks, with a compute guard that
     // turns post-release recomputation into ReleasedLayoutMsg; the
@@ -161,48 +167,12 @@ object GlobalRank {
     // boundary.
     val (pinned, release) = org.apache.spark.sql.graftbridge.DatasetBridge
       .guardedLocalCheckpoint(df, ReleasedLayoutMsg)
-    // register with the calling thread's innermost OPEN scope (lazy-
-    // popping scopes a cross-thread close() left behind); the process-
-    // global list only owns layouts checkpointed outside any scope
-    // (legacy/unscoped callers)
-    val stack = currentScopes.get.filterNot(_.isClosed)
-    currentScopes.set(stack)
-    stack.headOption match {
-      case Some(scope) =>
-        scope.handles.add(release)
-        // if the scope closed concurrently between the filter and the
-        // add, its drain may already have run — drain again so the
-        // handle cannot strand in a queue nothing else will touch
-        if (scope.isClosed) scope.drain()
-      case None => liveLayouts.add(release)
-    }
+    scope.handles.add(release)
+    // if the scope closed concurrently between the filter and the add,
+    // its drain may already have run — drain again so the handle cannot
+    // strand in a queue nothing else will touch
+    if (scope.isClosed) scope.drain()
     pinned
-  }
-
-  /** Free every UNSCOPED layout checkpointed since the last call;
-    * returns how many were released. Call ONLY at a query boundary,
-    * after the frames built on those layouts are fully materialized and
-    * discarded. Owners that might interleave should prefer
-    * [[withScope]]/[[openScope]] — this list only holds layouts
-    * checkpointed outside any scope, so a scoped owner A and a legacy
-    * caller B can no longer free each other's frames; a frame that IS
-    * re-executed after its layout was freed fails fast with
-    * [[ReleasedLayoutMsg]] rather than an unrecoverable Spark error.
-    *
-    * CONTRACT (round-11 directive 6): this global drain is the LEGACY
-    * escape hatch for a single unscoped caller that owns the whole JVM
-    * sequentially — it frees every unscoped layout regardless of which
-    * component checkpointed it, so it is sound ONLY under that
-    * single-owner assumption. Every main and library helper in
-    * src/main now owns its boundaries via [[withScope]] (zero
-    * `releaseLayouts()` callers remain there); new code must do the
-    * same. Kept public for REPL/notebook sessions and the spec that
-    * pins the unscoped-fallback behavior. */
-  def releaseLayouts(): Int = {
-    var n = 0
-    var r = liveLayouts.poll()
-    while (r != null) { r(); n += 1; r = liveLayouts.poll() }
-    n
   }
 
   /** Pin an arbitrary (narrow, multiply-consumed) frame with the SAME

@@ -9,7 +9,7 @@ object SparkContextBridge {
   /** `RDD.unpersist(blocking = false)` minus its per-call
     * lineage-truncation WARN: this engine releases local-checkpoint
     * layouts deterministically at query boundaries
-    * ([[graft.operators.GlobalRank.releaseLayouts]]), where the
+    * ([[graft.operators.GlobalRank.withScope]]), where the
     * truncation is the documented contract — and post-release
     * recomputation is guarded with the operator's own error
     * (`DatasetBridge.guardedLocalCheckpoint`), so the warning protects

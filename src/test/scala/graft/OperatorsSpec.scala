@@ -662,10 +662,10 @@ class OperatorsSpec extends SparkSpec {
     import graft.operators.GlobalRank
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    GlobalRank.releaseLayouts() // drain layouts pinned by earlier tests
     val before = spark.sparkContext.getPersistentRDDs.size
     val df = (1L to 4000L).map(i => (i, (i % 13).toDouble, (i % 5) + 1L))
       .toDF("id", "v", "w")
+    val scope = GlobalRank.openScope()
     // (v, id) is a total order → bit-identical to the built-in window
     val ps = GlobalRank.withGlobalPrefixSum(df, Seq(col("v"), col("id")),
       col("w"), out = "cum", totOut = Some("tot"))
@@ -680,9 +680,9 @@ class OperatorsSpec extends SparkSpec {
       .contains("Exchange SinglePartition"))
     // the pinned range layout is persisted while the frame is in use…
     assert(spark.sparkContext.getPersistentRDDs.size > before)
-    // …and releases deterministically at the query boundary (results
+    // …and releases deterministically when its scope closes (results
     // above are fully materialized; the frame is not touched again)
-    assert(GlobalRank.releaseLayouts() >= 1)
+    assert(scope.close() >= 1)
     assert(spark.sparkContext.getPersistentRDDs.size <= before)
     // executable contracts: a wide frame is rejected (each call
     // checkpoints its full input)…
@@ -704,12 +704,12 @@ class OperatorsSpec extends SparkSpec {
       "executable)") {
     import graft.operators.GlobalRank
     import spark.implicits._
-    GlobalRank.releaseLayouts() // own the query boundary for this test
     val df = (1L to 500L).map(i => (i, (i % 7).toDouble)).toDF("id", "v")
+    val scope = GlobalRank.openScope()
     val ranked = GlobalRank.withGlobalRowNumber(df,
       Seq(col("v"), col("id")), out = "rn")
     assert(ranked.count() == 500L) // materialized once: legitimate use
-    assert(GlobalRank.releaseLayouts() >= 1)
+    assert(scope.close() >= 1)
     // re-executing the frame after its layout was freed must surface
     // ReleasedLayoutMsg somewhere in the failure chain — the guard RDD
     // fails fast instead of Spark's unrecoverable missing-block error
@@ -718,7 +718,7 @@ class OperatorsSpec extends SparkSpec {
       if (t == null) Nil else t +: chain(t.getCause)
     assert(chain(e).exists(t =>
       String.valueOf(t.getMessage)
-        .contains("releaseLayouts")), s"got: $e")
+        .contains("re-executed after its scope closed")), s"got: $e")
   }
 
   test("layout scopes are per-owner: closing owner A's scope leaves " +
@@ -746,9 +746,8 @@ class OperatorsSpec extends SparkSpec {
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: chain(t.getCause)
     assert(chain(e).exists(t =>
-      String.valueOf(t.getMessage).contains("releaseLayouts")), s"got: $e")
-    // scoped layouts never land on the unscoped fallback list
-    assert(GlobalRank.releaseLayouts() == 0)
+      String.valueOf(t.getMessage)
+        .contains("re-executed after its scope closed")), s"got: $e")
   }
 
   test("a layout scope closed from another thread frees its handles " +
@@ -756,6 +755,7 @@ class OperatorsSpec extends SparkSpec {
     import graft.operators.GlobalRank
     import spark.implicits._
     val df = (1L to 300L).map(i => (i, (i % 5).toDouble)).toDF("id", "v")
+    val outer = GlobalRank.openScope()
     val scope = GlobalRank.openScope()
     val ranked = GlobalRank.withGlobalRowNumber(df,
       Seq(col("id")), out = "rn")
@@ -768,13 +768,31 @@ class OperatorsSpec extends SparkSpec {
     assert(freed >= 1, s"cross-thread close freed $freed")
     // the opener's stack still holds the closed scope until lazily
     // popped — a NEW checkpoint on this thread must NOT register into
-    // the closed scope's drained queue (it would strand forever); with
-    // no open scope left it belongs to the unscoped fallback list
+    // the closed scope's drained queue (it would strand forever); it
+    // belongs to the next open scope down the stack
     val ranked2 = GlobalRank.withGlobalRowNumber(df,
       Seq(col("v"), col("id")), out = "rn2")
     assert(ranked2.count() == 300L)
-    assert(GlobalRank.releaseLayouts() >= 1,
+    assert(outer.close() >= 1,
       "post-cross-thread-close checkpoint stranded in a closed scope")
+  }
+
+  test("a pin on a thread with no open scope throws before it " +
+      "checkpoints, naming GlobalRank.withScope") {
+    import graft.operators.GlobalRank
+    import spark.implicits._
+    val df = (1L to 300L).map(i => (i, (i % 5).toDouble)).toDF("id", "v")
+    // this test's own thread runs inside the spec's scope; a fresh
+    // thread has none
+    var err: Throwable = null
+    val (_, jobs) = jobsDuring {
+      val t = new Thread(() =>
+        try GlobalRank.pinned(df) catch { case e: Throwable => err = e })
+      t.start(); t.join()
+    }
+    assert(err.isInstanceOf[IllegalStateException] &&
+      err.getMessage.contains("GlobalRank.withScope"), s"got: $err")
+    assert(jobs == 0, s"$jobs checkpoint jobs ran for a refused pin")
   }
 
   test("er4 cluster-audit cap bounds pair work and still flags chains") {

@@ -8,12 +8,10 @@ import graft.gold.WindowOps
 /** Property tests (SURVEY.md §5): invariants of the window helpers under
   * random seasons. Points are integer-valued doubles so sums are exact.
   */
-object WindowProps extends Properties("WindowOps") {
+object WindowProps extends SparkProps("WindowOps") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
-
-  private lazy val spark = SparkSpec.session
 
   private val seasonGen: Gen[List[(Int, Int, Int)]] = for {
     nDrivers <- Gen.choose(1, 5)
@@ -91,12 +89,10 @@ object WindowProps extends Properties("WindowOps") {
   * documented math (no Spark session needed). */
 /** asofNearest against the obvious brute force: for every left row, the
   * deduped right row with minimal |t − rt|, ties to the EARLIER rt. */
-object AsOfProps extends Properties("AsOfJoin.asofNearest") {
+object AsOfProps extends SparkProps("AsOfJoin.asofNearest") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
-
-  private lazy val spark = SparkSpec.session
 
   private val gen = for {
     nl <- Gen.choose(1, 10)
@@ -140,12 +136,10 @@ object AsOfProps extends Properties("AsOfJoin.asofNearest") {
 /** The winnowing guarantee (Schleimer et al. §2): any substring of length
   * ≥ w + k − 1 shared by two documents forces ≥ 1 shared fingerprint —
   * detection is deterministic, never a MinHash-style probabilistic miss. */
-object WinnowProps extends Properties("Dedup.winnowFingerprints") {
+object WinnowProps extends SparkProps("Dedup.winnowFingerprints") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
-
-  private lazy val spark = SparkSpec.session
 
   private val word = Gen.choose(1, 8)
     .flatMap(n => Gen.listOfN(n, Gen.alphaLowerChar).map(_.mkString))
@@ -257,12 +251,10 @@ object KernelProps extends Properties("Kernels") {
 /** Invariants of the strided sliding-window chunk plan: chunks tile
   * [0, n) exactly with stride-spaced starts, clamp at the document end,
   * and every document (even empty) emits at least one chunk. */
-object ChunkProps extends Properties("Packing.overlapChunks") {
+object ChunkProps extends SparkProps("Packing.overlapChunks") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
-
-  private lazy val spark = SparkSpec.session
 
   private val cases: Gen[(List[Long], Int, Int)] = for {
     nDocs <- Gen.choose(1, 6)
@@ -303,12 +295,10 @@ object ChunkProps extends Properties("Packing.overlapChunks") {
 /** Random-graph invariants of the Graph operators, each checked against a
   * driver-side reference implementation (tiny graphs, exhaustive truth).
   */
-object GraphProps extends Properties("Graph") {
+object GraphProps extends SparkProps("Graph") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(6)
-
-  private lazy val spark = SparkSpec.session
 
   private val graphGen: Gen[(Int, List[(Long, Long)])] = for {
     n <- Gen.choose(3, 10)
@@ -445,12 +435,10 @@ object GraphProps extends Properties("Graph") {
 
 /** Round-7 operator invariants: seeded PageRank mass, blocking-verify
   * containment, and the trained-weights scorer's equivalence contract. */
-object Round7Props extends Properties("Round7Ops") {
+object Round7Props extends SparkProps("Round7Ops") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(6)
-
-  private lazy val spark = SparkSpec.session
 
   private val graphGen: Gen[(Int, List[(Long, Long)])] = for {
     n <- Gen.choose(2, 12)
@@ -531,12 +519,10 @@ object Round7Props extends Properties("Round7Ops") {
   * [[graft.queries.TrainerQueries.mergeRound]] against a straight
   * sequential BPE implementation (Sennrich get_stats + greedy
   * left-to-right merge) over random word-frequency tables. */
-object BpeProps extends Properties("TrainerQueries.mergeRound") {
+object BpeProps extends SparkProps("TrainerQueries.mergeRound") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
-
-  private lazy val spark = SparkSpec.session
 
   // distinct words over a 3-letter alphabet (repeats force the a==a run
   // logic), with random frequencies — the wordFreq grain

@@ -5,22 +5,29 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graftbridge.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalacheck.{Prop, Properties}
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs.
+import graft.operators.GlobalRank
+
+/** Shared local session for specs: the product's own session,
+  * [[graft.core.GraftSession.local]] on 4 cores, so specs check the
+  * settings every main runs with (generated-code cache size, the `file`
+  * file system, static partition overwrite). The codegen cache and the
+  * local file system are JVM-wide and set up once by their first user:
+  * in a test JVM, this session.
   *
-  * It takes the product's generated-code settings,
-  * [[graft.core.GraftSession.CodegenReuse]], cache size included, so specs
-  * that count compiled classes test the product's setting. The cache is
-  * JVM-wide and sized once, by the first session that generates code: in
-  * a test JVM, this one. The same holds for the local file system,
-  * [[graft.core.GraftSession.ForkFreeLocalFs]]: Hadoop caches it per JVM,
-  * created by its first user. */
+  * Every test runs inside its own [[graft.operators.GlobalRank.withScope]],
+  * as every main runs each query: the test is the query boundary, and
+  * pins made during it are freed when it ends. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // shared session, never stop per-suite
+
+  override def withFixture(test: NoArgTest): Outcome =
+    GlobalRank.withScope(super.withFixture(test))
 
   /** Runs `f` with the session confs `kv` set, then restores them. */
   def withConf[T](kv: (String, String)*)(f: => T): T = {
@@ -51,23 +58,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // same extension tier as the product session (GraftSession.local):
-      // SQL-registered kernels (md5_prefix60 …) + custom planner
-      // strategies resolve in specs that sweep the whole catalog
-      .config("spark.sql.extensions",
-        classOf[graft.core.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.GraftSession.CodegenReuse)
-      .config(graft.core.GraftSession.ForkFreeLocalFs)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    graft.core.GraftSession.local("4", "graft-test")
+}
+
+/** [[SparkSpec]] for ScalaCheck: the shared session, and each property
+  * (all its generated cases) inside its own
+  * [[graft.operators.GlobalRank.withScope]]. */
+abstract class SparkProps(name: String) extends Properties(name) {
+  protected lazy val spark: SparkSession = SparkSpec.session
+
+  override def properties: collection.Seq[(String, Prop)] =
+    super.properties.map { case (n, p) =>
+      n -> Prop(prms => GlobalRank.withScope(p(prms)))
+    }
 }

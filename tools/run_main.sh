@@ -2,8 +2,9 @@
 # Run a graft main class in a FRESH plain JVM with the exact JVM options
 # build.sbt gives forked runs (Spark-on-JDK17 --add-opens set, UTC, no UI,
 # 24g heap). Exists because `sbt -batch runMain` pays ~40 s of sbt/zinc
-# startup per invocation — fatal for bench_isolated.sh's one-JVM-per-query
-# protocol (23 queries × 3 sweeps would be ~45 min of pure sbt overhead).
+# startup per invocation — a fresh JVM per main (preflight's sweep and
+# Verify, or one query's timing with `SPARK_GRAFT_ONLY=q ... graft.Bench`)
+# should not pay that.
 #
 # The classpath is exported from sbt ONCE and cached; the cache is
 # invalidated when build.sbt changes. Compilation is NOT implied — callers
