@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** The reference's scalar-function surface (SURVEY.md §2.H/§2.J),
   * re-expressed as native, codegen-friendly Column expressions.
@@ -42,14 +42,6 @@ object F1Functions {
       pointsForPosition(position) +
         when(coalesce(fastestLap, lit(false)) && position.between(1, 10),
           lit(1)).otherwise(lit(0)))
-      .otherwise(lit(0))
-
-  /** Sprint-race points: 8,7,6,5,4,3,2,1 for positions 1..8
-    * (business_logic.py:54-66). */
-  private val sprintLadder = Seq(8, 7, 6, 5, 4, 3, 2, 1)
-  def sprintPointsForPosition(position: Column): Column =
-    when(position.between(1, 8),
-      element_at(typedLit(sprintLadder), position.cast("int")))
       .otherwise(lit(0))
 
   /** Normalize an entity name the way the reference normalizes GP names
@@ -206,11 +198,9 @@ object F1Functions {
       .otherwise(round((hrs * 3600 + mins * 60 + sec) * 1000).cast(LongType))
   }
 
-  /** Seconds (double) ↔ millis (long), reference's ×1000/÷1000-with-round
+  /** Seconds (double) → millis (long), the reference's ×1000-with-round
     * convention (qualifying_transform.py:134-182). */
   def secondsToMillis(sec: Column): Column = round(sec * 1000).cast(LongType)
-  def millisToSeconds(ms: Column): Column =
-    (ms / 1000.0).cast(DecimalType(10, 3))
 
   /** Gap-to-pole clamp: negative gaps (data glitches) clamp to 0
     * (business_logic.py:180-197). */

@@ -186,10 +186,6 @@ object VectorExpressions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "dot_f", exprs => DotProductF(exprs.head, exprs(1)), "built-in")
 
-  /** L2 norm via the fused dot. */
-  def normF(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dotF(a, a))
-
   /** Fused exact dot product of two Array[Long] columns. */
   def dotL(a: Column, b: Column): Column =
     ColumnBridge.column(DotProductL(

@@ -66,44 +66,40 @@ object GoldTransforms {
         "season_avg_qualifying_position", "year", "grand_prix_name"))
   }
 
-  /** driver_performance_summary_race
-    * (driver_performance_summary_race_transform.py:206-335): per
-    * (session, driver) race line with running season points. */
-  def driverPerformanceRace(sessions: DataFrame, raceResults: DataFrame,
-                            drivers: DataFrame): DataFrame = {
-    val base = raceResults.drop("year", "grand_prix_name")
+  /** Race lines: one row per (race session, current driver) with the
+    * race's points and the running season total. The base of both
+    * [[driverPerformanceRace]] and [[championshipTracker]]. */
+  private def raceLines(sessions: DataFrame, raceResults: DataFrame,
+                        drivers: DataFrame): DataFrame =
+    raceResults.drop("year", "grand_prix_name")
       .join(raceSessions(sessions, "race"), Seq("session_key"))
       .join(currentDrivers(drivers), Seq("driver_number"))
       .withColumn("race_points",
         coalesce(col("validated_points"), col("points"), lit(0.0)))
-    Audit.stamped(base
       .withColumn("season_points_total",
         runningTotal(col("race_points"),
           Seq(col("driver_number"), col("year")),
           Seq(col("race_date"), col("round_number"))))
+
+  /** driver_performance_summary_race
+    * (driver_performance_summary_race_transform.py:206-335): per
+    * (session, driver) race line with running season points. */
+  def driverPerformanceRace(sessions: DataFrame, raceResults: DataFrame,
+                            drivers: DataFrame): DataFrame =
+    Audit.stamped(raceLines(sessions, raceResults, drivers)
       .withColumn("finish_position", col("position"))
       .select("session_key", "driver_number", "full_name", "team_name",
         "race_date", "round_number", "grid_position", "finish_position",
         "race_points", "positions_gained", "season_points_total",
         "year", "grand_prix_name"))
-  }
 
   /** championship_tracker (championship_tracker_transform.py:170-353):
     * cumulative standings after every race — running points, rank with
     * driver_number tie-break, gap to the leader. Recomputed from scratch
     * each run (prefix sums need the whole season — SURVEY §2.I). */
   def championshipTracker(sessions: DataFrame, raceResults: DataFrame,
-                          drivers: DataFrame): DataFrame = {
-    val base = raceResults.drop("year", "grand_prix_name")
-      .join(raceSessions(sessions, "race"), Seq("session_key"))
-      .join(currentDrivers(drivers), Seq("driver_number"))
-      .withColumn("race_points",
-        coalesce(col("validated_points"), col("points"), lit(0.0)))
-    Audit.stamped(base
-      .withColumn("season_points_total",
-        runningTotal(col("race_points"),
-          Seq(col("driver_number"), col("year")),
-          Seq(col("race_date"), col("round_number"))))
+                          drivers: DataFrame): DataFrame =
+    Audit.stamped(raceLines(sessions, raceResults, drivers)
       .withColumn("championship_position",
         rankWithTieBreak(Seq(col("year"), col("race_date")),
           col("season_points_total"), col("driver_number")).cast("int"))
@@ -114,7 +110,6 @@ object GoldTransforms {
         "team_name", "race_points", "season_points_total",
         "championship_position", "points_gap_to_leader", "year",
         "grand_prix_name"))
-  }
 
   /** race_weekend_insights (race_weekend_insights_transform.py:170-395):
     * one row per race weekend — pole sitter, winner, pole-to-win flag,

@@ -1,6 +1,6 @@
 package graft.gold
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 object WindowOps {
 
   /** UNBOUNDED PRECEDING..CURRENT ROW frame over (partition, order). */
-  def runningFrame(partition: Seq[Column], order: Seq[Column]): WindowSpec =
+  private def runningFrame(partition: Seq[Column], order: Seq[Column]): WindowSpec =
     Window.partitionBy(partition: _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
@@ -26,12 +26,6 @@ object WindowOps {
   def runningAvg(value: Column, partition: Seq[Column],
                  order: Seq[Column]): Column =
     avg(value).over(runningFrame(partition, order))
-
-  /** Running count of a boolean flag (made_q3 tally,
-    * window_functions.py:546-568). */
-  def runningCountIf(flag: Column, partition: Seq[Column],
-                     order: Seq[Column]): Column =
-    sum(when(flag, 1).otherwise(0)).over(runningFrame(partition, order))
 
   /** Rank with explicit tie-break (championship position,
     * window_functions.py:281-308): rank by `rankBy` desc, ties broken by
@@ -51,15 +45,4 @@ object WindowOps {
     */
   def roundNumber(yearCol: Column, raceDate: Column): Column =
     dense_rank().over(Window.partitionBy(yearCol).orderBy(raceDate))
-
-  /** Sliding last-N frame (recent form, window_functions.py:160-183). */
-  def lastN(value: Column, n: Int, partition: Seq[Column],
-            order: Seq[Column]): Column =
-    avg(value).over(Window.partitionBy(partition: _*).orderBy(order: _*)
-      .rowsBetween(-(n - 1), Window.currentRow))
-
-  /** Deterministic "latest row per key": max_by over an explicit ordering
-    * struct — replaces the reference's unordered `last()`. */
-  def latestBy(attr: Column, orderCol: Column): Column =
-    max_by(attr, orderCol)
 }

@@ -3,35 +3,23 @@ package graft.io
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Partitioned Parquet write layer — the plain-Parquet re-statement of the
   * reference's Iceberg sinks (`utils/transformations/common.py:321-415` in
-  * /root/reference):
+  * the reference):
   *
-  *  - overwrite:          replace the whole table (A8)
+  *  - overwrite:           replace the whole table (A8)
   *  - overwritePartitions: dynamic partition overwrite — replace only the
   *                         partitions present in the batch (A9); the
   *                         idempotent re-run primitive for both
   *                         HISTORICAL (year) and INCREMENTAL (year+gp)
-  *  - append:             blind append (A10)
-  *
-  * Columns are reordered to the declared schema before writing (insertInto
-  * is positional; a drifted select order must not corrupt tables —
-  * SURVEY.md §7.3 hard part #2).
+  *  - atomicRewrite:       replace a table derived from itself (SCD2)
   */
 object ParquetSink {
 
-  /** Reorder df columns to `schema` order (names must all exist). */
-  def conform(df: DataFrame, schema: StructType): DataFrame =
-    df.select(schema.fieldNames.map(df.col).toIndexedSeq: _*)
-
-  def overwrite(df: DataFrame, path: String,
-                partitionCols: Seq[String] = Nil): DataFrame = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(path)
+  def overwrite(df: DataFrame, path: String): DataFrame = {
+    df.write.mode(SaveMode.Overwrite).parquet(path)
     df
   }
 
@@ -44,14 +32,6 @@ object ParquetSink {
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
-      .parquet(path)
-    df
-  }
-
-  def append(df: DataFrame, path: String,
-             partitionCols: Seq[String] = Nil): DataFrame = {
-    val w = df.write.mode(SaveMode.Append)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
     df
   }
@@ -97,35 +77,6 @@ object ParquetSink {
       .sortBy(bucketCol)
       .mode(SaveMode.Overwrite)
       .saveAsTable(table)
-  }
-
-  /** Sorted-layout write: cluster rows into `nFiles` by `sortCols` (one
-    * shuffle) and sort within each file, so parquet min/max column stats
-    * become selective — at scale, a range predicate on the sort key skips
-    * whole row groups/files instead of scanning them. This is the
-    * plain-parquet answer to the reference's Iceberg table-layout tuning
-    * (`iceberg_manager.py:58-77` in /root/reference). */
-  def writeSorted(df: DataFrame, path: String, sortCols: Seq[String],
-                  nFiles: Int): DataFrame = {
-    df.repartitionByRange(nFiles, sortCols.map(df.col): _*)
-      .sortWithinPartitions(sortCols.map(df.col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    df
-  }
-
-  /** Small-file compaction: rewrite a table directory into
-    * ~`targetFileBytes` files. Streaming/incremental sinks (one file per
-    * micro-batch) degrade scan planning at scale — file listing and
-    * per-file open cost dominate; periodic compaction is the standard
-    * fix. Uses the atomic swap so readers never see a half state. */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Long = {
-    val df = graft.core.Tables.parquet(spark, path)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val nFiles = math.max(1, (bytes / BigInt(targetFileBytes)).toLong
-      + (if (bytes % BigInt(targetFileBytes) > 0) 1 else 0)).toInt
-    atomicRewrite(df.repartition(nFiles), path)
-    nFiles.toLong
   }
 
   /** Atomic full-table rewrite: write to a temp sibling dir, then swap.

@@ -63,13 +63,6 @@ object Dedup {
   def minhashSignatureFromHashes(baseHashes: Column, numHashes: Int): Column =
     graft.functions.SignatureExpressions.minhashSig(baseHashes, numHashes)
 
-  /** Convenience: signature straight from text. Duplicates in the shingle
-    * array don't affect the minima, so no distinct pass is needed. */
-  def minhashSignature(text: Column, numHashes: Int = 16, shingleN: Int = 3)
-  : Column =
-    minhashSignatureFromHashes(
-      transform(shinglesExpr(text, shingleN), s => baseHash(s)), numHashes)
-
   /** MinHash signatures as a NARROW per-document projection: one md5 per
     * distinct shingle ([[graft.functions.Md5Prefix60]] under the
     * transform), then all K affine minima in one fused pass over the hash

@@ -394,13 +394,6 @@ object GlobalRank {
       (col(rankOut) - 1).cast("double") / math.max(n - 1L, 1L))
   }
 
-  /** Global percent_rank only. */
-  def withGlobalPercentRank(df: DataFrame, order: Seq[Column],
-                            tieBreak: Seq[Column], out: String = "pr")
-  : DataFrame =
-    withGlobalRankAndPercent(df, order, tieBreak, "__rnk", out)
-      .drop("__rnk")
-
   /** Per-group rank over `order` within each `group`, WITHOUT the
     * parallelism = #groups funnel of `Window.partitionBy(group)`: range
     * partition on (group ++ order) — groups lie contiguous within and

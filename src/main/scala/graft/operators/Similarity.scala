@@ -43,16 +43,6 @@ object Similarity {
   /** Cosine similarity in [-1, 1]. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Quantized dot product: elements scaled by 1e6 and floored to long, so
-    * the sum is exact integer arithmetic — order-independent and
-    * reproducible by any engine (used by the oracle harness). */
-  def dotQuantized(a: Column, b: Column, scale: Double = 1e6): Column =
-    aggregate(
-      zip_with(a, b, (x, y) =>
-        floor(x.cast("double") * scale).cast("long") *
-          floor(y.cast("double") * scale).cast("long")),
-      lit(0L), (acc, v) => acc + v)
-
   /** Exact brute-force cosine top-k: broadcast the (small) query set,
     * score every corpus vector, keep top k per query via partitioned
     * row_number. One broadcast join + one shuffle on query_id. */

@@ -21,11 +21,6 @@ object TextAnalysis {
   def bpeishTokenCount(text: Column): Column =
     regexp_count(text, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]")).cast("bigint")
 
-  /** Mean characters per token — length/quality signal. */
-  def avgTokenLength(text: Column): Column =
-    length(trim(text)).cast("double") /
-      greatest(tokenCount(text), lit(1L)).cast("double")
-
   private val stopwordPattern =
     "\\b(the|a|an|of|and|in|to|is|it|for|on|with|as|at|by|from)\\b"
 
@@ -57,23 +52,6 @@ object TextAnalysis {
     val punctPenalty = least(punctRatioFrom(np, textLen) * 5.0, lit(1.0))
     (lengthTerm * 0.4 + stopTerm * 0.4 + (lit(1.0) - punctPenalty) * 0.2)
   }
-
-  /** Stopword ratio: fraction of tokens that are common English stopwords.
-    * High-quality running text sits around 0.2-0.5; keyword spam ≈ 0.
-    * One-off convenience — prefer the `From` variant over count columns. */
-  def stopwordRatio(text: Column): Column =
-    stopwordRatioFrom(tokenCount(text), stopwordCount(text))
-
-  /** Punctuation-to-character ratio. */
-  def punctRatio(text: Column): Column =
-    punctRatioFrom(punctCount(text), length(text))
-
-  /** Composite quality score in [0,1]: rewards running-text length,
-    * stopword presence, and sane punctuation density. Mirrors the
-    * length/punct/stopword heuristics of C4-style corpus filters. */
-  def qualityScore(text: Column): Column =
-    qualityScoreFrom(tokenCount(text), stopwordCount(text), punctCount(text),
-      length(text))
 
   /** Language-marker scores: count of high-frequency function words per
     * language. A real system would use char-n-gram profiles; the marker-word

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * one value so that sorting by it co-locates rows that are close in EVERY
   * dimension at once.
   *
-  * Why it matters at 100 TB: [[graft.io.ParquetSink.writeSorted]] makes
-  * parquet min/max stats selective for ONE sort key — a predicate on the
-  * second sort column still scans everything. Z-ordering the layout gives
+  * Why it matters at 100 TB: a plain sorted write makes parquet min/max
+  * stats selective for ONE sort key — a predicate on the second sort
+  * column still scans everything. Z-ordering the layout gives
   * every interleaved dimension partial selectivity: a filter on any of
   * them prunes row groups/files by stats alone (the technique behind
   * Delta/Iceberg `ZORDER BY`). Pure bit arithmetic per row — codegen'd

@@ -21,7 +21,7 @@ class IoSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_dpo").toString + "/t"
     val v1 = Seq((1, "a", 10), (2, "a", 20), (3, "b", 30))
       .toDF("id", "gp", "v")
-    ParquetSink.overwrite(v1, dir, Seq("gp"))
+    v1.write.partitionBy("gp").parquet(dir)
     // rewrite only partition a with new content
     val v2 = Seq((9, "a", 99)).toDF("id", "gp", "v")
     ParquetSink.overwritePartitions(v2, dir, Seq("gp"))
@@ -32,36 +32,6 @@ class IoSpec extends SparkSpec {
     // shared session conf (would flip later overwrites to dynamic)
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode",
       "STATIC").equalsIgnoreCase("static"))
-  }
-
-  test("writeSorted clusters by range and sorts within files; compact merges small files") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.input_file_name
-    val dir = Files.createTempDirectory("graft_layout").toString
-    val df = (1 to 1000).map(i => (i * 37 % 1000, s"v$i")).toDF("k", "v")
-    ParquetSink.writeSorted(df, s"$dir/sorted", Seq("k"), nFiles = 4)
-    // each file holds a sorted, non-overlapping key range
-    val perFile = spark.read.parquet(s"$dir/sorted")
-      .select(col("k"), input_file_name().as("f"))
-      .collect().groupBy(_.getAs[String]("f"))
-      .view.mapValues(_.map(_.getAs[Int]("k")).toSeq).toMap
-    assert(perFile.size > 1)
-    perFile.values.foreach(ks => assert(ks == ks.sorted, "file not sorted"))
-    val ranges = perFile.values.map(ks => (ks.min, ks.max)).toSeq.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Seq((_, hi), (lo, _)) => assert(hi <= lo, "overlapping ranges")
-      case _ =>
-    }
-
-    // many tiny appends → compact to few files, same content
-    val tiny = s"$dir/tiny"
-    (1 to 8).foreach(i => Seq((i, i.toString)).toDF("k", "v")
-      .write.mode("append").parquet(tiny))
-    val before = spark.read.parquet(tiny).inputFiles.length
-    ParquetSink.compact(spark, tiny)
-    val after = spark.read.parquet(tiny)
-    assert(before == 8 && after.inputFiles.length < before)
-    assert(after.count() == 8)
   }
 
   test("observe metrics ride the action instead of extra count() jobs") {
@@ -89,11 +59,11 @@ class IoSpec extends SparkSpec {
     assert(invNull.get("n_violations") == 1L)
   }
 
-  test("append adds rows; atomicRewrite swaps table derived from itself") {
+  test("atomicRewrite swaps table derived from itself") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ar").toString + "/t"
-    ParquetSink.overwrite(Seq((1, 1.0), (2, 2.0)).toDF("id", "v"), dir)
-    ParquetSink.append(Seq((3, 3.0)).toDF("id", "v"), dir)
+    ParquetSink.overwrite(Seq((0, 0.0)).toDF("id", "v"), dir)
+    ParquetSink.overwrite(Seq((1, 1.0), (2, 2.0), (3, 3.0)).toDF("id", "v"), dir)
     val t = spark.read.parquet(dir)
     assert(t.count() == 3)
     // derive from the table itself and rewrite in place
@@ -101,20 +71,6 @@ class IoSpec extends SparkSpec {
     val back = spark.read.parquet(dir).select("id").collect()
       .map(_.getInt(0)).toSet
     assert(back == Set(1, 3))
-  }
-
-  test("conform reorders columns to declared schema") {
-    import spark.implicits._
-    val df = Seq((1.0, "x", 5)).toDF("b", "c", "a")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("a",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("b",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("c",
-        org.apache.spark.sql.types.StringType)))
-    assert(ParquetSink.conform(df, schema).columns.toSeq ==
-      Seq("a", "b", "c"))
   }
 
   test("Hilbert-clustered files have tighter on-disk bounding boxes " +

@@ -216,24 +216,6 @@ class PlanSpec extends SparkSpec {
     assert(resized.count() > 0)
   }
 
-  test("partition column recovery from file paths") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_rec").toString + "/t"
-    Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
-      .write.parquet(root + "/grand_prix=suzuka")
-    val df = BronzeReader.recoverPartitionColumn(
-      spark.read.parquet(root + "/grand_prix=suzuka"), "grand_prix")
-    assert(df.select("grand_prix").distinct().collect()
-      .map(_.getString(0)).toSeq == Seq("suzuka"))
-  }
-
-  test("empty typed relation matches declared schema") {
-    val empty = BronzeReader.emptyTyped(spark,
-      graft.core.Schemas.sessionsSilver)
-    assert(empty.count() == 0)
-    assert(empty.schema == graft.core.Schemas.sessionsSilver)
-  }
-
   test("bloom prune filters BELOW the aggregation exchange") {
     import graft.operators.BloomJoin
     val li = graft.core.Tables.lineitem(spark, sf)

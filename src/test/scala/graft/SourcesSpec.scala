@@ -8,47 +8,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.silver.SilverTransforms
-import graft.sources.{BronzeReader, JsonIngest}
+import graft.core.Tables
+import graft.sources.BronzeReader
 
 class SourcesSpec extends SparkSpec {
-
-  test("json ingest: declared-schema read, partitioned snappy landing") {
-    val dir = Files.createTempDirectory("graft_json").toString
-    Files.writeString(Paths.get(s"$dir/batch.json"),
-      """{"session_key": 101, "grand_prix": "bahrain", "year": 2025, "position": 1}
-        |{"session_key": 101, "grand_prix": "bahrain", "year": 2025, "position": 2}
-        |{"session_key": 201, "grand_prix": "sao_paulo", "year": 2025, "position": 1}
-        |""".stripMargin)
-    val schema = StructType(Seq(
-      StructField("session_key", LongType),
-      StructField("grand_prix", StringType),
-      StructField("year", IntegerType),
-      StructField("position", IntegerType)))
-    val df = JsonIngest.readJson(spark, s"$dir/batch.json", Some(schema))
-    assert(df.schema == schema)
-    JsonIngest.landBronze(df, s"$dir/bronze", Seq("year", "grand_prix"))
-    // partition layout on disk + pruned read-back
-    assert(Files.exists(Paths.get(s"$dir/bronze/year=2025/grand_prix=bahrain")))
-    val back = BronzeReader.read(spark, s"$dir/bronze",
-      grandPrix = Some("bahrain"))
-    assert(back.count() == 2)
-  }
-
-  test("catalog registration: ensureTable + spark.table scan (A7/A12)") {
-    import spark.implicits._
-    val tbl = "graft_test_drivers"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    BronzeReader.ensureTable(spark,
-      Seq((1, "Red Bull"), (44, "Ferrari")).toDF("driver_number", "team"),
-      tbl)
-    assert(spark.catalog.tableExists(tbl))
-    assert(spark.table(tbl).count() == 2)
-    // idempotent: second call must not fail or duplicate
-    BronzeReader.ensureTable(spark,
-      Seq((81, "McLaren")).toDF("driver_number", "team"), tbl)
-    assert(spark.table(tbl).count() == 2)
-    spark.sql(s"DROP TABLE $tbl")
-  }
 
   /** Bronze with schema drift: bahrain 2024 has the base columns, monaco
     * 2024 adds `fastest_lap`, imola 2025 lacks `points`; plus `_SUCCESS`,
@@ -191,11 +154,13 @@ class SourcesSpec extends SparkSpec {
       .foreach(n => Files.move(Paths.get(s"$apart/$n"),
         Paths.get(s"$root/${if (n.startsWith("part-")) "part-99999.parquet" else n}")))
     assert(Files.exists(Paths.get(s"$root/_common_metadata")))
-    // without mergeSchema Spark takes the summary, not the first file
-    assert(BronzeReader.read(spark, root, mergeSchema = false).columns.toSeq ==
+    // without mergeSchema (Tables.parquet) Spark takes the summary, not
+    // the first file
+    assert(Tables.parquet(spark, root).columns.toSeq ==
       Seq("session_key", "fastest_lap"))
     Seq(true, false).foreach { merge =>
-      val (read, jobs) = jobsDuring(BronzeReader.read(spark, root, mergeSchema = merge))
+      val (read, jobs) = jobsDuring(
+        if (merge) BronzeReader.read(spark, root) else Tables.parquet(spark, root))
       val want = spark.read.option("mergeSchema", merge.toString).parquet(root)
       assert(jobs == 0, s"mergeSchema=$merge")
       assert(read.schema == want.schema, s"mergeSchema=$merge")
