@@ -4,14 +4,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
 
-/** Plan-shape audit over the whole query catalog: prints, per query, the
-  * number of shuffle exchanges, broadcast exchanges, whole-stage-codegen
-  * spans, and whether the scan carries pushed filters — the properties
-  * that decide whether a plan survives a 100× scale-up (builder prompt:
-  * ".explain the plan and iterate until it's the plan you'd want").
-  * Run: `sbt "runMain graft.PlanAudit [sfDir]"`.
+/** Measured plan gates over the query catalog: window funnels and scale
+  * hazards, read from one build and one run of each query
+  * ([[PlanAudit.auditQuery]]). FunnelSpec and ScaleGateSpec assert on
+  * them at sf0.001, [[PreflightSweep]] at sf0.01.
   */
 object PlanAudit {
+
+  /** Gate bounds, shared by the specs and [[PreflightSweep]]: a window
+    * flags below 32 key groups when fed more than 512 rows per group; a
+    * single-partition exchange flags above 512 rows, a nested-loop or
+    * cartesian side above 64 (rationale in ScaleGateSpec). */
+  val MinGroups = 32L; val RowsPerGroup = 512L
+  val SinglePartBound = 512L; val LoopBound = 64L
+
+  /** One catalog query's gate facts from one build and one run: the
+    * seconds spent building the frame (including any jobs an eager
+    * operator runs then), the seconds of its one execution, and the
+    * hazards and window funnels that flagged. */
+  case class QueryAudit(buildSec: Double, runSec: Double,
+                        hazards: Seq[Hazard], funnels: Seq[WindowShape])
+
+  /** Builds `query` over `dir`, runs it once ([[scaleHazardsTimed]]) and
+    * measures the same frame's windows ([[windowFunnels]]). Callers run
+    * it with AQE off, inside their own GlobalRank scope: construction
+    * pins layouts that the run and the window counts still read. */
+  def auditQuery(spark: SparkSession,
+                 query: (SparkSession, String) => DataFrame,
+                 dir: String): QueryAudit = {
+    val (df, buildSec, runSec, hazards) = buildAndRun(spark, query, dir)
+    QueryAudit(buildSec, runSec, hazards,
+      windowFunnels(df, MinGroups, RowsPerGroup))
+  }
+
+  /** [[auditQuery]] without the window counts: the frame, its build and
+    * run seconds, and its hazards. Construction is inside the clock:
+    * eager-construction queries (trainer collect loops, graph/dedup
+    * localCheckpoint chains) do their dominant, SF-dependent work while
+    * the frame is built, and a clock that starts at execute() reads them
+    * near zero (lr1's 3-step training loop "measured" 0.015 s that way),
+    * blinding the superlinear gate to the whole class. */
+  private[graft] def buildAndRun(spark: SparkSession,
+      query: (SparkSession, String) => DataFrame, dir: String)
+  : (DataFrame, Double, Double, Seq[Hazard]) = {
+    val t0 = System.nanoTime()
+    val df = query(spark, dir)
+    val buildSec = (System.nanoTime() - t0) / 1e9
+    val (hazards, runSec) =
+      scaleHazardsTimed(df, SinglePartBound, LoopBound)
+    (df, buildSec, runSec, hazards)
+  }
 
   /** One window's measured shape: partition-key SQL, the distinct key
     * count (= the window's parallelism ceiling — an unpartitioned window
@@ -121,14 +163,9 @@ object PlanAudit {
     * short-circuited subtree passes like any zero-row exchange. That is
     * the measured truth at this fixture (zero rows flowed); growth that
     * would wake such a subtree is what the sf0.01 preflight sweep and
-    * the cross-SF timing gate ([[graft.PreflightSweep]]) exist to catch. */
-  def scaleHazards(df: DataFrame, singlePartBound: Long, loopBound: Long)
-  : Seq[Hazard] = scaleHazardsTimed(df, singlePartBound, loopBound)._1
-
-  /** [[scaleHazards]] plus the wall seconds of the plan's execution
-    * (metric traversal excluded) — lets [[PreflightSweep]] reuse ONE
-    * sf-B execution as both the hazard measurement and the scaling
-    * gate's t_B, instead of executing the catalog twice. */
+    * the cross-SF timing gate ([[graft.PreflightSweep]]) exist to catch.
+    * Returns the hazards and the wall seconds of that one execution
+    * (metric traversal excluded). */
   def scaleHazardsTimed(df: DataFrame, singlePartBound: Long,
                         loopBound: Long): (Seq[Hazard], Double) = {
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
@@ -197,33 +234,6 @@ object PlanAudit {
     }
     (hazards, execSec)
   }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.core.GraftSession.local(appName = "graft-plan-audit")
-    // static audit: with AQE on, un-executed plans are AdaptiveSparkPlan
-    // shells whose codegen wrapping only appears as stages run
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    println(f"${"query"}%-22s shuffles bcasts codegen pushed")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try graft.operators.GlobalRank.withScope {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        val shuffles = "Exchange hashpartitioning|Exchange rangepartitioning|Exchange SinglePartition"
-          .r.findAllIn(plan).size
-        val bcasts = "BroadcastExchange".r.findAllIn(plan).size
-        // whole-stage-codegen spans print as "*(n)" node prefixes
-        val codegen = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan)
-          .map(_.group(1)).toSet.size
-        val pushed = plan.contains("PushedFilters: [") &&
-          !plan.contains("PushedFilters: []")
-        println(f"$name%-22s $shuffles%8d $bcasts%6d $codegen%7d $pushed%6s")
-      } catch {
-        case e: Throwable =>
-          println(f"$name%-22s ERROR ${e.getMessage.take(60)}")
-      }
-    }
-    spark.stop()
-  }
 }
 
 /** Shared pieces of the allowlisted catalog sweep ([[PreflightSweep]])
@@ -282,16 +292,16 @@ private[graft] object AllowlistedSweep {
   * pass per SF, and ONE full sf-B catalog execution (the hazard
   * measurement and the timing gate's t_B). It runs all three checks per
   * query in one pass: timed construction + execution at sfA (t_A), then
-  * ONE timed sf-B construction + execution that populates the hazard
-  * metrics AND serves as t_B, then the (untimed) window-funnel
-  * measurement on the SAME sf-B frame. Bounds are the preflight
-  * constants (funnel 32/512, hazard 512/64, scaling ratio 10 above a
-  * 2 s floor); allowlists are per-check and always gate: exit 1 on any
+  * ONE [[PlanAudit.auditQuery]] at sf-B, whose execution populates the
+  * hazard metrics AND serves as t_B, and whose (untimed) window-funnel
+  * measurement reads the SAME sf-B frame. Bounds are PlanAudit's
+  * (funnel 32/512, hazard 512/64) and a scaling ratio of 10 above a
+  * 2 s floor; allowlists are per-check and always gate: exit 1 on any
   * unexpected flag or stale allowlist entry. A first-measurement
   * scaling flag is re-timed on both SFs (min of two) before it counts.
   * Prints one `TIMING name tA=… tB=… ratio=…` line per query (query
   * construction + executedPlan.execute().count(), AQE off — construction
-  * stays inside the clock, see timedRun).
+  * stays inside the clock, see [[PlanAudit.buildAndRun]]).
   *
   * `runMain graft.PreflightSweep <sfA> <sfB> <funnelAllowCsv>
   * <hazardAllowCsv> <scalingAllowCsv> [noscaling]` (`-` = empty
@@ -306,8 +316,6 @@ object PreflightSweep {
     val allow = Map("FUNNEL" -> parse(args(2)), "HAZARD" -> parse(args(3)),
       "SUPERLINEAR" -> parse(args(4)))
     val doScaling = !args.lift(5).contains("noscaling")
-    val (minGroups, rowsPerGroup) = (32L, 512L)
-    val (singlePartBound, loopBound) = (512L, 64L)
     val (ratioBound, floorSec) = (10.0, 2.0)
 
     val spark =
@@ -316,22 +324,11 @@ object PreflightSweep {
 
     val selected = AllowlistedSweep.selectWithBanner()
 
-    // Construction is INSIDE the clock. Eager-construction queries
-    // (trainer collect loops, graph/dedup localCheckpoint chains) do
-    // their dominant, SF-dependent work while the frame is BUILT; a
-    // clock that starts at execute() reads them near-zero and the
-    // superlinear gate goes blind to the entire class (lr1's 3-step
-    // training loop "measured" 0.015 s that way in the first harvest).
-    // Returns the constructed frame so the funnel check reuses it
-    // instead of paying construction a second time.
-    def timedRun(name: String, dir: String)
-    : (org.apache.spark.sql.DataFrame, Seq[PlanAudit.Hazard], Double) = {
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, dir)
-      val constructSec = (System.nanoTime() - t0) / 1e9
-      val (haz, execSec) =
-        PlanAudit.scaleHazardsTimed(df, singlePartBound, loopBound)
-      (df, haz, constructSec + execSec)
+    // warm-up, t_A and re-timings: build + one run, timed as auditQuery's
+    def timedRun(name: String, dir: String): Double = {
+      val (_, buildSec, runSec, _) =
+        PlanAudit.buildAndRun(spark, SparkEntry.queries(name), dir)
+      buildSec + runSec
     }
 
     // warm-up (the Bench rule): first-touch JIT/codegen
@@ -359,20 +356,21 @@ object PreflightSweep {
       println(s"$tag $name $detail")
     }
 
-    selected.foreach { case (name, _) =>
+    selected.foreach { case (name, query) =>
       try graft.operators.GlobalRank.withScope {
-        val tA = if (doScaling) timedRun(name, sfA)._3 else 0.0
-        // ONE sf-B construction + execution: hazard metrics + t_B +
-        // the funnel check's frame
-        val (dfB, hazB, tB) = timedRun(name, sfB)
-        hazB.foreach(h => flag("HAZARD", name, h.describe))
+        val tA = if (doScaling) timedRun(name, sfA) else 0.0
+        // ONE sf-B construction + execution: hazard metrics + t_B, and
+        // the window funnels of the same frame (deliberately untimed) —
+        // re-constructing for them would pay the whole eager chain again
+        val auditB = PlanAudit.auditQuery(spark, query, sfB)
+        auditB.hazards.foreach(h => flag("HAZARD", name, h.describe))
         if (doScaling) {
-          var ta = tA; var tb = tB
+          var ta = tA; var tb = auditB.buildSec + auditB.runSec
           def ratio = tb / math.max(ta, 0.05)
           if (tb > floorSec && ratio > ratioBound) {
             // re-time both before flagging: min of two runs per SF
-            val ta2 = timedRun(name, sfA)._3
-            val tb2 = timedRun(name, sfB)._3
+            val ta2 = timedRun(name, sfA)
+            val tb2 = timedRun(name, sfB)
             ta = math.min(ta, ta2); tb = math.min(tb, tb2)
           }
           println(f"TIMING $name tA=$ta%.3f tB=$tb%.3f ratio=${ratio}%.1f")
@@ -381,12 +379,7 @@ object PreflightSweep {
               f"tA=$ta%.2fs tB=$tb%.2fs ratio=${ratio}%.1fx " +
                 f"(bound ${ratioBound}%.0fx above ${floorSec}%.1fs floor)")
         }
-        // funnel measurement on the SAME sf-B frame (its GlobalRank
-        // layouts stay live until this scope closes; windowFunnels
-        // executes per-window counting queries; deliberately untimed) —
-        // re-constructing here would pay the whole eager chain again
-        PlanAudit.windowFunnels(dfB, minGroups, rowsPerGroup)
-          .foreach(s => flag("FUNNEL", name, s.describe))
+        auditB.funnels.foreach(s => flag("FUNNEL", name, s.describe))
       } catch {
         case e: Throwable =>
           unexpected += 1

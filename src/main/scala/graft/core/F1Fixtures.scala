@@ -31,9 +31,6 @@ object F1Fixtures {
     }
   }
 
-  val gpNames = Map(1L -> "bahrain", 2L -> "sao_paulo",
-    3L -> "emilia_romagna")
-
   case class QualiRow(session_key: Long, session_type: String,
       driver_number: Int, position: Option[Int], duration: Seq[Double],
       year: Int, grand_prix: String)

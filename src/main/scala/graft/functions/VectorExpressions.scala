@@ -180,12 +180,6 @@ object VectorExpressions {
     ColumnBridge.column(DotProductF(
       ColumnBridge.expr(a), ColumnBridge.expr(b)))
 
-  /** Expose the expression to the SQL front end:
-    * `SELECT dot_f(embedding, embedding) FROM embeddings`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", exprs => DotProductF(exprs.head, exprs(1)), "built-in")
-
   /** Fused exact dot product of two Array[Long] columns. */
   def dotL(a: Column, b: Column): Column =
     ColumnBridge.column(DotProductL(

@@ -55,14 +55,6 @@ object Dedup {
       .groupBy("fp")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature over a pre-materialized base-hash array column:
-    * sig_j = min over shingles of (a_j·h + b_j) mod p, computed by the
-    * fused one-pass kernel ([[graft.functions.MinhashSignature]] — the
-    * K-array-expression formulation this replaces re-ran the transform
-    * per signature entry). */
-  def minhashSignatureFromHashes(baseHashes: Column, numHashes: Int): Column =
-    graft.functions.SignatureExpressions.minhashSig(baseHashes, numHashes)
-
   /** MinHash signatures as a NARROW per-document projection: one md5 per
     * distinct shingle ([[graft.functions.Md5Prefix60]] under the
     * transform), then all K affine minima in one fused pass over the hash

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column plumbing for training-data
   * pipelines.
@@ -43,15 +42,6 @@ object Multimodal {
       n_bytes: Long,
       feature: Array[Float],
       feature_q: Array[Long])
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("content", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false),
-    StructField("codec", StringType, nullable = false)))
 
   /** Deterministic synthetic media table derived from `documents` — stands
     * in for a real ingest while keeping every byte reproducible. */
@@ -155,9 +145,6 @@ object Multimodal {
   private[operators] def decodeQuant(content: Array[Byte]): Array[Long] =
     laneSums(decodeBytes(content).getOrElse(
       if (content == null) Array.emptyByteArray else content))
-
-  private[operators] def decodeStub(content: Array[Byte]): Array[Float] =
-    decodeQuant(content).map(_ / 255.0f)
 
   /** Batched feature extraction: one decoder per partition, streamed rows.
     * Partition count should target ~128 MB of payload per task at scale —

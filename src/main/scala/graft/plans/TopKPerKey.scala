@@ -71,12 +71,7 @@ object TopKPerKey {
         case _ => None
       }
 
-    /** Opt-out switch for the silent window→top-k rewrite. */
-    val RewriteEnabledConf = "spark.graft.topk.rewriteEnabled"
-
-    override def apply(plan: LogicalPlan): LogicalPlan = if (
-      !conf.getConfString(RewriteEnabledConf, "true").toBoolean) plan
-    else plan.transform {
+    override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
       case Project(projList,
           Filter(cond,
             Window(Seq(alias @ Alias(
@@ -104,7 +99,7 @@ object TopKPerKey {
     }
   }
 
-  /** Conf key bounding the partial phase's in-memory state: when a
+  /** Bound on the partial phase's in-memory state: when a
     * partition's heap map exceeds this many distinct keys, the partial
     * operator FLUSHES everything kept so far downstream and starts a fresh
     * map. Emitting extra rows is always safe — the final phase re-selects
@@ -114,14 +109,13 @@ object TopKPerKey {
     * cardinality (the window form this operator replaces used a spillable
     * sort; without the cap a high-cardinality key set could OOM the
     * partial phase). */
-  val PartialFlushKeysConf = "spark.graft.topk.partialFlushKeys"
-  val PartialFlushKeysDefault = 100000
+  val PartialFlushKeys = 100000
 
   /** Physical per-partition bounded top-k. `partial = true` accepts any
     * input distribution; the final node demands key-clustering, so
     * EnsureRequirements inserts the (now tiny) exchange between them.
     *
-    * Memory bounds: partial holds ≤ [[PartialFlushKeysConf]] keys × k rows
+    * Memory bounds: partial holds ≤ [[PartialFlushKeys]] keys × k rows
     * (flush-and-reset beyond that); final holds its partition's keys × k
     * rows — which IS its output, the same bound a hash-aggregate final
     * phase carries. */
@@ -164,10 +158,7 @@ object TopKPerKey {
       val numFlushes = longMetric("numFlushes")
       // Final phase must see every row of a key before emitting any (rows
       // arrive clustered but unsorted), so only partial may flush early.
-      val flushKeys =
-        if (partial) conf.getConfString(PartialFlushKeysConf,
-          PartialFlushKeysDefault.toString).toInt
-        else Int.MaxValue
+      val flushKeys = if (partial) PartialFlushKeys else Int.MaxValue
       val isPartial = partial // local copy — closures must not capture the plan node
       child.execute().mapPartitions { iter =>
         val keyProj = UnsafeProjection.create(groupingExprs, schema)

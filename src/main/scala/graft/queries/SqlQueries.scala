@@ -275,7 +275,6 @@ object SqlQueries {
     // the generated left-associative chain reproduces it bit-for-bit.
     "sql3_dotf_selfsim" -> { (s, dir) =>
       registerViews(s, dir)
-      graft.functions.VectorExpressions.register(s)
       s.sql(
         """SELECT vec_id, dot_f(embedding, embedding) AS self_dot
           |FROM embeddings ORDER BY self_dot DESC, vec_id LIMIT 25""".stripMargin)

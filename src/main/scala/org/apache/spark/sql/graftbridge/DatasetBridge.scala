@@ -9,9 +9,9 @@ import org.apache.spark.sql.classic
   * split hides `ofRows` and `logicalPlan`). Lives in the
   * org.apache.spark.sql namespace solely to satisfy the qualifier; used
   * by custom logical operators ([[graft.plans.TopKPerKey]]) to wrap a
-  * plan node back into a DataFrame. Also registers the engine's planner
-  * strategies imperatively so custom nodes plan even in sessions built
-  * without `spark.sql.extensions` (the harness Verify/Bench sessions).
+  * plan node back into a DataFrame. The nodes plan because every session
+  * comes from [[graft.core.GraftSession.local]], which installs
+  * [[graft.core.GraftExtensions]].
   */
 object DatasetBridge {
   def logicalPlan(df: DataFrame): LogicalPlan =
@@ -28,28 +28,9 @@ object DatasetBridge {
   def sessionId(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
-  /** Idempotently register the top-k strategy AND the window→top-k
-    * optimizer rewrite on a session built without the extensions conf. */
-  def registerTopK(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val s = spark.asInstanceOf[classic.SparkSession]
-    if (!s.experimental.extraStrategies.contains(
-        graft.plans.TopKPerKey.Strategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.TopKPerKey.Strategy
-    }
-    if (!s.experimental.extraOptimizations.contains(
-        graft.plans.TopKPerKey.RowNumberToTopK)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+
-          graft.plans.TopKPerKey.RowNumberToTopK
-    }
-  }
-
-  def ofRows(df: DataFrame, plan: LogicalPlan): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    registerTopK(spark)
-    classic.Dataset.ofRows(spark, plan)
-  }
+  def ofRows(df: DataFrame, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[classic.SparkSession], plan)
 
   /** Eager `localCheckpoint` with an EXECUTABLE release contract: the
     * returned frame computes through a 1:1 guard RDD that, once the

@@ -13,13 +13,15 @@ package graft
   * missed (d17/d22/d23, whose "histogram" grain — price cents — itself
   * scales with the corpus). All six now ride
   * [[graft.operators.GlobalRank]]; this spec keeps the catalog clean by
-  * MEASURING every logical window in every catalog query.
+  * MEASURING every logical window in every catalog query, read from the
+  * shared sf0.001 pass ([[CatalogAudit]]). Windows come from the
+  * optimized plan and are counted by their own jobs, so the pass's AQE
+  * setting does not change what this spec measures.
   */
 class FunnelSpec extends SparkSpec {
 
   test("no catalog query windows a corpus-sized frame through a " +
       "low-cardinality partition key") {
-    val sf = "/root/testdata/sf0.001"
     // Audited exceptions. ONE admission argument, spelled (keep in
     // lockstep with SCALE.md's audit table; a stale entry fails the
     // second assertion below):
@@ -31,17 +33,9 @@ class FunnelSpec extends SparkSpec {
     // now rides GlobalRank.withGlobalPrefixSum, so the remaining
     // entries are exactly "keys whose cardinality scales with data".)
     val audited = Set("e2_best_flags", "e10_sliding_frame")
-    val flagged = SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
-        // per-query owner scope: construction pins GlobalRank layouts,
-        // windowFunnels executes counting queries against them — this
-        // loop owns the boundary (the helper no longer drains globally)
-        graft.operators.GlobalRank.withScope {
-          PlanAudit.windowFunnels(fn(spark, sf),
-              minGroups = 32, rowsPerGroup = 512)
-            .map(sh => name -> sh.describe)
-        }
-      }
+    val flagged = CatalogAudit.sf0001.flatMap { case (name, audit) =>
+      audit.funnels.map(sh => name -> sh.describe)
+    }
     val unexpected = flagged.filterNot { case (n, _) => audited(n) }
     assert(unexpected.isEmpty,
       "new window funnels (fix via GlobalRank or add to the audited " +

@@ -82,38 +82,36 @@ class PlanSpec extends SparkSpec {
   }
 
   test("TopKPerKey partial phase flushes at the key cap and stays correct") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.expressions.Window
-    // high-cardinality grouping key (o_orderkey is unique per order →
-    // every input row opens a new heap) with the flush cap far below the
-    // key count: the partial phase must flush-and-reset instead of
-    // holding one heap per key, and the final phase re-selects the true
-    // top-k from the flushed union.
-    spark.conf.set(graft.plans.TopKPerKey.PartialFlushKeysConf, "7")
-    try {
-      val li = graft.core.Tables.lineitem(spark, sf)
-        .select("l_orderkey", "l_linenumber", "l_extendedprice")
-      val topk = graft.plans.TopKPerKey.topKPerKey(li,
-        keys = Seq(col("l_orderkey")),
-        order = Seq(col("l_extendedprice").asc, col("l_linenumber").asc),
-        k = 2)
-      val w = Window.partitionBy(col("l_orderkey"))
-        .orderBy(col("l_extendedprice").asc, col("l_linenumber").asc)
-      val viaWindow = li.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2).drop("rn")
-      assert(topk.except(viaWindow).isEmpty && viaWindow.except(topk).isEmpty)
-      assert(topk.count() == viaWindow.count())
-    } finally spark.conf.unset(graft.plans.TopKPerKey.PartialFlushKeysConf)
+    import graft.plans.TopKPerKey
+    // 125,000 distinct keys through ONE partition, past the partial
+    // phase's 100,000-key cap: the partial phase must flush-and-reset
+    // instead of holding one heap per key, and the final phase
+    // re-selects the true top-k from the flushed union.
+    val keyed = spark.range(0, 250000, 1, 1)
+      .select(expr("id div 2").as("key"), expr("id * 7919 % 1000").as("v"),
+        col("id"))
+    assert(keyed.rdd.getNumPartitions == 1)
+    assert(TopKPerKey.PartialFlushKeys < 125000)
+    val topk = TopKPerKey.topKPerKey(keyed, keys = Seq(col("key")),
+      order = Seq(col("v").asc, col("id").asc), k = 1)
+    val w = Window.partitionBy(col("key")).orderBy(col("v").asc, col("id").asc)
+    val viaWindow = keyed.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 1).drop("rn")
+    // run THIS plan instance, so its metrics are the ones read below
+    assert(topk.collect().length == 125000)
+    val flushes = new AdaptiveSparkPlanHelper {}.collect(
+        topk.queryExecution.executedPlan) {
+      case p: TopKPerKey.TopKPerKeyExec if p.partial =>
+        p.metrics("numFlushes").value
+    }
+    assert(flushes.nonEmpty && flushes.sum >= 1, flushes)
+    assert(topk.except(viaWindow).isEmpty && viaWindow.except(topk).isEmpty)
   }
 
   test("RowNumberToTopK rule rewrites the window top-k idiom to the custom plan") {
     import org.apache.spark.sql.expressions.Window
-    val spark2 = spark
-    if (!spark2.experimental.extraOptimizations
-        .contains(graft.plans.TopKPerKey.RowNumberToTopK)) {
-      spark2.experimental.extraOptimizations =
-        spark2.experimental.extraOptimizations :+
-          graft.plans.TopKPerKey.RowNumberToTopK
-    }
     val orders = graft.core.Tables.orders(spark, sf)
       .select("o_custkey", "o_orderkey", "o_totalprice")
     val w = Window.partitionBy(col("o_custkey"))
@@ -149,7 +147,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("custom dot_f expression is SQL-addressable after registration") {
-    graft.functions.VectorExpressions.register(spark)
     graft.queries.SqlQueries.registerViews(spark, sf)
     val row = spark.sql(
       """SELECT vec_id, dot_f(embedding, embedding) AS selfdot
@@ -417,11 +414,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("CDC chunking stays narrow until the chunk-digest rollup — no joins") {
-    // the shared test session has no GraftExtensions; expose the hash
-    // kernel the chunker's selectExpr references
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix60",
-      exprs => graft.functions.Md5Prefix60(exprs.head), "built-in")
     val p = plan(SparkEntry.queries("dd15_cdc_chunking")(spark, sf))
     // cut detection + slicing are per-row array HOFs; the only wide ops
     // are the digest aggregate's exchanges — any Join in the plan means

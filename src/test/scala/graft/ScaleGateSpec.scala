@@ -7,8 +7,9 @@ package graft
   * broadcast-nested-loop build sides.
   *
   * Like FunnelSpec, this gate MEASURES rather than reviews: every
-  * catalog query is executed once (AQE off, so the audited shape is the
-  * static plan with no runtime rescue) and the executed plan's own SQL
+  * catalog query is executed once in the shared sf0.001 pass
+  * ([[CatalogAudit]]; AQE off, so the audited shape is the static plan
+  * with no runtime rescue) and the executed plan's own SQL
   * metrics supply the row counts that decide boundedness — a data
   * property no static plan check can see. FunnelSpec's first sweep
   * caught three funnels two judge rounds had missed; this spec closes
@@ -28,7 +29,6 @@ class ScaleGateSpec extends SparkSpec {
 
   test("no catalog query ships a single-partition funnel, a cartesian " +
       "product, or an unbounded nested-loop broadcast side") {
-    val sf = "/root/testdata/sf0.001"
     // Audited exceptions, each with a spelled boundedness argument
     // (keep in lockstep with SCALE.md's audit table; stale entries fail
     // the honesty assertion below):
@@ -42,31 +42,20 @@ class ScaleGateSpec extends SparkSpec {
       // gate confirmed it is the catalog's ONLY non-bounded loop join.
       "sim4_neardup_exact" ->
         "deliberate exact baseline: all-pairs is the query's contract")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val flagged = SparkEntry.queries.toSeq.sortBy(_._1)
-        .flatMap { case (name, fn) =>
-          // per-query owner scope: this loop owns the query boundary
-          // (the helper no longer drains layouts globally)
-          graft.operators.GlobalRank.withScope {
-            PlanAudit.scaleHazards(fn(spark, sf),
-                singlePartBound = 512, loopBound = 64)
-              .map(h => name -> h.describe)
-          }
-        }
-      val unexpected = flagged.filterNot { case (n, _) => audited.contains(n) }
-      assert(unexpected.isEmpty,
-        "new scale hazards (fix the plan — broadcast the bounded side, " +
-          "move the funnel to GlobalRank — or add an audited entry WITH " +
-          "a boundedness argument):\n" +
-          unexpected.map { case (n, d) => s"  $n: $d" }.mkString("\n"))
-      // honesty: entries that no longer flag must be removed, so the
-      // allowlist can only shrink toward zero
-      val flaggedNames = flagged.map(_._1).toSet
-      assert(audited.keySet.subsetOf(flaggedNames),
-        s"stale audited entries: ${
-          (audited.keySet -- flaggedNames).mkString(", ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val flagged = CatalogAudit.sf0001.flatMap { case (name, audit) =>
+      audit.hazards.map(h => name -> h.describe)
+    }
+    val unexpected = flagged.filterNot { case (n, _) => audited.contains(n) }
+    assert(unexpected.isEmpty,
+      "new scale hazards (fix the plan — broadcast the bounded side, " +
+        "move the funnel to GlobalRank — or add an audited entry WITH " +
+        "a boundedness argument):\n" +
+        unexpected.map { case (n, d) => s"  $n: $d" }.mkString("\n"))
+    // honesty: entries that no longer flag must be removed, so the
+    // allowlist can only shrink toward zero
+    val flaggedNames = flagged.map(_._1).toSet
+    assert(audited.keySet.subsetOf(flaggedNames),
+      s"stale audited entries: ${
+        (audited.keySet -- flaggedNames).mkString(", ")}")
   }
 }

@@ -39,12 +39,13 @@ SF=/root/testdata/sf0.01
 unset SPARK_GRAFT_ONLY
 
 echo "== preflight: compile + test (incl. measured scale gates) =="
-# `sbt test` includes the two MEASURED plan gates at sf0.001:
+# `sbt test` includes the two MEASURED plan gates at sf0.001, both read
+# from ONE shared pass that builds and runs every catalog query once
+# (AQE off; CatalogAudit, PlanAudit.auditQuery):
 #  - FunnelSpec: every logical window in every catalog query, flagged
 #    when a corpus-sized frame funnels through a low-cardinality key;
-#  - ScaleGateSpec: every query EXECUTED once, flagged on measured
-#    single-partition exchanges / cartesian products / oversized
-#    nested-loop broadcast sides.
+#  - ScaleGateSpec: flagged on measured single-partition exchanges /
+#    cartesian products / oversized nested-loop broadcast sides.
 sbt -batch compile test
 
 # The audit mains below run in plain fresh JVMs (tools/run_main.sh) against
