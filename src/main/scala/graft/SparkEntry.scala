@@ -7,11 +7,10 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query catalog — see SURVEY.md §7.
   *
-  * `queries` aggregates the per-category query maps; every key has matching
-  * DuckDB SQL in `oracleSql` unless the operator is not SQL-expressible
-  * (then the driver records a rows-only check).
+  * `queries` aggregates the per-family query maps, and every key has
+  * matching DuckDB SQL in `oracleSql`.
   */
 object SparkEntry {
 
@@ -42,36 +41,34 @@ object SparkEntry {
         max(col("season_spend")).over(perDate) - col("season_spend"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.RelationalQueries.queries ++
-      graft.queries.WindowQueries.queries ++
-      graft.queries.ScalarQueries.queries ++
-      graft.queries.EventQueries.queries ++
-      graft.queries.TrainingDataQueries.queries ++
-      graft.queries.MultimodalQueries.queries ++
-      graft.queries.GoldQueries.queries ++
-      graft.queries.SqlQueries.queries ++
-      graft.queries.ScoringQueries.queries ++
-      graft.queries.GraphQueries.queries ++
-      graft.queries.ExperimentQueries.queries ++
-      graft.queries.PrivacyQueries.queries ++
-      graft.queries.TrainerQueries.queries
+  private type Query = (SparkSession, String) => DataFrame
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.RelationalQueries.oracleSql ++
-      graft.queries.WindowQueries.oracleSql ++
-      graft.queries.ScalarQueries.oracleSql ++
-      graft.queries.EventQueries.oracleSql ++
-      graft.queries.TrainingDataQueries.oracleSql ++
-      graft.queries.MultimodalQueries.oracleSql ++
-      graft.queries.GoldQueries.oracleSql ++
-      graft.queries.SqlQueries.oracleSql ++
-      graft.queries.ScoringQueries.oracleSql ++
-      graft.queries.GraphQueries.oracleSql ++
-      graft.queries.ExperimentQueries.oracleSql ++
-      graft.queries.PrivacyQueries.oracleSql ++
-      graft.queries.TrainerQueries.oracleSql
+  /** The 13 query families, each as the pair of functions building its
+    * query map and its oracle map. `queries` and `oracleSql` fold this
+    * one list, so a family can only be added to both or to neither. */
+  private[graft] val families: Seq[(() => Map[String, Query], () => Map[String, String])] = {
+    import graft.queries._
+    Seq(
+      (() => RelationalQueries.queries, () => RelationalQueries.oracleSql),
+      (() => WindowQueries.queries, () => WindowQueries.oracleSql),
+      (() => ScalarQueries.queries, () => ScalarQueries.oracleSql),
+      (() => EventQueries.queries, () => EventQueries.oracleSql),
+      (() => TrainingDataQueries.queries, () => TrainingDataQueries.oracleSql),
+      (() => MultimodalQueries.queries, () => MultimodalQueries.oracleSql),
+      (() => GoldQueries.queries, () => GoldQueries.oracleSql),
+      (() => SqlQueries.queries, () => SqlQueries.oracleSql),
+      (() => ScoringQueries.queries, () => ScoringQueries.oracleSql),
+      (() => GraphQueries.queries, () => GraphQueries.oracleSql),
+      (() => ExperimentQueries.queries, () => ExperimentQueries.oracleSql),
+      (() => PrivacyQueries.queries, () => PrivacyQueries.oracleSql),
+      (() => TrainerQueries.queries, () => TrainerQueries.oracleSql))
+  }
+
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, Query] = families.map(_._1()).reduce(_ ++ _)
+
+  /** For each key in `queries`, equivalent SQL that DuckDB runs on the
+    * same parquet tables: the independent oracle each query's rows are
+    * compared with. Every key has one (CatalogShapeSpec). */
+  def oracleSql: Map[String, String] = families.map(_._2()).reduce(_ ++ _)
 }

@@ -17,11 +17,22 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * `CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)`.
   */
 object Det {
+  /** decimal(38,0): the exact integer type the catalog casts to before
+    * summing or multiplying counts and sufficient statistics (HUGEINT in
+    * the oracles). */
+  val d38: DecimalType = DecimalType(38, 0)
+
+  /** DuckDB fragment matching [[graft.operators.TextAnalysis.normalizeText]]:
+    * lowercase, whitespace runs collapsed to one space, trimmed. */
+  val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
+  /** Embedding lanes micro-quantized to longs, floor(x · 10⁶): the
+    * integer vectors the catalog's dot products and norms run on. */
+  def quantized(lanes: Column): Column =
+    transform(lanes, x => floor(x.cast("double") * 1000000).cast("long"))
+
   /** Exact, order-independent sum of a 2-decimal money column, as double. */
   def moneySum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
-
-  /** Exact decimal sum kept as decimal(38,2) — for schema-typed outputs. */
-  def moneySumDec(c: Column): Column = sum(c.cast(DecimalType(18, 2)))
 
   /** Deterministic mean: exact decimal sum → double, divided by count.
     * Both engines then perform the identical IEEE double division. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
+import Det.d38
 
 /** Batch restatement of event-stream operations over the `events` table
   * (SURVEY.md §2.I: the reference's "incremental" processing is scheduled
@@ -25,6 +26,30 @@ object EventQueries {
     * `ts` to epoch-µs (type-adaptively), so this is just the column. */
   private def tsUs = col("ts")
 
+  /** Events per (event_type, day index): the daily series every
+    * time-series query below starts from. */
+  private def dailyCounts(s: SparkSession, dir: String): DataFrame =
+    Tables.eventsUs(s, dir)
+      .select(col("event_type"), expr("ts div 86400000000").as("day"))
+      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+
+  /** Every event after a user's first, with the type of the event before
+    * it (per user by ts, then event_id) as `prev_type`: the transition
+    * frame behind the Markov-chain queries. */
+  private def transitions(s: SparkSession, dir: String): DataFrame =
+    Tables.eventsUs(s, dir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(
+        Window.partitionBy(col("user_id"))
+          .orderBy(col("ts"), col("event_id"))))
+      .filter(col("prev_type").isNotNull)
+
+  /** The distinct (user_id, day index) pairs: one row per active day. */
+  private def userDays(s: SparkSession, dir: String): DataFrame =
+    Tables.eventsUs(s, dir)
+      .select(col("user_id"), expr("ts div 86400000000").as("day"))
+      .distinct()
+
   /** ts8's classical seasonal decomposition (trend = centered ±3-day
     * RANGE-frame mean, seasonal = day-of-week mean of the detrended
     * series, residual = the rest), shared with ts9's anomaly test.
@@ -34,9 +59,7 @@ object EventQueries {
     * trend window rides its partitioning; the 7×|series| profile
     * broadcasts back. */
   private def stlDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.eventsUs(s, dir)
-      .select(col("event_type"), expr("ts div 86400000000").as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+    val daily = dailyCounts(s, dir)
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rangeBetween(-3, 3)
     val dt = daily
@@ -298,10 +321,7 @@ object EventQueries {
     // — two 10¹¹-event days overflow int64) through one fixed IEEE
     // tree. The only corpus-sized work is the first daily rollup.
     "ts18_lagged_xcorr" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val x = daily.filter(col("event_type") === "click")
         .select(col("day"), col("n").as("x"))
       val y = daily.filter(col("event_type") === "purchase")
@@ -471,10 +491,7 @@ object EventQueries {
     // One (type, day) rollup shuffle; the window is co-partitioned by
     // series.
     "ts15_online_anomaly" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, -1)
       daily
@@ -492,10 +509,7 @@ object EventQueries {
     },
 
     "ts1_anomaly" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
         .rowsBetween(-7, -1)
       val mean = col("s1").cast("double") / col("cnt_w").cast("double")
@@ -570,9 +584,7 @@ object EventQueries {
         s"'s', concat(slice($prev.s, 2, 6), array($snew)))"
       val init = "named_struct('l', x.n * 1000000L, 'b', 0L, " +
         "'f', x.n * 1000000L, 's', array_repeat(0L, 7))"
-      Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      dailyCounts(s, dir)
         .groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("day"), col("n"))))
           .as("xs"))
@@ -593,10 +605,7 @@ object EventQueries {
     },
 
     "ts7_holt" -> { (s, dir) =>
-      Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      dailyCounts(s, dir)
         .groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("day"), col("n"))))
           .as("xs"))
@@ -711,7 +720,6 @@ object EventQueries {
     // then one fixed IEEE tree over the exact integers, ts4's contract.
     // One user-partitioned lag window + one rollup on its partitioning.
     "ev30_gap_burstiness" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       Tables.eventsUs(s, dir)
@@ -730,10 +738,7 @@ object EventQueries {
     },
 
     "ts3_ewma" -> { (s, dir) =>
-      Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      dailyCounts(s, dir)
         .groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("day"), col("n"))))
           .as("xs"))
@@ -760,10 +765,7 @@ object EventQueries {
     // compute bit-identical doubles. One shuffle (daily rollup); the lag
     // window rides the same partitioning.
     "ts4_autocorr" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val st = daily.withColumn("a", lag(col("n"), 1).over(w))
         .filter(col("a").isNotNull)
@@ -795,11 +797,7 @@ object EventQueries {
     // Gaps in the day sequence are treated as adjacent observations,
     // matching ts4's series definition.
     "ts20_pacf" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val lagged = daily
         .withColumn("l1", lag(col("n"), 1).over(w))
@@ -852,11 +850,7 @@ object EventQueries {
     // drop that term (k_used reports the effective df). The χ²₅ 5%
     // decision is emitted only at full df.
     "ts22_ljung_box" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val lagged = (1 to 5).foldLeft(daily) { (d, k) =>
         d.withColumn(s"l$k", lag(col("n"), k).over(w))
@@ -914,11 +908,7 @@ object EventQueries {
     // materializes). Normal-approximation flag at |√(2D) − √(2(n−1)−1)|
     // > 1.96 (Wilson–Hilferty-free form, fine at day-grain n).
     "ev58_dispersion_test" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val st = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val st = dailyCounts(s, dir)
         .groupBy("event_type")
         .agg(count(lit(1)).as("days"), sum(col("n").cast(d38)).as("sx"),
           sum(col("n").cast(d38) * col("n").cast(d38)).as("sxx"))
@@ -945,7 +935,6 @@ object EventQueries {
     // final IEEE trees. Day-grain window (span-bounded); degenerate
     // inputs (n ≤ 3, singular normal matrix, zero residual) emit NULL.
     "ts23_granger" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val daily = Tables.eventsUs(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_type"), expr("ts div 86400000000").as("day"))
@@ -1016,10 +1005,7 @@ object EventQueries {
     // per-season tie-corrected formula; z gets the ±1 continuity
     // correction; the 5% verdict is a non-null string.
     "ts21_mann_kendall" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
         .withColumn("dow", col("day") % 7)
         // pinned: the daily rollup feeds both pair sides, the seasonal
         // rollup, and the tie rollup (round-13 fan-out rule)
@@ -1062,10 +1048,7 @@ object EventQueries {
     // broadcast back over the daily rollup; the mean and residual are
     // the same fixed IEEE tree in both engines.
     "ts5_dow_profile" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val prof = daily
         .groupBy(col("event_type").as("et"), (col("day") % 7).as("dow"))
         .agg(count(lit(1)).as("m"), sum(col("n")).as("s"))
@@ -1190,10 +1173,7 @@ object EventQueries {
     // rollup shuffle; the scalar (m, T) stats broadcast back; running sum
     // and argmax ride per-series windows.
     "ts6_changepoint" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val st = daily.groupBy(col("event_type").as("et"))
         .agg(count(lit(1)).as("m"), sum(col("n")).as("t"))
       val wcs = Window.partitionBy(col("event_type")).orderBy(col("day"))
@@ -1267,10 +1247,7 @@ object EventQueries {
     },
 
     "ts2_gap_fill" -> { (s, dir) =>
-      val sparse = Tables.eventsUs(s, dir)
-        .select(col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val sparse = dailyCounts(s, dir)
         .filter(col("day") % 3 =!= 0)
       val bounds = sparse.groupBy("event_type")
         .agg(min("day").as("mn"), max("day").as("mx"))
@@ -1291,13 +1268,7 @@ object EventQueries {
     // bit-for-bit. The behavioral-sequence model a funnel/session
     // pipeline feeds into next-event prediction.
     "ev12_transitions" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      Tables.eventsUs(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
+      transitions(s, dir)
         .groupBy("prev_type", "event_type").agg(count(lit(1)).as("n"))
         .withColumn("p_micro",
           expr("n * 1000000 div sum(n) over (partition by prev_type)"))
@@ -1358,13 +1329,7 @@ object EventQueries {
     // transition matrix is |types|²-sized and broadcast; the scoring
     // pass shuffles once per user.
     "ev16_markov_anomaly" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val seq = Tables.eventsUs(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
+      val seq = transitions(s, dir)
       val trans = seq.groupBy("prev_type", "event_type")
         .agg(count(lit(1)).as("n"))
         .withColumn("p_micro",
@@ -1511,9 +1476,7 @@ object EventQueries {
     // volume); stickiness is exact integer micro-units (dau·1e6 div
     // wau), so the ratio never rides a float division.
     "ev24_stickiness" -> { (s, dir) =>
-      val ud = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"))
-        .distinct()
+      val ud = userDays(s, dir)
       val days = ud.select("day").distinct()
       val dau = ud.groupBy("day").agg(countDistinct(col("user_id")).as("dau"))
       val wau = ud.select(col("user_id"),
@@ -1724,7 +1687,6 @@ object EventQueries {
     // (no libm call to disagree on). Flat-or-growing retention (λ ≤ 0)
     // reports NULL half-life rather than a negative one.
     "ev57_retention_halflife" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val d = Tables.eventsUs(s, dir)
         .selectExpr("user_id", "ts div 86400000000 AS day")
       val first = d.groupBy("user_id")
@@ -1891,13 +1853,7 @@ object EventQueries {
     // per-state sum is an order-free integer divided once. |states|²
     // cells — metadata after one user-keyed window + one count shuffle.
     "ev28_markov_entropy" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val trans = Tables.eventsUs(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
+      val trans = transitions(s, dir)
         .groupBy("prev_type", "event_type").agg(count(lit(1)).as("nst"))
       val perState = trans.groupBy("prev_type")
         .agg(sum(col("nst")).as("ns"), count(lit(1)).as("n_next_types"))
@@ -1923,19 +1879,13 @@ object EventQueries {
     // rounds bit-for-bit). The matrix is |states|² metadata; rounds are
     // joins on a 5-row table after one transition shuffle.
     "ev48_stationary_mix" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       // The transition matrix is |states|² metadata — pin it with an
       // eager localCheckpoint so the six unrolled rounds below reference
       // ONE materialized 25-row table. Without the pin, every round's
       // join re-embeds the events window+aggregate subtree in the final
       // plan (6 copies of the corpus scan: plan bloat locally, repeated
       // corpus passes at scale).
-      val p = Tables.eventsUs(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
+      val p = transitions(s, dir)
         .groupBy("prev_type", "event_type").agg(count(lit(1)).as("nst"))
         .withColumn("p_micro", expr(
           "nst * 1000000 div sum(nst) over (partition by prev_type)"))
@@ -1967,18 +1917,12 @@ object EventQueries {
     // reaches 'purchase' within 8 steps simply stops accumulating —
     // a documented lower bound, not an estimate error.
     "ev49_steps_to_purchase" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       // Same pin as ev48: the eight unrolled Neumann rounds reference q
       // and states each round — without the eager localCheckpoint the
       // final plan carries 17 copies of the events window+aggregate
       // subtree (measured: 36 exchanges in the static plan, 1.9 s at
       // sf0.1; one materialized ~20-row matrix removes all of them).
-      val p = Tables.eventsUs(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
+      val p = transitions(s, dir)
         .groupBy("prev_type", "event_type").agg(count(lit(1)).as("nst"))
         .withColumn("p_micro", expr(
           "nst * 1000000 div sum(nst) over (partition by prev_type)"))
@@ -2008,9 +1952,7 @@ object EventQueries {
     // smile vs slump — is the health readout). Watermark-anchored
     // window, one distinct rollup, user-grain count, 28-bucket combine.
     "ev47_l28_histogram" -> { (s, dir) =>
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"))
-        .distinct()
+      val d = userDays(s, dir)
       val mx = d.agg(max(col("day")).as("max_day"))
       d.crossJoin(broadcast(mx))
         .filter(col("day") > col("max_day") - 28)
@@ -2061,9 +2003,7 @@ object EventQueries {
     // resurrection?". One distinct rollup + one lag window on the
     // user_id exchange; day arithmetic in exact integer days.
     "ev45_growth_accounting" -> { (s, dir) =>
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"))
-        .distinct()
+      val d = userDays(s, dir)
       val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
       d.withColumn("prev_day", lag(col("day"), 1).over(w))
         .withColumn("state",
@@ -2111,9 +2051,7 @@ object EventQueries {
     // Degenerate cells (zero variance either side) drop before the
     // argmax on both engines.
     "ts14_period_detect" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val lagged = (1 to 14).foldLeft(daily) { (df, k) =>
         df.withColumn(s"l$k", lag(col("n"), k).over(w))
@@ -2154,9 +2092,7 @@ object EventQueries {
     // by event volume, so the self-join stays metadata-grain at any
     // corpus size.
     "ts13_theil_sen" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val a = daily.select(col("event_type"), col("day").as("d1"),
         col("n").as("n1"))
       val b = daily.select(col("event_type").as("et2"),
@@ -2187,9 +2123,7 @@ object EventQueries {
     // cumulative count over the tenure-grain rollup; everything after
     // the per-user label pass is metadata-sized.
     "ev42_kaplan_meier" -> { (s, dir) =>
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"))
-        .distinct()
+      val d = userDays(s, dir)
       val mx = d.agg(max(col("day")).as("max_day"))
       val users = d.groupBy("user_id")
         .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"))
@@ -2224,13 +2158,7 @@ object EventQueries {
     // counts from one transition shuffle; the argmax is a 25-row
     // metadata sort inside each state.
     "ev38_next_event_baseline" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val trans = Tables.eventsUs(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
+      val trans = transitions(s, dir)
         .groupBy("prev_type", "event_type").agg(count(lit(1)).as("nst"))
       val pick = Window.partitionBy(col("prev_type"))
         .orderBy(col("nst").desc, col("event_type").asc)
@@ -2255,10 +2183,7 @@ object EventQueries {
     // cross-multiplied inequality C²·(N−1)·N > 9·k·(N·Σx²−S²) in
     // decimal(38)/HUGEINT — no float mean, σ, or sqrt anywhere.
     "ts12_cusum_drift" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val st = daily.groupBy(col("event_type").as("st_type"))
         .agg(count(lit(1)).as("nn"), sum(col("n")).as("ss"),
           sum((col("n").cast(d38) * col("n").cast(d38))).as("sxx"))
@@ -2286,9 +2211,7 @@ object EventQueries {
     // snapshot; one distinct rollup + one user aggregate, both on the
     // user_id exchange.
     "ev33_churn_labels" -> { (s, dir) =>
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"))
-        .distinct()
+      val d = userDays(s, dir)
       val mx = d.agg(max(col("day")).as("max_day"))
       d.groupBy("user_id")
         .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"),
@@ -2331,9 +2254,7 @@ object EventQueries {
     // no refit per origin, both "models" are pure window lookups riding
     // one partitioning.
     "ts11_forecast_backtest" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val scored = daily
         .withColumn("rn", row_number().over(w))
@@ -2386,9 +2307,7 @@ object EventQueries {
     // the same event_type partition, so the whole query is one daily
     // rollup + two windows riding one partitioning.
     "ts10_burst_episodes" -> { (s, dir) =>
-      val daily = Tables.eventsUs(s, dir)
-        .select(col("event_type"), expr("ts div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val wt = Window.partitionBy(col("event_type")).orderBy(col("day"))
         .rangeBetween(-7, -1)
       val flagged = daily
@@ -2405,6 +2324,41 @@ object EventQueries {
         .drop("island")
     },
   )
+
+  /** Oracle CTE `daily`: events per (event_type, day index). The two
+    * spellings differ only in the parentheses around the day. */
+  private val dailySql =
+    """daily AS (
+      |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
+      |    COUNT(*) AS n
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+  private val dailyBareSql =
+    """daily AS (
+      |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+      |    COUNT(*) AS n
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** Oracle CTEs `daily` and `tr`: the centred ±3-day trend of each
+    * daily series in integer micro-units. */
+  private val trendSql =
+    s"""$dailySql,
+       |tr AS (
+       |  SELECT event_type, day, n,
+       |    ((SUM(n) OVER w * 1000000) // COUNT(*) OVER w) AS trend_micro
+       |  FROM daily
+       |  WINDOW w AS (PARTITION BY event_type ORDER BY day
+       |               RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING))""".stripMargin
+
+  /** Oracle CTEs `seq` (each event with the type of the same user's
+    * previous event as `prev_type`) and `tr` (transition counts `nst`). */
+  private val transitionSql =
+    """seq AS (
+      |  SELECT user_id, event_type,
+      |    LAG(event_type, 1) OVER (PARTITION BY user_id
+      |      ORDER BY ts, event_id) AS prev_type
+      |  FROM events),
+      |tr AS (SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT) AS nst
+      |       FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "ev1_event_gaps" ->
@@ -2635,10 +2589,7 @@ object EventQueries {
         |  (CAST(n_ij AS DOUBLE) + 4.0) AS wilson_lb
         |FROM stats""".stripMargin,
     "ts18_lagged_xcorr" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyBareSql,
         |x AS (SELECT day, n AS x FROM daily WHERE event_type = 'click'),
         |y AS (SELECT day AS yday, n AS y FROM daily
         |      WHERE event_type = 'purchase'),
@@ -2770,10 +2721,7 @@ object EventQueries {
         |    END AS BIGINT) AS fresh_24h
         |FROM per CROSS JOIN c""".stripMargin,
     "ts15_online_anomaly" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |fr AS (
         |  SELECT event_type, day, n,
         |    COUNT(*) OVER tw AS n_prior,
@@ -2790,10 +2738,7 @@ object EventQueries {
         |  THEN 1 ELSE 0 END AS BIGINT) AS is_anomaly
         |FROM fr""".stripMargin,
     "ts1_anomaly" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |fr AS (
         |  SELECT event_type, day, n,
         |    COUNT(*) OVER tw AS cnt_w,
@@ -2819,10 +2764,7 @@ object EventQueries {
         |  END AS is_anomaly
         |FROM z""".stripMargin,
     "ts4_autocorr" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |pairs AS (
         |  SELECT event_type, n AS b,
         |    LAG(n) OVER (PARTITION BY event_type ORDER BY day) AS a
@@ -2844,10 +2786,7 @@ object EventQueries {
         |FROM s""".stripMargin,
 
     "ts20_pacf" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |lagged AS (
         |  SELECT event_type, n,
         |    LAG(n, 1) OVER w AS l1, LAG(n, 2) OVER w AS l2,
@@ -2898,10 +2837,7 @@ object EventQueries {
         |FROM p5""".stripMargin,
 
     "ts22_ljung_box" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |lagged AS (
         |  SELECT event_type, n,
         |    LAG(n, 1) OVER w AS l1, LAG(n, 2) OVER w AS l2,
@@ -2986,10 +2922,7 @@ object EventQueries {
         |FROM q""".stripMargin,
 
     "ev58_dispersion_test" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |st AS (SELECT event_type, COUNT(*) AS days,
         |    SUM(CAST(n AS HUGEINT)) AS sx,
         |    SUM(CAST(n AS HUGEINT) * n) AS sxx
@@ -3072,10 +3005,7 @@ object EventQueries {
         |FROM i""".stripMargin,
 
     "ts21_mann_kendall" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |d2 AS (SELECT event_type, day, day % 7 AS dow, n FROM daily),
         |s AS (
         |  SELECT a.event_type,
@@ -3114,10 +3044,7 @@ object EventQueries {
         |FROM wz""".stripMargin,
 
     "ts5_dow_profile" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |prof AS (
         |  SELECT event_type, day % 7 AS dow, COUNT(*) AS m,
         |    CAST(SUM(CAST(n AS HUGEINT)) AS BIGINT) AS s
@@ -3203,10 +3130,7 @@ object EventQueries {
         |       ELSE 1 END AS converted
         |FROM pu""".stripMargin,
     "ts6_changepoint" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailySql,
         |st AS (
         |  SELECT event_type, COUNT(*) AS m,
         |    CAST(SUM(CAST(n AS HUGEINT)) AS BIGINT) AS t
@@ -3241,10 +3165,7 @@ object EventQueries {
         |FROM days d JOIN ud u ON u.day BETWEEN d.day - 6 AND d.day
         |GROUP BY d.day""".stripMargin,
     "ts19_holt_winters" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE $dailySql,
         |seq AS (
         |  SELECT event_type, day, n,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day)
@@ -3272,10 +3193,7 @@ object EventQueries {
         |SELECT event_type, day, n, l AS level_micro, b AS trend_micro,
         |  f AS forecast_micro FROM h""".stripMargin,
     "ts7_holt" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE $dailySql,
         |seq AS (
         |  SELECT event_type, day, n,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
@@ -3361,10 +3279,7 @@ object EventQueries {
         |    CAST(sg * sg AS DOUBLE) AS cv2
         |FROM st WHERE n >= 2 AND sg > 0""".stripMargin,
     "ts3_ewma" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE $dailySql,
         |seq AS (
         |  SELECT event_type, day, n,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
@@ -3608,16 +3523,7 @@ object EventQueries {
          |${Det.sqlMoneySum("value")} AS total_value
          |FROM events GROUP BY user_id""".stripMargin,
     "ts16_stl_strength" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |tr AS (
-        |  SELECT event_type, day, n,
-        |    ((SUM(n) OVER w * 1000000) // COUNT(*) OVER w) AS trend_micro
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+      s"""WITH $trendSql,
         |dt AS (SELECT event_type, day, n,
         |         n * 1000000 - trend_micro AS det FROM tr),
         |se AS (SELECT event_type, day % 7 AS dow,
@@ -3641,16 +3547,7 @@ object EventQueries {
         |  END AS seasonal_strength
         |FROM st""".stripMargin,
     "ts8_stl_decompose" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |tr AS (
-        |  SELECT event_type, day, n,
-        |    ((SUM(n) OVER w * 1000000) // COUNT(*) OVER w) AS trend_micro
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+      s"""WITH $trendSql,
         |dt AS (SELECT event_type, day, n, trend_micro,
         |         n * 1000000 - trend_micro AS det FROM tr),
         |se AS (SELECT event_type, day % 7 AS dow,
@@ -3663,16 +3560,7 @@ object EventQueries {
         |FROM dt JOIN se
         |  ON dt.event_type = se.event_type AND dt.day % 7 = se.dow""".stripMargin,
     "ts9_stl_anomaly" ->
-      """WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 86400000000) AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |tr AS (
-        |  SELECT event_type, day, n,
-        |    ((SUM(n) OVER w * 1000000) // COUNT(*) OVER w) AS trend_micro
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+      s"""WITH $trendSql,
         |dt AS (SELECT event_type, day, n,
         |         n * 1000000 - trend_micro AS det FROM tr),
         |se AS (SELECT event_type, day % 7 AS dow,
@@ -3720,14 +3608,7 @@ object EventQueries {
            |      AS acc
            |    FROM q JOIN e${i - 1} ON q.t = e${i - 1}.state
            |    GROUP BY 1) acc ON st.state = acc.s)""".stripMargin
-      s"""WITH seq AS (
-         |  SELECT user_id, event_type,
-         |    LAG(event_type, 1) OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS prev_type
-         |  FROM events),
-         |tr AS (SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT)
-         |         AS nst
-         |       FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $transitionSql,
          |p AS (SELECT prev_type AS s, event_type AS t,
          |        nst * 1000000 // SUM(nst) OVER (PARTITION BY prev_type)
          |          AS p_micro
@@ -3746,14 +3627,7 @@ object EventQueries {
            |    SUM(v${i - 1}.v_micro * p.p_micro) // 1000000 AS v_micro
            |  FROM p JOIN v${i - 1} ON p.s = v${i - 1}.state
            |  GROUP BY 1)""".stripMargin
-      s"""WITH seq AS (
-         |  SELECT user_id, event_type,
-         |    LAG(event_type, 1) OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS prev_type
-         |  FROM events),
-         |tr AS (SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT)
-         |         AS nst
-         |       FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $transitionSql,
          |p AS (SELECT prev_type AS s, event_type AS t,
          |        nst * 1000000 // SUM(nst) OVER (PARTITION BY prev_type)
          |          AS p_micro
@@ -3849,10 +3723,7 @@ object EventQueries {
         .map(k => s"SELECT event_type, CAST($k AS BIGINT) AS k, " +
           s"l$k AS a, n FROM lg WHERE l$k IS NOT NULL")
         .mkString("\n  UNION ALL ")
-      s"""WITH daily AS (
-         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-         |    COUNT(*) AS n
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyBareSql,
          |lg AS (
          |  SELECT event_type, day, n,
          |    $lagCols
@@ -3881,10 +3752,7 @@ object EventQueries {
          |WHERE rk = 1""".stripMargin
     },
     "ts13_theil_sen" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyBareSql,
         |sl AS (
         |  SELECT a.event_type,
         |    CAST(((b.n - a.n) * 1000000) // (b.day - a.day) AS BIGINT)
@@ -3933,13 +3801,7 @@ object EventQueries {
         |    AS log_surv_micro
         |FROM lf""".stripMargin,
     "ev38_next_event_baseline" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |    LAG(event_type, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev_type
-        |  FROM events),
-        |tr AS (SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT) AS nst
-        |       FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $transitionSql,
         |rk AS (SELECT prev_type, event_type, nst,
         |         ROW_NUMBER() OVER (PARTITION BY prev_type
         |           ORDER BY nst DESC, event_type ASC) AS rk
@@ -3953,10 +3815,7 @@ object EventQueries {
         |    // SUM(nst) AS BIGINT) AS accuracy_micro
         |FROM rk GROUP BY prev_type""".stripMargin,
     "ts12_cusum_drift" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyBareSql,
         |st AS (SELECT event_type, CAST(COUNT(*) AS HUGEINT) AS nn,
         |         CAST(SUM(n) AS HUGEINT) AS ss,
         |         SUM(CAST(n AS HUGEINT) * CAST(n AS HUGEINT)) AS sxx
@@ -4001,10 +3860,7 @@ object EventQueries {
         |FROM daily
         |WINDOW w AS (PARTITION BY user_id ORDER BY day)""".stripMargin,
     "ts11_forecast_backtest" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyBareSql,
         |sc AS (
         |  SELECT event_type, day, n,
         |    ROW_NUMBER() OVER w AS rn,
@@ -4054,13 +3910,7 @@ object EventQueries {
         |  CAST(COUNT(*) AS BIGINT) AS n_events
         |FROM w GROUP BY 1""".stripMargin,
     "ev28_markov_entropy" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |    LAG(event_type, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev_type
-        |  FROM events),
-        |tr AS (SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT) AS nst
-        |       FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $transitionSql,
         |ps AS (SELECT prev_type, CAST(SUM(nst) AS BIGINT) AS ns,
         |         CAST(COUNT(*) AS BIGINT) AS n_next_types
         |       FROM tr GROUP BY 1),
@@ -4075,10 +3925,7 @@ object EventQueries {
         |  CAST(SUM(term) // MAX(ns) AS BIGINT) AS h_micro
         |FROM terms GROUP BY prev_type""".stripMargin,
     "ts10_burst_episodes" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyBareSql,
         |fl AS (
         |  SELECT event_type, day, n,
         |    SUM(n) OVER w AS wsum, COUNT(*) OVER w AS wcnt

@@ -3,10 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
 import graft.operators.Sampling
+import Det.d38
 
 /** Experimentation analytics over the event stream — the A/B-platform
   * tier (beyond reference): deterministic hash assignment, integrity
@@ -22,6 +22,52 @@ object ExperimentQueries {
   private def arm(key: Column): Column =
     Sampling.bucket(key, "ab1") % 2
 
+  /** Each event's user, day index and spend in integer cents. */
+  private def dayCents(ev: DataFrame): DataFrame =
+    ev.select(col("user_id"), expr("ts div 86400000000").as("day"),
+      expr("cast(floor(value * 100) as bigint)").as("cents"))
+
+  /** Per-user rollup of `d` (user_id and day, plus what `aggs` read) with
+    * the corpus min day `d0` broadcast to every row, so an aggregate can
+    * split the pre-period (the first 15 days from `d0`; the fixture spans
+    * 30) from the post-period. One per-user shuffle. */
+  private def perUser(d: DataFrame)(aggs: Column*): DataFrame =
+    d.crossJoin(broadcast(d.agg(min(col("day")).as("d0"))))
+      .groupBy("user_id").agg(aggs.head, aggs.tail: _*)
+
+  private def preCents: Column =
+    sum(when(col("day") < col("d0") + 15, col("cents")).otherwise(0L))
+  private def postCents: Column =
+    sum(when(col("day") >= col("d0") + 15, col("cents")).otherwise(0L))
+
+  /** Per-user post-period cents `y` with the user's arm. */
+  private def perUserY(ev: DataFrame): DataFrame =
+    perUser(dayCents(ev))(postCents.as("y"))
+      .withColumn("arm", arm(col("user_id")))
+
+  /** Per-user pre-period cents `x`, post-period cents `y` and the arm. */
+  private def perUserXY(ev: DataFrame): DataFrame =
+    perUser(dayCents(ev))(preCents.as("x"), postCents.as("y"))
+      .withColumn("arm", arm(col("user_id")))
+
+  /** Per-user post-period purchase flag `conv` with the user's arm. */
+  private def perUserConv(ev: DataFrame): DataFrame =
+    perUser(ev.select(col("user_id"), col("event_type"),
+        expr("ts div 86400000000").as("day")))(
+      max(when(col("event_type") === "purchase" &&
+        col("day") >= col("d0") + 15, 1L).otherwise(0L)).as("conv"))
+      .withColumn("arm", arm(col("user_id")))
+
+  /** Each user's modal event type (ties go to the lexicographically
+    * first) as (user_id, event_type, n, rk = 1). */
+  private def modalType(ev: DataFrame): DataFrame =
+    ev.groupBy("user_id", "event_type")
+      .agg(count(lit(1)).as("n"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("user_id"))
+          .orderBy(col("n").desc, col("event_type").asc)))
+      .filter(col("rk") === 1)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CUPED variance reduction (Deng et al. 2013): the experiment
     // readout every mature A/B platform ships. Pre-period spend (first
@@ -33,18 +79,7 @@ object ExperimentQueries {
     // per user, one broadcast scalar row, one 2-row arm rollup: the
     // 100 TB plan is the per-user rollup's single shuffle.
     "ab1_cuped" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") < col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("x"),
-          sum(when(col("day") >= col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserXY(Tables.eventsUs(s, dir))
       val pooled = per.agg(count(lit(1)).as("n"),
         sum(col("x").cast(d38)).as("sx"), sum(col("y").cast(d38)).as("sy"),
         sum((col("x") * col("y")).cast(d38)).as("sxy"),
@@ -74,16 +109,7 @@ object ExperimentQueries {
     // ratio as one fixed IEEE tree (d15's exact-moments idiom). Same
     // single per-user shuffle as ab1; the 2-arm rollup is metadata.
     "ab3_diff_in_means" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserY(Tables.eventsUs(s, dir))
       val st = per.groupBy("arm")
         .agg(count(lit(1)).as("n"), sum(col("y").cast(d38)).as("sy"),
           sum((col("y") * col("y")).cast(d38)).as("syy"))
@@ -119,7 +145,6 @@ object ExperimentQueries {
     // from exact integer (n, Σx, Σy, Σxx, Σyy, Σxy) per arm — one
     // per-user rollup shuffle, a 2-row arm table, one pinned IEEE tree.
     "ab4_ratio_delta" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val per = Tables.eventsUs(s, dir)
         .select(col("user_id"),
           when(col("event_type") === "view", 1L).otherwise(0L).as("v"),
@@ -160,15 +185,7 @@ object ExperimentQueries {
     // statistics (no float percentile), clamped sums stay exact
     // integers, and only the two means divide at the end.
     "ab9_winsorized_diff" -> { (s, dir) =>
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserY(Tables.eventsUs(s, dir))
       // arm has 2 values and users are corpus-scale in a real
       // experiment: a Window.partitionBy(arm) rank caps parallelism at
       // 2. The grouped two-pass row number keeps the per-arm sort
@@ -210,16 +227,7 @@ object ExperimentQueries {
     // IEEE tree, the whole readout a 1-row reduction off the per-user
     // rollup.
     "ab5_power_mde" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserY(Tables.eventsUs(s, dir))
       val st = per.groupBy("arm")
         .agg(count(lit(1)).as("n"), sum(col("y").cast(d38)).as("sy"),
           sum((col("y") * col("y")).cast(d38)).as("syy"))
@@ -266,26 +274,11 @@ object ExperimentQueries {
     // IEEE tree as ab3, one extra segment key in the rollup — the HTE
     // table a launch review reads before shipping to everyone.
     "ab7_uplift_by_segment" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val ev = Tables.eventsUs(s, dir)
       // segment: modal event type per user (ties → lexicographic)
-      val seg = ev.groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("user_id"))
-            .orderBy(col("n").desc, col("event_type").asc)))
-        .filter(col("rk") === 1)
+      val seg = modalType(ev)
         .select(col("user_id"), col("event_type").as("segment"))
-      val mn = ev.select(expr("ts div 86400000000").as("day"))
-        .agg(min(col("day")).as("d0"))
-      val per = ev.select(col("user_id"),
-          expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-        .crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserY(ev)
         .join(seg, "user_id")
       val st = per.groupBy("segment", "arm")
         .agg(count(lit(1)).as("n"), sum(col("y").cast(d38)).as("sy"),
@@ -330,18 +323,8 @@ object ExperimentQueries {
     // diffs) is metadata arithmetic. The only corpus-sized shuffle is
     // the per-user rollup.
     "ab13_poisson_bootstrap" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val ev = Tables.eventsUs(s, dir)
-      val mn = ev.select(expr("ts div 86400000000").as("day"))
-        .agg(min(col("day")).as("d0"))
-      val per = ev.select(col("user_id"),
-          expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-        .crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserY(ev)
       val rep = per.select(col("user_id"), col("y"), col("arm"),
           explode(sequence(lit(0), lit(31))).as("b"))
         .withColumn("bk", Sampling.bucket(
@@ -391,20 +374,8 @@ object ExperimentQueries {
     // two-pass row number.
     "ab14_qini_curve" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val d38 = DecimalType(38, 0)
       val ev = Tables.eventsUs(s, dir)
-      val mn = ev.select(expr("ts div 86400000000").as("day"))
-        .agg(min(col("day")).as("d0"))
-      val per = ev.select(col("user_id"),
-          expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-        .crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") < col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("x"),
-          sum(when(col("day") >= col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserXY(ev)
       val nn = per.agg(count(lit(1)).as("n_all"))
       val ranked = GlobalRank.withGlobalRowNumber(per,
           Seq(col("x").desc, col("user_id")), out = "rn")
@@ -444,26 +415,12 @@ object ExperimentQueries {
     // group — standard positivity failure, surfaced not hidden). One
     // per-user rollup is the only corpus-sized shuffle.
     "ab12_ipw_ate" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val ev = Tables.eventsUs(s, dir)
-      val modal = ev.groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("user_id"))
-            .orderBy(col("n").desc, col("event_type").asc)))
-        .filter(col("rk") === 1)
+      val modal = modalType(ev)
         .select(col("user_id"),
           (col("event_type") === "purchase").as("treated"))
-      val mn = ev.select(expr("ts div 86400000000").as("day"))
-        .agg(min(col("day")).as("d0"))
-      val per = ev.select(col("user_id"),
-          expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-        .crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_ev"),
-          sum(when(col("day") >= col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("y"))
+      val per = perUser(dayCents(ev))(count(lit(1)).as("n_ev"),
+          postCents.as("y"))
         .join(modal, "user_id")
         .withColumn("stratum",
           when(col("n_ev") >= 8, 3L).when(col("n_ev") >= 4, 2L)
@@ -505,18 +462,7 @@ object ExperimentQueries {
     // rollup, and a 1-row pivot; the four means and the DiD are one
     // fixed IEEE tree.
     "ab11_diff_in_diff" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") < col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("x"),
-          sum(when(col("day") >= col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserXY(Tables.eventsUs(s, dir))
       val byArm = per.groupBy("arm")
         .agg(count(lit(1)).as("n"), sum(col("x").cast(d38)).as("sx"),
           sum(col("y").cast(d38)).as("sy"))
@@ -553,25 +499,10 @@ object ExperimentQueries {
     // SCALE.md window rule); the corpus-sized work is ab7's one
     // per-user rollup.
     "ab10_fdr_bh" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val ev = Tables.eventsUs(s, dir)
-      val seg = ev.groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("user_id"))
-            .orderBy(col("n").desc, col("event_type").asc)))
-        .filter(col("rk") === 1)
+      val seg = modalType(ev)
         .select(col("user_id"), col("event_type").as("segment"))
-      val mn = ev.select(expr("ts div 86400000000").as("day"))
-        .agg(min(col("day")).as("d0"))
-      val per = ev.select(col("user_id"),
-          expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-        .crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserY(ev)
         .join(seg, "user_id")
       val st = per.groupBy("segment", "arm")
         .agg(count(lit(1)).as("n"), sum(col("y").cast(d38)).as("sy"),
@@ -659,7 +590,6 @@ object ExperimentQueries {
     // One daily rollup shuffle + one per-arm cumulative window + a
     // day-aligned self-join of the two 1-row-per-day arm tracks.
     "ab6_sequential_monitor" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val d = Tables.eventsUs(s, dir)
         .select(col("user_id"), expr("ts div 86400000000").as("day"),
           expr("cast(floor(value * 100) as bigint)").as("cents"))
@@ -746,15 +676,7 @@ object ExperimentQueries {
     },
 
     "ab20_bayes_beta" -> { (s, dir) =>
-      val ev = Tables.eventsUs(s, dir)
-        .select(col("user_id"), col("event_type"),
-          expr("ts div 86400000000").as("day"))
-      val mn = ev.agg(min(col("day")).as("d0"))
-      val per = ev.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "purchase" &&
-          col("day") >= col("d0") + 15, 1L).otherwise(0L)).as("conv"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserConv(Tables.eventsUs(s, dir))
       val st = per.groupBy("arm")
         .agg(count(lit(1)).as("n"), sum(col("conv")).as("x"))
       val a0 = st.filter(col("arm") === 0)
@@ -795,7 +717,6 @@ object ExperimentQueries {
     // the last ulp), so the quantize-then-integer-sum idiom is the
     // contract here, as in the lm/ev54 families.
     "ab18_jackknife_ratio" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val ev = Tables.eventsUs(s, dir)
         .select(col("user_id"), col("event_type"))
         .withColumn("bkt", Sampling.bucket(col("user_id"), "jk") % 50)
@@ -847,19 +768,11 @@ object ExperimentQueries {
     // headroom — the doubles enter only after every subtraction is
     // exact). Same single per-user shuffle as ab1.
     "ab19_regression_cuped" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") < col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("x1"),
+      val per = perUser(dayCents(Tables.eventsUs(s, dir)))(
+          preCents.as("x1"),
           sum(when(col("day") < col("d0") + 15, 1L).otherwise(0L))
             .as("x2"),
-          sum(when(col("day") >= col("d0") + 15, col("cents"))
-            .otherwise(0L)).as("y"))
+          postCents.as("y"))
         .withColumn("arm", arm(col("user_id")))
       val pooled = per.agg(count(lit(1)).as("n"),
         sum(col("x1").cast(d38)).as("s1"),
@@ -915,24 +828,10 @@ object ExperimentQueries {
     // engines. Cell products cast to decimal before multiplying
     // (10⁹-user strata overflow int64).
     "ab17_cmh_odds" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val ev = Tables.eventsUs(s, dir)
-      val seg = ev.groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("user_id"))
-            .orderBy(col("n").desc, col("event_type").asc)))
-        .filter(col("rk") === 1)
+      val seg = modalType(ev)
         .select(col("user_id"), col("event_type").as("segment"))
-      val mn = ev.select(expr("ts div 86400000000").as("day"))
-        .agg(min(col("day")).as("d0"))
-      val per = ev.select(col("user_id"), col("event_type"),
-          expr("ts div 86400000000").as("day"))
-        .crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "purchase" &&
-          col("day") >= col("d0") + 15, 1L).otherwise(0L)).as("conv"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserConv(ev)
         .join(seg, "user_id")
       val st = per.groupBy("segment").agg(
         sum(when(col("arm") === 1 && col("conv") === 1, 1L)
@@ -973,17 +872,8 @@ object ExperimentQueries {
     // 2·W⁺, 2·μ = m(m+1)/2, and Σ(t³−t) are exact integers; σ (with
     // tie correction /48) and z are one fixed IEEE tree.
     "ab21_wilcoxon_signed" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg((sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)) -
-          sum(when(col("day") < col("d0") + 15, col("cents"))
-            .otherwise(0L))).as("diff"))
+      val per = perUser(dayCents(Tables.eventsUs(s, dir)))(
+          (postCents - preCents).as("diff"))
         .filter(col("diff") =!= 0)
         .withColumn("absd", abs(col("diff")))
         // pinned: `ties` below re-reads the user-grain rollup instead
@@ -1031,16 +921,7 @@ object ExperimentQueries {
     // unpartitioned window; tie counts come from a hash-partitioned
     // per-value window.
     "ab15_mann_whitney" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(floor(value * 100) as bigint)").as("cents"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("cents"))
-          .otherwise(0L)).as("y"))
-        .withColumn("arm", arm(col("user_id")))
+      val per = perUserY(Tables.eventsUs(s, dir))
         // pinned: `ties` below re-reads this user-grain rollup instead
         // of re-running the corpus aggregate (round-13 fan-out rule)
         .transform(graft.operators.GlobalRank.pinned)
@@ -1099,15 +980,11 @@ object ExperimentQueries {
     // float epsilon. Whole-DOLLAR units (d29's trick) keep those
     // 4-factor products inside decimal(38) headroom at 10⁹-user scale.
     "ab16_permutation_test" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.eventsUs(s, dir)
-        .select(col("user_id"), expr("ts div 86400000000").as("day"),
-          expr("cast(round(value) as bigint)").as("dollars"))
-      val mn = d.agg(min(col("day")).as("d0"))
-      val per = d.crossJoin(broadcast(mn))
-        .groupBy("user_id")
-        .agg(sum(when(col("day") >= col("d0") + 15, col("dollars"))
-          .otherwise(0L)).as("y"))
+      val per = perUser(Tables.eventsUs(s, dir)
+          .select(col("user_id"), expr("ts div 86400000000").as("day"),
+            expr("cast(round(value) as bigint)").as("dollars")))(
+          sum(when(col("day") >= col("d0") + 15, col("dollars"))
+            .otherwise(0L)).as("y"))
         .withColumn("arm", arm(col("user_id")))
         // pinned: feeds BOTH the observed stats and the 200-replica
         // explode — un-pinned, the corpus rollup ran twice
@@ -1168,19 +1045,59 @@ object ExperimentQueries {
       "(-0.284496736 + t * (1.421413741 + t * (-1.453152027 + " +
       "t * 1.061405429))))) * exp(-(x * x)))) AS BIGINT), 1000000)"
 
+  /** Oracle CTEs `d` (every event's user, day and integer cents) and
+    * `mn` (the corpus min day `d0`). */
+  private val dMnSql =
+    """WITH d AS (
+      |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
+      |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
+      |  FROM events),
+      |mn AS (SELECT MIN(day) AS d0 FROM d),""".stripMargin
+  private def centsSql(cmp: String, name: String): String =
+    s"CAST(SUM(CASE WHEN day $cmp d0 + 15 THEN cents ELSE 0 END) AS BIGINT) AS $name"
+  private val xSql = centsSql("<", "x")
+  private val ySql = centsSql(">=", "y")
+
+  /** Oracle CTE `per`: per-user `cols` and the arm over `d` × `mn`. */
+  private def perSql(cols: String*): String =
+    s"""$dMnSql
+       |per AS (
+       |  SELECT user_id,
+       |    ${cols.mkString(",\n")},
+       |    $armSql AS arm
+       |  FROM d CROSS JOIN mn GROUP BY user_id),""".stripMargin
+
+  /** The same per-user CTE reading `events` directly: `mn`, then `per`. */
+  private val evMnSql =
+    "mn AS (SELECT MIN(epoch_us(ts) // 86400000000) AS d0 FROM events),"
+  private def evCentsSql(cmp: String, name: String): String =
+    s"""CAST(SUM(CASE WHEN epoch_us(ts) // 86400000000 $cmp mn.d0 + 15
+       |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
+       |      AS BIGINT) AS $name""".stripMargin
+  private val evXSql = evCentsSql("<", "x")
+  private val evYSql = evCentsSql(">=", "y")
+  private def evPerSql(cols: String*): String =
+    s"""$evMnSql
+       |per AS (
+       |  SELECT user_id,
+       |    ${cols.mkString(",\n")},
+       |    $armSql AS arm
+       |  FROM events CROSS JOIN mn GROUP BY user_id),""".stripMargin
+
+  /** Oracle CTE `name`: each user's modal event type (ties go to the
+    * lexicographically first), projected as `sel`. */
+  private def modalSql(name: String, sel: String): String =
+    s"""$name AS (
+       |  SELECT user_id, $sel FROM (
+       |    SELECT user_id, event_type,
+       |      ROW_NUMBER() OVER (PARTITION BY user_id
+       |        ORDER BY COUNT(*) DESC, event_type ASC) AS rk
+       |    FROM events GROUP BY user_id, event_type) z
+       |  WHERE rk = 1)""".stripMargin
+
   def oracleSql: Map[String, String] = Map(
     "ab9_winsorized_diff" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM d CROSS JOIN mn GROUP BY user_id),
+      s"""${perSql(ySql)}
          |ranked AS (
          |  SELECT user_id, y, arm,
          |    ROW_NUMBER() OVER (PARTITION BY arm ORDER BY y, user_id)
@@ -1205,19 +1122,7 @@ object ExperimentQueries {
          |    CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE) AS wdiff
          |FROM a0 CROSS JOIN a1""".stripMargin,
     "ab1_cuped" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN day < d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS x,
-         |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM d CROSS JOIN mn GROUP BY user_id),
+      s"""${perSql(xSql, ySql)}
          |pooled AS (
          |  SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
          |    SUM(x * y) AS sxy, SUM(x * x) AS sxx
@@ -1236,17 +1141,7 @@ object ExperimentQueries {
          |     CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) AS mean_y_adjusted
          |FROM by_arm CROSS JOIN pooled""".stripMargin,
     "ab3_diff_in_means" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM d CROSS JOIN mn GROUP BY user_id),
+      s"""${perSql(ySql)}
          |st AS (
          |  SELECT arm, COUNT(*) AS n, SUM(y) AS sy, SUM(y * y) AS syy
          |  FROM per GROUP BY arm),
@@ -1298,17 +1193,7 @@ object ExperimentQueries {
          |  END AS var_delta
          |FROM st""".stripMargin,
     "ab5_power_mde" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM d CROSS JOIN mn GROUP BY user_id),
+      s"""${perSql(ySql)}
          |st AS (
          |  SELECT arm, COUNT(*) AS n, SUM(y) AS sy, SUM(y * y) AS syy
          |  FROM per GROUP BY arm),
@@ -1374,21 +1259,8 @@ object ExperimentQueries {
          |FROM st
          |WINDOW w AS (PARTITION BY arm ORDER BY stage)""".stripMargin,
     "ab7_uplift_by_segment" ->
-      s"""WITH seg AS (
-         |  SELECT user_id, event_type AS segment FROM (
-         |    SELECT user_id, event_type,
-         |      ROW_NUMBER() OVER (PARTITION BY user_id
-         |        ORDER BY COUNT(*) DESC, event_type ASC) AS rk
-         |    FROM events GROUP BY user_id, event_type) z
-         |  WHERE rk = 1),
-         |mn AS (SELECT MIN(epoch_us(ts) // 86400000000) AS d0 FROM events),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN epoch_us(ts) // 86400000000 >= mn.d0 + 15
-         |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM events CROSS JOIN mn GROUP BY user_id),
+      s"""WITH ${modalSql("seg", "event_type AS segment")},
+         |${evPerSql(evYSql)}
          |j AS (SELECT p.y, p.arm, s.segment
          |      FROM per p JOIN seg s USING (user_id)),
          |st AS (
@@ -1414,15 +1286,7 @@ object ExperimentQueries {
          |      CAST(n0 * (n0 - 1) AS DOUBLE) / CAST(n0 AS DOUBLE)) AS z
          |FROM p""".stripMargin,
     "ab13_poisson_bootstrap" ->
-      s"""WITH mn AS (SELECT MIN(epoch_us(ts) // 86400000000) AS d0
-         |           FROM events),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN epoch_us(ts) // 86400000000 >= mn.d0 + 15
-         |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM events CROSS JOIN mn GROUP BY user_id),
+      s"""WITH ${evPerSql(evYSql)}
          |rep AS (
          |  SELECT arm, y, b,
          |    CAST(('0x' || substr(md5('ab13:' ||
@@ -1459,18 +1323,7 @@ object ExperimentQueries {
          |  END AS se_boot_micro
          |FROM diffs""".stripMargin,
     "ab14_qini_curve" ->
-      s"""WITH mn AS (SELECT MIN(epoch_us(ts) // 86400000000) AS d0
-         |           FROM events),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN epoch_us(ts) // 86400000000 < mn.d0 + 15
-         |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
-         |      AS BIGINT) AS x,
-         |    CAST(SUM(CASE WHEN epoch_us(ts) // 86400000000 >= mn.d0 + 15
-         |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM events CROSS JOIN mn GROUP BY user_id),
+      s"""WITH ${evPerSql(evXSql, evYSql)}
          |nn AS (SELECT COUNT(*) AS n_all FROM per),
          |ranked AS (SELECT user_id, x, y, arm,
          |    ROW_NUMBER() OVER (ORDER BY x DESC, user_id) AS rn
@@ -1499,19 +1352,10 @@ object ExperimentQueries {
          |  END AS qini
          |FROM cum""".stripMargin,
     "ab12_ipw_ate" ->
-      """WITH modal AS (
-        |  SELECT user_id, event_type = 'purchase' AS treated FROM (
-        |    SELECT user_id, event_type,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY COUNT(*) DESC, event_type ASC) AS rk
-        |    FROM events GROUP BY user_id, event_type) z
-        |  WHERE rk = 1),
-        |mn AS (SELECT MIN(epoch_us(ts) // 86400000000) AS d0 FROM events),
+      s"""WITH ${modalSql("modal", "event_type = 'purchase' AS treated")},
+        |$evMnSql
         |per AS (
-        |  SELECT user_id, COUNT(*) AS n_ev,
-        |    CAST(SUM(CASE WHEN epoch_us(ts) // 86400000000 >= mn.d0 + 15
-        |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
-        |      AS BIGINT) AS y
+        |  SELECT user_id, COUNT(*) AS n_ev, $evYSql
         |  FROM events CROSS JOIN mn GROUP BY user_id),
         |j AS (
         |  SELECT p.user_id, p.y, m.treated,
@@ -1542,19 +1386,7 @@ object ExperimentQueries {
         |    END AS ate_contrib
         |FROM st CROSS JOIN tot""".stripMargin,
     "ab11_diff_in_diff" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN day < d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS x,
-         |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM d CROSS JOIN mn GROUP BY user_id),
+      s"""${perSql(xSql, ySql)}
          |ba AS (SELECT arm, COUNT(*) AS n, CAST(SUM(x) AS HUGEINT) AS sx,
          |       CAST(SUM(y) AS HUGEINT) AS sy FROM per GROUP BY 1),
          |piv AS (SELECT
@@ -1576,21 +1408,8 @@ object ExperimentQueries {
          |    - CAST(sx0 AS DOUBLE) / CAST(n0 AS DOUBLE)) AS did
          |FROM piv""".stripMargin,
     "ab10_fdr_bh" ->
-      s"""WITH seg AS (
-         |  SELECT user_id, event_type AS segment FROM (
-         |    SELECT user_id, event_type,
-         |      ROW_NUMBER() OVER (PARTITION BY user_id
-         |        ORDER BY COUNT(*) DESC, event_type ASC) AS rk
-         |    FROM events GROUP BY user_id, event_type) z
-         |  WHERE rk = 1),
-         |mn AS (SELECT MIN(epoch_us(ts) // 86400000000) AS d0 FROM events),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN epoch_us(ts) // 86400000000 >= mn.d0 + 15
-         |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM events CROSS JOIN mn GROUP BY user_id),
+      s"""WITH ${modalSql("seg", "event_type AS segment")},
+         |${evPerSql(evYSql)}
          |j AS (SELECT p.y, p.arm, s.segment
          |      FROM per p JOIN seg s USING (user_id)),
          |st AS (
@@ -1663,11 +1482,7 @@ object ExperimentQueries {
          |  diff * diff / se2 > 10.273e0 AS crossed
          |FROM z""".stripMargin,
     "ab21_wilcoxon_signed" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
+      s"""$dMnSql
          |per0 AS (
          |  SELECT user_id,
          |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
@@ -1797,21 +1612,9 @@ object ExperimentQueries {
          |      * (CAST(sd2 AS DOUBLE) / 1e18)) END AS se_jack
          |FROM dev""".stripMargin,
     "ab19_regression_cuped" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN day < d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS x1,
-         |    CAST(SUM(CASE WHEN day < d0 + 15 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS x2,
-         |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM d CROSS JOIN mn GROUP BY user_id),
+      s"""${perSql(centsSql("<", "x1"),
+           "CAST(SUM(CASE WHEN day < d0 + 15 THEN 1 ELSE 0 END) AS BIGINT) AS x2",
+           ySql)}
          |pooled AS (SELECT COUNT(*) AS n,
          |    SUM(CAST(x1 AS HUGEINT)) AS s1,
          |    SUM(CAST(x2 AS HUGEINT)) AS s2,
@@ -1897,17 +1700,7 @@ object ExperimentQueries {
          |    CAST(sa AS DOUBLE) / CAST(sb AS DOUBLE) END AS or_mh
          |FROM c2""".stripMargin,
     "ab15_mann_whitney" ->
-      s"""WITH d AS (
-         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents
-         |  FROM events),
-         |mn AS (SELECT MIN(day) AS d0 FROM d),
-         |per AS (
-         |  SELECT user_id,
-         |    CAST(SUM(CASE WHEN day >= d0 + 15 THEN cents ELSE 0 END)
-         |      AS BIGINT) AS y,
-         |    $armSql AS arm
-         |  FROM d CROSS JOIN mn GROUP BY user_id),
+      s"""${perSql(ySql)}
          |rk AS (
          |  SELECT arm, y, RANK() OVER (ORDER BY y) AS rnk,
          |    COUNT(*) OVER (PARTITION BY y) AS cnt

@@ -564,6 +564,22 @@ object GraphQueries {
     },
   )
 
+  /** Oracle body of the synthetic link graph ([[graft.operators.Graph]]'s
+    * `syntheticLinks`): three out-links per node of `nd`, modulo `nn.n`. */
+  private val linkBodySql =
+    """  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
+      |    FROM nd CROSS JOIN nn
+      |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
+      |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn""".stripMargin
+
+  /** Oracle CTEs `nn` (node count), `nd` (one node per document) and
+    * `name` (the link graph over them). */
+  private def linksSql(name: String): String =
+    s"""nn AS (SELECT COUNT(*) AS n FROM documents),
+       |nd AS (SELECT doc_id AS node FROM documents),
+       |$name AS (
+       |$linkBodySql)""".stripMargin
+
   /** Shared CTE prefix: the synthetic multigraph, out-degrees, and K
     * unrolled integer PageRank iterations (r_0 .. r_K). Mirrors
     * [[graft.operators.Graph]] literally — `//` (DuckDB) and `div`
@@ -582,13 +598,7 @@ object GraphQueries {
          |    JOIN od ON e.src = od.src
          |    GROUP BY e.dst) s ON nd.node = s.node)""".stripMargin
     }.mkString(",\n")
-    s"""nn AS (SELECT COUNT(*) AS n FROM documents),
-       |nd AS (SELECT doc_id AS node FROM documents),
-       |edges AS (
-       |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-       |    FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+    s"""${linksSql("edges")},
        |od AS (SELECT src, COUNT(*) AS od FROM edges GROUP BY src),
        |r_0 AS (SELECT node, ($scale // nn.n) AS r FROM nd CROSS JOIN nn),
        |$iterCtes""".stripMargin
@@ -614,10 +624,7 @@ object GraphQueries {
     s"""nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM documents),
        |nd AS MATERIALIZED (SELECT doc_id AS node FROM documents),
        |raw AS (
-       |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-       |    FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+       |$linkBodySql),
        |e_0 AS MATERIALIZED (
        |  SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
        |  FROM raw WHERE src <> dst),
@@ -670,10 +677,7 @@ object GraphQueries {
     s"""WITH nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM documents),
        |nd AS MATERIALIZED (SELECT doc_id AS node FROM documents),
        |raw AS (
-       |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-       |    FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+       |$linkBodySql),
        |e_0 AS MATERIALIZED (
        |  SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
        |  FROM raw WHERE src <> dst),
@@ -695,12 +699,7 @@ object GraphQueries {
     s"""nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM embeddings),
        |nd AS MATERIALIZED (SELECT vec_id AS node, label FROM embeddings),
        |raw AS (
-       |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-       |    FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 13 + 1) % nn.n
-       |    FROM nd CROSS JOIN nn
-       |  UNION ALL SELECT node, (node * 31 + 2) % nn.n
-       |    FROM nd CROSS JOIN nn),
+       |$linkBodySql),
        |sym AS MATERIALIZED (
        |  SELECT src, dst FROM (
        |    SELECT src, dst FROM raw
@@ -763,15 +762,7 @@ object GraphQueries {
         |  CAST(h_2.h AS BIGINT) AS hub
         |FROM a_2 JOIN h_2 USING (node)""".stripMargin,
     "gr10_neighborhood_jaccard" ->
-      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |raw AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n
-        |    FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("raw")},
         |ue AS MATERIALIZED (
         |  SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
         |  FROM raw WHERE src <> dst),
@@ -799,15 +790,7 @@ object GraphQueries {
         |FROM pairs pr JOIN deg dp ON pr.p = dp.node
         |              JOIN deg dq ON pr.q = dq.node""".stripMargin,
     "gr9_link_predict" ->
-      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |raw AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n
-        |    FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("raw")},
         |ue AS MATERIALIZED (
         |  SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
         |  FROM raw WHERE src <> dst),
@@ -930,13 +913,7 @@ object GraphQueries {
          |    AS DOUBLE) / CAST(4 * mm.m * mm.m AS DOUBLE) AS q_contrib
          |FROM cdeg c LEFT JOIN cin i ON c.lab = i.lab CROSS JOIN mm""".stripMargin,
     "gr6_bfs_hops" ->
-      """WITH RECURSIVE nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |edges AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+      s"""WITH RECURSIVE ${linksSql("edges")},
         |walk(node, d) AS (
         |  SELECT CAST(0 AS BIGINT) AS node, 0 AS d
         |  UNION
@@ -1008,13 +985,7 @@ object GraphQueries {
            |    JOIN od ON e.src = od.src
            |    GROUP BY e.dst) s ON nds.node = s.node)""".stripMargin
       }.mkString(",\n")
-      s"""WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-         |nd AS (SELECT doc_id AS node FROM documents),
-         |edges AS (
-         |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-         |    FROM nd CROSS JOIN nn
-         |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-         |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("edges")},
          |od AS (SELECT src, COUNT(*) AS od FROM edges GROUP BY src),
          |sd AS (SELECT DISTINCT doc_id AS node FROM documents
          |       WHERE doc_id % 50 = 0),
@@ -1042,13 +1013,7 @@ object GraphQueries {
          |LEFT JOIN outdeg o ON r.node = o.node""".stripMargin,
     "gr24_ktruss" -> ktrussSql(rounds = 3, k = 3),
     "gr4_triangles" ->
-      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |raw AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("raw")},
         |ue AS (SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
         |       FROM raw WHERE src <> dst),
         |deg AS (SELECT node, COUNT(*) AS d FROM (
@@ -1110,13 +1075,7 @@ object GraphQueries {
         |  WHERE d.doc_id >= 10)
         |SELECT node, root_id, depth FROM t""".stripMargin,
     "gr15_harmonic" ->
-      """WITH RECURSIVE nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |edges AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+      s"""WITH RECURSIVE ${linksSql("edges")},
         |walk(root, node, d) AS (
         |  SELECT CAST(r AS BIGINT), CAST(r AS BIGINT), 0
         |  FROM range(0, 4) t(r)
@@ -1129,15 +1088,7 @@ object GraphQueries {
         |  CAST(COUNT(*) AS BIGINT) AS n_reached_from
         |FROM md WHERE hops > 0 GROUP BY node""".stripMargin,
     "gr22_adamic_adar" ->
-      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |raw AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n
-        |    FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("raw")},
         |e AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
         |      FROM raw WHERE src <> dst),
         |adj AS (SELECT u AS node, v AS nb FROM e
@@ -1160,13 +1111,7 @@ object GraphQueries {
         |  AND NOT EXISTS (SELECT 1 FROM e
         |    WHERE e.u = pairs.a AND e.v = pairs.b)""".stripMargin,
     "gr19_local_clustering" ->
-      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |raw AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("raw")},
         |e AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
         |      FROM raw WHERE src <> dst),
         |deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
@@ -1194,13 +1139,7 @@ object GraphQueries {
            |    AND er.rn = CAST(('0x' || substr(md5('rw' ||
            |      w.walk_id || '_$i'), 1, 15)) AS BIGINT) % er.deg + 1)"""
           .stripMargin
-      s"""WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-         |nd AS (SELECT doc_id AS node FROM documents),
-         |edges AS (
-         |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-         |    FROM nd CROSS JOIN nn
-         |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-         |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("edges")},
          |e AS (SELECT DISTINCT src, dst FROM edges),
          |er AS (SELECT src, dst,
          |         ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) AS rn,
@@ -1216,13 +1155,7 @@ object GraphQueries {
          |UNION ALL SELECT walk_id, step, node FROM w4""".stripMargin
     },
     "gr17_two_hop_reach" ->
-      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-        |nd AS (SELECT doc_id AS node FROM documents),
-        |edges AS (
-        |  SELECT node AS src, (node * 7 + 0) % nn.n AS dst
-        |    FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 13 + 1) % nn.n FROM nd CROSS JOIN nn
-        |  UNION ALL SELECT node, (node * 31 + 2) % nn.n FROM nd CROSS JOIN nn),
+      s"""WITH ${linksSql("edges")},
         |e AS (SELECT DISTINCT src, dst FROM edges),
         |two AS (SELECT a.src, b.dst FROM e a JOIN e b ON a.dst = b.src),
         |r AS (SELECT src, dst FROM e UNION SELECT src, dst FROM two)

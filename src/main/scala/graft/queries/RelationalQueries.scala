@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
+import Det.d38
 
 /** Scan / projection / filter / join / aggregation operators from
   * SURVEY.md §2.A-§2.D, re-expressed over the harness star schema.
@@ -15,6 +16,20 @@ import graft.core.Tables
   */
 object RelationalQueries {
   import Det._
+
+  /** Orders ranked by whole-dollar price `v` (ties by o_orderkey) within
+    * their priority `grp`: row number `rn`, and the priority's size as
+    * `size`, from GlobalRank's grouped two-pass (range-partitioned, never
+    * a window over the few-valued priority). */
+  private def priorityRanks(s: SparkSession, dir: String,
+                            size: String): DataFrame = {
+    val o = Tables.orders(s, dir)
+      .select(col("o_orderpriority").as("grp"), col("o_orderkey"),
+        expr("cast(round(o_totalprice) as bigint)").as("v"))
+    graft.operators.GlobalRank.withGroupedRowNumber(o,
+      group = Seq("grp"), order = Seq(col("v"), col("o_orderkey")),
+      out = "rn", nOut = Some(size))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A3: partition/predicate-pruned scan. The reference bakes pruning into
@@ -642,7 +657,6 @@ object RelationalQueries {
     // safe to plan skewed self-joins with.
     "prof5_join_size_sketch" -> { (s, dir) =>
       import graft.functions.HashExpressions.md5Prefix60
-      val d38 = DecimalType(38, 0)
       def audit(df: DataFrame, keyName: String): DataFrame = {
         val per = df.groupBy(col(keyName).cast("string").as("k"))
           .agg(count(lit(1)).as("c"))
@@ -886,7 +900,6 @@ object RelationalQueries {
     // areas; one rollup per layout.
     "z6_hilbert_vs_morton" -> { (s, dir) =>
       import graft.operators.ZOrder
-      val d38 = DecimalType(38, 0)
       val span = 1048576L / 28 + 1 // ceil(2^20 / 28) index values/file
       val base = Tables.orders(s, dir)
         .select(col("o_orderkey"), (col("o_custkey") % 1024).as("zx"),
@@ -1167,7 +1180,6 @@ object RelationalQueries {
     // order-free integer; cells are the contingency table — metadata
     // after one count shuffle.
     "d36_chi2_independence" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val cells = Tables.orders(s, dir)
         .groupBy(col("o_orderstatus").as("a"),
           col("o_orderpriority").as("b"))
@@ -1249,7 +1261,6 @@ object RelationalQueries {
     // aggregate + one metadata-grain reduce — the "is this dimension
     // worth partitioning on" screen at any scale.
     "d29_anova" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       // whole-dollar units keep every quantized ratio inside int64
       // headroom (~1e17 at sf0.1); the ≤1-unit floor error per group is
       // negligible against ~1e16 sums and identical in both engines
@@ -1290,7 +1301,6 @@ object RelationalQueries {
     // the corpus-cardinality y side uses GlobalRank's grouped two-pass
     // (see the asymmetry note at the rank passes below).
     "d41_spearman_by_group" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val li = Tables.lineitem(s, dir).select(col("l_returnflag").as("g"),
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast("bigint").as("x"),
@@ -1434,7 +1444,6 @@ object RelationalQueries {
     // single-float contract). One map-side-combined rollup, no second
     // pass.
     "d61_generalized_means" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val li = Tables.spread(Tables.lineitem(s, dir))
         .select(col("l_returnflag").as("grp"),
           expr("cast(round(l_extendedprice * 100) as bigint)").as("cents"))
@@ -1460,7 +1469,6 @@ object RelationalQueries {
     // decimal(38,0) sums in one map-side-combined pass and the slope is
     // one fixed IEEE tree. Nothing shuffles except the 1-row aggregate.
     "d45_price_elasticity" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val li = Tables.lineitem(s, dir)
         .select(col("l_quantity").cast("bigint").as("q"),
           expr("cast(floor(l_extendedprice * 100) as bigint)")
@@ -1503,7 +1511,6 @@ object RelationalQueries {
     // end. Grid and windows are metadata-grain (classes × ~12 bands);
     // the corpus is touched once for the two band rollups.
     "dq7_t_closeness" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val c = Tables.customer(s, dir).select(col("c_nationkey"),
         col("c_mktsegment"),
         expr("cast(floor(c_acctbal / 1000.0e0) as bigint)").as("band"))
@@ -1559,7 +1566,6 @@ object RelationalQueries {
     // both engines walk the identical IEEE tree. Tie correction
     // 1 − Σ(t³−t)/(N³−N) from a cents-grain rollup.
     "d46_kruskal_wallis" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val o = Tables.orders(s, dir).select(
         col("o_orderpriority").as("grp"), col("o_orderkey"),
         expr("cast(floor(o_totalprice * 100) as bigint)").as("cents"))
@@ -1627,7 +1633,6 @@ object RelationalQueries {
     // (the cross-row float contract); one map-side-combined cell
     // rollup, margins broadcast back.
     "d53_cramers_v" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val cells = Tables.orders(s, dir)
         .groupBy(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("o"))
@@ -1672,13 +1677,7 @@ object RelationalQueries {
     // identities. One rank pass + one metadata-grain broadcast + one
     // aggregate.
     "d54_levene" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val o = Tables.orders(s, dir)
-        .select(col("o_orderpriority").as("grp"), col("o_orderkey"),
-          expr("cast(round(o_totalprice) as bigint)").as("v"))
-      val ranked = graft.operators.GlobalRank.withGroupedRowNumber(o,
-        group = Seq("grp"), order = Seq(col("v"), col("o_orderkey")),
-        out = "rn", nOut = Some("ng"))
+      val ranked = priorityRanks(s, dir, "ng")
       // med2 = lo + hi middle order statistics (equal when ng is odd):
       // the doubled median, exact in whole-dollar integers
       val meds = ranked
@@ -1721,7 +1720,6 @@ object RelationalQueries {
     // a diagnostic otherwise — the unbalanced Type-II fit needs a
     // regression, which is ml6/ab19 territory). Whole-dollar units.
     "d55_two_way_anova" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val li = Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("a"), col("l_linestatus").as("b"),
           expr("cast(round(l_extendedprice) as bigint)").as("v"))
@@ -1765,13 +1763,7 @@ object RelationalQueries {
     // t = ⌊n·5/100⌋, then exact integer sums (whole dollars; means by
     // nonneg integer div — identical truncation in both engines).
     "d60_trimmed_mean" -> { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(col("o_orderpriority").as("grp"), col("o_orderkey"),
-          expr("cast(round(o_totalprice) as bigint)").as("v"))
-      val ranked = graft.operators.GlobalRank.withGroupedRowNumber(o,
-          group = Seq("grp"),
-          order = Seq(col("v"), col("o_orderkey")),
-          out = "rn", nOut = Some("n"))
+      val ranked = priorityRanks(s, dir, "n")
         .withColumn("t", expr("n * 5 div 100"))
       ranked.groupBy("grp")
         .agg(max(col("n")).as("n"), max(col("t") * 2).as("n_trimmed"),
@@ -1791,13 +1783,7 @@ object RelationalQueries {
     // only, clamped into [1, n]. med2 is the exact doubled median
     // (integer — equal halves when n is odd).
     "d59_median_ci" -> { (s, dir) =>
-      val o = Tables.orders(s, dir)
-        .select(col("o_orderpriority").as("grp"), col("o_orderkey"),
-          expr("cast(round(o_totalprice) as bigint)").as("v"))
-      val ranked = graft.operators.GlobalRank.withGroupedRowNumber(o,
-          group = Seq("grp"),
-          order = Seq(col("v"), col("o_orderkey")),
-          out = "rn", nOut = Some("n"))
+      val ranked = priorityRanks(s, dir, "n")
         .withColumn("lo_rk", greatest(lit(1L),
           floor((col("n").cast("double") -
             lit(1.96) * sqrt(col("n").cast("double"))) / lit(2.0))
@@ -1830,7 +1816,6 @@ object RelationalQueries {
     // decimal(38,0) sufficient statistics as d29, one IEEE tree per
     // group; degenerate groups (n ≤ 1 or zero variance) emit NULL.
     "d57_gamma_moments" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val st = Tables.orders(s, dir)
         .select(col("o_orderpriority").as("grp"),
           expr("cast(round(o_totalprice) as bigint)").as("v"))
@@ -1859,7 +1844,6 @@ object RelationalQueries {
     // |F₁−F₂| cross-multiplied by n₂·n₁ — one division at the end, and
     // the α=0.05 decision compares two micro integers.
     "d52_ks_two_sample" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val o = Tables.orders(s, dir)
         .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(expr("cast(round(o_totalprice) as bigint)").as("dollar"),
@@ -1909,7 +1893,6 @@ object RelationalQueries {
     // cell; past that, pre-scale the cum counts (the d46 playbook).
     // Asymptotic 5% critical value for T is 0.461 (Anderson 1962).
     "d58_cvm_two_sample" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val o = Tables.orders(s, dir)
         .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(expr("cast(round(o_totalprice) as bigint)").as("dollar"),
@@ -1947,7 +1930,6 @@ object RelationalQueries {
     },
 
     "d48_jarque_bera" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val o = Tables.orders(s, dir).select(
         col("o_orderpriority").as("grp"),
         expr("cast(round(o_totalprice) as bigint)").as("x"))
@@ -2021,7 +2003,6 @@ object RelationalQueries {
     // numerator uses FLOOR on a double (never integer div — engines
     // disagree on flooring vs truncation there).
     "d43_theil_decomposition" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val o = Tables.orders(s, dir)
         .select(col("o_orderpriority").as("priority"),
           expr("cast(floor(o_totalprice * 100) as bigint)").as("cents"))
@@ -2133,6 +2114,46 @@ object RelationalQueries {
       rows.toDF("lo", "hi", "band")
     }
   }
+
+  /** Oracle CTEs `o` (each order's priority `grp` and whole-dollar
+    * price `v`) and `rk` (its row number `rn` by price within the
+    * priority, and the priority's size as `size`). */
+  private def priorityRankSql(size: String): String =
+    s"""o AS (SELECT o_orderpriority AS grp, o_orderkey,
+       |    CAST(round(o_totalprice) AS BIGINT) AS v FROM orders),
+       |rk AS (SELECT grp, v,
+       |    ROW_NUMBER() OVER (PARTITION BY grp
+       |      ORDER BY v, o_orderkey) AS rn,
+       |    COUNT(*) OVER (PARTITION BY grp) AS $size FROM o)""".stripMargin
+
+  /** Oracle CTEs over names `nm (id, s)`: `lg` (each name's distinct
+    * 4-grams `g`) and `keep` (the grams at most 50 names share, the
+    * blocking keys). */
+  private val blockSql =
+    """lg AS (SELECT id, s, unnest(list_distinct(list_transform(
+      |  range(1, greatest(length(s) - 3, 1) + 1),
+      |  i -> substr(s, CAST(i AS INTEGER), 4)))) AS g FROM nm),
+      |keep AS (SELECT g FROM (SELECT g FROM lg UNION ALL SELECT g FROM lg)
+      |         GROUP BY g HAVING COUNT(*) <= 50)""".stripMargin
+
+  /** Oracle CTEs from the customer names to `comp (node, component)`:
+    * blocked candidate pairs within edit distance 2, closed transitively
+    * (needs WITH RECURSIVE); a component is its smallest custkey. */
+  private val componentsSql =
+    s"""nm AS (
+       |  SELECT c_custkey AS id, c_name AS s FROM customer),
+       |$blockSql,
+       |cand AS (SELECT DISTINCT a.id AS lid, a.s AS lstr,
+       |                b.id AS rid, b.s AS rstr
+       |         FROM lg a JOIN keep USING (g) JOIN lg b USING (g)),
+       |pairs AS (SELECT lid AS a, rid AS b FROM cand
+       |          WHERE lid < rid AND levenshtein(lstr, rstr) <= 2),
+       |edges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
+       |lbl(node, l) AS (
+       |  SELECT a, a FROM edges
+       |  UNION
+       |  SELECT e.a, lbl.l FROM edges e JOIN lbl ON e.b = lbl.node),
+       |comp AS (SELECT node, MIN(l) AS component FROM lbl GROUP BY node)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "a3_pruned_scan" ->
@@ -2653,24 +2674,7 @@ object RelationalQueries {
         |    AS BIGINT) AS bin
         |FROM f""".stripMargin,
     "er1_entity_resolution" ->
-      """WITH RECURSIVE nm AS (
-        |  SELECT c_custkey AS id, c_name AS s FROM customer),
-        |lg AS (SELECT id, s, unnest(list_distinct(list_transform(
-        |  range(1, greatest(length(s) - 3, 1) + 1),
-        |  i -> substr(s, CAST(i AS INTEGER), 4)))) AS g FROM nm),
-        |keep AS (SELECT g FROM (SELECT g FROM lg UNION ALL SELECT g FROM lg)
-        |         GROUP BY g HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.id AS lid, a.s AS lstr,
-        |                b.id AS rid, b.s AS rstr
-        |         FROM lg a JOIN keep USING (g) JOIN lg b USING (g)),
-        |pairs AS (SELECT lid AS a, rid AS b FROM cand
-        |          WHERE lid < rid AND levenshtein(lstr, rstr) <= 2),
-        |edges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
-        |lbl(node, l) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, lbl.l FROM edges e JOIN lbl ON e.b = lbl.node),
-        |comp AS (SELECT node, MIN(l) AS component FROM lbl GROUP BY node)
+      s"""WITH RECURSIVE $componentsSql
         |SELECT c.c_custkey, c.c_name,
         |  COALESCE(p.component, c.c_custkey) AS entity_id
         |FROM customer c LEFT JOIN comp p ON c.c_custkey = p.node""".stripMargin,
@@ -2718,24 +2722,7 @@ object RelationalQueries {
         |  FROM lineitem GROUP BY 1, 2) t
         |WHERE rn = 1""".stripMargin,
     "er4_cluster_audit" ->
-      """WITH RECURSIVE nm AS (
-        |  SELECT c_custkey AS id, c_name AS s FROM customer),
-        |lg AS (SELECT id, s, unnest(list_distinct(list_transform(
-        |  range(1, greatest(length(s) - 3, 1) + 1),
-        |  i -> substr(s, CAST(i AS INTEGER), 4)))) AS g FROM nm),
-        |keep AS (SELECT g FROM (SELECT g FROM lg UNION ALL SELECT g FROM lg)
-        |         GROUP BY g HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.id AS lid, a.s AS lstr,
-        |                b.id AS rid, b.s AS rstr
-        |         FROM lg a JOIN keep USING (g) JOIN lg b USING (g)),
-        |pairs AS (SELECT lid AS a, rid AS b FROM cand
-        |          WHERE lid < rid AND levenshtein(lstr, rstr) <= 2),
-        |edges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
-        |lbl(node, l) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, lbl.l FROM edges e JOIN lbl ON e.b = lbl.node),
-        |comp AS (SELECT node, MIN(l) AS component FROM lbl GROUP BY node),
+      s"""WITH RECURSIVE $componentsSql,
         |mem AS (SELECT p.component, c.c_custkey AS id, c.c_name AS nmv
         |        FROM comp p JOIN customer c ON c.c_custkey = p.node),
         |capped AS (SELECT component, id, nmv FROM (
@@ -2752,13 +2739,9 @@ object RelationalQueries {
         |SELECT sz.component, sz.n_members, mx.max_intra_dist
         |FROM sz JOIN mx USING (component)""".stripMargin,
     "er3_blocking_eval" ->
-      """WITH nm AS (SELECT c_custkey AS id, c_name AS s FROM customer
+      s"""WITH nm AS (SELECT c_custkey AS id, c_name AS s FROM customer
         |            WHERE c_custkey % 37 = 0),
-        |lg AS (SELECT id, s, unnest(list_distinct(list_transform(
-        |  range(1, greatest(length(s) - 3, 1) + 1),
-        |  i -> substr(s, CAST(i AS INTEGER), 4)))) AS g FROM nm),
-        |keep AS (SELECT g FROM (SELECT g FROM lg UNION ALL SELECT g FROM lg)
-        |         GROUP BY g HAVING COUNT(*) <= 50),
+        |$blockSql,
         |candp AS (SELECT DISTINCT a.id AS lid, b.id AS rid
         |          FROM lg a JOIN keep USING (g) JOIN lg b USING (g)
         |          WHERE a.id < b.id),
@@ -2790,12 +2773,8 @@ object RelationalQueries {
         |  COUNT(*) >= 15 AS k_anonymous
         |FROM customer GROUP BY 1, 2""".stripMargin,
     "er2_fellegi_sunter" ->
-      """WITH nm AS (SELECT c_custkey AS id, c_name AS s FROM customer),
-        |lg AS (SELECT id, s, unnest(list_distinct(list_transform(
-        |  range(1, greatest(length(s) - 3, 1) + 1),
-        |  i -> substr(s, CAST(i AS INTEGER), 4)))) AS g FROM nm),
-        |keep AS (SELECT g FROM (SELECT g FROM lg UNION ALL SELECT g FROM lg)
-        |         GROUP BY g HAVING COUNT(*) <= 50),
+      s"""WITH nm AS (SELECT c_custkey AS id, c_name AS s FROM customer),
+        |$blockSql,
         |cand AS (SELECT DISTINCT a.id AS lid, a.s AS lstr,
         |                b.id AS rid, b.s AS rstr
         |         FROM lg a JOIN keep USING (g) JOIN lg b USING (g)),
@@ -3070,12 +3049,7 @@ object RelationalQueries {
         |  END AS cramers_v
         |FROM agg""".stripMargin,
     "d54_levene" ->
-      """WITH o AS (SELECT o_orderpriority AS grp, o_orderkey,
-        |    CAST(round(o_totalprice) AS BIGINT) AS v FROM orders),
-        |rk AS (SELECT grp, v,
-        |    ROW_NUMBER() OVER (PARTITION BY grp
-        |      ORDER BY v, o_orderkey) AS rn,
-        |    COUNT(*) OVER (PARTITION BY grp) AS ng FROM o),
+      s"""WITH ${priorityRankSql("ng")},
         |meds AS (SELECT grp,
         |    MIN(CASE WHEN rn = (ng + 1) // 2 THEN v END) +
         |    MIN(CASE WHEN rn = (ng + 2) // 2 THEN v END) AS med2
@@ -3145,12 +3119,7 @@ object RelationalQueries {
         |  END AS f_cells
         |FROM fin""".stripMargin,
     "d60_trimmed_mean" ->
-      """WITH o AS (SELECT o_orderpriority AS grp, o_orderkey,
-        |    CAST(round(o_totalprice) AS BIGINT) AS v FROM orders),
-        |rk AS (SELECT grp, v,
-        |    ROW_NUMBER() OVER (PARTITION BY grp
-        |      ORDER BY v, o_orderkey) AS rn,
-        |    COUNT(*) OVER (PARTITION BY grp) AS n FROM o),
+      s"""WITH ${priorityRankSql("n")},
         |rk2 AS (SELECT grp, v, rn, n, n * 5 // 100 AS t FROM rk)
         |SELECT grp, CAST(MAX(n) AS BIGINT) AS n,
         |  CAST(MAX(t * 2) AS BIGINT) AS n_trimmed,
@@ -3160,12 +3129,7 @@ object RelationalQueries {
         |      THEN 1 ELSE 0 END), 0) AS BIGINT) AS trimmed_mean_dollars
         |FROM rk2 GROUP BY 1""".stripMargin,
     "d59_median_ci" ->
-      """WITH o AS (SELECT o_orderpriority AS grp, o_orderkey,
-        |    CAST(round(o_totalprice) AS BIGINT) AS v FROM orders),
-        |rk AS (SELECT grp, v,
-        |    ROW_NUMBER() OVER (PARTITION BY grp
-        |      ORDER BY v, o_orderkey) AS rn,
-        |    COUNT(*) OVER (PARTITION BY grp) AS n FROM o),
+      s"""WITH ${priorityRankSql("n")},
         |rk2 AS (SELECT grp, v, rn, n,
         |    greatest(1, CAST(FLOOR((CAST(n AS DOUBLE) -
         |      1.96e0 * sqrt(CAST(n AS DOUBLE))) / 2.0e0) AS BIGINT))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
 import graft.operators.{ChangeCapture, Retrieval, Sampling, Scoring, TextAnalysis}
+import Det.{d38, normSql, quantized}
 
 /** Model-scoring, evaluation, normalization, and change-capture operators
   * exposed to the oracle harness — the "score, evaluate, diff" tier of a
@@ -17,13 +18,57 @@ import graft.operators.{ChangeCapture, Retrieval, Sampling, Scoring, TextAnalysi
   */
 object ScoringQueries {
 
-  private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
   /** DuckDB fragment matching [[graft.operators.Scoring.hashedLinearScore]]'s
     * per-token weight: md5-60-bit bucket mod 64 through the integer weight
     * formula. */
   private val weightSql =
     "((CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) % 64) * 37) % 21 - 10"
+
+  /** Oracle CTE `sc`: every document's hashed linear score by doc_id;
+    * the labelled form carries `label` (lang is 'en') instead. */
+  private val scoreSql =
+    s"""sc AS (
+       |  SELECT doc_id,
+       |    CAST(-3 + list_sum(list_transform(toks, t ->
+       |      $weightSql)) AS BIGINT) AS score
+       |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks
+       |        FROM documents))""".stripMargin
+  private val labelledScoreSql =
+    s"""sc AS (
+       |  SELECT CAST(-3 + list_sum(list_transform(toks, t ->
+       |      $weightSql)) AS BIGINT) AS score,
+       |    label
+       |  FROM (SELECT string_split($normSql, ' ') AS toks,
+       |        lang = 'en' AS label FROM documents))""".stripMargin
+
+  /** Oracle CTEs `e` (each vector's first 16 lanes, micro-quantized, as
+    * the list `qv`) and `l` (one row per lane, its index cast to
+    * `iType`). */
+  private def laneSql(iType: String): String =
+    s"""e AS (
+       |  SELECT vec_id, list_transform(embedding[1:16],
+       |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
+       |  FROM embeddings),
+       |l AS (
+       |  SELECT vec_id, CAST(i AS $iType) AS i,
+       |    qv[CAST(i + 1 AS INTEGER)] AS q
+       |  FROM e, unnest(range(0, 16)) AS t(i))""".stripMargin
+
+  /** Every document's hashed linear score joined to its `label`
+    * (lang is 'en'). */
+  private def labelledScores(s: SparkSession, dir: String): DataFrame = {
+    val d = Tables.spread(Tables.documents(s, dir))
+    Scoring.hashedLinearScore(d)
+      .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
+        "doc_id")
+  }
+
+  /** The first 16 embedding lanes of every vector, micro-quantized, as
+    * (vec_id, lane `i`, value `q`). */
+  private def laneValues(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), posexplode(
+        quantized(slice(col("embedding"), 1, 16))).as(Seq("i", "q")))
 
   private val tfidfTerms: Seq[String] = Seq("dup", "key", "the", "batch")
 
@@ -280,10 +325,7 @@ object ScoringQueries {
     // lang='en' label: distinct-score aggregation first (map-side
     // combined), then the cumulative window over score-cardinality rows.
     "ml2_threshold_sweep" -> { (s, dir) =>
-      val d = Tables.spread(Tables.documents(s, dir))
-      val labeled = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val labeled = labelledScores(s, dir)
       Scoring.thresholdSweep(labeled)
     },
 
@@ -299,12 +341,7 @@ object ScoringQueries {
     // (dim² bounded by model width, not corpus), map-side-combined into
     // the 136-cell rollup.
     "fe18_feature_covariance" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val lanes = Tables.embeddings(s, dir)
-        .select(col("vec_id"), posexplode(transform(
-          slice(col("embedding"), 1, 16),
-          x => floor(x.cast("double") * 1000000).cast("long")))
-          .as(Seq("i", "q")))
+      val lanes = laneValues(s, dir)
       val pairs = lanes.as("a").join(lanes.as("b"),
           col("a.vec_id") === col("b.vec_id") && col("a.i") <= col("b.i"))
         .select(col("a.i").as("i"), col("b.i").as("j"),
@@ -351,7 +388,6 @@ object ScoringQueries {
     // both features stack into ONE corpus pass (Expand), then all
     // rollups are category-grain.
     "fe23_mi_relevance" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val d = Tables.spread(Tables.documents(s, dir)).select(
         expr("stack(2, 'source', source, 'lang', lang)")
           .as(Seq("feature", "v")),
@@ -429,12 +465,7 @@ object ScoringQueries {
     // the one corpus moment-rollup is free. Lanes with no strong
     // partner are their own group.
     "fe20_redundancy_groups" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val lanes = Tables.embeddings(s, dir)
-        .select(col("vec_id"), posexplode(transform(
-          slice(col("embedding"), 1, 16),
-          x => floor(x.cast("double") * 1000000).cast("long")))
-          .as(Seq("i", "q")))
+      val lanes = laneValues(s, dir)
       val st = lanes.as("a").join(lanes.as("b"),
           col("a.vec_id") === col("b.vec_id") && col("a.i") < col("b.i"))
         .select(col("a.i").as("i"), col("b.i").as("j"),
@@ -476,12 +507,7 @@ object ScoringQueries {
     // decimal(38,0)/HUGEINT — both engines replay the identical four
     // rounds bit for bit (gr1/ev48's unrolled-iteration contract).
     "fe19_pca_direction" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val lanes = Tables.embeddings(s, dir)
-        .select(col("vec_id"), posexplode(transform(
-          slice(col("embedding"), 1, 16),
-          x => floor(x.cast("double") * 1000000).cast("long")))
-          .as(Seq("i", "q")))
+      val lanes = laneValues(s, dir)
       val st = lanes.as("a").join(lanes.as("b"),
           col("a.vec_id") === col("b.vec_id"))
         .select(col("a.i").as("i"), col("b.i").as("j"),
@@ -544,10 +570,7 @@ object ScoringQueries {
     // quotient (Spark's integer `div` truncates toward zero, DuckDB's `//`
     // floors — they disagree on negative scores, the double floor doesn't).
     "ml3_calibration" -> { (s, dir) =>
-      val d = Tables.spread(Tables.documents(s, dir))
-      Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      labelledScores(s, dir)
         .groupBy(floor(col("score") / lit(4.0)).cast("bigint").as("bin"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("label"), 1L).otherwise(0L)).as("npos"))
@@ -567,10 +590,7 @@ object ScoringQueries {
     // the per-bin rollup is one map-side-combined shuffle, the summary is
     // bin-count-sized.
     "ml15_ece" -> { (s, dir) =>
-      val d = Tables.spread(Tables.documents(s, dir))
-      val binned = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val binned = labelledScores(s, dir)
         .select(col("score"), col("label"),
           expr("least(1000000L, greatest(0L, (score + 20) * 1000000 div 40))")
             .as("conf_micro"))
@@ -595,10 +615,7 @@ object ScoringQueries {
     // (N·(n11+n00) − Σ marginal products) / (N² − Σ marginal products),
     // so both engines produce the identical double.
     "ml16_cohens_kappa" -> { (s, dir) =>
-      val d = Tables.spread(Tables.documents(s, dir))
-      val cells = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val cells = labelledScores(s, dir)
         .agg(
           sum(when(col("keep") && col("label"), 1L).otherwise(0L))
             .as("n11"),
@@ -633,7 +650,6 @@ object ScoringQueries {
     // domain bounded by construction): doubled tie-aware contributions
     // stay exact integers, one division per readout.
     "ml21_xauc" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val d = Tables.spread(Tables.documents(s, dir))
       val labeled = Scoring.hashedLinearScore(d)
         .join(d.select(col("doc_id"), (col("lang") === "en").as("en"),
@@ -680,10 +696,7 @@ object ScoringQueries {
     },
 
     "ml4_auc" -> { (s, dir) =>
-      val d = Tables.spread(Tables.documents(s, dir))
-      val labeled = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val labeled = labelledScores(s, dir)
       val byScore = labeled.groupBy(col("score"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("label"), 1L).otherwise(0L)).as("npos"))
@@ -754,10 +767,7 @@ object ScoringQueries {
     // |cum_pos·N⁻ − cum_neg·N⁺| — order-free, no float CDFs compared;
     // the one division happens after the max.
     "ml10_ks_stat" -> { (s, dir) =>
-      val d = Tables.spread(Tables.documents(s, dir))
-      val labeled = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val labeled = labelledScores(s, dir)
       val byScore = labeled.groupBy(col("score"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("label"), 1L).otherwise(0L)).as("npos"))
@@ -793,10 +803,7 @@ object ScoringQueries {
     // past that the term moves to decimal(38,0), same as tx20's sums.)
     "ml8_average_precision" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val d = Tables.spread(Tables.documents(s, dir))
-      val labeled = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val labeled = labelledScores(s, dir)
         .select(col("doc_id"), col("score"), col("label"))
       val ranked = GlobalRank.withGlobalRowNumber(labeled,
         Seq(-col("score"), col("doc_id")), "rn")
@@ -1345,10 +1352,7 @@ object ScoringQueries {
     // identical curves.
     "ml12_decile_lift" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      val d = Tables.spread(Tables.documents(s, dir))
-      val labeled = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val labeled = labelledScores(s, dir)
         .select(col("doc_id"), col("score"), col("label"))
       val n = labeled.count()
       val ranked = GlobalRank.withGlobalRowNumber(
@@ -1382,11 +1386,7 @@ object ScoringQueries {
     // pass 2^63), summed order-free, divided once. Brier = REL − RES +
     // UNC holds up to quantization (each side also reported).
     "ml13_brier_decomposition" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
-      val d = Tables.spread(Tables.documents(s, dir))
-      val sc = Scoring.hashedLinearScore(d)
-        .join(d.select(col("doc_id"), (col("lang") === "en").as("label")),
-          "doc_id")
+      val sc = labelledScores(s, dir)
         .select(expr("least(greatest(score + 16, 0), 32)").as("s"),
           col("label"))
       val per = sc.groupBy("s").agg(count(lit(1)).as("nk"),
@@ -1536,12 +1536,7 @@ object ScoringQueries {
          |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks
          |        FROM documents))""".stripMargin,
     "ml20_fairness_audit" ->
-      s"""WITH sc AS (
-         |  SELECT doc_id,
-         |    CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score
-         |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks
-         |        FROM documents)),
+      s"""WITH $scoreSql,
          |lab AS (SELECT doc_id, lang, length(text) >= 100 AS hq
          |        FROM documents),
          |d AS (SELECT sc.doc_id, score >= 0 AS keep, lang, hq
@@ -1568,12 +1563,7 @@ object ScoringQueries {
          |  di IS NOT NULL AND di < 800000 AS flagged
          |FROM r""".stripMargin,
     "cp1_split_conformal" ->
-      s"""WITH sc AS (
-         |  SELECT doc_id,
-         |    CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score
-         |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks
-         |        FROM documents)),
+      s"""WITH $scoreSql,
          |lab AS (SELECT doc_id, lang = 'en' AS en FROM documents),
          |d AS (
          |  SELECT sc.doc_id, score, en,
@@ -1601,12 +1591,7 @@ object ScoringQueries {
          |FROM d CROSS JOIN q WHERE gate <> 0
          |GROUP BY 1, 2""".stripMargin,
     "cp2_mondrian_conformal" ->
-      s"""WITH sc AS (
-         |  SELECT doc_id,
-         |    CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score
-         |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks
-         |        FROM documents)),
+      s"""WITH $scoreSql,
          |lab AS (SELECT doc_id, lang = 'en' AS en FROM documents),
          |d AS (
          |  SELECT sc.doc_id, score, en,
@@ -1631,12 +1616,7 @@ object ScoringQueries {
          |FROM d JOIN q ON d.en = q.en WHERE gate <> 0
          |GROUP BY 1, 2, 3""".stripMargin,
     "ml19_confident_learning" ->
-      s"""WITH sc AS (
-         |  SELECT doc_id,
-         |    CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score
-         |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks
-         |        FROM documents)),
+      s"""WITH $scoreSql,
          |lab AS (SELECT doc_id, lang = 'en' AS en FROM documents),
          |d AS (SELECT en, score AS sc2,
          |        CAST(score AS DOUBLE) AS sd
@@ -1699,12 +1679,7 @@ object ScoringQueries {
          |FROM ho JOIN sc USING (doc_id)""".stripMargin
     },
     "ml2_threshold_sweep" ->
-      s"""WITH sc AS (
-         |  SELECT CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score,
-         |    label
-         |  FROM (SELECT string_split($normSql, ' ') AS toks,
-         |        lang = 'en' AS label FROM documents)),
+      s"""WITH $labelledScoreSql,
          |by_score AS (
          |  SELECT score AS threshold, COUNT(*) AS n,
          |    SUM(CASE WHEN label THEN 1 ELSE 0 END) AS npos
@@ -1771,12 +1746,7 @@ object ScoringQueries {
          |  END AS xauc_ot_over_en
          |FROM agg""".stripMargin,
     "ml4_auc" ->
-      s"""WITH sc AS (
-         |  SELECT CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score,
-         |    label
-         |  FROM (SELECT string_split($normSql, ' ') AS toks,
-         |        lang = 'en' AS label FROM documents)),
+      s"""WITH $labelledScoreSql,
          |by_score AS (
          |  SELECT score, COUNT(*) AS n,
          |    SUM(CASE WHEN label THEN 1 ELSE 0 END) AS npos
@@ -1821,12 +1791,7 @@ object ScoringQueries {
         |    CAST((SELECT n FROM nn) AS DOUBLE) / 1e6 AS mi_nats
         |FROM t""".stripMargin,
     "ml11_psi" ->
-      s"""WITH sc AS (
-         |  SELECT doc_id,
-         |    CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score
-         |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks
-         |        FROM documents)),
+      s"""WITH $scoreSql,
          |b AS (SELECT score // 4 AS bin, doc_id % 2 = 0 AS is_old FROM sc),
          |cells AS (
          |  SELECT bin,
@@ -1852,12 +1817,7 @@ object ScoringQueries {
          |    CAST(MAX(t_o) * MAX(t_n) AS DOUBLE) / 1e6 AS psi
          |FROM t""".stripMargin,
     "ml10_ks_stat" ->
-      s"""WITH sc AS (
-         |  SELECT CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score,
-         |    label
-         |  FROM (SELECT string_split($normSql, ' ') AS toks,
-         |        lang = 'en' AS label FROM documents)),
+      s"""WITH $labelledScoreSql,
          |by_score AS (
          |  SELECT score, COUNT(*) AS n,
          |    SUM(CASE WHEN label THEN 1 ELSE 0 END) AS npos
@@ -1931,12 +1891,7 @@ object ScoringQueries {
          |FROM cells""".stripMargin
     },
     "ml15_ece" ->
-      s"""WITH sc AS (
-         |  SELECT CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score,
-         |    label
-         |  FROM (SELECT string_split($normSql, ' ') AS toks,
-         |        lang = 'en' AS label FROM documents)),
+      s"""WITH $labelledScoreSql,
          |conf AS (
          |  SELECT score, label,
          |    least(1000000, greatest(0, (score + 20) * 1000000 // 40))
@@ -1982,12 +1937,7 @@ object ScoringQueries {
          |    AS DOUBLE) AS kappa
          |FROM cells""".stripMargin,
     "ml3_calibration" ->
-      s"""WITH sc AS (
-         |  SELECT CAST(-3 + list_sum(list_transform(toks, t ->
-         |      $weightSql)) AS BIGINT) AS score,
-         |    label
-         |  FROM (SELECT string_split($normSql, ' ') AS toks,
-         |        lang = 'en' AS label FROM documents))
+      s"""WITH $labelledScoreSql
          |SELECT CAST(FLOOR(score / 4.0e0) AS BIGINT) AS bin,
          |  COUNT(*) AS n,
          |  CAST(SUM(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS npos,
@@ -2021,14 +1971,7 @@ object ScoringQueries {
          |${one(256)}""".stripMargin
     },
     "fe20_redundancy_groups" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT vec_id, list_transform(embedding[1:16],
-        |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |l AS (
-        |  SELECT vec_id, CAST(i AS BIGINT) AS i,
-        |    qv[CAST(i + 1 AS INTEGER)] AS q
-        |  FROM e, unnest(range(0, 16)) AS t(i)),
+      s"""WITH RECURSIVE ${laneSql("BIGINT")},
         |st AS (
         |  SELECT a.i AS i, b.i AS j, COUNT(*) AS n,
         |    SUM(CAST(a.q AS HUGEINT)) AS sx,
@@ -2067,14 +2010,7 @@ object ScoringQueries {
            |  END AS BIGINT) AS v
            |  FROM nv_$r CROSS JOIN m_$r)""".stripMargin
       }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT vec_id, list_transform(embedding[1:16],
-         |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-         |  FROM embeddings),
-         |l AS (
-         |  SELECT vec_id, CAST(i AS INTEGER) AS i,
-         |    qv[CAST(i + 1 AS INTEGER)] AS q
-         |  FROM e, unnest(range(0, 16)) AS t(i)),
+      s"""WITH ${laneSql("INTEGER")},
          |st AS (
          |  SELECT a.i AS i, b.i AS j, COUNT(*) AS n,
          |    SUM(CAST(a.q AS HUGEINT)) AS sx,
@@ -2134,14 +2070,7 @@ object ScoringQueries {
         |  CAST(MAX(n_chars) AS BIGINT) AS hi_chars
         |FROM r GROUP BY 1, 2""".stripMargin,
     "fe18_feature_covariance" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding[1:16],
-        |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |l AS (
-        |  SELECT vec_id, CAST(i AS INTEGER) AS i,
-        |    qv[CAST(i + 1 AS INTEGER)] AS q
-        |  FROM e, unnest(range(0, 16)) AS t(i)),
+      s"""WITH ${laneSql("INTEGER")},
         |st AS (
         |  SELECT a.i AS i, b.i AS j, COUNT(*) AS n,
         |    SUM(CAST(a.q AS HUGEINT)) AS sx,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.TextAnalysis
+import Det.normSql
 
 /** Corpus-level TRAINING loops — queries whose output is a LEARNED
   * artifact (a tokenizer merge table, classifier weights) rather than a
@@ -48,7 +49,6 @@ object TrainerQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.documents(s, dir))
 
-  private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
   private val stopPat =
     "\\b(the|a|an|of|and|in|to|is|it|for|on|with|as|at|by|from)\\b"
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
 import graft.operators.{Contamination, Dedup, KMeans, Packing, ProductQuantization, Retrieval, Sampling, Scoring, Similarity, TextAnalysis}
+import Det.{d38, normSql, quantized}
 
 /** Training-data pipeline operators (dedup, text analysis, similarity
   * search) exposed to the oracle harness over `documents` / `embeddings`.
@@ -18,7 +19,6 @@ import graft.operators.{Contamination, Dedup, KMeans, Packing, ProductQuantizati
   */
 object TrainingDataQueries {
 
-  private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
   private val stopPat =
     "\\b(the|a|an|of|and|in|to|is|it|for|on|with|as|at|by|from)\\b"
 
@@ -756,7 +756,6 @@ object TrainingDataQueries {
     // the square — a 10⁸-occurrence stopword overflows int64), one
     // final IEEE division.
     "tx36_yule_k" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val f = Tables.spread(Tables.documents(s, dir))
         .select(col("lang"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
@@ -787,7 +786,6 @@ object TrainingDataQueries {
     // (n·Σc² ≥ S² by Cauchy–Schwarz, so truncation = floor on both
     // engines).
     "tx37_burstiness" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val docs = Tables.spread(Tables.documents(s, dir))
       val nd = docs.agg(count(lit(1)).as("n_docs"))
       val perDoc = docs
@@ -1153,8 +1151,7 @@ object TrainingDataQueries {
     "sim20_twonn_id" -> { (s, dir) =>
       import graft.functions.VectorExpressions.dotL
       val quant = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+        quantized(col("embedding")).as("qv"))
         .withColumn("nrm", dotL(col("qv"), col("qv")))
       val q = broadcast(quant.filter(col("vec_id") < 64)
         .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
@@ -1224,8 +1221,7 @@ object TrainingDataQueries {
     "sim12_mmr" -> { (s, dir) =>
       import graft.functions.VectorExpressions.dotL
       val quant = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+        quantized(col("embedding")).as("qv"))
       val withNorm = quant.withColumn("nrm", dotL(col("qv"), col("qv")))
         .filter(col("nrm") > 0) // zero-norm: cosine undefined, excluded
       val q = broadcast(withNorm.filter(col("vec_id") < 5)
@@ -1316,8 +1312,7 @@ object TrainingDataQueries {
     // correctness baseline; sim2's LSH is the scale path.
     "sim4_neardup_exact" -> { (s, dir) =>
       val quant = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+        quantized(col("embedding")).as("qv"))
       import graft.functions.VectorExpressions.dotL
       val withNorm = quant.withColumn("nrm", dotL(col("qv"), col("qv")))
         .filter(col("nrm") > 0) // zero-norm: cosine undefined, excluded
@@ -1423,8 +1418,7 @@ object TrainingDataQueries {
       import graft.functions.VectorExpressions.dotL
       val quant = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"),
-          transform(col("embedding"),
-            x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+          quantized(col("embedding")).as("qv"))
       val withNorm = quant.withColumn("nrm", dotL(col("qv"), col("qv")))
         .filter(col("nrm") > 0) // zero-norm: cosine undefined, excluded
       val q = broadcast(withNorm.filter(col("vec_id") < 5)
@@ -1456,24 +1450,11 @@ object TrainingDataQueries {
     // prefix slicing is free at scan time (narrower arrays through every
     // buffer), which IS the 100 TB point.
     "sim16_matryoshka_recall" -> { (s, dir) =>
-      import graft.functions.VectorExpressions.dotL
       val full = sim1Frame(s, dir).select("query_id", "corpus_id")
       val quant = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(slice(col("embedding"), 1, 16),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
-      val withNorm = quant.withColumn("nrm", dotL(col("qv"), col("qv")))
-        .filter(col("nrm") > 0) // zero-norm prefix: cosine undefined
-      val q = broadcast(withNorm.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-          col("nrm").as("q_nrm")))
-      val scored = withNorm.select(col("vec_id").as("corpus_id"),
-          col("qv").as("c_qv"), col("nrm").as("c_nrm"))
-        .crossJoin(q)
-        .filter(col("corpus_id") =!= col("query_id"))
-        .select(col("query_id"), col("corpus_id"),
-          (dotL(col("q_qv"), col("c_qv")).cast("double") /
-            (sqrt(col("q_nrm").cast("double")) *
-              sqrt(col("c_nrm").cast("double")))).as("cos_sim"))
+        quantized(slice(col("embedding"), 1, 16)).as("qv"))
+      // zero-norm prefix: cosine undefined, excluded
+      val scored = probeCosines(quant)
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("cos_sim").desc, col("corpus_id").asc)
       val pref = scored.withColumn("rk", row_number().over(w))
@@ -1503,8 +1484,7 @@ object TrainingDataQueries {
     "cx4_semantic_decontamination" -> { (s, dir) =>
       import graft.functions.VectorExpressions.dotL
       val quant = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+        quantized(col("embedding")).as("qv"))
         .withColumn("nrm", dotL(col("qv"), col("qv")))
         .filter(col("nrm") > 0)
       val evalSet = broadcast(quant.filter(col("vec_id") < 5)
@@ -2027,7 +2007,6 @@ object TrainingDataQueries {
     // sum is order-free. Same type-grain scoring shape as lm2: counts
     // at bigram-type grain, one token-keyed join back.
     "lm10_witten_bell" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val toksCol = split(TextAnalysis.normalizeText(col("text")), " ")
       // GRAIN (round-14 audit): the tokenized corpus is corpus-bytes
       // (the token array IS the text) — its round-13 pin is size-gated:
@@ -2380,7 +2359,6 @@ object TrainingDataQueries {
     "tx20_zipf_fit" -> { (s, dir) =>
       import graft.operators.GlobalRank
       import org.apache.spark.sql.types.DecimalType
-      val d38 = DecimalType(38, 0)
       val freq = Tables.spread(Tables.documents(s, dir))
         .select(explode(split(TextAnalysis.normalizeText(col("text")),
           " ")).as("tok"))
@@ -2637,7 +2615,6 @@ object TrainingDataQueries {
     // offsets); the rollup is sequence-grain. The report that decides
     // whether the loader needs per-document attention masks.
     "pk9_attention_contamination" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val seqLen = 512L
       val packed = Packing.packSequences(
         Tables.spread(Tables.documents(s, dir)).select(col("doc_id"), col("lang"),
@@ -2722,7 +2699,6 @@ object TrainingDataQueries {
     // table that decides bucketed-batching boundaries. Exact decimal
     // squares, integer micro shares.
     "pk8_attention_cost" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val t = Tables.spread(Tables.documents(s, dir))
         .select(TextAnalysis.tokenCount(col("text")).cast("long")
           .as("n"))
@@ -2867,8 +2843,7 @@ object TrainingDataQueries {
       import graft.functions.VectorExpressions.dotL
       val quant = Tables.embeddings(s, dir).select(col("vec_id"),
         col("label"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+        quantized(col("embedding")).as("qv"))
       val withNorm = quant.withColumn("nrm", dotL(col("qv"), col("qv")))
         .filter(col("nrm") > 0) // zero-norm: cosine undefined, excluded
       val q = broadcast(withNorm.filter(col("vec_id") < 20)
@@ -3001,8 +2976,7 @@ object TrainingDataQueries {
     "s10_kcenter_coreset" -> { (s, dir) =>
       import graft.operators.Coreset
       val quant = Tables.embeddings(s, dir).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+        quantized(col("embedding")).as("qv"))
       Coreset.kCenterGreedy(quant, "vec_id", "qv", k = 4)
     },
 
@@ -3018,7 +2992,6 @@ object TrainingDataQueries {
     // (source × token)-bounded — one count shuffle, the 20-row source
     // size table broadcasts.
     "tx27_token_dispersion" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val tc = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
@@ -3267,7 +3240,6 @@ object TrainingDataQueries {
     // IEEE tree, NULL when either side has a single document. Scale-
     // free: the pair fan-out is provenance-count², never rows.
     "prof4_source_welch_matrix" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val st = Tables.spread(Tables.documents(s, dir)).groupBy("source")
         .agg(count(lit(1)).as("n"),
           sum(col("n_chars").cast(d38)).as("sx"),
@@ -3303,7 +3275,6 @@ object TrainingDataQueries {
     // proportional split capped at the stratum size. One metadata-grain
     // rollup; the plan is scale-free.
     "s15_neyman_allocation" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val per = Tables.spread(Tables.documents(s, dir))
         .groupBy("source")
         .agg(count(lit(1)).as("nh"),
@@ -3403,11 +3374,9 @@ object TrainingDataQueries {
     // contribute 0 (the NaN/Inf guard is the `vr > 0` branch — both
     // engines agree because the doubles are the same fixed tree).
     "sim19_mahalanobis_ood" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val lanes = Tables.spread(Tables.embeddings(s, dir))
         .select(col("vec_id"),
-          posexplode(transform(col("embedding"),
-            x => floor(x.cast("double") * 1000000).cast("long"))))
+          posexplode(quantized(col("embedding"))))
         .select(col("vec_id"), col("pos").as("dim"), col("col").as("v"))
         // pinned: the lane table feeds the moment rollup AND the
         // scoring join (round-13 fan-out rule)
@@ -3462,7 +3431,6 @@ object TrainingDataQueries {
     // hash-partitioned — deliberately NOT broadcast), source totals
     // and the grand total broadcast.
     "lm11_source_unigram_kl" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val st = Tables.spread(Tables.documents(s, dir))
         .select(col("source"),
           explode(split(TextAnalysis.normalizeText(col("text")), " "))
@@ -3678,7 +3646,6 @@ object TrainingDataQueries {
     // ts4's fixed IEEE tree — engines agree bitwise. One token-free
     // array pass per row, one scalar reduce.
     "pipe3_signal_correlation" -> { (s, dir) =>
-      val d38 = DecimalType(38, 0)
       val toks = filter(split(TextAnalysis.normalizeText(col("text")), " "),
         t => length(t) > 0)
       val xy = Tables.spread(Tables.documents(s, dir))
@@ -3828,20 +3795,20 @@ object TrainingDataQueries {
         sum(col("lr_micro")).as("logw_micro"))
   }
 
-  private def sim1Frame(s: SparkSession, dir: String): DataFrame = {
-    val quant = Tables.embeddings(s, dir).select(col("vec_id"),
-      transform(col("embedding"),
-        x => floor(x.cast("double") * 1000000).cast("long")).as("qv"))
+  /** The cosine of each of the probes (vec_id < 5) with every other
+    * vector of `quant` (vec_id and the micro-quantized lanes `qv`): the
+    * exact integer dot over the two norms, one fixed IEEE tree. Zero-norm
+    * vectors have no direction — cosine is undefined, and the ANSI
+    * division would throw; they are EXCLUDED (normalize-or-drop, the
+    * standard ANN ingest rule), mirrored in every oracle. */
+  private def probeCosines(quant: DataFrame): DataFrame = {
     import graft.functions.VectorExpressions.dotL
-    // zero-norm vectors have no direction — cosine is undefined, and the
-    // ANSI division would throw; they are EXCLUDED (normalize-or-drop,
-    // the standard ANN ingest rule), mirrored in every oracle
     val withNorm = quant.withColumn("nrm", dotL(col("qv"), col("qv")))
       .filter(col("nrm") > 0)
     val q = broadcast(withNorm.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
         col("nrm").as("q_nrm")))
-    val scored = withNorm.select(col("vec_id").as("corpus_id"),
+    withNorm.select(col("vec_id").as("corpus_id"),
         col("qv").as("c_qv"), col("nrm").as("c_nrm"))
       .crossJoin(q)
       .filter(col("corpus_id") =!= col("query_id"))
@@ -3849,6 +3816,12 @@ object TrainingDataQueries {
         (dotL(col("q_qv"), col("c_qv")).cast("double") /
           (sqrt(col("q_nrm").cast("double")) *
             sqrt(col("c_nrm").cast("double")))).as("cos_sim"))
+  }
+
+  private def sim1Frame(s: SparkSession, dir: String): DataFrame = {
+    val quant = Tables.embeddings(s, dir).select(col("vec_id"),
+      quantized(col("embedding")).as("qv"))
+    val scored = probeCosines(quant)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("corpus_id").asc)
     scored.withColumn("rk", row_number().over(w).cast("bigint"))
@@ -3891,6 +3864,47 @@ object TrainingDataQueries {
     * (id_a, id_b, jaccard) — shared by the dd2 pair oracle and the dd4
     * cluster oracle, which appends a recursive transitive closure. */
   private def dd2Ctes: String = lshCtes("l.id < r.id")
+
+  /** Oracle CTEs `e` (each embedding micro-quantized to the list `qv`)
+    * and `n` (the rows of `e` with a nonzero squared norm `nrm`); `cols`
+    * is a prefix of extra columns both carry, such as "label, ". */
+  private def normedSql(cols: String): String =
+    s"""e AS (
+       |  SELECT vec_id, ${cols}list_transform(embedding,
+       |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
+       |  FROM embeddings),
+       |n AS (
+       |  SELECT * FROM (
+       |    SELECT vec_id, ${cols}qv,
+       |      CAST(list_sum(list_transform(range(1, len(qv) + 1),
+       |        i -> qv[i] * qv[i])) AS BIGINT) AS nrm
+       |    FROM e) z WHERE nrm > 0)""".stripMargin
+
+  /** Oracle cosine of rows `a` and `b` of [[normedSql]]'s `n`: the exact
+    * integer dot over the two norms, the same IEEE tree as the Spark side. */
+  private def cosineSql(a: String, b: String): String =
+    s"""CAST(CAST(list_sum(list_transform(range(1, len($a.qv) + 1),
+       |      i -> $a.qv[i] * $b.qv[i])) AS BIGINT) AS DOUBLE) /
+       |    (sqrt(CAST($a.nrm AS DOUBLE)) * sqrt(CAST($b.nrm AS DOUBLE)))""".stripMargin
+
+  /** Oracle CTEs over `scored`: `edges` (the pairs at Jaccard ≥ 0.5),
+    * `und` (both directions) and `reach` (their transitive closure, so
+    * the query needs WITH RECURSIVE). */
+  private val reachSql =
+    """edges AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
+      |und AS (SELECT id_a AS a, id_b AS b FROM edges
+      |        UNION SELECT id_b, id_a FROM edges),
+      |reach(a, b) AS (
+      |  SELECT a, b FROM und
+      |  UNION
+      |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)""".stripMargin
+
+  /** [[reachSql]] plus `cl`: each clustered doc's component id, the
+    * smallest doc id it reaches. */
+  private val clusterSql =
+    s"""$reachSql,
+       |cl AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
+       |       FROM reach GROUP BY a)""".stripMargin
 
   /** Shingle → base-hash → 16-minhash signature CTE chain (docs, sh,
     * shd, bh, sig) — the shared prefix of every minhash oracle. */
@@ -4542,22 +4556,11 @@ object TrainingDataQueries {
          |  CAST(y AS BIGINT) AS y
          |FROM sc WHERE prev_max IS NULL OR y > prev_max""".stripMargin,
     "sim14_hard_negatives" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding,
-        |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, label, qv,
-        |      CAST(list_sum(list_transform(range(1, len(qv) + 1),
-        |        i -> qv[i] * qv[i])) AS BIGINT) AS nrm
-        |    FROM e) z WHERE nrm > 0),
+      s"""WITH ${normedSql("label, ")},
         |p AS (
         |  SELECT q.vec_id AS query_id, CAST(q.label AS INTEGER) AS q_label,
         |    c.vec_id AS corpus_id, CAST(c.label AS INTEGER) AS neg_label,
-        |    CAST(CAST(list_sum(list_transform(range(1, len(q.qv) + 1),
-        |      i -> q.qv[i] * c.qv[i])) AS BIGINT) AS DOUBLE) /
-        |    (sqrt(CAST(q.nrm AS DOUBLE)) * sqrt(CAST(c.nrm AS DOUBLE)))
+        |    ${cosineSql("q", "c")}
         |      AS cos_sim
         |  FROM n q, n c
         |  WHERE q.vec_id < 20 AND c.label <> q.label)
@@ -5308,15 +5311,7 @@ object TrainingDataQueries {
     "pipe1_curation_funnel" ->
       s"""WITH RECURSIVE gate AS ($tx9Sql),
          |${lshCtes("l.id < r.id")},
-         |edges AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
-         |und AS (SELECT id_a AS a, id_b AS b FROM edges
-         |        UNION SELECT id_b, id_a FROM edges),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |cl AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-         |       FROM reach GROUP BY a),
+         |$clusterSql,
          |gated AS (SELECT doc_id FROM gate WHERE keep),
          |deduped AS (
          |  SELECT g.doc_id FROM gated g LEFT JOIN cl ON g.doc_id = cl.doc_id
@@ -5342,15 +5337,7 @@ object TrainingDataQueries {
     // cluster representative (singletons: the doc's own id).
     "s6_group_split" ->
       s"""WITH RECURSIVE $dd2Ctes,
-         |edges AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
-         |und AS (SELECT id_a AS a, id_b AS b FROM edges
-         |        UNION SELECT id_b, id_a FROM edges),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |cl AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-         |       FROM reach GROUP BY a),
+         |$clusterSql,
          |grouped AS (
          |  SELECT d.doc_id, COALESCE(cl.cluster_id, d.doc_id) AS group_id
          |  FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id)
@@ -5774,22 +5761,10 @@ object TrainingDataQueries {
          |FROM corp JOIN bench USING (h)
          |GROUP BY bench.bench_id""".stripMargin,
     "cx4_semantic_decontamination" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-        |    AS qv
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, qv,
-        |      CAST(list_sum(list_transform(range(1, len(qv) + 1),
-        |        i -> qv[i] * qv[i])) AS BIGINT) AS nrm
-        |    FROM e) z WHERE nrm > 0),
+      s"""WITH ${normedSql("")},
         |p AS (
         |  SELECT c.vec_id AS corpus_id, q.vec_id AS eval_id,
-        |    CAST(CAST(list_sum(list_transform(range(1, len(c.qv) + 1),
-        |      i -> c.qv[i] * q.qv[i])) AS BIGINT) AS DOUBLE) /
-        |    (sqrt(CAST(c.nrm AS DOUBLE)) * sqrt(CAST(q.nrm AS DOUBLE)))
+        |    ${cosineSql("c", "q")}
         |      AS cos_sim
         |  FROM n c, n q WHERE c.vec_id >= 5 AND q.vec_id < 5),
         |f AS (SELECT * FROM p WHERE cos_sim >= 0.3e0),
@@ -5904,15 +5879,7 @@ object TrainingDataQueries {
         |FROM g""".stripMargin,
     "dd6_dedup_apply" ->
       s"""WITH RECURSIVE $dd2Ctes,
-         |edges AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
-         |und AS (SELECT id_a AS a, id_b AS b FROM edges
-         |        UNION SELECT id_b, id_a FROM edges),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |cl AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-         |       FROM reach GROUP BY a)
+         |$clusterSql
          |SELECT d.doc_id, (cl.doc_id IS NOT NULL) AS is_representative
          |FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id
          |WHERE cl.cluster_id IS NULL OR cl.cluster_id = d.doc_id""".stripMargin,
@@ -6111,13 +6078,7 @@ object TrainingDataQueries {
          |FROM hx GROUP BY h HAVING COUNT(*) >= 2""".stripMargin,
     "dd16_cluster_downweight" ->
       s"""WITH RECURSIVE $dd2Ctes,
-         |edges AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
-         |und AS (SELECT id_a AS a, id_b AS b FROM edges
-         |        UNION SELECT id_b, id_a FROM edges),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |$reachSql,
          |comp AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
          |         FROM reach GROUP BY a),
          |sizes AS (SELECT cluster_id, COUNT(*) AS csize
@@ -6134,13 +6095,7 @@ object TrainingDataQueries {
          |FROM scored WHERE jaccard >= 0.3""".stripMargin,
     "dd4_dup_clusters" ->
       s"""WITH RECURSIVE $dd2Ctes,
-         |edges AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
-         |und AS (SELECT id_a AS a, id_b AS b FROM edges
-         |        UNION SELECT id_b, id_a FROM edges),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
+         |$reachSql
          |SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
          |FROM reach GROUP BY a""".stripMargin,
     "dd3_simhash_pairs" ->
@@ -6187,22 +6142,11 @@ object TrainingDataQueries {
     "drift1_cell_divergence" -> drift1Sql,
     "sim6_semdedup" -> sim6Sql,
     "sim17_filtered_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding,
-        |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, label, qv,
-        |      CAST(list_sum(list_transform(range(1, len(qv) + 1),
-        |        i -> qv[i] * qv[i])) AS BIGINT) AS nrm
-        |    FROM e) z WHERE nrm > 0),
+      s"""WITH ${normedSql("label, ")},
         |p AS (
         |  SELECT q.vec_id AS query_id, q.label AS label,
         |    c.vec_id AS corpus_id,
-        |    CAST(CAST(list_sum(list_transform(range(1, len(q.qv) + 1),
-        |      i -> q.qv[i] * c.qv[i])) AS BIGINT) AS DOUBLE) /
-        |    (sqrt(CAST(q.nrm AS DOUBLE)) * sqrt(CAST(c.nrm AS DOUBLE)))
+        |    ${cosineSql("q", "c")}
         |      AS cos_sim
         |  FROM n q JOIN n c ON q.label = c.label
         |  WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id)
@@ -6225,9 +6169,7 @@ object TrainingDataQueries {
          |    FROM ep) z WHERE nrm > 0),
          |pp AS (
          |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-         |    CAST(CAST(list_sum(list_transform(range(1, len(q.qv) + 1),
-         |      i -> q.qv[i] * c.qv[i])) AS BIGINT) AS DOUBLE) /
-         |    (sqrt(CAST(q.nrm AS DOUBLE)) * sqrt(CAST(c.nrm AS DOUBLE)))
+         |    ${cosineSql("q", "c")}
          |      AS cos_sim
          |  FROM np q, np c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
          |pr AS (
@@ -6278,20 +6220,10 @@ object TrainingDataQueries {
          |FROM (SELECT DISTINCT query_id FROM ex) q
          |LEFT JOIN hits USING (query_id)""".stripMargin,
     "sim4_neardup_exact" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, qv,
-        |      CAST(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i])) AS BIGINT) AS nrm
-        |    FROM e) z WHERE nrm > 0),
+      s"""WITH ${normedSql("")},
         |p AS (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    CAST(CAST(list_sum(list_transform(range(1, len(a.qv) + 1),
-        |      i -> a.qv[i] * b.qv[i])) AS BIGINT) AS DOUBLE) /
-        |    (sqrt(CAST(a.nrm AS DOUBLE)) * sqrt(CAST(b.nrm AS DOUBLE))) AS cos_sim
+        |    ${cosineSql("a", "b")} AS cos_sim
         |  FROM n a, n b WHERE a.vec_id < b.vec_id)
         |SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.3""".stripMargin,
     "sim1_cosine_topk" -> sim1Sql,
@@ -6945,20 +6877,10 @@ object TrainingDataQueries {
   /** sim1's full oracle text — also embedded as the `ex` CTE of the sim5
     * recall oracle (DuckDB allows a nested WITH inside a CTE body). */
   private def sim1Sql: String =
-    """WITH e AS (
-      |  SELECT vec_id, list_transform(embedding,
-      |    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-      |  FROM embeddings),
-      |n AS (
-      |  SELECT * FROM (
-      |    SELECT vec_id, qv,
-      |      CAST(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i])) AS BIGINT) AS nrm
-      |    FROM e) z WHERE nrm > 0),
+    s"""WITH ${normedSql("")},
       |p AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-      |    CAST(CAST(list_sum(list_transform(range(1, len(q.qv) + 1),
-      |      i -> q.qv[i] * c.qv[i])) AS BIGINT) AS DOUBLE) /
-      |    (sqrt(CAST(q.nrm AS DOUBLE)) * sqrt(CAST(c.nrm AS DOUBLE))) AS cos_sim
+      |    ${cosineSql("q", "c")} AS cos_sim
       |  FROM n q, n c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id)
       |SELECT query_id, corpus_id, cos_sim, rk FROM (
       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id

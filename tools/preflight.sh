@@ -1,17 +1,16 @@
 #!/usr/bin/env bash
-# Round-exit gate: run before EVERY end-of-round (or milestone) commit.
+# Exit gate for a commit: it refuses success unless the tree compiles,
+# every ScalaTest passes (CatalogShapeSpec pins the catalog at 488 queries,
+# each with oracle SQL; FunnelSpec and ScaleGateSpec measure every query's
+# plan at sf0.001), the measured sf0.01 sweeps are clean, and the sf0.01,
+# edge-fixture and zero-row DuckDB oracle differentials are all green. A
+# snapshot that does not compile zeroes every correctness and benchmark
+# signal at once, and a throwing query must not read as "not run".
 #
-# Round 4 shipped a snapshot that did not compile — one undefined val zeroed
-# the driver's entire correctness+bench signal for the round. This script
-# makes that impossible to repeat: it refuses success unless the tree
-# compiles, every ScalaTest passes, the measured sf0.01 sweeps are clean,
-# and the full sf0.01 + edge-fixture DuckDB oracle differentials are green.
-#
-# Round-11 wall-clock trim (round-10 directive 8): the three audit sweeps
-# (funnel, hazard, cross-SF scaling) run as ONE JVM pass —
-# graft.PreflightSweep shares a single sf0.01 execution between the hazard
-# metrics and the scaling gate's t_B — and the three oracle fixtures
-# (sf0.01, edge, zero-row) share one Verify JVM via its multi-pair CLI.
+# Wall clock: the three audit sweeps (funnel, hazard, cross-SF scaling)
+# run as ONE JVM pass — graft.PreflightSweep shares a single sf0.01
+# execution between the hazard metrics and the scaling gate's t_B — and
+# the three oracle fixtures share one Verify JVM via its multi-pair CLI.
 #
 # Usage:
 #   tools/preflight.sh                 # full gate (compile + test + sweeps
@@ -52,9 +51,9 @@ sbt -batch compile test
 # the classes sbt just compiled — same JVM options, no per-main sbt startup.
 
 # One-JVM gate sweep. Rationale per check (history in the scaladocs):
-#  - funnel (32/512, allow ev26): round 9 proved sf0.01 is the scale
-#    that separates corpus-growing funnels from bounded frames (caught
-#    e4/e12/e14 after sf0.001 passed them);
+#  - funnel (32/512, allow ev26): sf0.01 is the scale that separates
+#    corpus-growing funnels from bounded frames (it caught e4/e12/e14
+#    after sf0.001 passed them);
 #  - hazard (512/64, allow sim4): same asymmetry argument, measured
 #    single-partition exchanges / cartesians / nested-loop sides;
 #  - scaling (>10x growth on 10x data above a 2 s floor, empty
@@ -76,9 +75,8 @@ VLOG=/tmp/preflight_verify.log
 rm -rf "$OUT"
 if [ -n "$ONLY" ]; then
   echo "== preflight: Verify -> DuckDB differential (sf0.01, filtered) =="
-  # Exported (not per-command) so check_oracle.py also sees it: since
-  # round 6 it treats a missing output dir in an UNfiltered run as a
-  # hard FAIL.
+  # Exported (not per-command) so check_oracle.py also sees it: it
+  # treats a missing output dir in an UNfiltered run as a hard FAIL.
   export SPARK_GRAFT_ONLY="$ONLY"
   tools/run_main.sh graft.Verify "$SF" "$OUT" 2>&1 | tee "$VLOG"
 else
@@ -86,9 +84,9 @@ else
   # Pathological inputs (empty/whitespace docs, zero vectors, equal-
   # timestamp ties, single-event users) expose silent engine divergences
   # — sequence() stepping down, div-vs-// truncation, ln(0) — that no SF
-  # fixture reaches (the manual form found 25 real divergences in round
-  # 7); the --empty variant exercises the same guard paths at the
-  # zero-row limit. Both gate (round 10), sharing the sf0.01 JVM.
+  # fixture reaches (the manual form once found 25 real divergences);
+  # the --empty variant exercises the same guard paths at the zero-row
+  # limit. Both gate, sharing the sf0.01 JVM.
   EDGE_SF=/tmp/edge_sf;   EDGE_OUT=/tmp/edge_out
   EMPTY_SF=/tmp/empty_sf; EMPTY_OUT=/tmp/empty_out
   rm -rf "$EDGE_SF" "$EDGE_OUT" "$EMPTY_SF" "$EMPTY_OUT"
