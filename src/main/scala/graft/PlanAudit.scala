@@ -40,7 +40,7 @@ object PlanAudit {
   /** [[auditQuery]] without the window counts: the frame, its build and
     * run seconds, and its hazards. Construction is inside the clock:
     * eager-construction queries (trainer collect loops, graph/dedup
-    * localCheckpoint chains) do their dominant, SF-dependent work while
+    * checkpoint chains) do their dominant, SF-dependent work while
     * the frame is built, and a clock that starts at execute() reads them
     * near zero (lr1's 3-step training loop "measured" 0.015 s that way),
     * blinding the superlinear gate to the whole class. */

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (distance via the exact integer identity |x−c|² = x·x − 2x·c + c·c on
   * micro-quantized lanes — order-free, engine-reproducible), and the only
   * driver traffic is the 1-row argmax collect per round (k rows total;
-  * k is a model constant, never data-sized). Per-round `localCheckpoint`
+  * k is a model constant, never data-sized). Per-round pin
   * truncates the k-deep lineage. Ties on the farthest pick break to the
   * lowest id, so the trajectory is a pure function of the input.
   */

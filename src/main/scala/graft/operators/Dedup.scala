@@ -323,10 +323,11 @@ object Dedup {
     * Scale shape: each round is one hash-shuffled join + aggregate, and
     * the round count is the component DIAMETER — near-dup clusters are
     * band-bucket near-cliques, so 2-4 rounds in practice (`maxIter`
-    * bounds pathological chains; for general billion-edge graphs the
-    * alternating large-star/small-star variant shortcuts diameter, not
-    * needed for dedup-shaped inputs). Lineage is cut per round with an
-    * eager localCheckpoint so the plan doesn't grow with iterations; the
+    * bounds pathological chains and throws when hit unconverged; for
+    * general billion-edge graphs the alternating large-star/small-star
+    * variant shortcuts diameter, not needed for dedup-shaped inputs).
+    * Lineage is cut per round with a scope-owned pin
+    * ([[GlobalRank.pinned]]) so the plan doesn't grow with iterations; the
     * per-round convergence check is one count() action — the standard
     * iterative-algorithm driver loop (it inspects a scalar, never data).
     *
@@ -357,6 +358,8 @@ object Dedup {
       labels = updated.select("id", "lbl")
       i += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponents did not converge within maxIter = $maxIter rounds")
     labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
   }
 

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * changes.
   *
   * Cost note: each call materializes the ranged input once to executor
-  * storage (`localCheckpoint(eager = true)`). That is deliberate — both
+  * storage (an eager guarded local checkpoint). That is deliberate — both
   * passes must observe the SAME physical partitioning (AQE may re-plan the
   * exchange differently per job, skewing offsets; `spark_partition_id` and
   * the id ordinal are only meaningful against a pinned layout) — but it
@@ -160,7 +160,7 @@ object GlobalRank {
     currentScopes.set(stack)
     val scope = stack.headOption
       .getOrElse(throw new IllegalStateException(NoScopeMsg))
-    // guarded localCheckpoint: materializes the plan into a LogicalRDD
+    // guarded local checkpoint: materializes the plan into a LogicalRDD
     // whose rdd holds the persisted blocks, with a compute guard that
     // turns post-release recomputation into ReleasedLayoutMsg; the
     // release handle frees the blocks deterministically at the query
@@ -176,31 +176,35 @@ object GlobalRank {
   }
 
   /** Pin an arbitrary (narrow, multiply-consumed) frame with the SAME
-    * owner-scoped lifecycle as a rank layout: eager guarded
-    * localCheckpoint, release handle registered with the calling
-    * thread's innermost open scope. Query-boundary owners (Bench,
-    * Verify, the audit sweeps) therefore free the blocks at each query
-    * boundary instead of letting hundreds of dead checkpoints ride the
-    * block manager for the rest of the catalog run — a bare
-    * `localCheckpoint(true)` measured as a progressive tail slowdown
-    * (last alphabetical decile 1.31× while every earlier decile
-    * improved) once the round-13 fan-out pins multiplied the call
-    * sites. Same post-release contract as every layout: the returned
-    * frame must be fully materialized inside the owning scope. */
+    * owner-scoped lifecycle as a rank layout: eager guarded local
+    * checkpoint, release handle registered with the calling thread's
+    * innermost open scope. This is the only way `src/main` keeps a
+    * materialized frame past the function that made it (a `persist`
+    * freed in the same function's `finally` is the one other form).
+    * Query-boundary owners (Bench, Verify, the audit sweeps) therefore
+    * free the blocks at each query boundary instead of letting hundreds
+    * of dead checkpoints ride the block manager for the rest of the
+    * catalog run — a bare local checkpoint measured as a progressive
+    * tail slowdown (last alphabetical decile 1.31× while every earlier
+    * decile improved) once the round-13 fan-out pins multiplied the call
+    * sites; `Dataset.unpersist` cannot free one, because the
+    * CacheManager never saw it. Same post-release contract as every
+    * layout: the returned frame must be fully materialized inside the
+    * owning scope. */
   def pinned(df: DataFrame): DataFrame = checkpointLayout(df)
 
-  /** Conf key for [[pinnedIfSmall]]'s size gate (bytes). Default 1 GiB:
-    * far above every multiply-consumed frame the local fixtures produce
-    * (the sf0.1 corpus is <1 MB of parquet), far below any corpus-derived
+  /** [[pinnedIfSmall]]'s size gate: 1 GiB, far above every
+    * multiply-consumed frame the local fixtures produce (the largest
+    * estimate at sf0.1 is under 0.5 MB), far below any corpus-derived
     * frame at production scale, and small next to a single executor's
     * storage memory — a pin under the gate is always cheap to hold. */
-  val PinMaxBytesConf = "spark.graft.pin.maxBytes"
+  private val PinMaxBytes = 1L << 30
 
   /** COST-CONDITIONAL [[pinned]] (round-14 grain audit): pin only when
     * the optimizer's size estimate for the frame is at most
-    * [[PinMaxBytesConf]] (default 1 GiB). For frames whose bytes are
+    * [[PinMaxBytes]]. For frames whose bytes are
     * comparable to their INPUT's — exploded gram/token/fingerprint
-    * tables, tokenized-corpus projections — an eager localCheckpoint at
+    * tables, tokenized-corpus projections — an eager local checkpoint at
     * 100 TB writes the whole exploded corpus through the block manager
     * (a §5 spill/IO bill) to save re-runs of a scan-parallel subtree
     * that the shuffle layer often shares anyway (ReusedExchange fires
@@ -215,12 +219,10 @@ object GlobalRank {
     * rollups, type-grain count tables, id-grain gates) should stay on
     * the unconditional [[pinned]]: for those the pin is the §8
     * "lightweight proxy" materialization and is right at every scale. */
-  def pinnedIfSmall(df: DataFrame): DataFrame = {
-    val maxBytes = df.sparkSession.conf
-      .get(PinMaxBytesConf, (1L << 30).toString).toLong
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= maxBytes) checkpointLayout(df) else df
-  }
+  def pinnedIfSmall(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= PinMaxBytes)
+      checkpointLayout(df)
+    else df
 
   private def requireNarrow(df: DataFrame): Unit =
     require(df.columns.length <= MaxLayoutWidth,
@@ -251,17 +253,22 @@ object GlobalRank {
   private case class Ranged(df: DataFrame, offsets: Map[Int, Long],
                             total: Long)
 
-  private def rangeLayout(df: DataFrame, sortKeys: Seq[Column]): Ranged = {
-    val spark = df.sparkSession
-    require(!df.columns.contains("__pid"),
-      "__pid is reserved by GlobalRank")
+  /** Pinned range layout on `sort` with the partition id baked into the
+    * rows as `__pid`, materialized ONCE: both passes must observe the
+    * SAME physical partitioning (see the class-level cost note). The
+    * input may not carry any of the `reserved` names. */
+  private def pinRangeLayout(df: DataFrame, sort: Seq[Column],
+                             reserved: Seq[String]): DataFrame = {
+    require(!df.columns.exists(reserved.contains),
+      s"reserved by GlobalRank: ${reserved.mkString(", ")}")
     requireNarrow(df)
-    val parts = spark.sparkContext.defaultParallelism
-    // Materialize the ranged layout ONCE with the partition id baked into
-    // the rows: both passes must see the SAME partitioning (see scaladoc).
-    val ranged = checkpointLayout(df
-      .repartitionByRange(parts, sortKeys: _*)
+    val parts = df.sparkSession.sparkContext.defaultParallelism
+    checkpointLayout(df.repartitionByRange(parts, sort: _*)
       .withColumn("__pid", spark_partition_id()))
+  }
+
+  private def rangeLayout(df: DataFrame, sortKeys: Seq[Column]): Ranged = {
+    val ranged = pinRangeLayout(df, sortKeys, Seq("__pid"))
     val counts = ranged.groupBy("__pid").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     var acc = 0L
@@ -358,40 +365,28 @@ object GlobalRank {
     }
   }
 
-  /** Rank + total, sharing one layout pass. */
-  private def rankWithTotal(df: DataFrame, order: Seq[Column],
-                            tieBreak: Seq[Column], out: String)
-  : (DataFrame, Long) = {
+  /** Global rank over `order` (ties share the smallest row number;
+    * `tieBreak` must extend `order` to a total order for determinism of
+    * the underlying pass, rank itself only depends on `order`). When
+    * `pctOut` is set, also percent_rank = (rank − 1) / (N − 1) in the
+    * same layout pass: N comes from the pass-1 partition counts — no
+    * extra action over the input. */
+  def withGlobalRank(df: DataFrame, order: Seq[Column],
+                     tieBreak: Seq[Column], out: String = "rnk",
+                     pctOut: Option[String] = None): DataFrame = {
+    requireFreshNames(df, out +: pctOut.toSeq)
     val r = rangeLayout(df, order ++ tieBreak)
     val rn = rowNumbered(r, order ++ tieBreak, "__rn")
     // heal boundary-straddling ties: rank = min row_number per VALUE —
     // a hash-partitioned (scalable) window over the order key
     val byValue = Window.partitionBy(order: _*)
-    (rn.withColumn(out, min(col("__rn")).over(byValue)).drop("__rn"),
-      r.total)
-  }
-
-  /** Global rank over `order` (ties share the smallest row number;
-    * `tieBreak` must extend `order` to a total order for determinism of
-    * the underlying pass, rank itself only depends on `order`). */
-  def withGlobalRank(df: DataFrame, order: Seq[Column],
-                     tieBreak: Seq[Column], out: String = "rnk")
-  : DataFrame = {
-    requireFreshNames(df, Seq(out))
-    rankWithTotal(df, order, tieBreak, out)._1
-  }
-
-  /** Global rank AND percent_rank = (rank − 1) / (N − 1) in one layout
-    * pass; N comes from the pass-1 partition counts — no extra action
-    * over the input. */
-  def withGlobalRankAndPercent(df: DataFrame, order: Seq[Column],
-                               tieBreak: Seq[Column],
-                               rankOut: String = "rnk",
-                               pctOut: String = "pr"): DataFrame = {
-    requireFreshNames(df, Seq(rankOut, pctOut))
-    val (ranked, n) = rankWithTotal(df, order, tieBreak, rankOut)
-    ranked.withColumn(pctOut,
-      (col(rankOut) - 1).cast("double") / math.max(n - 1L, 1L))
+    val ranked = rn.withColumn(out, min(col("__rn")).over(byValue))
+      .drop("__rn")
+    pctOut match {
+      case Some(p) => ranked.withColumn(p,
+        (col(out) - 1).cast("double") / math.max(r.total - 1L, 1L))
+      case None => ranked
+    }
   }
 
   /** Per-group rank over `order` within each `group`, WITHOUT the
@@ -420,7 +415,8 @@ object GlobalRank {
   : DataFrame = {
     requireFreshNames(df, out +: pctOut.toSeq)
     val groupCols = group.map(col)
-    val rn = groupedCore(df, group, groupCols ++ order ++ tieBreak)
+    val rn = groupedCoreOn(pinGroupedLayout(df, group, order ++ tieBreak),
+      group, groupCols ++ order ++ tieBreak)
     // the scalable per-VALUE tie heal: rank = min row number per value —
     // a hash-partitioned window over the HIGH-cardinality (group, order)
     // key, parallelism = #distinct values
@@ -451,13 +447,10 @@ object GlobalRank {
   def withGroupedRowNumber(df: DataFrame, group: Seq[String],
                            order: Seq[Column], out: String = "rn",
                            nOut: Option[String] = None): DataFrame = {
+    // checked before the pin, so a clash costs no checkpoint job
     requireFreshNames(df, out +: nOut.toSeq)
-    val core = groupedCore(df, group, group.map(col) ++ order)
-      .withColumnRenamed("__grn", out)
-    nOut match {
-      case Some(n) => core.withColumnRenamed("__gn", n)
-      case None    => core.drop("__gn")
-    }
+    withGroupedRowNumberOn(pinGroupedLayout(df, group, order), group, order,
+      out, nOut)
   }
 
   /** Pin one grouped range layout for REUSE across several passes of the
@@ -470,8 +463,11 @@ object GlobalRank {
     * passes cost ONE scan + ONE range exchange instead of N of each.
     * Same lifecycle contract as every layout ([[withScope]] owner). */
   def pinGroupedLayout(df: DataFrame, group: Seq[String],
-                       order: Seq[Column]): DataFrame =
-    rangedLayout(df, group, group.map(col) ++ order)
+                       order: Seq[Column]): DataFrame = {
+    require(group.nonEmpty, "use the global forms for an empty group")
+    pinRangeLayout(df, group.map(col) ++ order,
+      Seq("__pid", "__gcnt", "__gstart", "__goff", "__gn", "__grn"))
+  }
 
   /** [[withGroupedRowNumber]] over a layout already pinned by
     * [[pinGroupedLayout]] WITH THE SAME (group, order) keys — adds zero
@@ -532,31 +528,10 @@ object GlobalRank {
     requireFreshNames(df,
       values.flatMap { case (_, o, t) => o +: t.toSeq })
     val sort = group.map(col) ++ order
-    val ranged = rangedLayout(df, group, sort)
-    val groupCols = group.map(col)
+    val ranged = pinGroupedLayout(df, group, order)
     // pass 1: per-(pid, group) partial sums for EVERY value at once
-    val partialAggs = values.zipWithIndex.map { case ((v, _, _), i) =>
-      sum(v).as(s"__gcnt$i")
-    }
-    val counts = ranged.groupBy(col("__pid") +: groupCols: _*)
-      .agg(partialAggs.head, partialAggs.tail: _*)
-    val wStart = Window.partitionBy(col("__pid"))
-      .orderBy(groupCols: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.partitionBy(groupCols: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wTot = Window.partitionBy(groupCols: _*)
-    val offsets = values.indices.foldLeft(counts) { (f, i) =>
-      f.withColumn(s"__gstart$i",
-          coalesce(sum(col(s"__gcnt$i")).over(wStart), lit(0L)))
-        .withColumn(s"__goff$i",
-          coalesce(sum(col(s"__gcnt$i")).over(wOff), lit(0L)))
-        .withColumn(s"__gn$i", sum(col(s"__gcnt$i")).over(wTot))
-    }.drop(values.indices.map(i => s"__gcnt$i"): _*)
-      .withColumnRenamed("__pid", "__opid")
-    val offRenamed = group.zipWithIndex.foldLeft(offsets) {
-      case (f, (g, i)) => f.withColumnRenamed(g, s"__og$i")
-    }
+    val offRenamed = groupedOffsets(ranged, group,
+      values.zipWithIndex.map { case ((v, _, _), i) => (v, i.toString) })
     // pass 2: one running window over the pinned layout for all values
     val run = Window.partitionBy(col("__pid")).orderBy(sort: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -578,9 +553,9 @@ object GlobalRank {
     cum.select(inputCols ++ outCols: _*)
   }
 
-  /** Grouped two-pass core shared by [[withGroupedRank]] and
-    * [[withGroupedRowNumber]]: range partition on the full `sort` key —
-    * groups lie contiguous within and across partitions — then local
+  /** Grouped pass 2 shared by [[withGroupedRank]] and
+    * [[withGroupedRowNumberOn]], over a layout pinned on the full `sort`
+    * key — groups lie contiguous within and across partitions: local
     * sort + per-partition ordinals, corrected into per-group row numbers
     * by two broadcast quantities derived from ONE tiny counts frame (the
     * group's start ordinal inside the partition and the group's prefix
@@ -590,14 +565,9 @@ object GlobalRank {
     * this targets LOW-cardinality groups — the exact case the plain
     * window can't parallelize (with many groups the plain hash window is
     * already scalable; use that). */
-  private def groupedCore(df: DataFrame, group: Seq[String],
-                          sort: Seq[Column]): DataFrame =
-    groupedCoreOn(rangedLayout(df, group, sort), group, sort)
-
-  /** Pass 2 over an already-pinned layout (see [[groupedCore]]). */
   private def groupedCoreOn(ranged: DataFrame, group: Seq[String],
                             sort: Seq[Column]): DataFrame = {
-    val offRenamed = groupedOffsets(ranged, group, lit(1L))
+    val offRenamed = groupedOffsets(ranged, group, Seq((lit(1L), "")))
     // pass 2: local sort + ordinal, group-corrected — no shuffle
     ranged.sortWithinPartitions(sort: _*)
       .withColumn("__grn", ordinal)
@@ -609,47 +579,35 @@ object GlobalRank {
       .drop(group.zipWithIndex.map { case (_, i) => s"__og$i" }: _*)
   }
 
-  /** Pinned range layout on `sort` with the partition id baked in — both
-    * passes must observe the SAME physical partitioning (see the
-    * class-level cost note). */
-  private def rangedLayout(df: DataFrame, group: Seq[String],
-                           sort: Seq[Column]): DataFrame = {
-    require(group.nonEmpty, "use the global forms for an empty group")
-    val reserved = Seq("__pid", "__gcnt", "__gstart", "__goff", "__gn",
-      "__grn")
-    require(!df.columns.exists(reserved.contains),
-      s"${reserved.mkString("/")} are reserved by GlobalRank")
-    requireNarrow(df)
-    val parts = df.sparkSession.sparkContext.defaultParallelism
-    checkpointLayout(df.repartitionByRange(parts, sort: _*)
-      .withColumn("__pid", spark_partition_id()))
-  }
-
-  /** Pass 1 over a pinned layout: per-(pid, group) totals of `value`.
-    * Tiny frame (≤ #partitions + #groups rows) — the windows over it are
-    * free. Group order inside a partition follows the range
+  /** Pass 1 over a pinned layout: per-(pid, group) totals of each
+    * value, one aggregate for all of them. Each (value, suffix) pair
+    * yields columns named with that suffix (`""` for the row-number
+    * paths). Tiny frame (≤ #partitions + #groups rows) — the windows
+    * over it are free. Group order inside a partition follows the range
     * partitioner's ascending key order, so the within-partition start
     * offset (`__gstart`) is a prefix sum over groups; `__goff` is the
     * group's prefix total over earlier partitions, `__gn` its grand
     * total. Group columns come back renamed `__og<i>` for the
     * null-safe broadcast join ([[offsetsJoinCond]]). */
   private def groupedOffsets(ranged: DataFrame, group: Seq[String],
-                             value: Column): DataFrame = {
+                             values: Seq[(Column, String)]): DataFrame = {
     val groupCols = group.map(col)
+    val partials = values.map { case (v, s) => sum(v).as(s"__gcnt$s") }
     val counts = ranged.groupBy(col("__pid") +: groupCols: _*)
-      .agg(sum(value).as("__gcnt"))
+      .agg(partials.head, partials.tail: _*)
     val wStart = Window.partitionBy(col("__pid"))
       .orderBy(groupCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val wOff = Window.partitionBy(groupCols: _*).orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.partitionBy(groupCols: _*)
-    val offsets = counts
-      .withColumn("__gstart",
-        coalesce(sum(col("__gcnt")).over(wStart), lit(0L)))
-      .withColumn("__goff", coalesce(sum(col("__gcnt")).over(wOff), lit(0L)))
-      .withColumn("__gn", sum(col("__gcnt")).over(wTot))
-      .drop("__gcnt")
+    val offsets = values.foldLeft(counts) { case (f, (_, s)) =>
+      f.withColumn(s"__gstart$s",
+          coalesce(sum(col(s"__gcnt$s")).over(wStart), lit(0L)))
+        .withColumn(s"__goff$s",
+          coalesce(sum(col(s"__gcnt$s")).over(wOff), lit(0L)))
+        .withColumn(s"__gn$s", sum(col(s"__gcnt$s")).over(wTot))
+    }.drop(values.map { case (_, s) => s"__gcnt$s" }: _*)
       .withColumnRenamed("__pid", "__opid")
     group.zipWithIndex.foldLeft(offsets) {
       case (f, (g, i)) => f.withColumnRenamed(g, s"__og$i")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * same Pregel-style DataFrame iteration as
   * [[Dedup.connectedComponents]]: each iteration is one keyed join (ship
   * ranks to out-edges) plus one map-side-combined aggregate (sum
-  * contributions per target), with an eager `localCheckpoint` cutting
+  * contributions per target), with an eager pin cutting
   * lineage per round.
   *
   * Determinism: ranks live in integer MICRO-UNITS (`Scale` = 1e12 total
@@ -82,7 +82,7 @@ object Graph {
     * avg-degree-100 graph is ~10¹⁰ « 2⁶³).
     *
     * Per round: two keyed joins + two map-side-combined aggregates — the
-    * same shuffle budget as a PageRank round; `localCheckpoint` after each
+    * same shuffle budget as a PageRank round; a pin after each
     * round cuts the lineage for the iteration (the [[pagerank]] pattern).
     * Nodes with no in-edges (out-edges) keep auth (hub) 0.
     * Returns (node, auth, hub). */
@@ -289,7 +289,7 @@ object Graph {
     * past convergence are no-ops on both engines. Each round is one
     * degree-ordered support pass (O(√m)-capped wedge fan-out) + one
     * keyed anti-filter; the edge set is pinned per round with
-    * `localCheckpoint` so the unrolled plan stays linear in `rounds`
+    * a pin so the unrolled plan stays linear in `rounds`
     * instead of exponential in the support pass's six reuses of it. */
   def ktrussEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "k >= 3 and at least one round")
@@ -416,7 +416,7 @@ object Graph {
     * scale; k landmarks make it k BFS sweeps that here share one frontier
     * join per round, with the root carried as part of the state key).
     * Frontier size is bounded by k·n, each round is one keyed join + one
-    * min-combine on (root, node), and per-round `localCheckpoint`
+    * min-combine on (root, node), and a per-round pin
     * truncates the growing lineage exactly as [[bfsHops]] does. */
   def multiSourceBfsHops(edges: DataFrame, sources: Seq[Long],
                          maxHops: Int): DataFrame = {
@@ -455,7 +455,7 @@ object Graph {
     * both engines apply the same rule, and a fixpoint run classifies
     * everyone. Scale: each round shuffles the CURRENT edge set once for
     * degrees and once per semi-join; the set only shrinks, and
-    * `localCheckpoint` per round keeps the plan linear in `rounds`. */
+    * a pin per round keeps the plan linear in `rounds`. */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k, rounds >= 1, got $k/$rounds")
     var cur = edges
@@ -535,7 +535,7 @@ object Graph {
     * MATERIALIZED CTEs). Each round is one keyed join (ship labels to
     * out-edges) + one map-side-combined vote count + a per-node window
     * over ≤ |labels| vote rows — all hash-partitioned by node, no
-    * single-partition shape; `localCheckpoint` per round keeps the plan
+    * single-partition shape; a pin per round keeps the plan
     * linear. Returns (node, label, is_seed). */
   def labelSpread(nodes: DataFrame, edges: DataFrame, rounds: Int)
   : DataFrame = {
@@ -598,7 +598,10 @@ object Graph {
     * are the component
     * minima. Returns (node, component = min id in the component) for
     * every endpoint in `pairs`; `maxIter` bounds the loop defensively
-    * (convergence proof gives 3·log n). */
+    * (convergence proof gives 3·log n), and an edge set still changing
+    * after `maxIter` rounds throws rather than return partial labels.
+    * Each round's edge set is a scope-owned [[GlobalRank.pinned]]
+    * checkpoint, freed with the caller's query scope. */
   def ccStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     def norm(df: DataFrame): DataFrame = df
       .select(least(col("u"), col("v")).as("u"),
@@ -606,7 +609,7 @@ object Graph {
       .filter(col("u") =!= col("v")).distinct()
     var cur = norm(pairs.select(col(pairs.columns(0)).cast("bigint").as("u"),
         col(pairs.columns(1)).cast("bigint").as("v")))
-      .localCheckpoint(true)
+      .transform(graft.operators.GlobalRank.pinned)
     // Edge-set signature for the convergence test: (count, Σu, Σv,
     // Σxxhash64(u,v)), one map-side-combined aggregate over the freshly
     // checkpointed set — versus the previous union+groupBy symmetric-
@@ -660,14 +663,15 @@ object Graph {
           .select(col("m").as("u"), col("v"))
           .union(m2.select(col("m").as("u"), col("u").as("v")))
           .distinct()
-          .localCheckpoint(true)
+          .transform(graft.operators.GlobalRank.pinned)
       val nextSig = sig(next)
       converged = nextSig == curSig
-      cur.unpersist() // drop the superseded checkpoint's blocks
       cur = next
       curSig = nextSig
       i += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"ccStar did not converge within maxIter = $maxIter rounds")
     // Fixpoint is a star forest (center, spoke): spokes label to their
     // center, centers to themselves.
     cur.select(col("v").as("node"), col("u").as("component"))
@@ -685,8 +689,8 @@ object Graph {
     *
     * 100 TB shape: k rounds of (join on src → rollup on dst), each one
     * hash exchange of the CURRENT frontier only (p₀ = all nodes, then
-    * monotonically whatever has in-paths); per-round localCheckpoint
-    * pins lineage like ccStar/bfsHops. Path counts grow like
+    * monotonically whatever has in-paths); a per-round pin
+    * cuts lineage like ccStar/bfsHops. Path counts grow like
     * out-degreeᵏ — callers cap `rounds` small (the usual Katz horizon)
     * and keep αᵏ·counts inside int64, which 4 rounds on any real
     * link graph does. `rounds` caps at 19: the micro-unit attenuation

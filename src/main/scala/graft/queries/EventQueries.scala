@@ -1880,7 +1880,7 @@ object EventQueries {
     // joins on a 5-row table after one transition shuffle.
     "ev48_stationary_mix" -> { (s, dir) =>
       // The transition matrix is |states|² metadata — pin it with an
-      // eager localCheckpoint so the six unrolled rounds below reference
+      // eager checkpoint so the six unrolled rounds below reference
       // ONE materialized 25-row table. Without the pin, every round's
       // join re-embeds the events window+aggregate subtree in the final
       // plan (6 copies of the corpus scan: plan bloat locally, repeated
@@ -1918,7 +1918,7 @@ object EventQueries {
     // a documented lower bound, not an estimate error.
     "ev49_steps_to_purchase" -> { (s, dir) =>
       // Same pin as ev48: the eight unrolled Neumann rounds reference q
-      // and states each round — without the eager localCheckpoint the
+      // and states each round — without the eager checkpoint the
       // final plan carries 17 copies of the events window+aggregate
       // subtree (measured: 36 exchanges in the static plan, 1.9 s at
       // sf0.1; one materialized ~20-row matrix removes all of them).

@@ -187,7 +187,8 @@ object TrainerQueries {
     var seg = charSeg(wf)
     merges.zipWithIndex.foreach { case ((l, r), i) =>
       seg = applyPick(seg, Seq((l, r)).toDF("ml", "mr"))
-      if ((i + 1) % checkpointEvery == 0) seg = seg.localCheckpoint(true)
+      if ((i + 1) % checkpointEvery == 0)
+        seg = graft.operators.GlobalRank.pinned(seg)
     }
     segVocab(seg)
   }
@@ -441,7 +442,7 @@ object TrainerQueries {
             "0123456789", "abcdefghij")).as("text"))
       // the train-slice word-frequency pivot feeds the training chain;
       // word-TYPE grain, scope-pinned (round 14: GlobalRank.pinned
-      // instead of bare localCheckpoint so the blocks free at the query
+      // instead of a bare checkpoint so the blocks free at the query
       // boundary instead of riding the block manager)
       val wf0 = graft.operators.GlobalRank.pinned(
         wordFreqOf(augDocs.filter(col("doc_id") % 2 === 0), wordPat))

@@ -2230,7 +2230,7 @@ object TrainingDataQueries {
       // / per kept candidate, bytes comparable to the corpus — so their
       // r13 unconditional pins become size-gated (pinnedIfSmall): below
       // the gate (every local fixture) the round-13 single-execution
-      // plan survives; at 100 TB the eager corpus-scale localCheckpoint
+      // plan survives; at 100 TB the eager corpus-scale checkpoint
       // is skipped and the identically-keyed downstream exchanges share
       // the pipeline via ReusedExchange instead.
       val fps = graft.operators.GlobalRank.pinnedIfSmall(
@@ -2557,7 +2557,9 @@ object TrainingDataQueries {
       (1 to 3).foreach { i =>
         val top = argmaxPair(wf, i).transform(graft.operators.GlobalRank.pinned)
         rules = if (rules == null) top else rules.crossJoin(broadcast(top))
-        wf = wf.crossJoin(broadcast(top))
+        // the last round's rewritten table has no reader: build it only
+        // for the rounds that feed a next argmax
+        if (i < 3) wf = wf.crossJoin(broadcast(top))
           .withColumn("w",
             expr(s"replace(w, concat(m$i, n$i), chr(${32 - i}))"))
           .filter(length(col("w")) >= 2)

@@ -238,10 +238,10 @@ object WindowQueries {
     // oracle IS the built-in window SQL.
     "e17_global_rank" -> { (s, dir) =>
       import graft.operators.GlobalRank
-      GlobalRank.withGlobalRankAndPercent(
+      GlobalRank.withGlobalRank(
         Tables.orders(s, dir).select("o_orderkey", "o_totalprice"),
         order = Seq(col("o_totalprice")),
-        tieBreak = Seq(col("o_orderkey")), rankOut = "rnk", pctOut = "pr")
+        tieBreak = Seq(col("o_orderkey")), out = "rnk", pctOut = Some("pr"))
     },
 
     // cume_dist WITHOUT the parallelism = 3 funnel (round-9 sf0.01

@@ -52,6 +52,23 @@ class GraphSpec extends SparkSpec {
     assert(out.size == 15)
   }
 
+  test("ccStar and connectedComponents throw, naming the operator and " +
+      "its bound, when a path graph outlasts maxIter") {
+    import spark.implicits._
+    // min-label propagation needs one round per hop: 40 hops > 20
+    val path = (0L until 40L).map(i => (i, i + 1)).toDF("u", "v")
+    val cc = intercept[IllegalStateException](graft.operators.Dedup
+      .connectedComponents(path, "u", "v").collect())
+    assert(cc.getMessage.contains("connectedComponents") &&
+      cc.getMessage.contains("maxIter = 20"), cc.getMessage)
+    // star contraction needs a few rounds on 41 nodes, and at least two
+    // to see an unchanged edge set
+    val star = intercept[IllegalStateException](
+      Graph.ccStar(path, maxIter = 2).collect())
+    assert(star.getMessage.contains("ccStar") &&
+      star.getMessage.contains("maxIter = 2"), star.getMessage)
+  }
+
   test("bfsHops: path graph distances, unreachable nodes absent") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 1L)).toDF("src", "dst")

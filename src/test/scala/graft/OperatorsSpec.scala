@@ -795,6 +795,22 @@ class OperatorsSpec extends SparkSpec {
     assert(jobs == 0, s"$jobs checkpoint jobs ran for a refused pin")
   }
 
+  test("pinnedIfSmall pins a frame under its 1 GiB gate and returns " +
+      "one estimated above it unpinned, with no job") {
+    import graft.operators.GlobalRank
+    import org.apache.spark.sql.execution.LogicalRDD
+    val (small, smallJobs) =
+      jobsDuring(GlobalRank.pinnedIfSmall(spark.range(100).toDF()))
+    assert(smallJobs == 1, s"$smallJobs jobs for one pin")
+    assert(small.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+      small.queryExecution.analyzed.nodeName)
+    // 2^28 longs: Catalyst estimates 8 B a row, 2 GiB in all
+    val big = spark.range(1L << 28).toDF()
+    assert(big.queryExecution.optimizedPlan.stats.sizeInBytes == (1L << 31))
+    val (skipped, bigJobs) = jobsDuring(GlobalRank.pinnedIfSmall(big))
+    assert(bigJobs == 0 && (skipped eq big), s"$bigJobs jobs")
+  }
+
   test("er4 cluster-audit cap bounds pair work and still flags chains") {
     import graft.operators.EntityAudit
     import spark.implicits._

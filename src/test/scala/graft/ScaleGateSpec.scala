@@ -58,4 +58,16 @@ class ScaleGateSpec extends SparkSpec {
       s"stale audited entries: ${
         (audited.keySet -- flaggedNames).mkString(", ")}")
   }
+
+  // "pins are freed at query boundaries", executed: a checkpoint taken
+  // outside GlobalRank's scopes (or a persist that is never
+  // unpersisted) outlives the query that made it
+  test("every catalog query frees its pins when its scope closes") {
+    val leaked = CatalogAudit.leakedPins
+    assert(leaked.isEmpty,
+      "persisted RDDs outlived their query's GlobalRank.withScope:\n" +
+        leaked.map { case (n, ids) =>
+          s"  $n: ${ids.size} (rdd ${ids.mkString(", ")})"
+        }.mkString("\n"))
+  }
 }
