@@ -609,7 +609,7 @@ object Graph {
       .filter(col("u") =!= col("v")).distinct()
     var cur = norm(pairs.select(col(pairs.columns(0)).cast("bigint").as("u"),
         col(pairs.columns(1)).cast("bigint").as("v")))
-      .transform(graft.operators.GlobalRank.pinned)
+      .transform(GlobalRank.pinned)
     // Edge-set signature for the convergence test: (count, Σu, Σv,
     // Σxxhash64(u,v)), one map-side-combined aggregate over the freshly
     // checkpointed set — versus the previous union+groupBy symmetric-
@@ -663,7 +663,7 @@ object Graph {
           .select(col("m").as("u"), col("v"))
           .union(m2.select(col("m").as("u"), col("u").as("v")))
           .distinct()
-          .transform(graft.operators.GlobalRank.pinned)
+          .transform(GlobalRank.pinned)
       val nextSig = sig(next)
       converged = nextSig == curSig
       cur = next
